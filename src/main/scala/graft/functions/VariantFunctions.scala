@@ -2,11 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+
+import graft.expressions.{AlleleBaseExpr, ZygosityExpr}
 
 /** Column-level variant annotation semantics of the reference, re-expressed
-  * as codegen-friendly Catalyst expressions (builtins only — no UDFs, so
-  * every classifier inlines into WholeStageCodegen and stays
-  * pushdown/prune-transparent).
+  * as codegen-friendly Catalyst expressions (builtins or graft's own
+  * codegen'd kernels — no UDFs, so every classifier inlines into
+  * WholeStageCodegen and stays pushdown/prune-transparent).
   *
   * Reference semantics preserved from:
   *  - vartype:   /root/reference/variant_annotations.py:130-162
@@ -44,17 +47,17 @@ object VariantFunctions {
     when(size(p) >= 2, element_at(p, 2))
   }
 
-  /** `[REF, alt1, alt2, …]` — GT indices index into this 0-based. */
-  private def alleleBases(ref: Column, alt: Column): Column =
-    concat(array(ref), split(alt, ","))
-
-  /** Base string for one allele index: `.` (or NULL index) stays `.`;
-    * an out-of-range index (malformed VCF) yields NULL rather than
-    * failing the job (try_element_at), unlike the reference which raises.
+  /** Base string for one allele index into `[REF, alt1, alt2, …]`
+    * (0-based): `.` (or a NULL index) stays `.`. Any index that is not
+    * a run of ASCII digits within range — out of range, negative,
+    * signed, fractional, empty or non-numeric (malformed VCF) — yields
+    * NULL rather than failing the job, unlike the reference which
+    * raises. Backed by [[graft.expressions.CallAnnotationKernel]], the
+    * kernel `VariantAnnotator.annotate` runs per call.
     */
   def alleleBase(ref: Column, alt: Column, gtIdx: Column): Column =
-    when(gtIdx.isNull || gtIdx === ".", lit("."))
-      .otherwise(try_element_at(alleleBases(ref, alt), gtIdx.cast("int") + 1))
+    Bridge.column(AlleleBaseExpr(
+      Bridge.expression(ref), Bridge.expression(alt), Bridge.expression(gtIdx)))
 
   /** Variant type of one allele vs REF: ref | snp | mnp | del | indel |
     * ins — exact algorithm of variant_annotations.py:130-162 (prefix
@@ -78,15 +81,13 @@ object VariantFunctions {
       a.contains("[") || a.contains("]")
 
   /** Zygosity of a diploid call — branch ORDER matters and mirrors
-    * variant_annotations.py:64-127 exactly (hom-ref wins over missing).
+    * variant_annotations.py:64-127 exactly (hom-ref wins over missing),
+    * with CASE-WHEN NULL semantics (a NULL comparison fires no branch).
+    * Backed by [[graft.expressions.CallAnnotationKernel]].
     */
   def zygosity(ref: Column, a1: Column, a2: Column): Column =
-    when(a1 === ref && a2 === ref, lit("hom-ref"))
-      .when(a1 === "." && a2 === ".", lit("hom-miss"))
-      .when(a1 === "." || a2 === ".", lit("het-miss"))
-      .when(a1 =!= ref && a2 =!= ref && a1 =!= a2, lit("het-alt"))
-      .when(a1 =!= ref && a2 =!= ref && a1 === a2, lit("hom-alt"))
-      .otherwise(lit("het-ref"))
+    Bridge.column(ZygosityExpr(
+      Bridge.expression(ref), Bridge.expression(a1), Bridge.expression(a2)))
 
   /** True for calls the reference drops before annotating
     * (variant_annotations.py:618-620): `./.`, `.|.`, `.` or empty.

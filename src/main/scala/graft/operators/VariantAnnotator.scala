@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
+import graft.expressions.{AnnotateCallsExpr, FormatFieldExpr, HomRefCountExpr}
 import graft.functions.VariantFunctions._
 
 /** Spark-native re-expression of the reference's flagship
@@ -13,19 +14,22 @@ import graft.functions.VariantFunctions._
   *
   * The reference loops FORMAT groups in Python, stacks with pandas, and
   * multiprocess-forks per chunk. Here the whole thing is ONE declarative
-  * plan:
+  * plan over two compiled kernels ([[graft.expressions.CallAnnotationKernel]]):
   *
-  *   explode(genotypes map)                      -- wide→long, narrow
-  *   map_from_arrays(split(format), split(call)) -- per-row FORMAT parse,
-  *                                                  handles mixed FORMATs
-  *                                                  without grouping
-  *   case-when classifiers (VariantFunctions)    -- all codegen'd
-  *   window count over the site key              -- hom_ref_counts
+  *   hom_ref_count(ref, alt, genotypes)     -- per SITE row: its hom-ref calls
+  *   sum(...) over (chrom, pos, ref, alt)   -- hom_ref_counts, pooled across
+  *                                             rows sharing a site key
+  *   inline(annotate_calls(...))            -- wide→long: each call parsed
+  *                                             once into gt, phase, gt1, gt2,
+  *                                             a1, a2, zygosity
+  *   vartype / format_field projections     -- per call, positional through
+  *                                             the row's own FORMAT (mixed
+  *                                             FORMATs without grouping)
   *
-  * The window is the ONLY shuffle. At cluster scale, pre-partitioning the
-  * input by (chrom) lets that exchange reuse the ingest partitioning
-  * (see VcfReader.toParquet), and everything else is embarrassingly
-  * parallel.
+  * The window is the ONLY shuffle, and it moves site rows, not call rows.
+  * At cluster scale, pre-partitioning the input by (chrom) lets that
+  * exchange reuse the ingest partitioning (see VcfReader.toParquet), and
+  * everything else is embarrassingly parallel.
   */
 object VariantAnnotator {
 
@@ -45,69 +49,58 @@ object VariantAnnotator {
   /** Wide graft VCF frame (chrom, pos, ref, alt, format,
     * genotypes MAP<sample,call>) → long annotated frame keyed
     * (chrom, pos, ref, alt, sample_id) with columns
-    * gt, phase, gt1, gt2, a1, a2, multiallele, vartype1, vartype2,
-    * zygosity, hom_ref_counts (+ FORMAT subfields).
+    * gt, phase, gt1, gt2, a1, a2, multiallele, zygosity,
+    * hom_ref_counts, vartype1, vartype2 (+ FORMAT subfields). A FORMAT
+    * subfield the call does not carry (a legally dropped trailing one)
+    * is NULL.
     */
   def annotate(df: DataFrame, opts: Options = Options()): DataFrame = {
     val keys = opts.formatKeys.getOrElse(discoverFormatKeys(df))
+    val (ref, alt, genotypes) = (col("ref"), col("alt"), col("genotypes"))
+    val (refE, altE, genotypesE) =
+      (Bridge.expression(ref), Bridge.expression(alt), Bridge.expression(genotypes))
 
-    // wide→long; drop missing-ALT sites (variant_annotations.py:568)
-    val long = df
-      .filter(col("alt") =!= ".")
-      .select(
-        col("chrom"), col("pos"), col("ref"), col("alt"), col("format"),
-        explode(col("genotypes")).as(Seq("sample_id", "call")))
-
-    // FORMAT parse: call "0/1:12:3,9" against format "GT:DP:AD"
-    val fmtMap = map_from_arrays(split(col("format"), ":"), split(col("call"), ":"))
-    val withGt = long
-      .withColumn("fmt", fmtMap)
-      .withColumn("gt", element_at(split(col("call"), ":"), 1))
-      .filter(!isMissingCall(col("gt")))
-
-    // Stage 1 (pre-shuffle): allele extraction + zygosity. These columns
-    // are MATERIALIZED by the window exchange below, so downstream
-    // classifiers read attributes instead of re-evaluating the (large)
-    // inlined allele expression trees.
-    val annotated = withGt
-      .withColumn("phase", phase(col("gt")))
-      .withColumn("gt1", gt1(col("gt")))
-      .withColumn("gt2", gt2(col("gt")))
-      .withColumn("a1", alleleBase(col("ref"), col("alt"), col("gt1")))
-      .withColumn("a2", alleleBase(col("ref"), col("alt"), col("gt2")))
-      .withColumn("multiallele", multiallele(col("alt")))
-      .withColumn("zygosity", zygosity(col("ref"), col("a1"), col("a2")))
-
-    // hom_ref_counts per site (variant_annotations.py:165-180): count
-    // BEFORE the optional hom-ref drop. Reference emits -1 when a chunk
-    // had no hom-ref at all — a chunking artifact we replace with the
-    // true count (0). This window is the plan's only shuffle.
+    // hom_ref_counts per site (variant_annotations.py:165-180), counted
+    // BEFORE the optional hom-ref drop, on the wide rows: each row counts
+    // its own hom-ref calls and the window pools rows sharing a site key.
+    // Reference emits -1 when a chunk had no hom-ref at all — a chunking
+    // artifact we replace with the true count (0). Missing-ALT sites are
+    // dropped first (variant_annotations.py:568).
     val site = Window.partitionBy("chrom", "pos", "ref", "alt")
-    val counted = annotated
-      .withColumn(
-        "hom_ref_counts",
-        sum(when(col("zygosity") === "hom-ref", 1).otherwise(0)).over(site))
-      // Stage 2 (post-shuffle): vartype classifiers on materialized a1/a2.
-      .withColumn("vartype1", vartype(col("ref"), col("a1")))
-      .withColumn("vartype2", vartype(col("ref"), col("a2")))
+    val sites = df
+      .filter(alt =!= ".")
+      .select(col("chrom"), col("pos"), ref, alt, col("format"), genotypes,
+        multiallele(alt).as("multiallele"),
+        Bridge.column(HomRefCountExpr(refE, altE, genotypesE)).as("__hr"))
+      .withColumn("hom_ref_counts", sum(col("__hr")).over(site))
 
-    val dropped =
-      if (opts.dropHomRef) counted.filter(col("zygosity") =!= "hom-ref")
-      else counted
+    // wide→long: the generator emits each kept call already annotated,
+    // so the per-call kernel runs once per call and no filter follows
+    val calls = sites
+      .select(col("chrom"), col("pos"), ref, alt, col("format"),
+        col("multiallele"), col("hom_ref_counts"),
+        inline(Bridge.column(
+          AnnotateCallsExpr(refE, altE, genotypesE, opts.dropHomRef))))
+      .select(col("chrom"), col("pos"), ref, alt, col("sample_id"),
+        col("gt"), col("phase"), col("gt1"), col("gt2"), col("a1"), col("a2"),
+        col("multiallele"), col("zygosity"), col("hom_ref_counts"),
+        vartype(ref, col("a1")).as("vartype1"),
+        vartype(ref, col("a2")).as("vartype2"),
+        col("format"), col("call"))
 
     // FORMAT subfields as typed columns; split_columns exploded by comma
-    val withFields = keys.filter(_ != "GT").foldLeft(dropped) { (d, k) =>
+    def field(k: String, part: Int): Column = Bridge.column(FormatFieldExpr(
+      Bridge.expression(col("format")), Bridge.expression(col("call")), k, part))
+    val withFields = keys.filter(_ != "GT").foldLeft(calls) { (d, k) =>
       opts.splitColumns.get(k) match {
         case Some(n) =>
-          val parts = split(element_at(col("fmt"), k), ",")
-          (0 until n).foldLeft(d)((dd, i) =>
-            dd.withColumn(s"${k}_$i", try_element_at(parts, lit(i + 1))))
+          (0 until n).foldLeft(d)((dd, i) => dd.withColumn(s"${k}_$i", field(k, i)))
         case None =>
-          d.withColumn(k, element_at(col("fmt"), k))
+          d.withColumn(k, field(k, -1))
       }
     }
 
-    withFields.drop("fmt", "call", "format")
+    withFields.drop("call", "format")
   }
 
   /** GENOTYPE-LEVEL FORMAT-PREDICATE MASKING — the `bcftools filter -e

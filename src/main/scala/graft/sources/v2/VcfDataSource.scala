@@ -576,10 +576,19 @@ final class VcfPartitionReader(
     try java.lang.Integer.parseInt(s)
     catch { case _: NumberFormatException => Int.MinValue }
 
+  // with genotypes pruned (annotate's FORMAT discovery, sites-only
+  // selects) a line is split no further than FORMAT: the sample
+  // columns ride unsplit in the last field, which nothing reads
+  private val splitLimit = if (required.fieldNames.contains("genotypes")) -1 else 10
+
+  // the genotypes map's keys, encoded once per partition, not per row
+  private lazy val sampleKeys: Array[AnyRef] =
+    part.samples.map(s => UTF8String.fromString(s): AnyRef)
+
   /** Parse/filter one data line; true iff it produced `current`. */
   private def acceptLine(line: String): Boolean = {
     if (line.startsWith("#") || line.isEmpty) return false
-    val f = line.split("\t", -1)
+    val f = line.split("\t", splitLimit)
     // 8 fixed fields are mandatory; FORMAT + samples are optional
     // (sites-only VCFs) — those rows get a null format and an
     // empty genotypes map
@@ -621,18 +630,18 @@ final class VcfPartitionReader(
   }
 
   private def buildRow(f: Array[String], pos: Int): InternalRow = {
-    val samples = part.samples
     val values = required.fields.map { sf =>
       sf.name match {
         case "pos" => pos
         case "chrom" => UTF8String.fromString(normChrom(f(0)))
         case "genotypes" =>
-          val n = math.min(samples.length, math.max(0, f.length - 9))
-          val keys = new Array[AnyRef](n)
+          val n = math.min(sampleKeys.length, math.max(0, f.length - 9))
+          val keys =
+            if (n == sampleKeys.length) sampleKeys
+            else java.util.Arrays.copyOf(sampleKeys, n)
           val vals = new Array[AnyRef](n)
           var i = 0
           while (i < n) {
-            keys(i) = UTF8String.fromString(samples(i))
             vals(i) = UTF8String.fromString(f(9 + i))
             i += 1
           }

@@ -52,6 +52,22 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     val exchanges = "Exchange".r.findAllIn(plan).length
     assert(exchanges <= 2, s"unexpected shuffles:\n$plan")
     assert(plan.contains("Window"), plan)
+    ann.collect() // finalize AQE so codegen spans are visible
+    val fin = ann.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    val lines = fin.linesIterator.toIndexedSeq
+    val gen = lines.indexWhere(_.contains("Generate inline(annotate_calls("))
+    assert(gen >= 0, fin)
+    // tree order: every exchange prints BELOW the generator, so the
+    // window shuffles wide site rows, never the exploded call rows
+    val below = lines.indices.filter(i => lines(i).contains("Exchange"))
+    assert(below.nonEmpty && below.forall(_ > gen),
+      s"an exchange sits above the call generator:\n$fin")
+    // '*(n)' prefix = inside a WholeStageCodegen stage
+    for (k <- Seq("Generate inline(annotate_calls(", "hom_ref_count(")) {
+      val line = lines.find(_.contains(k)).getOrElse(fail(s"$k missing:\n$fin"))
+      assert(line.trim.matches("""^\+?-?\s*\*\(\d+\).*"""), s"$k not codegen'd:\n$fin")
+    }
   }
 
   test("custom expressions appear codegen'd, not as BatchEvalPython/UDF") {

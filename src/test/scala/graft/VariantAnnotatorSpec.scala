@@ -387,6 +387,213 @@ class VariantAnnotatorSpec extends AnyFunSuite with SparkSpec {
       .getAs[Long]("hom_ref_counts") === 1L)
   }
 
+  test("hom_ref_counts pools every wide row that shares a site key") {
+    import spark.implicits._
+    // two wide rows for ONE site (a split-then-merged callset, or two
+    // batches landed side by side): each row's hom-refs count toward
+    // every call of the site, whichever row the call came from
+    val df = Seq(
+      ("1", 100, "A", "C", "GT", Map("S1" -> "0/0", "S2" -> "0/1")),
+      ("1", 100, "A", "C", "GT", Map("S3" -> "0|0", "S4" -> "0/0", "S5" -> "1/1")),
+      ("1", 101, "A", "C", "GT", Map("S1" -> "0/0")))
+      .toDF("chrom", "pos", "ref", "alt", "format", "genotypes")
+    val out = VariantAnnotator.annotate(df,
+      VariantAnnotator.Options(formatKeys = Some(Seq("GT"))))
+      .select("pos", "sample_id", "hom_ref_counts").as[(Int, String, Long)]
+      .collect().sortBy(_._2)
+    assert(out.toSeq === Seq((100, "S2", 3L), (100, "S5", 3L)))
+  }
+
+  test("malformed GT allele indices yield a NULL allele, never a failed job") {
+    import spark.implicits._
+    // REF A, ALT C,G,T: under ANSI casts `-2` used to count from the
+    // END (T), `-1` raised INVALID_INDEX_OF_ZERO and `x` / `1.0`
+    // raised CAST_INVALID_INPUT
+    val gts = Seq("-2/0", "-1/0", "x/0", "1.0/1")
+    val df = Seq(("1", 100, "A", "C,G,T", "GT",
+        gts.zipWithIndex.map { case (g, i) => s"S$i" -> g }.toMap))
+      .toDF("chrom", "pos", "ref", "alt", "format", "genotypes")
+    val got = VariantAnnotator.annotate(df, VariantAnnotator.Options(
+        dropHomRef = false, formatKeys = Some(Seq("GT"))))
+      .select("gt", "a1", "a2", "zygosity").as[(String, String, String, String)]
+      .collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    assert(got === Map(
+      "-2/0" -> ((null, "A", "het-ref")),
+      "-1/0" -> ((null, "A", "het-ref")),
+      "x/0" -> ((null, "A", "het-ref")),
+      "1.0/1" -> ((null, "C", "het-ref"))))
+    // the Column wrapper resolves through the same kernel
+    val idx = Seq("-2", "-1", "x", "1.0", "", "+1", "4", "3", ".")
+    val bases = idx.toDF("i")
+      .select(graft.functions.VariantFunctions.alleleBase(
+        lit("A"), lit("C,G,T"), col("i")))
+      .as[String].collect().toSeq
+    assert(bases === Seq(null, null, null, null, null, null, null, "T", "."))
+  }
+
+  test("annotate kernel == legacy Column chain over generated wide frames") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // A call whose trailing subfields are dropped (legal VCF) reads
+    // those subfields as NULL; the legacy chain cannot parse it
+    // (map_from_arrays needs as many values as FORMAT keys), so the
+    // legacy side reads a copy padded with a sentinel, mapped to NULL
+    val pad = "\u0001"
+    val index = Gen.frequency(6 -> Gen.oneOf("0", "1"), 2 -> Gen.oneOf("2", "3"),
+      1 -> Gen.oneOf("7", "12"), 2 -> Gen.const("."))
+    val gt = Gen.frequency(
+      8 -> (for (a <- index; s <- Gen.oneOf("/", "|"); b <- index) yield s"$a$s$b"),
+      2 -> index,
+      2 -> Gen.oneOf("./.", ".|.", ".", ""),
+      1 -> (for (a <- index; b <- index; c <- index) yield s"$a/$b|$c"))
+    def value(k: String): Gen[String] = k match {
+      case "GT" => gt
+      case "AD" => Gen.oneOf("3,9", "5", ".", "1,2,3", "0,0", "")
+      case _ => Gen.oneOf(Gen.choose(0, 60).map(_.toString), Gen.const("."))
+    }
+    val call: String => Gen[(String, String)] = fmt => {
+      val ks = Option(fmt).fold(Seq("GT", "DP"))(_.split(":", -1).toSeq)
+      for {
+        vs <- Gen.sequence[Seq[String], String](ks.map(value))
+        keep <- Gen.frequency(4 -> Gen.const(ks.length), 1 -> Gen.choose(1, ks.length))
+      } yield {
+        val c = vs.take(keep).mkString(":")
+        (c, if (fmt == null) c else (vs.take(keep) ++ Seq.fill(ks.length - keep)(pad)).mkString(":"))
+      }
+    }
+    val site = for {
+      chrom <- Gen.oneOf("1", "2")
+      pos <- Gen.choose(100, 103)
+      ref <- Gen.frequency(12 -> Gen.oneOf("A", "C", "AC", "TTC"), 1 -> Gen.const(null))
+      alt <- Gen.frequency(12 -> Gen.oneOf("C", "G,T", "T,GA,CCC", "A,<DEL>", "*",
+        "G[2:100[", "]13:123456]T", "<DUP:TANDEM>", "C,", "A"), 2 -> Gen.const("."),
+        1 -> Gen.const(null))
+    } yield (chrom, pos, ref, alt)
+    val wideRow: Seq[(String, Int, String, String)] => Gen[(Row, Row)] = sites => for {
+      (chrom, pos, ref, alt) <- Gen.oneOf(sites)
+      fmt <- Gen.frequency(10 -> Gen.oneOf("GT:DP:AD", "GT", "GT:AD", "DP:AD", "GT:AD:DP:GQ"),
+        1 -> Gen.const(null))
+      n <- Gen.choose(0, 4)
+      calls <- Gen.listOfN(n, Gen.frequency(12 -> call(fmt), 1 -> Gen.const((null, null))))
+      nullMap <- Gen.frequency(15 -> false, 1 -> true)
+    } yield {
+      def gts(pick: ((String, String)) => String) =
+        if (nullMap) null
+        else calls.zipWithIndex.map { case (c, i) => s"S$i" -> pick(c) }.toMap
+      (Row(chrom, pos, ref, alt, fmt, gts(_._1)), Row(chrom, pos, ref, alt, fmt, gts(_._2)))
+    }
+    val frame = for {
+      sites <- Gen.listOfN(5, site)
+      rows <- Gen.choose(8, 30).flatMap(Gen.listOfN(_, wideRow(sites)))
+      split <- Gen.oneOf(Map.empty[String, Int], Map("AD" -> 2), Map("AD" -> 3, "DP" -> 1))
+    } yield (rows, split)
+    val schema = StructType(Seq(
+      StructField("chrom", StringType), StructField("pos", IntegerType, nullable = false),
+      StructField("ref", StringType), StructField("alt", StringType),
+      StructField("format", StringType),
+      StructField("genotypes", MapType(StringType, StringType))))
+    val fixed = Set("chrom", "pos", "ref", "alt", "sample_id", "gt", "phase", "gt1",
+      "gt2", "a1", "a2", "multiallele", "zygosity", "hom_ref_counts", "vartype1", "vartype2")
+    def differs(rows: Seq[(Row, Row)], split: Map[String, Int], drop: Boolean): Option[String] = {
+      def df(rs: Seq[Row]) = spark.createDataFrame(
+        spark.sparkContext.parallelize(rs, 3), schema)
+      val opts = VariantAnnotator.Options(split, drop, Some(Seq("GT", "DP", "AD", "GQ", "PL")))
+      val got = VariantAnnotator.annotate(df(rows.map(_._1)), opts)
+      val legacy = legacyAnnotate(df(rows.map(_._2)), opts)
+      val want = legacy.select(legacy.columns.toSeq.map(c =>
+        if (fixed(c)) col(c) else when(col(c) =!= pad, col(c)).as(c)): _*)
+      if (got.schema != legacy.schema)
+        Some(s"schema ${got.schema.treeString} != ${legacy.schema.treeString}")
+      else {
+        val extra = got.exceptAll(want).collect()
+        val missing = want.exceptAll(got).collect()
+        if (extra.isEmpty && missing.isEmpty) None
+        else Some(s"extra ${extra.mkString("; ")} missing ${missing.mkString("; ")}")
+      }
+    }
+    val prop = Prop.forAllNoShrink(frame) { case (rows, split) =>
+      val bad = Seq(false, true).flatMap(d => differs(rows, split, d).map(d -> _))
+      Prop(bad.isEmpty) :| s"split=$split (dropHomRef, diff)=$bad rows=${rows.map(_._1)}"
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(10)
+      .withInitialSeed(org.scalacheck.rng.Seed(20260417L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  /** The pre-kernel Column chain of annotate (with the Column forms of
+    * alleleBase and zygosity it used), kept VERBATIM as the parity
+    * reference: annotate now runs [[graft.expressions.CallAnnotationKernel]]
+    * with the window on the wide rows; this pins kernel ≡ legacy. */
+  private def legacyAnnotate(df: org.apache.spark.sql.DataFrame,
+      opts: VariantAnnotator.Options): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.VariantFunctions.{gt1, gt2, isMissingCall, multiallele, phase, vartype}
+    def alleleBases(ref: Column, alt: Column): Column =
+      concat(array(ref), split(alt, ","))
+    def alleleBase(ref: Column, alt: Column, gtIdx: Column): Column =
+      when(gtIdx.isNull || gtIdx === ".", lit("."))
+        .otherwise(try_element_at(alleleBases(ref, alt), gtIdx.cast("int") + 1))
+    def zygosity(ref: Column, a1: Column, a2: Column): Column =
+      when(a1 === ref && a2 === ref, lit("hom-ref"))
+        .when(a1 === "." && a2 === ".", lit("hom-miss"))
+        .when(a1 === "." || a2 === ".", lit("het-miss"))
+        .when(a1 =!= ref && a2 =!= ref && a1 =!= a2, lit("het-alt"))
+        .when(a1 =!= ref && a2 =!= ref && a1 === a2, lit("hom-alt"))
+        .otherwise(lit("het-ref"))
+    val keys = opts.formatKeys.get
+
+    // wide→long; drop missing-ALT sites (variant_annotations.py:568)
+    val long = df
+      .filter(col("alt") =!= ".")
+      .select(
+        col("chrom"), col("pos"), col("ref"), col("alt"), col("format"),
+        explode(col("genotypes")).as(Seq("sample_id", "call")))
+
+    // FORMAT parse: call "0/1:12:3,9" against format "GT:DP:AD"
+    val fmtMap = map_from_arrays(split(col("format"), ":"), split(col("call"), ":"))
+    val withGt = long
+      .withColumn("fmt", fmtMap)
+      .withColumn("gt", element_at(split(col("call"), ":"), 1))
+      .filter(!isMissingCall(col("gt")))
+
+    val annotated = withGt
+      .withColumn("phase", phase(col("gt")))
+      .withColumn("gt1", gt1(col("gt")))
+      .withColumn("gt2", gt2(col("gt")))
+      .withColumn("a1", alleleBase(col("ref"), col("alt"), col("gt1")))
+      .withColumn("a2", alleleBase(col("ref"), col("alt"), col("gt2")))
+      .withColumn("multiallele", multiallele(col("alt")))
+      .withColumn("zygosity", zygosity(col("ref"), col("a1"), col("a2")))
+
+    val site = Window.partitionBy("chrom", "pos", "ref", "alt")
+    val counted = annotated
+      .withColumn(
+        "hom_ref_counts",
+        sum(when(col("zygosity") === "hom-ref", 1).otherwise(0)).over(site))
+      .withColumn("vartype1", vartype(col("ref"), col("a1")))
+      .withColumn("vartype2", vartype(col("ref"), col("a2")))
+
+    val dropped =
+      if (opts.dropHomRef) counted.filter(col("zygosity") =!= "hom-ref")
+      else counted
+
+    // FORMAT subfields as typed columns; split_columns exploded by comma
+    val withFields = keys.filter(_ != "GT").foldLeft(dropped) { (d, k) =>
+      opts.splitColumns.get(k) match {
+        case Some(n) =>
+          val parts = split(element_at(col("fmt"), k), ",")
+          (0 until n).foldLeft(d)((dd, i) =>
+            dd.withColumn(s"${k}_$i", try_element_at(parts, lit(i + 1))))
+        case None =>
+          d.withColumn(k, element_at(col("fmt"), k))
+      }
+    }
+
+    withFields.drop("fmt", "call", "format")
+  }
+
   test("kinshipPanel: MAF floor drops rare sites, LD prune drops the " +
       "higher-keyed linked twin, and the KING classes on the panel " +
       "match full-site truth (duplicate stays duplicate, unrelated " +
