@@ -6207,7 +6207,7 @@ object VcfQueries extends QuerySet {
   private lazy val q242 = Q(
     "q242_bgen_dosage",
     (s, dir) => {
-      val df = graft.sources.BgenReader.readBgen(s, bgenFixture(s, dir))
+      val df = s.read.format("bgen").load(bgenFixture(s, dir))
       graft.operators.VariantQc.dosageAf(df)
         .orderBy("chrom", "pos", "ref", "alt")
     },

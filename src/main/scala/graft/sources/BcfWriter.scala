@@ -471,7 +471,7 @@ object BcfWriter {
       index: Boolean = true): Unit =
     writeBcf(df, synthesizeHeader(df), outDir, index)
 
-  /** Write `df` (the [[BcfReader.read]] wide schema: chrom, pos, id,
+  /** Write `df` (the `format("bcf")` wide schema: chrom, pos, id,
     * ref, alt, qual, filter, info, format, genotypes MAP) as BCF
     * shards under `outDir/shards`, one self-contained `.bcf` per
     * partition. `headerText` must declare every contig / FILTER /

@@ -3,10 +3,6 @@ package graft.sources
 import java.io.{ByteArrayOutputStream, DataOutputStream, EOFException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets
 
-import scala.collection.mutable
-
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** BGEN v1.2 reader (the UK Biobank / TOPMed imputed-genotype format
@@ -40,17 +36,10 @@ import org.apache.spark.sql.types._
   * digit, and the exact shape [[graft.operators.VariantQc]]'s
   * `gpDosageMicro` parses losslessly (decimal(20,6) × 10⁶).
   *
-  * SCALE SHAPE — splittable by variant-block offsets: BGEN blocks are
-  * length-prefixed but not self-synchronizing, so the plan step walks
-  * each file's block headers ONCE reading only the length fields
-  * (seek-skipping every genotype payload — a few dozen bytes touched
-  * per variant) and assigns contiguous block RANGES to tasks; each
-  * task re-opens the file through the broadcast Hadoop conf
-  * ([[graft.sources.v2]]'s executor-conf rule), seeks to its range
-  * and decodes only its blocks. One task per range, no shuffle, rows
-  * stream out of the codec. (The official `.bgi` sqlite index serves
-  * the same role for htslib-world tools; the offset walk is the
-  * self-contained equivalent and costs one metadata pass per file.)
+  * Reading is `spark.read.format("bgen")` ([[v2.BgenDataSource]],
+  * splittable by variant-block offsets); this object holds the header,
+  * block and genotype decoders it runs, the [[schema]], and the
+  * encoder behind fixtures and the DSv2 bgen writer.
   */
 object BgenReader {
 
@@ -417,112 +406,6 @@ object BgenReader {
     StructField("sample_id", StringType),
     StructField("gt", StringType), StructField("gt1", StringType),
     StructField("gt2", StringType), StructField("GP", StringType)))
-
-  /** Read a `.bgen` into the long ann-shaped frame (one row per
-    * (variant, sample); see object doc). `splits` = task count
-    * (default: the session's default parallelism, capped at the
-    * variant count). */
-  def readBgen(spark: SparkSession, path: String,
-      splits: Int = 0): DataFrame = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(hconf)
-    // plan pass: header always (samples/compression); block offsets
-    // from the `.bgi` sqlite sidecar when one exists (tens of MB of
-    // index instead of a metadata pass over the whole file — the
-    // bgenix road; staleness checked against Metadata.file_size),
-    // else one length-only walk (payloads seek-skipped)
-    val (header, offsets) = {
-      val in = new java.io.BufferedInputStream(fs.open(p), 1 << 16)
-      val h = try readHeader(in) finally in.close()
-      val bgi = new Path(path + ".bgi")
-      if (fs.exists(bgi)) {
-        val entries = BgiIndex.read(spark, bgi.toString,
-          fs.getFileStatus(p).getLen)
-        require(entries.length == h.mVariants,
-          s"$path.bgi indexes ${entries.length} variants, header " +
-            s"declares ${h.mVariants} — rebuild the index")
-        (h, entries.map(_.fileStart).toArray)
-      } else {
-        val in2 = fs.open(p)
-        try {
-          in2.seek(h.firstVariantOffset)
-          val bin = new java.io.BufferedInputStream(in2, 1 << 16)
-          val offs = new Array[Long](h.mVariants.toInt)
-          val counting = new java.io.FilterInputStream(bin) {
-            var count = 0L
-            override def read(): Int = {
-              val r = super.read(); if (r >= 0) count += 1; r }
-            override def read(b: Array[Byte], o: Int, l: Int): Int = {
-              val r = super.read(b, o, l); if (r > 0) count += r; r }
-            override def skip(n: Long): Long = {
-              val s = super.skip(n); count += s; s }
-          }
-          var i = 0
-          while (i < h.mVariants) {
-            offs(i) = h.firstVariantOffset + counting.count
-            readVariantBlock(counting, h.compression, skipGeno = true)
-            i += 1
-          }
-          (h, offs)
-        } finally in2.close()
-      }
-    }
-    val nTasks = math.max(1, math.min(
-      if (splits > 0) splits else spark.sparkContext.defaultParallelism,
-      offsets.length))
-    val per = (offsets.length + nTasks - 1) / math.max(1, nTasks)
-    val ranges = offsets.indices.by(math.max(1, per)).map { s0 =>
-      (offsets(s0), math.min(per, offsets.length - s0))
-    }
-    val kv = {
-      val it = hconf.iterator()
-      val b = mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-      b.toSeq
-    }
-    val confBc = spark.sparkContext.broadcast(kv)
-    val samplesBc = spark.sparkContext.broadcast(header.samples)
-    val comp = header.compression
-    val nS = header.nSamples
-    val pathStr = path
-    val rows = spark.sparkContext
-      .parallelize(ranges, math.max(1, ranges.length))
-      .flatMap { case (startOff, count) =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confBc.value.foreach { case (k, v) => conf.set(k, v) }
-        val tp = new Path(pathStr)
-        val tfs = tp.getFileSystem(conf)
-        val raw = tfs.open(tp)
-        // close on task completion, not iterator exhaustion: a
-        // limit()/take() scan abandons the iterator mid-stream and the
-        // `++ close` suffix below would never run
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ =>
-            try raw.close() catch { case _: Throwable => () }))
-        raw.seek(startOff)
-        val in = new java.io.BufferedInputStream(raw, 1 << 16)
-        val samples = samplesBc.value
-        (0 until count).iterator.flatMap { _ =>
-          val v = readVariantBlock(in, comp, skipGeno = false)
-          val d = decodeGenotypes(v.genoData, v.alleles.length, nS)
-          val ref = if (v.alleles.nonEmpty) v.alleles.head else "."
-          val alt = if (v.alleles.length > 1)
-            v.alleles.tail.mkString(",") else "."
-          val ma = if (v.alleles.length > 2) 1 else 0
-          // unphased gt is './.' (BGEN carries probabilities, not
-          // hard calls) so the dosage ladder's GT rung never fires;
-          // PHASED blocks with certain haplotypes carry the real
-          // 'a|b' call + tokens (the haplotype-release shape)
-          samples.indices.iterator.map { si =>
-            Row(v.chrom, v.pos.toInt, v.varId, v.rsid, ref, alt, ma,
-              samples(si), d.gt(si), d.gt1(si), d.gt2(si), d.gp(si))
-          }
-        } ++ { try in.close() catch { case _: Throwable => () }
-               Iterator.empty }
-      }
-    spark.createDataFrame(rows, schema)
-  }
 
   // ---- encoder (fixtures, round-trip specs, and the write side a
   // simulation pipeline needs to EMIT imputed shards) ----

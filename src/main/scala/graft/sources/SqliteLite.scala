@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   * Scale posture: a `.bgi` is index-sized (≈100 bytes/variant — tens
   * of MB for a biobank chromosome vs hundreds of GB of genotypes),
   * so the whole file rides driver memory and the read replaces the
-  * per-file BGEN metadata pass ([[BgenReader.readBgen]]'s offset
+  * per-file BGEN metadata pass (the `format("bgen")` planner's offset
   * walk) with a seek-free scan of the index alone.
   */
 object SqliteLite {

@@ -5,15 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VariantFunctions
 
-/** Distributed VCF ingestion.
-  *
-  * The reference (pandasvcf.py:76-99 + vcf_metadata.py) streams a VCF
-  * through a pandas chunked csv reader on one core. Here the header is a
-  * driver-side peek at the first lines (VCF headers must precede data) and
-  * the body is a plain distributed text scan — line-splittable, so a
-  * 100 TB uncompressed/bgzip-sharded VCF parallelizes per file-split.
-  * Plain `.gz` is one task per file (not splittable) — land such data as
-  * many shards or convert to parquet via [[toParquet]].
+/** The paper-parity VCF surface: `VCF(filename, sample_id, cols,
+  * chunksize)` (pandasvcf.py:76-99) as [[read]] over
+  * `spark.read.format("vcf")` ([[v2.VcfDataSource]], the only VCF read
+  * path — byte-range splits for plain text, index-driven splits and
+  * region pruning for bgzipped files with a `.tbi`/`.csi` sibling),
+  * plus the header helpers, cohort merge/intersection, typed INFO/
+  * FORMAT extraction and the parquet/bucketed landings.
   */
 object VcfReader {
 
@@ -54,12 +52,16 @@ object VcfReader {
 
   /** Read a VCF file/glob into the wide graft schema:
     * `chrom, pos, id, ref, alt, qual, filter, info, format,
-    * genotypes MAP<sample,call>`. A map column keeps the schema fixed for
-    * any sample count — a 2500-sample VCF (reference README workload)
-    * would otherwise blow up codegen with 2500 string columns.
+    * genotypes MAP<sample,call>` — `format("vcf")` plus the reference's
+    * projections. A map column keeps the schema fixed for any sample
+    * count — a 2500-sample VCF (reference README workload) would
+    * otherwise blow up codegen with 2500 string columns. Malformed data
+    * lines are skipped and counted in the scan's `malformedLines`
+    * metric.
     *
-    * @param sampleIds subset of samples to keep (reference `sample_id=`,
-    *                  pandasvcf.py:122-132); None = all.
+    * @param sampleIds subset of samples to keep, in the order given
+    *                  (reference `sample_id=`, pandasvcf.py:122-132);
+    *                  None = all. Every id must be in the header.
     * @param dedupe    drop fully duplicated rows like the reference's
     *                  get_vcf_df_chunk (pandasvcf.py:175) — opt-in since
     *                  it costs a shuffle at scale.
@@ -67,9 +69,8 @@ object VcfReader {
     *                  pandasvcf.py:76-99): reference-style names
     *                  (`#CHROM`, `POS`, …) or graft names, case
     *                  insensitive, output in the order given; None =
-    *                  all. Catalyst then eliminates the parse
-    *                  expressions of dropped columns (the DSv2 path
-    *                  additionally prunes at the scan itself).
+    *                  all. The projection reaches the scan, so dropped
+    *                  columns are never built.
     */
   def read(
       spark: SparkSession,
@@ -77,11 +78,14 @@ object VcfReader {
       sampleIds: Option[Seq[String]] = None,
       dedupe: Boolean = false,
       cols: Option[Seq[String]] = None): DataFrame = {
-    val meta = metadata(spark, path)
-    val samples = sampleIds.getOrElse(meta.samples)
-    val lines = spark.read.text(path)
-      .filter(!col("value").startsWith("#"))
-    val parsed = parseLines(lines, meta.columns, samples)
+    val raw = spark.read.format("vcf").load(path)
+    val parsed = sampleIds.fold(raw) { ids =>
+      val missing = ids.diff(metadata(spark, path).samples)
+      require(missing.isEmpty,
+        s"samples not in the header of $path: ${missing.mkString(",")}")
+      raw.withColumn("genotypes", map_from_arrays(typedLit(ids),
+        array(ids.map(id => element_at(col("genotypes"), id)): _*)))
+    }
     val projected = cols.fold(parsed) { cs =>
       parsed.select(cs.map(c =>
         col(c.stripPrefix("#").toLowerCase(java.util.Locale.ROOT))): _*)
@@ -207,10 +211,7 @@ object VcfReader {
   /** [[mergeCohort]] over file paths: each header is read driver-side
     * for its sample list, each body through [[read]]. */
   def readCohort(spark: SparkSession, paths: Seq[String]): DataFrame =
-    mergeCohort(paths.map { p =>
-      val samples = metadata(spark, p).samples
-      (read(spark, p, sampleIds = Some(samples)), samples)
-    })
+    mergeCohort(paths.map(p => (read(spark, p), metadata(spark, p).samples)))
 
   /** Parse raw VCF body lines (column `value`) given the header's column
     * list. Pure narrow projection — stays in WholeStageCodegen.

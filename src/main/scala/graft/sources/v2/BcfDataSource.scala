@@ -14,7 +14,7 @@ import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,14 +25,14 @@ import graft.sources.BcfReader.{BcfHeader, BcfRecord}
 /** DataSource V2 BCF reader: `spark.read.format("bcf").load(path)` —
   * the binary twin of [[VcfDataSource]], same FIXED 10-column schema,
   * so the two formats are interchangeable in any downstream chain.
-  * What Catalyst gets that the column-level [[BcfReader.read]] API
-  * leaves to the caller:
+  * It is the only BCF read path; [[BcfReader]] holds the header and
+  * record decoders it shares with the writers.
   *
   *  - **chrom/pos pushdown** (`.filter($"chrom" === "2" && $"pos"
   *    between (a, b))` shows up in PushedFilters): with a sibling
-  *    `.csi` the scan prunes to the region's BGZF chunks — the
-  *    [[BcfReader.readRegion]] machinery behind the declarative API —
-  *    and files whose index lacks the chromosome are skipped whole.
+  *    `.csi` the scan prunes to the region's BGZF chunks (both ends
+  *    bounded by the binning index), and files whose index lacks the
+  *    chromosome are skipped whole.
   *    Pushed pos bounds are also checked against the record's FIXED
   *    header slots (rid/pos are the first 8 bytes of the shared
   *    block) BEFORE any string decoding, so filtered-out records cost
@@ -44,7 +44,9 @@ import graft.sources.BcfReader.{BcfHeader, BcfRecord}
   *    sites-shaped query over a 2500-sample BCF does ~per-site work.
   *  - **splittable full scans** via the `.csi` chunk-begin voffs
   *    (~`spark.sql.files.maxPartitionBytes` of compressed bytes per
-  *    task), with the unindexed one-streaming-task fallback.
+  *    task), with the unindexed one-streaming-task fallback: BCF
+  *    record boundaries are not discoverable mid-stream without the
+  *    `.csi` chunk offsets, so an unindexed file is one task.
   *  - [[SupportsReportStatistics]]: post-pruning compressed bytes ×
   *    a conservative inflation, so a pruned locus read broadcast-joins
   *    where the raw file size would force a shuffle (the
@@ -59,18 +61,8 @@ class BcfDataSource extends TableProvider with DataSourceRegister {
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val multi = Option(properties.get("paths")).toSeq.flatMap { s =>
-      try new com.fasterxml.jackson.databind.ObjectMapper()
-        .readValue(s, classOf[Array[String]]).toSeq
-      catch {
-        case e: Exception => throw new IllegalArgumentException(
-          "bcf option 'paths' must be a JSON array of strings, got: " + s, e)
-      }
-    }
-    val paths = Option(properties.get("path")).toSeq ++ multi
-    new BcfTable(paths)
-  }
+      properties: util.Map[String, String]): Table =
+    new BcfTable(ScanSupport.tablePaths("bcf", properties))
 }
 
 final class BcfTable(paths: Seq[String]) extends Table with SupportsRead
@@ -114,13 +106,7 @@ final class BcfScanBuilder(paths: Seq[String],
     required = requiredSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (supported, rest) = filters.partition {
-      case EqualTo("chrom", _) => true
-      case EqualTo("pos", _) | GreaterThan("pos", _) |
-           GreaterThanOrEqual("pos", _) | LessThan("pos", _) |
-           LessThanOrEqual("pos", _) => true
-      case _ => false
-    }
+    val (supported, rest) = filters.partition(PushedRegion.supports)
     pushed = supported
     rest
   }
@@ -138,48 +124,20 @@ final class BcfScan(paths: Seq[String], required: StructType,
     s"BcfScan[${required.fieldNames.mkString(",")}] pushed=${filters.mkString(",")}"
   override def toBatch: Batch = this
 
-  /** All pushed chrom equalities. The row-side check applies them
-    * verbatim against the NORMALIZED chrom (the output column), so
-    * planning can prune: more than one distinct value, or a value the
-    * normalized output can never equal (a `chr`-prefixed literal),
-    * yields zero tasks outright. */
-  private def chromEqsPlan: Array[String] =
-    filters.collect { case EqualTo("chrom", v) => v.toString }
-  private def chromEq: Option[String] = {
-    val eqs = chromEqsPlan.distinct
-    if (eqs.length == 1) Some(eqs.head) else None
-  }
-  private def chromUnsatisfiable: Boolean = {
-    val eqs = chromEqsPlan.distinct
-    eqs.length > 1 || eqs.exists(_.startsWith("chr"))
-  }
+  /** Pushed chrom/pos predicates; chrom values compare against the
+    * NORMALIZED chrom (the output column). */
+  private val region = PushedRegion(filters.toSeq)
 
-  private def posLowerInclusive: Option[Int] = {
-    val bounds = filters.collect {
-      case GreaterThan("pos", v) => v.toString.toInt + 1
-      case GreaterThanOrEqual("pos", v) => v.toString.toInt
-      case EqualTo("pos", v) => v.toString.toInt
-    }
-    if (bounds.isEmpty) None else Some(bounds.max)
-  }
-
-  private def posUpperInclusive: Option[Int] = {
-    val bounds = filters.collect {
-      case LessThan("pos", v) => v.toString.toInt - 1
-      case LessThanOrEqual("pos", v) => v.toString.toInt
-      case EqualTo("pos", v) => v.toString.toInt
-    }
-    if (bounds.isEmpty) None else Some(bounds.min)
-  }
-
-  /** Planned voff tasks per file — the [[BcfReader.planTasks]] /
-    * [[BcfReader.planRegion]] logic driven by the PUSHED predicates,
-    * shared by partition planning and [[estimateStatistics]]. One
-    * header peek + one sibling-index read per file, planning-time
-    * only; a corrupt index degrades to the unsplit scan (warn).
+  /** Planned voff tasks per file, driven by the pushed predicates and
+    * shared by partition planning and [[estimateStatistics]]: a pushed
+    * chrom resolves to its `.csi` region chunks, otherwise the index's
+    * chunk begins subdivide the file every ~maxPartitionBytes of
+    * compressed bytes. One header peek + one sibling-index read per
+    * file, planning-time only; a corrupt index degrades to the unsplit
+    * scan (warn).
     */
   private lazy val planned: Seq[(String, Long, Long, Long, String)] =
-    if (chromUnsatisfiable) Seq.empty else {
+    if (region.unsatisfiable) Seq.empty else {
     val spark = SparkSession.active
     val conf = spark.sessionState.newHadoopConf()
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
@@ -235,17 +193,13 @@ final class BcfScan(paths: Seq[String], required: StructType,
         val len = st.getLen
         idx match {
           case Some(i) =>
-            chromEq match {
+            region.chrom match {
               case Some(c) =>
                 i.ref(c) match {
                   case None => () // chromosome absent: whole file pruned
                   case Some(r) =>
-                    val maxPos = r.maxPos
-                    val lower0 = posLowerInclusive
-                      .map(l => math.max(0, l - 1).toLong).getOrElse(0L)
-                    val upper0Ex = math.min(maxPos,
-                      posUpperInclusive.map(_.toLong).getOrElse(maxPos))
-                    TabixIndex.regionChunks(r, lower0, upper0Ex).foreach {
+                    TabixIndex.regionChunks(r, region.beg0,
+                        math.min(r.maxPos, region.hi)).foreach {
                       ch =>
                         fout += ((fp.toString, ch.beg, ch.end, len,
                           header.text))
@@ -303,21 +257,10 @@ final class BcfScan(paths: Seq[String], required: StructType,
     }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // session Hadoop conf rides to executors as broadcast key-values
-    // (Configuration is not serializable): a format("bcf") read must
-    // honor spark.hadoop.* (s3a credentials etc.) exactly like
-    // BcfReader.readTasks does — a fresh executor-side Configuration
-    // would silently drop them
     val spark = SparkSession.active
-    val hconf = spark.sessionState.newHadoopConf()
-    val kv = {
-      val it = hconf.iterator()
-      val b = mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-      b.toSeq
-    }
-    new BcfReaderFactory(required, filters, samplesKeep,
-      spark.sparkContext.broadcast(kv))
+    new BcfReaderFactory(required, region, samplesKeep,
+      spark.sparkContext.broadcast(
+        ScanSupport.confKv(spark.sessionState.newHadoopConf())))
   }
 }
 
@@ -333,53 +276,29 @@ final case class BcfPartition(path: String, begVoff: Long,
     endVoffEx: Long, fileLen: Long, headerText: String)
     extends InputPartition
 
-final class BcfReaderFactory(required: StructType, filters: Array[Filter],
-    samplesKeep: Option[Set[String]] = None,
-    confKv: org.apache.spark.broadcast.Broadcast[Seq[(String, String)]] = null)
+final class BcfReaderFactory(required: StructType, region: PushedRegion,
+    samplesKeep: Option[Set[String]],
+    confKv: org.apache.spark.broadcast.Broadcast[Seq[(String, String)]])
     extends PartitionReaderFactory {
   override def createReader(
       partition: InputPartition): PartitionReader[InternalRow] =
     new BcfPartitionReader(partition.asInstanceOf[BcfPartition], required,
-      filters, samplesKeep, confKv)
+      region, samplesKeep, confKv.value)
 }
 
 final class BcfPartitionReader(part: BcfPartition, required: StructType,
-    filters: Array[Filter], samplesKeep: Option[Set[String]] = None,
-    confKv: org.apache.spark.broadcast.Broadcast[Seq[(String, String)]] = null)
+    region: PushedRegion, samplesKeep: Option[Set[String]],
+    confKv: Seq[(String, String)])
     extends PartitionReader[InternalRow] {
 
   private val hdr: BcfHeader = BcfReader.decodeHeaderText(part.headerText)
-  // rebuild the DRIVER's Hadoop conf from the broadcast key-values so
-  // executor-side FS access honors the session conf (spark.hadoop.*) —
-  // the BcfReader.readTasks rule; null only in direct unit-test wiring
-  private val conf = {
-    val c = new org.apache.hadoop.conf.Configuration(confKv == null)
-    if (confKv != null) confKv.value.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
   private val hPath = new Path(part.path)
-  private val fs = hPath.getFileSystem(conf)
+  private val fs = hPath.getFileSystem(ScanSupport.conf(confKv))
 
-  // pre-decode chrom table in NORMALIZED form for the pushed compare.
-  // The pushed VALUE is compared VERBATIM (no chr-strip): the output
-  // chrom column is normalized, so `chrom === "chr2"` is correctly
-  // empty — a consumed filter must behave exactly as Spark would have
-  // evaluated it (the VcfPartitionReader rule). ALL chrom equalities
-  // apply (a conflicting pair must yield zero rows, not the first's).
-  private val normContigs: IndexedSeq[String] =
-    hdr.contigs.map(_.stripPrefix("chr"))
-  private val chromEqs: Array[String] =
-    filters.collect { case EqualTo("chrom", v) => v.toString }
-  private val posChecks: Array[Int => Boolean] = filters.collect {
-    case EqualTo("pos", v) => val b = v.toString.toInt; (p: Int) => p == b
-    case GreaterThan("pos", v) =>
-      val b = v.toString.toInt; (p: Int) => p > b
-    case GreaterThanOrEqual("pos", v) =>
-      val b = v.toString.toInt; (p: Int) => p >= b
-    case LessThan("pos", v) => val b = v.toString.toInt; (p: Int) => p < b
-    case LessThanOrEqual("pos", v) =>
-      val b = v.toString.toInt; (p: Int) => p <= b
-  }
+  // the pushed chrom compare, decided once per contig against the
+  // NORMALIZED name (the output column)
+  private val contigMatches: Array[Boolean] =
+    hdr.contigs.map(c => region.chromMatches(c.stripPrefix("chr"))).toArray
 
   private val wantGenotypes =
     required.fieldNames.contains("genotypes") ||
@@ -462,10 +381,11 @@ final class BcfPartitionReader(part: BcfPartition, required: StructType,
       // pre-parse pushed-predicate check on the FIXED slots: rid at
       // offset 8, pos0 at 12 — two int reads before any string decode
       val rid = u32(buf, 8)
-      val pos = u32(buf, 12) + 1
-      val chromOk = chromEqs.forall(c =>
-        rid >= 0 && rid < normContigs.length && normContigs(rid) == c)
-      if (chromOk && posChecks.forall(_(pos))) {
+      val pos = u32(buf, 12) + 1L
+      if (rid < 0 || rid >= contigMatches.length)
+        throw new java.io.IOException(s"BCF record in ${part.path} names " +
+          s"contig $rid; the header declares ${contigMatches.length}")
+      if (contigMatches(rid) && region.posMatches(pos)) {
         val bb = java.nio.ByteBuffer.wrap(buf, 8, buf.length - 8).slice()
           .order(java.nio.ByteOrder.LITTLE_ENDIAN)
         val rec = BcfReader.decodeRecord(bb, u32(buf, 0), hdr,

@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -20,9 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.BgenReader
 
 /** DataSource V2 BGEN reader: `spark.read.format("bgen").load(path)`
-  * — the declarative twin of [[graft.sources.BgenReader.readBgen]]
-  * (same long ann-shaped schema, so the GP dosage ladder consumes it
-  * unchanged), with the scan behaviors only Catalyst can drive:
+  * — the only BGEN read path, in the long ann-shaped
+  * [[graft.sources.BgenReader.schema]] the GP dosage ladder consumes,
+  * with the scan behaviors only Catalyst can drive:
   *
   *  - **chrom/pos pushdown applied BEFORE payload decode**: a variant
   *    block's identifying fields (chrom, pos) are a few dozen bytes
@@ -36,13 +36,14 @@ import graft.sources.BgenReader
   *    nor `gt` is required, the probability payload is never
   *    inflated/unpacked — a sites-shaped query (`select chrom, pos,
   *    ref, alt`) does per-variant work, not per-(variant × sample).
-  *  - **splittable by variant-block offsets**: planning walks each
-  *    file's block headers once (lengths only — the
-  *    [[BgenReader.readBgen]] plan pass, run per file on the bounded
-  *    [[PlanPool]]) and assigns contiguous byte-budgeted block ranges
-  *    (~`spark.sql.files.maxPartitionBytes` each); readers re-open
-  *    through the broadcast-free session conf rebuilt from the
-  *    planned kv set (the executor-conf rule).
+  *  - **splittable by variant-block offsets**: BGEN blocks are
+  *    length-prefixed but not self-synchronizing, so planning takes
+  *    each file's block offsets from its `.bgi` sidecar when present,
+  *    else walks the block headers once (lengths only, payloads
+  *    seek-skipped), per file on the bounded [[PlanPool]]; it assigns
+  *    contiguous byte-budgeted block ranges
+  *    (~`spark.sql.files.maxPartitionBytes` each) and each reader
+  *    seeks to its range through the session's Hadoop conf.
   *  - [[SupportsReportStatistics]]: post-pruning bytes × a zlib
   *    inflation guess + exact row count (blocks × samples), so a
   *    pruned BGEN read broadcast-joins where the raw size wouldn't.
@@ -56,19 +57,8 @@ class BgenDataSource extends TableProvider with DataSourceRegister {
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val multi = Option(properties.get("paths")).toSeq.flatMap { s =>
-      try new com.fasterxml.jackson.databind.ObjectMapper()
-        .readValue(s, classOf[Array[String]]).toSeq
-      catch {
-        case e: Exception => throw new IllegalArgumentException(
-          "bgen option 'paths' must be a JSON array of strings, got: " + s,
-          e)
-      }
-    }
-    val paths = Option(properties.get("path")).toSeq ++ multi
-    new BgenTable(paths)
-  }
+      properties: util.Map[String, String]): Table =
+    new BgenTable(ScanSupport.tablePaths("bgen", properties))
 }
 
 final class BgenTable(paths: Seq[String]) extends Table
@@ -99,13 +89,7 @@ final class BgenScanBuilder(paths: Seq[String])
     required = requiredSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (supported, rest) = filters.partition {
-      case EqualTo("chrom", _) => true
-      case EqualTo("pos", _) | GreaterThan("pos", _) |
-           GreaterThanOrEqual("pos", _) | LessThan("pos", _) |
-           LessThanOrEqual("pos", _) => true
-      case _ => false
-    }
+    val (supported, rest) = filters.partition(PushedRegion.supports)
     pushed = supported
     rest
   }
@@ -128,33 +112,12 @@ final class BgenScan(paths: Seq[String], required: StructType,
       s"pushed=${filters.mkString(",")}"
   override def toBatch: Batch = this
 
-  private def chromEq: Option[String] = {
-    val eqs = filters.collect { case EqualTo("chrom", v) => v.toString }
-      .distinct
-    if (eqs.length == 1) Some(eqs.head) else None
-  }
-  private def chromUnsatisfiable: Boolean =
-    filters.collect { case EqualTo("chrom", v) => v.toString }
-      .distinct.length > 1
-  private def posLo: Option[Long] = {
-    val b = filters.collect {
-      case GreaterThan("pos", v) => v.toString.toLong + 1
-      case GreaterThanOrEqual("pos", v) => v.toString.toLong
-      case EqualTo("pos", v) => v.toString.toLong
-    }
-    if (b.isEmpty) None else Some(b.max)
-  }
-  private def posHi: Option[Long] = {
-    val b = filters.collect {
-      case LessThan("pos", v) => v.toString.toLong - 1
-      case LessThanOrEqual("pos", v) => v.toString.toLong
-      case EqualTo("pos", v) => v.toString.toLong
-    }
-    if (b.isEmpty) None else Some(b.min)
-  }
+  /** Pushed chrom/pos predicates; chrom values compare against the
+    * file's own chromosome names (BGEN output is not normalized). */
+  private val region = PushedRegion(filters.toSeq)
 
   private lazy val plannedParts: Array[InputPartition] =
-    if (chromUnsatisfiable) Array.empty else {
+    if (region.unsatisfiable) Array.empty else {
     val spark = SparkSession.active
     val hconf = spark.sessionState.newHadoopConf()
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
@@ -184,7 +147,6 @@ final class BgenScan(paths: Seq[String], required: StructType,
     // sqlite sidecar when present (index-sized read + block-level
     // chrom/pos PRUNING — non-matching blocks never read AT ALL, not
     // even their identifiers), else header + offset walk
-    val cEq = chromEq; val pLo = posLo; val pHi = posHi
     val perFile = PlanPool.mapOrdered(files.toSeq) { fp =>
       val fs = fp.getFileSystem(hconf)
       val in = new java.io.BufferedInputStream(fs.open(fp), 1 << 16)
@@ -197,11 +159,8 @@ final class BgenScan(paths: Seq[String], required: StructType,
           s"$fp.bgi indexes ${entries.length} variants, header " +
             s"declares ${header.mVariants} — rebuild the index")
         // exact block-level pruning from the index alone
-        val kept = entries.filter(e =>
-          cEq.forall(_ == e.chrom) &&
-            pLo.forall(e.pos >= _) && pHi.forall(e.pos <= _))
-        (fp.toString, header,
-          kept.map(e => (e.fileStart, e.sizeBytes)), -1L)
+        val kept = entries.filter(e => region.matches(e.chrom, e.pos))
+        (fp.toString, header, kept.map(e => (e.fileStart, e.sizeBytes)))
       } else {
         val raw = fs.open(fp)
         try {
@@ -227,11 +186,11 @@ final class BgenScan(paths: Seq[String], required: StructType,
             blocks += ((start, end - start))
             i += 1
           }
-          (fp.toString, header, blocks.result(), -1L)
+          (fp.toString, header, blocks.result())
         } finally raw.close()
       }
     }
-    perFile.foreach { case (p, header, blocks, _) =>
+    perFile.foreach { case (p, header, blocks) =>
       // contiguous runs only (a task decodes sequentially from its
       // start offset), split further by the byte budget
       var s0 = 0
@@ -251,19 +210,12 @@ final class BgenScan(paths: Seq[String], required: StructType,
 
   override def planInputPartitions(): Array[InputPartition] = plannedParts
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // the Hadoop conf rides the FACTORY, serialized once per task-set
-    // broadcast — not inside every InputPartition, where hundreds of
-    // kv pairs would bloat each task payload (the readBgen rule)
-    val hconf = SparkSession.active.sessionState.newHadoopConf()
-    val kv = {
-      val it = hconf.iterator()
-      val b = mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-      b.toSeq
-    }
-    new BgenReaderFactory(required, chromEq, posLo, posHi, kv)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    // the Hadoop conf rides the FACTORY, serialized once per task set —
+    // not inside every InputPartition, where hundreds of kv pairs
+    // would bloat each task payload
+    new BgenReaderFactory(required, region, ScanSupport.confKv(
+      SparkSession.active.sessionState.newHadoopConf()))
 
   override def estimateStatistics(): Statistics = new Statistics {
     private val bytes = plannedParts.map {
@@ -283,29 +235,22 @@ final class BgenScan(paths: Seq[String], required: StructType,
   }
 }
 
-final class BgenReaderFactory(required: StructType,
-    chromEq: Option[String], posLo: Option[Long], posHi: Option[Long],
+final class BgenReaderFactory(required: StructType, region: PushedRegion,
     confKv: Seq[(String, String)])
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new BgenPartitionReader(p.asInstanceOf[BgenPartition], required,
-      chromEq, posLo, posHi, confKv)
+      region, confKv)
 }
 
 final class BgenPartitionReader(part: BgenPartition, required: StructType,
-    chromEq: Option[String], posLo: Option[Long], posHi: Option[Long],
-    confKv: Seq[(String, String)])
+    region: PushedRegion, confKv: Seq[(String, String)])
     extends PartitionReader[InternalRow] {
   import BgenReader._
 
-  private val conf = {
-    val c = new org.apache.hadoop.conf.Configuration(false)
-    confKv.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
   private val in = {
     val p = new Path(part.path)
-    val raw = p.getFileSystem(conf).open(p)
+    val raw = p.getFileSystem(ScanSupport.conf(confKv)).open(p)
     raw.seek(part.startOffset)
     new java.io.BufferedInputStream(raw, 1 << 16)
   }
@@ -321,10 +266,6 @@ final class BgenPartitionReader(part: BgenPartition, required: StructType,
   private var sampleI = 0
   private var row: InternalRow = _
 
-  private def blockMatches(v: BgenVariant): Boolean =
-    chromEq.forall(_ == v.chrom) &&
-      posLo.forall(v.pos >= _) && posHi.forall(v.pos <= _)
-
   override def next(): Boolean = {
     while (current == null || sampleI >= part.samples.length) {
       if (blocksLeft <= 0) return false
@@ -333,7 +274,7 @@ final class BgenPartitionReader(part: BgenPartition, required: StructType,
       // an inflate/bit-unpack (the pushdown payoff)
       val ids = readVariantIds(in)
       blocksLeft -= 1
-      val matches = blockMatches(ids)
+      val matches = region.matches(ids.chrom, ids.pos)
       val geno = readGenoPayload(in, part.compression,
         skip = !(matches && needGeno))
       if (matches) {

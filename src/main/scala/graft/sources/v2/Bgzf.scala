@@ -33,7 +33,9 @@ sealed abstract class BgzfBlockStream(in: FSDataInputStream,
 
   private var blockStart = startBlock // compressed offset of the loaded block
   private var nextBlock = startBlock // compressed offset of the next block to load
-  protected var buf: Array[Byte] = Array.emptyByteArray // decompressed current block
+  // decompressed current block; one byte past the 64 KiB maximum, so an
+  // oversized payload inflates far enough to be caught, never truncated
+  protected val buf = new Array[Byte](65537)
   protected var bufLen = 0
   protected var bufPos = 0
   protected var eof = false
@@ -41,6 +43,7 @@ sealed abstract class BgzfBlockStream(in: FSDataInputStream,
   private val cbuf = new Array[Byte](65536) // compressed payload of one block
   private val hdr = new Array[Byte](12)
   private val trailer = new Array[Byte](8)
+  private val crc = new java.util.zip.CRC32()
 
   /** Loads the next non-empty block; false at end of file (the 28-byte
     * BGZF EOF terminator decompresses to zero bytes and is skipped).
@@ -67,27 +70,40 @@ sealed abstract class BgzfBlockStream(in: FSDataInputStream,
       }
       require(bsize > 0, s"BGZF BC subfield missing at compressed offset $nextBlock")
       val cdataLen = bsize - xlen - 20 // 12 hdr + xlen extra + cdata + CRC32(4) + ISIZE(4)
+      require(cdataLen >= 0,
+        s"corrupt BGZF block at compressed offset $nextBlock: BSIZE $bsize")
       in.readFully(cbuf, 0, cdataLen)
       in.readFully(trailer) // CRC32 + ISIZE
-      val isize = (trailer(4) & 0xff) | ((trailer(5) & 0xff) << 8) |
-        ((trailer(6) & 0xff) << 16) | ((trailer(7) & 0xff) << 24)
+      def le32(at: Int): Int = (trailer(at) & 0xff) | ((trailer(at + 1) & 0xff) << 8) |
+        ((trailer(at + 2) & 0xff) << 16) | ((trailer(at + 3) & 0xff) << 24)
+      val isize = le32(4)
+      require(isize >= 0 && isize <= 65536,
+        s"corrupt BGZF block at compressed offset $nextBlock: ISIZE $isize")
       blockStart = nextBlock
       nextBlock += bsize
+      inflater.reset()
+      inflater.setInput(cbuf, 0, cdataLen)
+      var off = 0
+      while (!inflater.finished()) {
+        val w = inflater.inflate(buf, off, buf.length - off)
+        // a corrupt block whose deflate stream stalls (0 bytes out, not
+        // finished) must fail loudly — the alternative is an infinite
+        // loop pinning an executor
+        require(w > 0 || inflater.finished(),
+          s"corrupt BGZF block at compressed offset $blockStart: " +
+            s"deflate stalled at $off bytes")
+        off += w
+      }
+      // a wrong BSIZE/ISIZE or damaged payload must not surface as
+      // different (or silently missing) bytes: every block, the empty
+      // EOF block included, inflates to exactly ISIZE bytes whose CRC32
+      // matches its trailer, or the read fails
+      crc.reset()
+      crc.update(buf, 0, off)
+      require(off == isize && crc.getValue.toInt == le32(0),
+        s"corrupt BGZF block at compressed offset $blockStart: " +
+          s"inflated $off of $isize declared bytes or CRC32 mismatch")
       if (isize > 0) {
-        if (buf.length < isize) buf = new Array[Byte](isize)
-        inflater.reset()
-        inflater.setInput(cbuf, 0, cdataLen)
-        var off = 0
-        while (off < isize && !inflater.finished()) {
-          val w = inflater.inflate(buf, off, isize - off)
-          // a corrupt block whose deflate stream stalls (0 bytes out,
-          // not finished, no input left to give) must fail loudly —
-          // the alternative is an infinite loop pinning an executor
-          require(w > 0 || inflater.finished(),
-            s"corrupt BGZF block at compressed offset $blockStart: " +
-              s"deflate stalled at $off of $isize declared bytes")
-          off += w
-        }
         bufLen = isize
         bufPos = 0
         return true

@@ -15,10 +15,9 @@ import graft.sources.{BcfReader, BcfWriter}
 
 /** DataSource V2 WRITE path for the `vcf` and `bcf` formats — the API
   * any Spark user reaches for first (`df.write.format("bcf")
-  * .mode("append").save(dir)`), closing the r14 verdict's read/write
-  * asymmetry (reads were DSv2-complete; writing was library-call
-  * only: [[graft.sources.VcfWriter]] / [[BcfWriter.writeBcf]]). The
-  * encoding is EXACTLY the library writers' (shared
+  * .mode("append").save(dir)`), the twin of the `format("vcf"|"bcf")`
+  * scans. The encoding is EXACTLY the library writers'
+  * ([[graft.sources.VcfWriter]] / [[BcfWriter.writeBcf]]; shared
   * `encodePrologue`/`encodeRecord`/`composeHeader`/CSI padding), so
   * shards written here read back through `format("bcf")` with the
   * same splittability and region pruning.
@@ -300,18 +299,13 @@ final class GraftBatchWrite(kind: String, dir: String,
       old.foreach(fs.delete(_, false))
     }
     fs.mkdirs(p)
-    val kv = {
-      val it = hconf.iterator()
-      val b = mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-      b.toSeq
-    }
     val bgenBits = Option(info.options().get("bits"))
       .map(_.toInt).getOrElse(8)
     val bgenZlib = Option(info.options().get("zlib"))
       .forall(_.toBoolean)
     new GraftWriterFactory(kind, dir, fm, header, index,
-      spark.sparkContext.broadcast(kv), bgzf, info.schema(),
+      spark.sparkContext.broadcast(ScanSupport.confKv(hconf)), bgzf,
+      info.schema(),
       bgenBits, bgenZlib)
   }
 
@@ -342,8 +336,7 @@ final class GraftWriterFactory(kind: String, dir: String,
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] = {
-    val conf = new org.apache.hadoop.conf.Configuration(false)
-    confKv.value.foreach { case (k, v) => conf.set(k, v) }
+    val conf = ScanSupport.conf(confKv.value)
     if (kind == "bgen")
       new BgenDataWriter(dir, schema, bgenBits, bgenZlib, conf,
         partitionId, taskId)

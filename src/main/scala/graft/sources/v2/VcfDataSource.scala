@@ -5,7 +5,6 @@ import java.nio.charset.StandardCharsets
 import java.util
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -17,11 +16,10 @@ import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.LongAccumulator
 
 /** DataSource V2 VCF reader: `spark.read.format("vcf").load(path)`.
   *
@@ -58,24 +56,8 @@ class VcfDataSource extends TableProvider with DataSourceRegister {
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    // Spark serializes load(p1, p2, ...) into the "paths" property as a
-    // JSON array string (see FileDataSourceV2.getPaths); "path" holds a
-    // single bare path. Parse accordingly — splitting on ',' would break
-    // both multi-path loads and paths containing commas.
-    val multi = Option(properties.get("paths")).toSeq.flatMap { s =>
-      try new com.fasterxml.jackson.databind.ObjectMapper()
-        .readValue(s, classOf[Array[String]]).toSeq
-      catch {
-        case e: Exception => throw new IllegalArgumentException(
-          "vcf option 'paths' must be a JSON array of strings (Spark's " +
-            "load(p1, p2, ...) serializes it that way), e.g. " +
-            """["/a.vcf","/b.vcf"] — got: """ + s, e)
-      }
-    }
-    val paths = Option(properties.get("path")).toSeq ++ multi
-    new VcfTable(paths)
-  }
+      properties: util.Map[String, String]): Table =
+    new VcfTable(ScanSupport.tablePaths("vcf", properties))
 }
 
 object VcfDataSource {
@@ -90,17 +72,6 @@ object VcfDataSource {
     StructField("info", StringType),
     StructField("format", StringType),
     StructField("genotypes", MapType(StringType, StringType))))
-
-  /** TEST-ONLY observability hook: the malformed-line accumulator of the
-    * LAST vcf scan to build its FIRST reader factory, process-global —
-    * a scan registers here once (the accumulator is per-scan lazy), so
-    * when two vcf scans plan concurrently the last first-time planner
-    * wins and assertions on it are single-scan-at-a-time. Production monitoring should read the
-    * per-scan "vcf malformed lines" accumulator from the Spark UI /
-    * listener bus instead (each scan registers exactly one).
-    */
-  @volatile private[v2] var lastMalformedAcc: Option[LongAccumulator] = None
-  def lastMalformedCount: Option[Long] = lastMalformedAcc.map(_.value)
 }
 
 final class VcfTable(paths: Seq[String]) extends Table with SupportsRead
@@ -144,12 +115,7 @@ final class VcfScanBuilder(paths: Seq[String],
 
   /** Accept chrom/pos comparisons — evaluated pre-parse in the reader. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (supported, rest) = filters.partition {
-      case EqualTo("chrom", _) => true
-      case EqualTo("pos", _) | GreaterThan("pos", _) | GreaterThanOrEqual("pos", _) |
-           LessThan("pos", _) | LessThanOrEqual("pos", _) => true
-      case _ => false
-    }
+    val (supported, rest) = filters.partition(PushedRegion.supports)
     pushed = supported
     rest
   }
@@ -166,38 +132,17 @@ final class VcfScan(paths: Seq[String], required: StructType, filters: Array[Fil
     s"VcfScan[${required.fieldNames.mkString(",")}] pushed=${filters.mkString(",")}"
   override def toBatch: Batch = this
 
-  /** Pushed chrom equality (values compare against the NORMALIZED
-    * chromosome, `chr22` → `22`). */
-  private def chromEq: Option[String] =
-    filters.collectFirst { case EqualTo("chrom", v) => v.toString }
-
-  /** Tightest pushed lower bound on POS (1-based, inclusive). */
-  private def posLowerInclusive: Option[Int] = {
-    val bounds = filters.collect {
-      case GreaterThan("pos", v) => v.toString.toInt + 1
-      case GreaterThanOrEqual("pos", v) => v.toString.toInt
-      case EqualTo("pos", v) => v.toString.toInt
-    }
-    if (bounds.isEmpty) None else Some(bounds.max)
-  }
-
-  /** Tightest pushed upper bound on POS (1-based, inclusive). */
-  private def posUpperInclusive: Option[Int] = {
-    val bounds = filters.collect {
-      case LessThan("pos", v) => v.toString.toInt - 1
-      case LessThanOrEqual("pos", v) => v.toString.toInt
-      case EqualTo("pos", v) => v.toString.toInt
-    }
-    if (bounds.isEmpty) None else Some(bounds.min)
-  }
+  /** Pushed chrom/pos predicates; chrom values compare against the
+    * NORMALIZED chromosome (`chr22` → `22`). */
+  private val region = PushedRegion(filters.toSeq)
 
   /** One header read per FILE, at planning time: the sample list rides
     * inside every [[VcfPartition]], so no reader task re-opens the
     * leading `#` lines (for pruned `.gz` regions that read would even
     * decompress from byte zero).
     */
-  private def headerSamples(fs: FileSystem, conf: Configuration, p: Path): Array[String] = {
-    val codec = new CompressionCodecFactory(conf).getCodec(p)
+  private def headerSamples(fs: FileSystem, p: Path): Array[String] = {
+    val codec = new CompressionCodecFactory(hadoopConf).getCodec(p)
     val in = fs.open(p)
     val stream = if (codec != null) codec.createInputStream(in) else in
     val br = new BufferedReader(new InputStreamReader(stream, StandardCharsets.UTF_8))
@@ -217,7 +162,8 @@ final class VcfScan(paths: Seq[String], required: StructType, filters: Array[Fil
     * (start, length, vSkip, endVoff). Lazy: one filesystem + sibling-
     * index pass per scan; pruning decisions never need the sample list.
     */
-  private lazy val plannedRanges: Seq[(FileSystem, Path, Seq[(Long, Long, Int, Long)])] = {
+  private lazy val plannedRanges: Seq[(FileSystem, Path, Seq[(Long, Long, Int, Long)])] =
+    if (region.unsatisfiable) Seq.empty else {
     val spark = SparkSession.active
     val conf = hadoopConf
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
@@ -255,7 +201,7 @@ final class VcfScan(paths: Seq[String], required: StructType, filters: Array[Fil
         // query — valid data must stay queryable behind a bad index
         // (delete or rebuild the sibling to restore pruning).
         val idx: Option[TabixIndex.Index] =
-          if (isGz || chromEq.isDefined) {
+          if (isGz || region.chrom.isDefined) {
             try TabixIndex.readSibling(fs, st.getPath)
             catch {
               case e: Exception =>
@@ -281,7 +227,7 @@ final class VcfScan(paths: Seq[String], required: StructType, filters: Array[Fil
         // region's BGZF chunks — the binning index bounds both ends, so
         // an interactive locus query reads O(region) bytes, not
         // O(chromosome).
-        val pruned: Option[Seq[(Long, Long, Int, Long)]] = chromEq.flatMap { c =>
+        val pruned: Option[Seq[(Long, Long, Int, Long)]] = region.chrom.flatMap { c =>
           idx.flatMap { i =>
             i.ref(c) match {
               case None => Some(Seq.empty) // chrom absent: whole file pruned
@@ -292,10 +238,8 @@ final class VcfScan(paths: Seq[String], required: StructType, filters: Array[Fil
                 // record starts inside an indexed window); CSI has no
                 // linear index — its tree's position ceiling caps
                 val maxPos = if (r.nIntv > 0) r.maxCoveredPos else r.maxPos
-                val lower0 = posLowerInclusive.map(l => math.max(0, l - 1).toLong).getOrElse(0L)
-                val upper0Ex = math.min(maxPos,
-                  posUpperInclusive.map(_.toLong).getOrElse(maxPos))
-                Some(TabixIndex.regionChunks(r, lower0, upper0Ex).flatMap { ch =>
+                Some(TabixIndex.regionChunks(r, region.beg0,
+                    math.min(maxPos, region.hi)).flatMap { ch =>
                   val startC = TabixIndex.compressedOffset(ch.beg)
                   val endC = math.min(len,
                     TabixIndex.compressedOffset(ch.end) + TabixIndex.MaxBlockSize)
@@ -372,69 +316,35 @@ final class VcfScan(paths: Seq[String], required: StructType, filters: Array[Fil
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = hadoopConf
     val ranges = plannedRanges
 
     // pass 2: sample lists — the override serves every file; otherwise
-    // headers are fetched with a bounded thread pool so a many-file
-    // load is not a serial driver-side open per file (only files that
+    // headers are fetched on the bounded planning pool (only files that
     // actually contribute partitions are read at all)
-    val samplesByPath: Map[String, Array[String]] = samplesOverride match {
-      case Some(s) => ranges.map { case (_, path, _) => path.toString -> s }.toMap
-      case None if ranges.isEmpty => Map.empty
-      case None =>
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, ranges.size))
-        try {
-          import scala.jdk.CollectionConverters._
-          val tasks = ranges.map { case (fs, path, _) =>
-            new java.util.concurrent.Callable[(String, Array[String])] {
-              override def call(): (String, Array[String]) =
-                path.toString -> headerSamples(fs, conf, path)
-            }
-          }
-          pool.invokeAll(tasks.asJava).asScala.map(_.get()).toMap
-        } finally pool.shutdown()
+    val samples: Seq[Array[String]] = samplesOverride match {
+      case Some(s) => ranges.map(_ => s)
+      case None => PlanPool.mapOrdered(ranges) { case (fs, path, _) =>
+        headerSamples(fs, path)
+      }
     }
 
-    ranges.flatMap { case (_, path, rs) =>
-      val samples = samplesByPath(path.toString)
+    ranges.zip(samples).flatMap { case ((_, path, rs), samples) =>
       rs.map { case (start, length, vSkip, endVoff) =>
         VcfPartition(path.toString, start, length, samples, vSkip, endVoff)
       }
     }.toArray
   }
 
-  // One accumulator per SCAN, created at first factory request: repeated
-  // createReaderFactory calls on a re-planned scan must not register a
-  // fresh named accumulator for the app's lifetime each time.
-  private lazy val malformedAcc: LongAccumulator = {
-    val acc = SparkSession.active.sparkContext.longAccumulator("vcf malformed lines")
-    VcfDataSource.lastMalformedAcc = Some(acc)
-    acc
-  }
-
   override def createReaderFactory(): PartitionReaderFactory = {
-    // broadcast the session Hadoop conf as key-values so executor-side
-    // FS access honors spark.hadoop.* (the BcfReaderFactory rule)
     val spark = SparkSession.active
-    val hconf = spark.sessionState.newHadoopConf()
-    val kv = {
-      val it = hconf.iterator()
-      val b = mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-      b.toSeq
-    }
-    new VcfReaderFactory(required, filters, malformedAcc,
-      spark.sparkContext.broadcast(kv))
+    new VcfReaderFactory(required, region, spark.sparkContext.broadcast(
+      ScanSupport.confKv(spark.sessionState.newHadoopConf())))
   }
 
   /** Per-scan "malformed lines" as a first-class DSv2 metric: each task
     * reports its local count ([[VcfPartitionReader.currentMetricsValues]])
     * and Spark sums them onto the scan node in the UI / QueryExecution
-    * metrics — production monitoring reads it there, per scan, with no
-    * process-global state (the accumulator remains only as the
-    * documented test hook).
+    * metrics, per scan, with no process-global state.
     */
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     Array(new MalformedLinesMetric)
@@ -477,13 +387,12 @@ final case class VcfPartition(path: String, start: Long, length: Long,
     endVoff: Long = -1L)
     extends InputPartition
 
-final class VcfReaderFactory(required: StructType, filters: Array[Filter],
-    malformed: LongAccumulator,
-    confKv: org.apache.spark.broadcast.Broadcast[Seq[(String, String)]] = null)
+final class VcfReaderFactory(required: StructType, region: PushedRegion,
+    confKv: org.apache.spark.broadcast.Broadcast[Seq[(String, String)]])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new VcfPartitionReader(partition.asInstanceOf[VcfPartition], required, filters,
-      malformed, confKv)
+    new VcfPartitionReader(partition.asInstanceOf[VcfPartition], required, region,
+      confKv.value)
 }
 
 /** Reads [start, start+length) of one file, aligned to line boundaries:
@@ -494,25 +403,17 @@ final class VcfReaderFactory(required: StructType, filters: Array[Filter],
   *
   * PERMISSIVE posture: a data line with fewer than 8 tab-separated
   * fields (sites-only VCFs carry exactly the 8 fixed columns — no
-  * FORMAT/genotypes) or a non-integer POS is counted into the `malformed`
-  * accumulator and skipped — never an exception (one corrupt line in a
+  * FORMAT/genotypes) or a non-integer POS is counted into the scan's
+  * `malformedLines` metric and skipped — never an exception (one corrupt line in a
   * 100 TB crawl must not fail the job; the reference's pandas path
   * likewise coerces leniently, pandasvcf.py:94-99).
   */
 final class VcfPartitionReader(
-    part: VcfPartition, required: StructType, filters: Array[Filter],
-    malformed: LongAccumulator,
-    confKv: org.apache.spark.broadcast.Broadcast[Seq[(String, String)]] = null)
+    part: VcfPartition, required: StructType, region: PushedRegion,
+    confKv: Seq[(String, String)])
     extends PartitionReader[InternalRow] {
 
-  // the driver's session Hadoop conf, rebuilt from broadcast key-values
-  // (spark.hadoop.* must reach executor-side FS access); null only in
-  // direct unit-test wiring
-  private val conf = {
-    val c = new Configuration(confKv == null)
-    if (confKv != null) confKv.value.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
+  private val conf = ScanSupport.conf(confKv)
   private val hPath = new Path(part.path)
   private val fs = hPath.getFileSystem(conf)
   private val codec = new CompressionCodecFactory(conf).getCodec(hPath)
@@ -559,15 +460,7 @@ final class VcfPartitionReader(
     "chrom" -> 0, "pos" -> 1, "id" -> 2, "ref" -> 3, "alt" -> 4,
     "qual" -> 5, "filter" -> 6, "info" -> 7, "format" -> 8)
 
-  private def passesFilters(f: Array[String], pos: Int): Boolean = filters.forall {
-    case EqualTo("chrom", v) => normChrom(f(0)) == v.toString
-    case EqualTo("pos", v) => pos == v.toString.toInt
-    case GreaterThan("pos", v) => pos > v.toString.toInt
-    case GreaterThanOrEqual("pos", v) => pos >= v.toString.toInt
-    case LessThan("pos", v) => pos < v.toString.toInt
-    case LessThanOrEqual("pos", v) => pos <= v.toString.toInt
-    case _ => true
-  }
+  private val checkChrom = region.chroms.nonEmpty
 
   private def normChrom(c: String): String =
     if (c.startsWith("chr")) c.substring(3) else c
@@ -594,10 +487,10 @@ final class VcfPartitionReader(
     // empty genotypes map
     val pos = if (f.length >= 8) parsePos(f(1)) else Int.MinValue
     if (pos == Int.MinValue) {
-      malformed.add(1L) // PERMISSIVE: count and skip, never throw
-      localMalformed += 1L
+      localMalformed += 1L // PERMISSIVE: count and skip, never throw
       false
-    } else if (passesFilters(f, pos)) {
+    } else if (region.posMatches(pos) &&
+        (!checkChrom || region.chromMatches(normChrom(f(0))))) {
       current = buildRow(f, pos)
       true
     } else false

@@ -191,4 +191,14 @@ object BcfFixture {
     os.close()
     f.toString
   }
+
+  /** The `format("bcf")` scan's planned partitions for `path` with
+    * `filters` pushed, at the session's current maxPartitionBytes. */
+  def planned(path: String,
+      filters: org.apache.spark.sql.sources.Filter*): Seq[graft.sources.v2.BcfPartition] = {
+    val b = new graft.sources.v2.BcfScanBuilder(Seq(path))
+    b.pushFilters(filters.toArray)
+    b.build().toBatch.planInputPartitions().toSeq
+      .map(_.asInstanceOf[graft.sources.v2.BcfPartition])
+  }
 }

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.VariantAnnotator
 import graft.sources.{BcfReader, VcfReader}
+import graft.sources.BcfReader.BcfHeader
 
 /** Read contract over the hand-encoded [[BcfFixture]]: the `.bcf`
   * reads ROW-IDENTICAL to its `.vcf` twin, through the raw wide frame
@@ -31,9 +32,9 @@ class BcfReaderSpec extends AnyFunSuite with SparkSpec {
       "the exact text fields") {
     val cols = Seq("chrom", "pos", "id", "ref", "alt", "qual", "filter",
       "info", "format", "genotypes")
-    val fromBcf = BcfReader.read(spark, bcfPath)
+    val fromBcf = spark.read.format("bcf").load(bcfPath)
       .select(cols.head, cols.tail: _*).collect().toSet
-    val fromVcf = VcfReader.read(spark, vcfPath)
+    val fromVcf = spark.read.format("vcf").load(vcfPath)
       .select(cols.head, cols.tail: _*).collect().toSet
     assert(fromBcf.size === 4)
     assert(fromBcf === fromVcf)
@@ -41,7 +42,8 @@ class BcfReaderSpec extends AnyFunSuite with SparkSpec {
 
   test("BCF metadata matches the VCF twin's (samples, columns) and " +
       "the annotate chain is row-identical end-to-end") {
-    val mB = BcfReader.metadata(spark, bcfPath)
+    val mB = VcfReader.fromHeaderLines(
+      header(bcfPath).text.split("\n").toSeq.filter(_.nonEmpty))
     val mV = VcfReader.metadata(spark, vcfPath)
     assert(mB.samples === Seq("S1", "S2", "S3"))
     assert(mB.columns === mV.columns)
@@ -50,15 +52,21 @@ class BcfReaderSpec extends AnyFunSuite with SparkSpec {
         VariantAnnotator.Options(dropHomRef = false,
           formatKeys = Some(Seq("DP", "AD", "GQ", "GT"))))
         .collect().map(_.toString).sorted.toSeq
-    val a = ann(BcfReader.read(spark, bcfPath))
+    val a = ann(spark.read.format("bcf").load(bcfPath))
     val b = ann(VcfReader.read(spark, vcfPath))
     assert(a === b)
     assert(a.nonEmpty)
-    // non-matching path reports clearly (r13 advisory: was NPE/head)
-    val e = intercept[IllegalArgumentException] {
-      BcfReader.metadata(spark, "/nonexistent/nope*.bcf")
+    // a non-matching path reports clearly, not as an empty frame
+    val e = intercept[Exception] {
+      spark.read.format("bcf").load("/nonexistent/nope*.bcf").count()
     }
-    assert(e.getMessage.contains("no BCF files match"))
+    assert(e.getMessage.contains("bcf path does not exist"), e.getMessage)
+  }
+
+  private def header(path: String): BcfHeader = {
+    val in = new java.io.DataInputStream(new java.util.zip.GZIPInputStream(
+      java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path))))
+    try BcfReader.readHeader(in) finally in.close()
   }
 
   test("header dictionary honors explicit IDX overrides and keeps " +

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.BgenReader
 import graft.sources.BgenReader.BgenEnc
 
-/** BGEN v1.2 reader (q242's format surface): byte-exact round trips
+/** BGEN v1.2 reads through `format("bgen")` (q242's format surface):
+  * byte-exact round trips
   * through the encoder, hand-computed fixed-6-decimal GP strings,
   * missing/multiallelic classes, offset-walk splittability, and the
   * contract that a BGEN reads ROW-IDENTICAL to its VCF/GP twin
@@ -46,7 +47,7 @@ class BgenSpec extends AnyFunSuite with SparkSpec {
       "NULL GP, multiallelic K=3 flagged — zlib AND uncompressed") {
     for (zlib <- Seq(true, false)) {
       val path = writeFixture(s"rt-$zlib.bgen", zlib)
-      val df = BgenReader.readBgen(spark, path)
+      val df = spark.read.format("bgen").load(path)
       val rows = df.select("chrom", "pos", "rsid", "ref", "alt",
           "multiallele", "sample_id", "gt", "GP")
         .as[(String, Int, String, String, String, Int, String, String,
@@ -81,11 +82,16 @@ class BgenSpec extends AnyFunSuite with SparkSpec {
       "to tasks — splits > 1 plans multiple partitions and the row " +
       "multiset is identical") {
     val path = writeFixture("split.bgen", zlib = true)
-    val one = BgenReader.readBgen(spark, path, splits = 1)
-    val three = BgenReader.readBgen(spark, path, splits = 3)
-    assert(three.rdd.getNumPartitions === 3)
-    assert(three.collect().toSet === one.collect().toSet)
-    assert(one.count() === 9)
+    def scan(maxSplit: Long) = withMaxSplit(maxSplit) {
+      val df = spark.read.format("bgen").load(path)
+      (df.rdd.getNumPartitions, df.collect().toSet)
+    }
+    val (oneParts, one) = scan(1L << 30)
+    val (threeParts, three) = scan(1L) // one task per variant block
+    assert(oneParts === 1)
+    assert(threeParts === 3)
+    assert(three === one)
+    assert(one.size === 9)
   }
 
   test("VCF/GP twin: the BGEN frame runs dosageAf and the dosage " +
@@ -94,7 +100,7 @@ class BgenSpec extends AnyFunSuite with SparkSpec {
       "formats apart") {
     import graft.operators.VariantQc
     val path = writeFixture("twin.bgen", zlib = true)
-    val bgen = BgenReader.readBgen(spark, path)
+    val bgen = spark.read.format("bgen").load(path)
     // the VCF twin: what annotate(formatKeys = GP) yields from a VCF
     // whose GP strings match the BGEN decode exactly
     val twin = bgen.select("chrom", "pos", "ref", "alt", "multiallele",
@@ -123,14 +129,11 @@ class BgenSpec extends AnyFunSuite with SparkSpec {
     assert(sA.getAs[Long]("score_pico") === 1498038L * 1000000L)
   }
 
-  test("format(\"bgen\") DSv2: load() row-identical to the library " +
-      "reader, chrom/pos pushdown reaches the scan (block-level, " +
-      "pre-decode), sites-shaped projections skip the payload, tiny " +
-      "maxPartitionBytes splits by block offsets") {
+  test("format(\"bgen\") DSv2: chrom/pos pushdown reaches the scan " +
+      "(block-level, pre-decode), sites-shaped projections skip the " +
+      "payload, tiny maxPartitionBytes splits by block offsets") {
     val path = writeFixture("dsv2.bgen", zlib = true)
-    val lib = BgenReader.readBgen(spark, path)
-    val dsv2 = spark.read.format("bgen").load(path)
-    assert(dsv2.collect().toSet === lib.collect().toSet)
+    assert(spark.read.format("bgen").load(path).count() === 9)
     // pushdown: the pushed filters appear in the scan description and
     // filtering is exact at block level
     val filtered = spark.read.format("bgen").load(path)
@@ -184,7 +187,7 @@ class BgenSpec extends AnyFunSuite with SparkSpec {
     try writeBgen(out, Seq("s0", "s1", "s2"),
       Iterator(enc, encMiss), bBits = 8, zlib = true)
     finally out.close()
-    val got = readBgen(spark, f.toString)
+    val got = spark.read.format("bgen").load(f.toString)
       .select("pos", "sample_id", "gt", "gt1", "gt2", "GP")
       .as[(Int, String, String, Option[String], Option[String],
         Option[String])]
@@ -204,13 +207,15 @@ class BgenSpec extends AnyFunSuite with SparkSpec {
         Some("0.000000,1.000000,0.000000")),
       (6000, "s2", "1", Some("1"), None,
         Some("0.000000,1.000000"))))
-    // DSv2 twin reads the phased file row-identically
-    val v2 = spark.read.format("bgen").load(f.toString)
-      .select("pos", "sample_id", "gt", "gt1", "gt2", "GP")
-      .as[(Int, String, String, Option[String], Option[String],
-        Option[String])]
-      .collect().toSet
-    assert(v2 === got)
+    // a one-task-per-block split read decodes the phased file identically
+    val split = withMaxSplit(1L) {
+      spark.read.format("bgen").load(f.toString)
+        .select("pos", "sample_id", "gt", "gt1", "gt2", "GP")
+        .as[(Int, String, String, Option[String], Option[String],
+          Option[String])]
+        .collect().toSet
+    }
+    assert(split === got)
   }
 
   test("unphased per-sample ploidy: a haploid sample's GP is the " +
@@ -231,7 +236,7 @@ class BgenSpec extends AnyFunSuite with SparkSpec {
     try writeBgen(out, Seq("s0", "s1"), Iterator(enc),
       bBits = 8, zlib = false)
     finally out.close()
-    val got = readBgen(spark, f.toString)
+    val got = spark.read.format("bgen").load(f.toString)
       .select("sample_id", "gt", "GP")
       .as[(String, String, Option[String])].collect().toSet
     assert(got === Set(
@@ -245,7 +250,7 @@ class BgenSpec extends AnyFunSuite with SparkSpec {
       "speculation litter is planted and ignored, and Overwrite " +
       "truncates prior shards") {
     val src = writeFixture("write-src.bgen", zlib = true)
-    val df = BgenReader.readBgen(spark, src, splits = 1)
+    val df = spark.read.format("bgen").load(src) // one partition, file order
     val dir = tmp.resolve("dsv2-out").toString
     df.coalesce(1).write.format("bgen").mode("append").save(dir)
     val shards = new java.io.File(dir).listFiles()

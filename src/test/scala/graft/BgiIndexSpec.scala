@@ -96,10 +96,10 @@ class BgiIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("indexBgen writes the bgenix-equivalent .bgi in one metadata " +
-      "pass; readBgen plans THROUGH it row-identically; a stale " +
+      "pass; format(\"bgen\") plans THROUGH it row-identically; a stale " +
       "index (file rewritten) refuses loudly") {
     val bgen = writeBgenFixture("indexed.bgen")
-    val noIdx = BgenReader.readBgen(spark, bgen)
+    val noIdx = spark.read.format("bgen").load(bgen)
       .collect().map(_.toString).sorted
     val bgi = BgiIndex.indexBgen(spark, bgen)
     assert(bgi === bgen + ".bgi")
@@ -107,7 +107,7 @@ class BgiIndexSpec extends AnyFunSuite with SparkSpec {
     val walk = BgiIndex.fromBgen(spark, bgen)
     val idx = BgiIndex.read(spark, bgi)
     assert(idx === walk)
-    val withIdx = BgenReader.readBgen(spark, bgen)
+    val withIdx = spark.read.format("bgen").load(bgen)
       .collect().map(_.toString).sorted
     assert(withIdx === noIdx)
     // stale: append a byte to the bgen, size check must fire
@@ -117,7 +117,7 @@ class BgiIndexSpec extends AnyFunSuite with SparkSpec {
     java.nio.file.Files.write(f2, Array[Byte](0),
       java.nio.file.StandardOpenOption.APPEND)
     val e = intercept[IllegalArgumentException] {
-      BgenReader.readBgen(spark, f2.toString).collect()
+      spark.read.format("bgen").load(f2.toString).collect()
     }
     assert(e.getMessage.contains("STALE"))
   }

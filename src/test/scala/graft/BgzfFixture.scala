@@ -54,12 +54,12 @@ object BgzfFixture {
   /** Writes `lines` as BGZF (`blockLines` lines per block) + the EOF
     * terminator. Returns (start voff of each line, end-of-data voff).
     */
-  def writeBgzf(lines: Seq[String], out: Path, blockLines: Int): (Seq[Long], Long) = {
-    val os = Files.newOutputStream(out)
+  def writeBgzf(lines: IterableOnce[String], out: Path, blockLines: Int): (Seq[Long], Long) = {
+    val os = new java.io.BufferedOutputStream(Files.newOutputStream(out), 1 << 16)
     try {
       var cOff = 0L
       val voffs = mutable.ArrayBuffer.empty[Long]
-      lines.grouped(blockLines).foreach { group =>
+      lines.iterator.grouped(blockLines).foreach { group =>
         var u = 0
         group.foreach { l =>
           voffs += (cOff << 16) | u.toLong
@@ -131,6 +131,78 @@ object BgzfFixture {
     }
     val gz = new java.util.zip.GZIPOutputStream(Files.newOutputStream(out))
     try gz.write(bos.toByteArray) finally gz.close()
+  }
+
+  /** Tabix `.tbi` for a bgzipped file, written straight from the SAMtools
+    * tabix spec (hts-specs "Tabix index file format") with none of the
+    * engine's index code: magic `TBI\1`, the VCF preset header (format
+    * 2, columns 1/2/0, meta `#`), NUL-joined names, then per reference
+    * the binning index — each record filed under `reg2bin(beg, end)`,
+    * consecutive records of one bin merged into one chunk ending at the
+    * next record's voff — plus htslib's pseudo-bin 37450 (ref data span,
+    * mapped/unmapped counts) and the 16 kb linear index (smallest voff
+    * of the records overlapping each window; leading gaps take the
+    * ref's first voff, inner gaps the previous window's, as htslib
+    * fills them), closed by `n_no_coor` and BGZF-compressed.
+    *
+    * @param records (chrom, 0-based start, 0-based exclusive end, start
+    *                voff) in file order, each chrom contiguous and sorted
+    * @param endVoff voff just past the last record
+    */
+  def writeTbi(records: Seq[(String, Long, Long, Long)], endVoff: Long,
+      out: Path): Unit = {
+    def reg2bin(beg: Long, endEx: Long): Int = {
+      val end = endEx - 1
+      (if (beg >> 14 == end >> 14) ((1L << 15) - 1) / 7 + (beg >> 14)
+      else if (beg >> 17 == end >> 17) ((1L << 12) - 1) / 7 + (beg >> 17)
+      else if (beg >> 20 == end >> 20) ((1L << 9) - 1) / 7 + (beg >> 20)
+      else if (beg >> 23 == end >> 23) ((1L << 6) - 1) / 7 + (beg >> 23)
+      else if (beg >> 26 == end >> 26) ((1L << 3) - 1) / 7 + (beg >> 26)
+      else 0L).toInt
+    }
+    val bos = new java.io.ByteArrayOutputStream()
+    def i32(v: Int): Unit = u32(bos, v.toLong & 0xffffffffL)
+    def i64(v: Long): Unit = (0 until 8).foreach(b => bos.write(((v >>> (8 * b)) & 0xff).toInt))
+    val ends = records.drop(1).map(_._4) :+ endVoff
+    val byRef = records.zip(ends).groupBy(_._1._1)
+    val names = records.map(_._1).distinct
+    bos.write('T'); bos.write('B'); bos.write('I'); bos.write(1)
+    i32(names.length)
+    i32(2); i32(1); i32(2); i32(0); i32('#'); i32(0) // VCF preset
+    val nm = names.map(_ + "\u0000").mkString.getBytes("UTF-8")
+    i32(nm.length); bos.write(nm)
+    names.foreach { name =>
+      val recs = byRef(name).sortBy(_._1._4)
+      val bins = mutable.LinkedHashMap.empty[Int, mutable.ArrayBuffer[(Long, Long)]]
+      val linear = mutable.ArrayBuffer.empty[Long]
+      recs.foreach { case ((_, beg, endEx, voff), next) =>
+        val chunks = bins.getOrElseUpdate(reg2bin(beg, endEx), mutable.ArrayBuffer.empty)
+        if (chunks.nonEmpty && chunks.last._2 == voff) chunks(chunks.length - 1) = (chunks.last._1, next)
+        else chunks += ((voff, next))
+        for (w <- (beg >> 14).toInt to ((endEx - 1) >> 14).toInt) {
+          while (linear.length <= w) linear += -1L
+          if (linear(w) < 0) linear(w) = voff
+        }
+      }
+      val refBeg = recs.head._1._4
+      for (w <- linear.indices if linear(w) < 0)
+        linear(w) = if (w == 0) refBeg else linear(w - 1)
+      i32(bins.size + 1)
+      bins.foreach { case (bin, chunks) =>
+        i32(bin); i32(chunks.length)
+        chunks.foreach { case (b, e) => i64(b); i64(e) }
+      }
+      i32(37450); i32(2)
+      i64(refBeg); i64(recs.last._2)
+      i64(recs.length.toLong); i64(0L)
+      i32(linear.length); linear.foreach(i64)
+    }
+    i64(0L) // n_no_coor
+    val os = Files.newOutputStream(out)
+    try {
+      bos.toByteArray.grouped(0xff00).foreach(writeBlock(os, _))
+      os.write(EofBlock)
+    } finally os.close()
   }
 
   /** A multi-chrom bgzipped VCF + sibling `.csi` + an uncompressed twin,

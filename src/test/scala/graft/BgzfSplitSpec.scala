@@ -5,7 +5,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.VcfReader
 import graft.sources.v2.TabixIndex
 
 /** BGZF-block-splittable FULL scans: a bgzipped VCF with a sibling index
@@ -17,20 +16,9 @@ import graft.sources.v2.TabixIndex
   */
 class BgzfSplitSpec extends AnyFunSuite with SparkSpec {
 
-  private val chr22 =
-    "/root/reference/test_data/ALL.chr22.phase3_shapeit2_mvncall_integrated_v4.20130502.genotypes_10k.vcf.gz"
+  private lazy val chr22 = ChromFixture.chr22
 
   private def partitions(df: DataFrame): Int = df.rdd.getNumPartitions
-
-  /** Runs `body` with files.maxPartitionBytes temporarily lowered so the
-    * small fixtures split like a 100 GB file would at the default.
-    */
-  private def withMaxSplit[A](bytes: Long)(body: => A): A = {
-    val key = "spark.sql.files.maxPartitionBytes"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, bytes.toString)
-    try body finally spark.conf.set(key, old)
-  }
 
   test("multi-chrom bgzf full scan splits and equals the plain-text read row-for-row") {
     val dir = java.nio.file.Files.createTempDirectory("graft_bgzf_split")
@@ -69,12 +57,12 @@ class BgzfSplitSpec extends AnyFunSuite with SparkSpec {
     assert(counts(2) === 1, s"huge maxSplit must not split: $counts")
   }
 
-  test("real chr22 .tbi full scan splits and matches the unsplit baseline") {
-    val base = VcfReader.read(spark, chr22)
+  test("chr22-shaped .tbi full scan splits and matches the raw-text baseline") {
+    val base = RawVcfText.read(spark, chr22)
       .select(count(lit(1)).as("n"), sum(col("pos")).as("s")).head()
     withMaxSplit(128 * 1024) {
       val df = spark.read.format("vcf").load(chr22)
-      assert(partitions(df) > 1, "1.2 MB file at 128 KiB maxSplit must split")
+      assert(partitions(df) > 1, "a multi-MB file at 128 KiB maxSplit must split")
       val got = df.select(count(lit(1)).as("n"), sum(col("pos")).as("s")).head()
       assert(got.getLong(0) === base.getLong(0), "row count drifted under bgzf split")
       assert(got.getLong(1) === base.getLong(1), "pos checksum drifted under bgzf split")
@@ -82,7 +70,7 @@ class BgzfSplitSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("whole-chromosome chromEq region also subdivides at record starts") {
-    val full = VcfReader.read(spark, chr22).count()
+    val full = RawVcfText.read(spark, chr22).count()
     withMaxSplit(128 * 1024) {
       val df = spark.read.format("vcf").load(chr22).filter(col("chrom") === "22")
       assert(partitions(df) > 1,

@@ -6,6 +6,15 @@ import org.scalatest.Suite
 /** Shared local session for specs (one JVM-wide session, Spark-style). */
 trait SparkSpec { self: Suite =>
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Runs `body` with files.maxPartitionBytes temporarily set, so small
+    * fixtures split like a 100 GB file would at the default. */
+  protected def withMaxSplit[A](bytes: Long)(body: => A): A = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, bytes.toString)
+    try body finally spark.conf.set(key, old)
+  }
 }
 
 object SparkSpec {
@@ -17,4 +26,24 @@ object SparkSpec {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
     .getOrCreate()
+}
+
+/** Reads a DataSource V2 scan's custom metrics after running its plan. */
+object ScanMetrics {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+  import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+
+  /** Collects `df`, then sums the `malformedLines` metric of every
+    * `format("vcf")` scan in its executed plan. */
+  def malformedLines(df: DataFrame): Long = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val scans = plan.collect { case b: BatchScanExec => b }
+    require(scans.nonEmpty, s"no BatchScanExec in\n$plan")
+    scans.map(_.metrics("malformedLines").value).sum
+  }
 }

@@ -4,25 +4,26 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.VcfReader
 import graft.sources.v2.TabixIndex
 
 /** Region-index pruning: with a pushed chrom (+pos) predicate and a
   * sibling .tbi, the DSv2 source must skip files that cannot contain
   * the region and start bgzip files at the region's BGZF block — the
   * #1 interactive-genomics access pattern (a locus query on a 100 TB
-  * corpus must read kilobytes, not everything).
+  * corpus must read kilobytes, not everything). Runs over
+  * [[ChromFixture]]'s 1000 Genomes-shaped chr22 and titin-shaped files,
+  * whose `.tbi` siblings a spec-following test writer built; baselines
+  * read the raw text ([[RawVcfText]]), outside the scan under test.
   */
 class TabixPruningSpec extends AnyFunSuite with SparkSpec {
 
-  private val chr22 =
-    "/root/reference/test_data/ALL.chr22.phase3_shapeit2_mvncall_integrated_v4.20130502.genotypes_10k.vcf.gz"
-  private val titin = "/root/reference/test_data/SWGR_titin.vcf.gz"
+  private lazy val chr22 = ChromFixture.chr22
+  private lazy val titin = ChromFixture.titin
 
   private def partitions(df: org.apache.spark.sql.DataFrame): Int =
     df.rdd.getNumPartitions
 
-  test("TabixIndex parses the reference's real .tbi files") {
+  test("TabixIndex parses spec-written .tbi files (chr22- and titin-shaped fixtures)") {
     val fs = new Path(chr22).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val idx = TabixIndex.read(fs, TabixIndex.sibling(new Path(chr22)))
     assert(idx.refs.map(_.name) === Seq("22"))
@@ -58,8 +59,8 @@ class TabixPruningSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("linear-index refined region start is lossless") {
-    // baseline through the plain reader (no pruning path at all)
-    val expected = VcfReader.read(spark, chr22)
+    // baseline through the raw text (no pruning path at all)
+    val expected = RawVcfText.read(spark, chr22)
       .filter(col("chrom") === "22" && col("pos") >= 16500000)
       .select(sum(col("pos")).as("s"), count(lit(1)).as("n")).head()
     val pruned = spark.read.format("vcf").load(chr22)
@@ -75,7 +76,7 @@ class TabixPruningSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("chrom equality with .tbi still returns every matching row") {
-    val full = VcfReader.read(spark, chr22).count()
+    val full = RawVcfText.read(spark, chr22).count()
     val pruned = spark.read.format("vcf").load(chr22).filter(col("chrom") === "22")
     assert(pruned.count() === full)
   }
@@ -155,8 +156,7 @@ class TabixPruningSpec extends AnyFunSuite with SparkSpec {
 
   /** Re-encode a parsed .tbi as a tabix-style .csi via the shared
     * fixture writer ([[BgzfFixture.writeCsi]] — same bins/chunks, no
-    * linear index), built from the reference's REAL index so the chunk
-    * layout is authentic. minShift/depth/withNames land in the emitted
+    * linear index), built from the fixture's spec-written index. minShift/depth/withNames land in the emitted
     * header verbatim, so malformed-header variants drive the negative
     * tests below.
     */
@@ -165,8 +165,8 @@ class TabixPruningSpec extends AnyFunSuite with SparkSpec {
     BgzfFixture.writeCsi(idx, out, minShift, depth, withNames)
 
   test(".csi fallback prunes a region identically to the .tbi") {
-    // a copy of the real chr22 file with ONLY a .csi sibling (converted
-    // from its real .tbi, so the chunk layout is authentic)
+    // a copy of the chr22 fixture with ONLY a .csi sibling (converted
+    // from its .tbi, so the chunk layout is the same)
     val dir = java.nio.file.Files.createTempDirectory("graft_csi")
     val copy = dir.resolve("chr22.vcf.gz")
     java.nio.file.Files.copy(java.nio.file.Paths.get(chr22), copy)
@@ -180,7 +180,7 @@ class TabixPruningSpec extends AnyFunSuite with SparkSpec {
 
     val lo = 16300000
     val hi = 16320000
-    val expected = VcfReader.read(spark, chr22)
+    val expected = RawVcfText.read(spark, chr22)
       .filter(col("chrom") === "22" && col("pos") >= lo && col("pos") <= hi)
       .select(sum(col("pos")).as("s"), count(lit(1)).as("n")).head()
     val viaCsi = spark.read.format("vcf").load(copy.toString)
@@ -225,7 +225,7 @@ class TabixPruningSpec extends AnyFunSuite with SparkSpec {
   test("region-END bounded scan is lossless vs the unpruned reader") {
     val lo = 16300000
     val hi = 16320000
-    val expected = VcfReader.read(spark, chr22)
+    val expected = RawVcfText.read(spark, chr22)
       .filter(col("chrom") === "22" && col("pos") >= lo && col("pos") <= hi)
       .select(sum(col("pos")).as("s"), count(lit(1)).as("n")).head()
     assert(expected.getLong(1) > 0, "test region is empty — pick another")

@@ -5,15 +5,13 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.VcfReader
-
 class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
 
   private lazy val path = VcfFixture.write().toString
 
-  test("format(\"vcf\") reads the fixture identically to VcfReader") {
+  test("format(\"vcf\") reads the fixture identically to parseLines over the raw text") {
     val v2 = spark.read.format("vcf").load(path)
-    val v1 = VcfReader.read(spark, path)
+    val v1 = RawVcfText.read(spark, path)
     assert(v2.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
       v1.schema.fields.map(f => (f.name, f.dataType)).toSeq)
     assert(v2.count() === 7)
@@ -34,6 +32,26 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
       .filter(col("pos") >= 300 && col("pos") < 600 && col("chrom") === "2")
     assert(df.queryExecution.executedPlan.toString.contains("pushed="), df.queryExecution.executedPlan.toString)
     assert(df.select("pos").collect().map(_.getInt(0)).sorted.toSeq === Seq(300, 400))
+  }
+
+  test("pushed pos bounds saturate, and an empty range or conflicting chroms plan zero partitions") {
+    import org.apache.spark.sql.sources.{EqualTo, GreaterThan, GreaterThanOrEqual, LessThan}
+    import graft.sources.v2.PushedRegion
+    assert(PushedRegion(Seq(GreaterThan("pos", Long.MaxValue))).unsatisfiable)
+    assert(PushedRegion(Seq(LessThan("pos", Long.MinValue))).unsatisfiable)
+    val r = PushedRegion(Seq(GreaterThan("pos", Int.MaxValue), GreaterThanOrEqual("pos", 5)))
+    assert(r.lo === Int.MaxValue.toLong + 1 && !r.posMatches(Int.MaxValue))
+    assert(!PushedRegion.supports(GreaterThan("pos", 2.5)))
+    assert(PushedRegion(Seq(EqualTo("chrom", "1"), EqualTo("chrom", "1"))).chrom === Some("1"))
+    val df = spark.read.format("vcf").load(path)
+    // the +1 no longer wraps to Int.MinValue (an unbounded scan)
+    assert(df.filter(col("pos") > Int.MaxValue).count() === 0)
+    for (q <- Seq(df.filter(col("pos") > 500 && col("pos") < 400),
+        df.filter(col("chrom") === "1" && col("chrom") === "2"))) {
+      assert(q.rdd.getNumPartitions === 0)
+      assert(q.count() === 0)
+    }
+    assert(df.filter(col("pos") >= 400 && col("pos") <= 400).count() === 1)
   }
 
   test("byte-range splits lose no lines and duplicate none") {
@@ -101,7 +119,6 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("PERMISSIVE: corrupt lines across split boundaries are counted and skipped") {
-    import graft.sources.v2.VcfDataSource
     // 3000 good rows with two planted corruptions: a non-integer POS and
     // a truncated (<9 field) line, placed mid-file so small splits put
     // them near boundaries
@@ -121,8 +138,7 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
       val df = spark.read.format("vcf").load(bad.toString)
       assert(df.rdd.getNumPartitions > 3)
       assert(df.count() === 2998, "good rows must all survive, bad rows must drop")
-      assert(VcfDataSource.lastMalformedCount.exists(_ >= 2),
-        s"malformed counter = ${VcfDataSource.lastMalformedCount}")
+      assert(ScanMetrics.malformedLines(df) === 2)
       // a pushed pos filter over the corrupt region must not throw either
       assert(df.filter(col("pos") >= 1400 && col("pos") <= 1600).count() === 199)
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
@@ -154,7 +170,6 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("sites-only VCF (8 columns, no FORMAT/samples) reads with null format") {
-    import graft.sources.v2.VcfDataSource
     val sites = Files.createTempFile("graft-sites", ".vcf")
     Files.writeString(sites,
       "##fileformat=VCFv4.2\n" +
@@ -162,8 +177,8 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
         "chr7\t700\trs7\tA\tG\t50\tPASS\tNS=1\n" +
         "7\t701\trs8\tC\tT\t60\tPASS\tNS=2\n")
     sites.toFile.deleteOnExit()
-    val rows = spark.read.format("vcf").load(sites.toString)
-      .orderBy("pos").collect()
+    val df = spark.read.format("vcf").load(sites.toString)
+    val rows = df.orderBy("pos").collect()
     assert(rows.length === 2)
     assert(rows.map(_.getString(0)).toSeq === Seq("7", "7"))
     assert(rows.map(_.getInt(1)).toSeq === Seq(700, 701))
@@ -171,7 +186,7 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
       assert(r.isNullAt(8), "sites-only rows must carry null format")
       assert(r.getMap[String, String](9).isEmpty, "…and an empty genotypes map")
     }
-    assert(VcfDataSource.lastMalformedCount.contains(0L),
+    assert(ScanMetrics.malformedLines(df) === 0,
       "spec-legal sites-only rows must not count as malformed")
   }
 
@@ -186,10 +201,8 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("reads the real 1000-genomes .gz through format(\"vcf\")") {
-    val real =
-      "/root/reference/test_data/ALL.chr22.phase3_shapeit2_mvncall_integrated_v4.20130502.genotypes_10k.vcf.gz"
-    val df = spark.read.format("vcf").load(real)
+  test("reads the 1000 Genomes-shaped chr22 .gz through format(\"vcf\")") {
+    val df = spark.read.format("vcf").load(ChromFixture.chr22)
     val n = df.count()
     assert(n > 9000)
     val row = df.select("chrom", "genotypes").head()

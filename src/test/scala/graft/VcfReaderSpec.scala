@@ -33,9 +33,8 @@ class VcfReaderSpec extends AnyFunSuite with SparkSpec {
     assert(g === Map("NA2" -> "1|1:8:0,8"))
   }
 
-  test("reads the reference repo's real 1000-genomes .vcf.gz") {
-    val real =
-      "/root/reference/test_data/ALL.chr22.phase3_shapeit2_mvncall_integrated_v4.20130502.genotypes_10k.vcf.gz"
+  test("reads the 1000 Genomes-shaped chr22 .vcf.gz fixture") {
+    val real = ChromFixture.chr22
     val meta = VcfReader.metadata(spark, real)
     assert(meta.samples.size > 2000) // 2504-sample multi-sample VCF
     val two = meta.samples.take(2)
@@ -234,9 +233,8 @@ class VcfReaderSpec extends AnyFunSuite with SparkSpec {
     assert(bare.isNullAt(bare.fieldIndex("DP")))
   }
 
-  test("typed declarations parse on the reference's real 1000-genomes header") {
-    val real =
-      "/root/reference/test_data/ALL.chr22.phase3_shapeit2_mvncall_integrated_v4.20130502.genotypes_10k.vcf.gz"
+  test("typed declarations parse on the 1000 Genomes-shaped chr22 header") {
+    val real = ChromFixture.chr22
     val m = VcfReader.metadata(spark, real)
     val info = VcfReader.infoDecls(m).map(d => d.id -> d).toMap
     assert(info("AC") === VcfReader.FieldDecl("AC", "A", "Integer"))

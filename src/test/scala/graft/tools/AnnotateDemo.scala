@@ -19,8 +19,7 @@ object AnnotateDemo {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val real =
-      "/root/reference/test_data/ALL.chr22.phase3_shapeit2_mvncall_integrated_v4.20130502.genotypes_10k.vcf.gz"
+    val real = graft.ChromFixture.chr22
     val meta = VcfReader.metadata(spark, real)
     println(s"samples=${meta.samples.size} cols=${meta.columns.size} " +
       s"headerKv=${meta.headerKv.size}")

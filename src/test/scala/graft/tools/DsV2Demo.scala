@@ -15,8 +15,7 @@ object DsV2Demo {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val real =
-      "/root/reference/test_data/ALL.chr22.phase3_shapeit2_mvncall_integrated_v4.20130502.genotypes_10k.vcf.gz"
+    val real = graft.ChromFixture.chr22
 
     val df = spark.read.format("vcf").load(real)
       .filter(col("pos") >= 16100000 && col("pos") < 16200000)
@@ -39,7 +38,9 @@ object DsV2Demo {
         println(s"[dsv2] missing path → ${e.getClass.getSimpleName}: ${e.getMessage.take(80)}")
     }
     // probe: directory containing the file also works (glob semantics)
-    val dir = spark.read.format("vcf").load("/root/reference/test_data")
+    graft.ChromFixture.titin
+    val dir = spark.read.format("vcf")
+      .load(new java.io.File(real).getParent)
     println(s"[dsv2] directory load rows=${dir.count()} (both test files)")
     spark.stop()
   }

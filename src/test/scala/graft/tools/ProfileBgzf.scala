@@ -19,8 +19,7 @@ object ProfileBgzf {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val real =
-      "/root/reference/test_data/ALL.chr22.phase3_shapeit2_mvncall_integrated_v4.20130502.genotypes_10k.vcf.gz"
+    val real = graft.ChromFixture.chr22
     // unindexed twin: same bytes, no sibling index → whole-file path
     val dir = java.nio.file.Files.createTempDirectory("graft_profile_bgzf")
     val noidx = dir.resolve("chr22.vcf.gz")
