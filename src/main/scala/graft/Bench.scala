@@ -266,9 +266,10 @@ object Bench {
           samples.size - good.size, st), res)
       }
     }
-    // codegen baseline BEFORE the loop: query 1's delta must not
-    // swallow session-setup/warmup classes
+    // codegen + JIT baselines BEFORE the loop: query 1's deltas must
+    // not swallow session-setup/warmup classes and compiles
     val cgBase = codegenClasses()
+    val jitBase = jitCompileMs()
     val measured = names.map(measure)
     val results = measured.map(_._1)
     val residues = measured.map { case (m, r) => m.name -> r }
@@ -349,7 +350,7 @@ object Bench {
     val jitVals = residues.map(_._2.jitMs)
     val resJit = fmt(residues.indices
       .map(i => residues(i)._1 ->
-        (jitVals(i) - (if (i == 0) 0L else jitVals(i - 1))) / 1e3)
+        (jitVals(i) - (if (i == 0) jitBase else jitVals(i - 1))) / 1e3)
       .filter(_._2 >= 0.2))
     val resCc = fmt(residues.indices.filter(i => i % 10 == 0 ||
         i == residues.size - 1)

@@ -835,38 +835,47 @@ object VcfQueries extends QuerySet {
       GROUP BY g.sample_id ORDER BY g.sample_id
     """))
 
-  /** Write-once sharded VCF corpus for the file-path gate (q63): the
-    * synthetic wide frame emitted via [[graft.sources.VcfWriter]] under
-    * a derivation-hashed /tmp dir — a changed derivation auto-
-    * invalidates the cache. Returns the headerless shard directory.
+  /** Write-once VCF corpus for the file-path gates (q63, q68): the
+    * synthetic wide frame written through `format("vcf")` under a
+    * derivation-hashed /tmp dir — a changed derivation auto-
+    * invalidates the cache. `samples` empty → the 8-column sites-only
+    * emission. Returns the landing directory: self-contained shards,
+    * each carrying its header, read back with a bare `load(dir)`.
     */
-  private def vcfCorpusShards(s: org.apache.spark.sql.SparkSession, dir: String): String = {
+  private def vcfCorpus(s: org.apache.spark.sql.SparkSession, dir: String,
+      name: String, samples: Seq[String]): String = {
     // cache key covers the derivation SQL, the sample list, and a
-    // manual writer-version token — bump it when VcfWriter's emission
-    // format changes, or q63 gates against stale shards
-    val writerVersion = "w1"
+    // manual writer-version token — bump it when the emission format
+    // or the landing layout changes, or the gates read stale shards
+    val writerVersion = "w2"
+    val body = if (samples.isEmpty) "sites-only" else callSql("1") + samples.mkString(",")
     val ver = java.lang.Integer.toHexString(
       (chromRawSql + posSql + refSql + altSql + idSql + qualSql + filtSql +
-        infoSql + callSql("1") + sampleIds.mkString(",") + writerVersion).hashCode)
+        infoSql + body + writerVersion).hashCode)
     val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val out = s"/tmp/graft_vcf_corpus_${sf}_$ver"
-    val marker = new org.apache.hadoop.fs.Path(s"$out/shards/_SUCCESS")
+    val out = s"/tmp/graft_vcf_${name}_${sf}_$ver"
+    // a DSv2 write leaves no _SUCCESS file: the marker is written only
+    // after save() returns, so a half-written landing is never reused
+    val marker = new org.apache.hadoop.fs.Path(s"$out/_DONE")
     val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(marker)) {
       val meta = graft.sources.VcfReader.VcfMetadata(
         Seq("fileformat" -> "VCFv4.2"),
-        Seq("#CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER", "INFO",
-          "FORMAT") ++ sampleIds,
-        sampleIds)
-      graft.sources.VcfWriter.writeSharded(
-        wide(s, dir).withColumnRenamed("filt", "filter"), meta, out)
+        Seq("#CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER", "INFO") ++
+          (if (samples.isEmpty) Nil else "FORMAT" +: samples),
+        samples)
+      wide(s, dir).withColumnRenamed("filt", "filter")
+        .write.format("vcf").mode("overwrite")
+        .option("header", VcfReader.headerLines(meta).mkString("\n"))
+        .save(out)
+      fs.create(marker, true).close()
     }
-    s"$out/shards"
+    out
   }
 
   /** The annotate a 100 TB user actually pays for: real sharded VCF
-    * files → `format("vcf")` (headerless shards, `samples` option) →
-    * full annotate. Parallelism comes from file SPLITS — no repartition
+    * files → `format("vcf")` (each shard carries its header) → full
+    * annotate. Parallelism comes from file SPLITS — no repartition
     * fan-out anywhere on this path (the in-memory gates need one only
     * because the synthetic derivation sits on a 1-3-split parquet).
     * Same oracle as q15: the emitted corpus is byte-faithful
@@ -877,8 +886,7 @@ object VcfQueries extends QuerySet {
     "q63_file_annotate",
     (s, dir) => {
       val df = s.read.format("vcf")
-        .option("samples", sampleIds.mkString(","))
-        .load(vcfCorpusShards(s, dir))
+        .load(vcfCorpus(s, dir, "corpus", sampleIds))
       annotateProjection(df, staged = true)
     },
     Some(annotateOracle))
@@ -912,29 +920,6 @@ object VcfQueries extends QuerySet {
       FROM ann GROUP BY chrom ORDER BY chrom
     """))
 
-  /** Sites-only shard corpus: the 8-column emission (no FORMAT, no
-    * samples) of the synthetic sites — cached like [[vcfCorpusShards]].
-    */
-  private def sitesOnlyShards(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val writerVersion = "w1"
-    val ver = java.lang.Integer.toHexString(
-      (chromRawSql + posSql + refSql + altSql + idSql + qualSql + filtSql +
-        infoSql + "sites-only" + writerVersion).hashCode)
-    val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val out = s"/tmp/graft_vcf_sites_${sf}_$ver"
-    val marker = new org.apache.hadoop.fs.Path(s"$out/shards/_SUCCESS")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      val meta = graft.sources.VcfReader.VcfMetadata(
-        Seq("fileformat" -> "VCFv4.2"),
-        Seq("#CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER", "INFO"),
-        Nil)
-      graft.sources.VcfWriter.writeSharded(
-        wide(s, dir).withColumnRenamed("filt", "filter"), meta, out)
-    }
-    s"$out/shards"
-  }
-
   /** Sites-only VCF gate: 8-column shards (no FORMAT/genotype columns —
     * dbSNP/gnomAD-style site lists ship this way) round-trip through the
     * DSv2 reader's sites-only path and classify identically to the
@@ -945,7 +930,7 @@ object VcfQueries extends QuerySet {
   private val q68 = Q(
     "q68_sites_only",
     (s, dir) => {
-      val df = s.read.format("vcf").load(sitesOnlyShards(s, dir))
+      val df = s.read.format("vcf").load(vcfCorpus(s, dir, "sites", Nil))
       df.filter(col("alt") =!= ".")
         .select(col("chrom"),
           vartype(col("ref"), element_at(split(col("alt"), ","), 1)).as("vartype"),

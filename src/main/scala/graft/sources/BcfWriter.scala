@@ -3,11 +3,7 @@ package graft.sources
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
-import graft.sources.v2.{BgzfOutputStream, TabixIndex}
+import graft.sources.v2.TabixIndex
 
 /** BCF2.2 binary VCF WRITING — the encode inverse of [[BcfReader]]
   * (the r13 verdict's Missing #3: read-side parity shipped in r13, a
@@ -18,8 +14,8 @@ import graft.sources.v2.{BgzfOutputStream, TabixIndex}
   * [[BcfReader.decodeHeaderText]]), same typed-value conventions
   * (smallest int width over the htslib-safe bands, reserved-NaN float
   * missing, count≥15 typed-count escape, GT `(allele+1)<<1|phased`
-  * vectors with END-OF-VECTOR ploidy padding), so writeBcf → BcfReader
-  * round-trips ROW-IDENTICAL and the encoder reproduces the
+  * vectors with END-OF-VECTOR ploidy padding), so a `format("bcf")`
+  * write → read round-trips ROW-IDENTICAL and the encoder reproduces the
   * hand-encoded spec fixture byte-for-byte.
   *
   * Type selection is VALUE-DRIVEN (the typed encoding is
@@ -35,17 +31,11 @@ import graft.sources.v2.{BgzfOutputStream, TabixIndex}
   * the dropped slots — BCF stores a value for every (field, sample)
   * cell, exactly as htslib does.
   *
-  * Scale shape: one `.bcf` per partition under `outDir/shards` (each
-  * self-contained: header + records), written streaming with O(record)
-  * memory; with `index = true` (requires per-partition position-sorted
-  * input — use a range repartition upstream, the [[VcfWriter
-  * .writeIndexedBgzf]] layout) every shard gets its `.csi` sibling
-  * built DURING the emit from [[BgzfOutputStream.voff]] — never read
-  * back — in htslib's `.bcf.csi` shape (EMPTY aux: reference ids are
-  * the header's contig table), which is exactly what [[BcfReader]]'s
-  * split planner and region pruner consume. The engine's own BCF
-  * output is therefore splittable and region-prunable with zero
-  * external tooling, closing the loop the text path closed in r7.
+  * The encoders here are what `df.write.format("bcf")`
+  * ([[graft.sources.v2.GraftWrite]]) streams each shard through:
+  * [[encodePrologue]] + [[encodeRecord]] per row, [[composeHeader]]
+  * for the header-less mode, and [[paddedIndex]] for the `.bcf.csi`
+  * recorded during the emit.
   */
 object BcfWriter {
 
@@ -389,23 +379,14 @@ object BcfWriter {
     w.result
   }
 
-  /** Synthesize a minimal BCF header for `df` when the caller has no
-    * original one (a parquet-landed cohort headed back out as `.bcf`):
-    * ONE driver-side distinct pass collects the contig set, FILTER
-    * vocabulary, INFO keys, FORMAT keys, and sample panel — the
-    * [[graft.operators.VariantAnnotator]] discovery-scan posture
-    * (convenient; at 100 TB prefer passing the real header, this is a
-    * second corpus read). Declarations land as `Number=.`,
-    * `Type=String` — legal, and IRRELEVANT to decode fidelity: the
-    * typed encoding is value-driven and self-describing, the header
-    * only has to carry the dictionary entries. All collected sets are
-    * vocabulary-bounded (contigs/keys/samples), never row-scale.
-    */
-  /** Assemble the minimal synthesized header text from collected
-    * vocabulary — the tail of [[synthesizeHeader]], shared with the
-    * DSv2 write path's per-shard executor-side synthesis. All inputs
-    * are deduped + sorted here so driver- and executor-synthesized
-    * headers are deterministic for the same vocabulary.
+  /** Assemble a minimal header text from collected vocabulary — the
+    * header-less write mode's per-shard synthesis (a parquet-landed
+    * cohort headed back out with no original header). Declarations
+    * land as `Number=.`, `Type=String` — legal, and IRRELEVANT to
+    * decode fidelity: the typed encoding is value-driven and
+    * self-describing, the header only has to carry the dictionary
+    * entries. Inputs are deduped + sorted here so the header is
+    * deterministic for the same vocabulary.
     */
   private[graft] def composeHeader(
       contigs: Seq[String], filterIdsIn: Seq[String],
@@ -428,31 +409,9 @@ object BcfWriter {
       .mkString("", "\n", "\n")
   }
 
-  def synthesizeHeader(df: DataFrame): String = {
-    val parts = df.select(
-      collect_set(col("chrom")).as("contigs"),
-      collect_set(when(col("filter").isNotNull && col("filter") =!= ".",
-        split(col("filter"), ";")).otherwise(array()))
-        .as("filters"),
-      collect_set(when(col("info").isNotNull && col("info") =!= ".",
-        transform(split(col("info"), ";"),
-          e => substring_index(e, "=", 1))).otherwise(array()))
-        .as("infos"),
-      collect_set(when(col("format").isNotNull && col("format") =!= ".",
-        split(col("format"), ":")).otherwise(array()))
-        .as("formats"),
-      collect_set(map_keys(col("genotypes"))).as("samples"))
-      .collect().head
-    def flat(i: Int): Seq[String] =
-      parts.getSeq[Seq[String]](i).flatten.distinct.sorted
-    composeHeader(parts.getSeq[String](0), flat(1), flat(2), flat(3),
-      flat(4))
-  }
-
   /** `.bcf.csi` refs are POSITIONAL against the header's contig table
     * (empty aux): reorder the builder's run-order refs into contig
-    * order, padding unseen contigs with empty refs. Shared by
-    * [[writeBcf]] and the DSv2 write path.
+    * order, padding unseen contigs with empty refs.
     */
   private[graft] def paddedIndex(hdr: BcfHeader,
       builder: TabixIndex.Builder): TabixIndex.Index = {
@@ -463,122 +422,5 @@ object BcfWriter {
       byName.getOrElse(c, TabixIndex.Ref(c, 0L, 0L,
         Array.empty[Long], Map.empty, 14, builder.chosenDepth))
     })
-  }
-
-  /** [[writeBcf]] with a [[synthesizeHeader]] pass first — the
-    * one-liner for frames with no original header. */
-  def writeBcfSynth(df: DataFrame, outDir: String,
-      index: Boolean = true): Unit =
-    writeBcf(df, synthesizeHeader(df), outDir, index)
-
-  /** Write `df` (the `format("bcf")` wide schema: chrom, pos, id,
-    * ref, alt, qual, filter, info, format, genotypes MAP) as BCF
-    * shards under `outDir/shards`, one self-contained `.bcf` per
-    * partition. `headerText` must declare every contig / FILTER /
-    * INFO / FORMAT key the rows carry (it IS the dictionary — same
-    * rule as any BCF emitter) and its `#CHROM` line's sample panel
-    * fixes the per-record call order; samples missing from a row's
-    * map encode as `.`. With `index = true` each shard must arrive
-    * position-sorted (range-repartition + sortWithinPartitions
-    * upstream) and gets a `.csi` sibling built during the emit.
-    */
-  def writeBcf(
-      df: DataFrame, headerText: String, outDir: String,
-      index: Boolean = true): Unit = {
-    val spark = df.sparkSession
-    val hdr = BcfReader.decodeHeaderText(headerText)
-    require(hdr.contigs.nonEmpty,
-      "headerText must carry ##contig lines (the BCF contig table)")
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    val shardsDir = s"$outDir/shards"
-    val outRoot = new Path(shardsDir)
-    val rootFs = outRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    rootFs.delete(outRoot, true)
-    rootFs.mkdirs(outRoot)
-    val samples = hdr.samples
-    val rows = df.select(
-      col("chrom").cast("string"), col("pos").cast("int"),
-      coalesce(col("id"), lit(".")).cast("string"),
-      col("ref").cast("string"),
-      coalesce(col("alt"), lit(".")).cast("string"),
-      coalesce(col("qual"), lit(".")).cast("string"),
-      coalesce(col("filter"), lit(".")).cast("string"),
-      coalesce(col("info"), lit(".")).cast("string"),
-      coalesce(col("format"), lit(".")).cast("string"),
-      // a NULL map (outer-join/union debris) must encode like a
-      // sites-only row, not NPE the executor — same coalesce
-      // treatment as every other nullable column
-      coalesce(col("genotypes"),
-        map().cast("map<string,string>")).as("genotypes"))
-    rows.rdd.foreachPartition { it =>
-      if (it.hasNext) {
-        val tc = org.apache.spark.TaskContext.get
-        val dir = new Path(shardsDir)
-        val fs = dir.getFileSystem(confBc.value.value)
-        val fin = new Path(dir, f"part-${tc.partitionId}%05d.bcf")
-        // COMMIT PROTOCOL (speculation-safe): shard + .csi are staged
-        // in a per-ATTEMPT dir, then committed rename-if-absent with
-        // the .csi FIRST — two racing attempts never rename over each
-        // other (first committed shard wins, the loser discards its
-        // attempt dir), and a task dying mid-commit can only leave an
-        // orphan .csi (readers key off .bcf files and ignore it),
-        // never an indexed-write shard silently missing its index
-        val attemptDir = new Path(dir,
-          f".attempt-${tc.partitionId}%05d-${tc.taskAttemptId}%d")
-        fs.mkdirs(attemptDir)
-        val tmp = new Path(attemptDir, fin.getName)
-        val bgz = new BgzfOutputStream(fs.create(tmp, true))
-        val builder =
-          if (index) new TabixIndex.Builder(14, 5, fin.toString) else null
-        try {
-          bgz.write(encodePrologue(headerText))
-          it.foreach { r =>
-            val gmap = r.getMap[String, String](9)
-            val calls = samples.map(s => gmap.getOrElse(s, "."))
-            val v0 = bgz.voff
-            bgz.write(encodeRecord(hdr, r.getString(0), r.getInt(1),
-              r.getString(2), r.getString(3), r.getString(4),
-              r.getString(5), r.getString(6), r.getString(7),
-              r.getString(8), calls))
-            if (builder != null)
-              // index refs by the header's OWN contig name (the .csi
-              // refs are positional against the contig table; the
-              // frame's chrom may be the normalized form); the binned
-              // span honors INFO END so END-spanned records (gVCF
-              // bands, symbolic SVs) are findable at inner loci
-              builder.record(hdr.contigs(resolveRid(hdr, r.getString(0))),
-                r.getInt(1).toLong,
-                spanOf(r.getInt(1), r.getString(3), r.getString(7)),
-                v0, bgz.voff)
-          }
-          bgz.finish()
-        } finally bgz.close()
-        val tmpCsi =
-          if (builder != null && !builder.isEmpty) {
-            val t = new Path(attemptDir,
-              TabixIndex.csiSibling(fin).getName)
-            TabixIndex.writeCsi(fs, t,
-              paddedIndex(hdr, builder), 14, builder.chosenDepth,
-              tabixAux = false)
-            t
-          } else null
-        // commit: a twin attempt's committed shard wins (rename-if-
-        // absent); .csi first so a committed shard is never index-less
-        if (!fs.exists(fin)) {
-          if (tmpCsi != null) {
-            val finCsi = TabixIndex.csiSibling(fin)
-            if (!fs.rename(tmpCsi, finCsi) && !fs.exists(finCsi))
-              throw new java.io.IOException(
-                s"commit rename $tmpCsi -> $finCsi failed")
-          }
-          if (!fs.rename(tmp, fin) && !fs.exists(fin))
-            throw new java.io.IOException(
-              s"commit rename $tmp -> $fin failed")
-        }
-        fs.delete(attemptDir, true)
-      }
-    }
   }
 }

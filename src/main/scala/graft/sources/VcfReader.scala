@@ -50,6 +50,25 @@ object VcfReader {
     VcfMetadata(kv, cols, cols.drop(FixedCols.length))
   }
 
+  /** The inverse of [[fromHeaderLines]]: `##key=value` lines + the
+    * `#CHROM…` column line, the `header` option of
+    * `df.write.format("vcf"|"bcf")`. A bare `##line` (no `=`; parsed
+    * as an empty value) is re-emitted bare rather than as `##line=`.
+    *
+    * `##contig` IDs are normalized the same way the reader normalizes
+    * CHROM (strip the leading `chr` — VariantFunctions.normalizeChrom):
+    * the data lines carry normalized chrom values, so a byte-faithful
+    * `<ID=chr22,…>` contig line would make the emitted file internally
+    * inconsistent (header names no chromosome the body uses).
+    */
+  def headerLines(meta: VcfMetadata): Seq[String] =
+    meta.headerKv.map {
+      case (k, "") => s"##$k"
+      // the VCF spec fixes no attribute order — match ID= after '<' or ','
+      case ("contig", v) => s"##contig=${v.replaceFirst("([<,])ID=chr", "$1ID=")}"
+      case (k, v) => s"##$k=$v"
+    } :+ meta.columns.mkString("\t")
+
   /** Read a VCF file/glob into the wide graft schema:
     * `chrom, pos, id, ref, alt, qual, filter, info, format,
     * genotypes MAP<sample,call>` — `format("vcf")` plus the reference's

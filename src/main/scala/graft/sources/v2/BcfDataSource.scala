@@ -144,12 +144,11 @@ final class BcfScan(paths: Seq[String], required: StructType,
     val out = mutable.ArrayBuffer.empty[(String, Long, Long, Long, String)]
     paths.foreach { p =>
       val fs = new Path(p).getFileSystem(conf)
-      // directories recurse (BcfWriter lands shards under outDir/shards
-      // — a load(outDir) must find them, not silently plan nothing);
-      // the .bcf extension filter drops the .csi siblings
-      // hidden names (. / _ prefixes — the Hadoop convention) are
-      // skipped: a dead speculative attempt's `.attempt-*` staging dir
-      // must never contribute a truncated shard to the scan
+      // directories recurse (a load(parent) of nested landings must
+      // find them, not silently plan nothing); the .bcf extension
+      // filter drops the .csi siblings; hidden names (. / _ prefixes —
+      // the Hadoop convention) are skipped: a dead write attempt's
+      // `.stage-*` file must never contribute a truncated shard
       def expand(st: org.apache.hadoop.fs.FileStatus)
           : Seq[org.apache.hadoop.fs.FileStatus] = {
         val n = st.getPath.getName
@@ -165,8 +164,8 @@ final class BcfScan(paths: Seq[String], required: StructType,
         case s => s.toSeq.flatMap(expand)
       }).filter(_.getPath.getName.endsWith(".bcf"))
       require(statuses.nonEmpty,
-        s"no .bcf files under $p (shards land in <out>/shards; " +
-          "a silent empty scan would read as 'no variants')")
+        s"no .bcf files under $p (a silent empty scan would read " +
+          "as 'no variants')")
       // per-file header peek + index read are remote IO — bounded-
       // concurrency via PlanPool (input order preserved, so partition
       // layout is deterministic; the r14 verdict's Missing #4)
@@ -182,7 +181,8 @@ final class BcfScan(paths: Seq[String], required: StructType,
           val csi = TabixIndex.csiSibling(fp)
           if (!fs.exists(csi)) None
           else
-            try Some(TabixIndex.readCsi(fs, csi, Some(header.contigs)))
+            try Some(TabixIndex.fitting(
+              TabixIndex.readCsi(fs, csi, Some(header.contigs)), st.getLen, csi))
             catch {
               case e: Exception =>
                 BcfScanV2.log.warn(

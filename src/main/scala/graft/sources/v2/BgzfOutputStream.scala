@@ -3,46 +3,16 @@ package graft.sources.v2
 import java.io.OutputStream
 import java.util.zip.{CRC32, Deflater}
 
-import org.apache.hadoop.io.compress.{CompressionCodec, CompressionInputStream, CompressionOutputStream, Compressor, Decompressor}
-
-/** BGZF (blocked-gzip) OUTPUT codec — the write twin of
-  * [[BgzfLineReader]]: emit VCF/text shards as a series of ≤64 KiB
+/** BGZF (blocked-gzip) OUTPUT stream — the write twin of
+  * [[BgzfLineReader]]: lays bytes down as a series of ≤64 KiB
   * standalone gzip members whose `BC` extra subfield carries the
   * compressed block size (public BGZF spec, SAMv1.pdf §4.1), closed by
   * the fixed 28-byte EOF member. Output is a VALID multi-member gzip
-  * stream (any gunzip reads it) AND indexable/splittable: run tabix (or
-  * [[TabixIndex.writeCsi]]-style tooling) over a sorted shard and the
-  * engine's voff-bounded split scan applies to the engine's own output.
-  * Use via the text writer:
-  * `df.write.option("compression", classOf[BgzfCodec].getName).text(dir)`.
-  *
-  * Spark's text sink only calls the single-argument
-  * `createOutputStream`; the Compressor-pool overloads delegate (the
-  * pooled compressor is unused — each block owns a raw Deflater).
+  * stream (any gunzip reads it), and [[BgzfOutputStream.voff]] exposes
+  * the virtual offset of every byte as it is written, so the
+  * `format("vcf"|"bcf")` writers ([[GraftWrite]]) record the shard's
+  * `.tbi`/`.csi` during the emit.
   */
-final class BgzfCodec extends CompressionCodec {
-  override def createOutputStream(out: OutputStream): CompressionOutputStream =
-    new BgzfOutputStream(out)
-  override def createOutputStream(out: OutputStream, c: Compressor): CompressionOutputStream =
-    new BgzfOutputStream(out)
-  override def getCompressorType: Class[_ <: Compressor] =
-    throw new UnsupportedOperationException("BgzfCodec pools no compressors")
-  override def createCompressor(): Compressor =
-    throw new UnsupportedOperationException("BgzfCodec pools no compressors")
-  override def createInputStream(in: java.io.InputStream): CompressionInputStream =
-    throw new UnsupportedOperationException(
-      "read bgzf through format(\"vcf\")/BgzfLineReader, not the codec")
-  override def createInputStream(in: java.io.InputStream, d: Decompressor): CompressionInputStream =
-    createInputStream(in)
-  override def getDecompressorType: Class[_ <: Decompressor] =
-    throw new UnsupportedOperationException("BgzfCodec pools no decompressors")
-  override def createDecompressor(): Decompressor =
-    throw new UnsupportedOperationException("BgzfCodec pools no decompressors")
-  // bgzip's own convention: the file stays a .gz (it IS gzip); the
-  // reader sniffs blocked-ness from the BC subfield, not the name
-  override def getDefaultExtension: String = ".gz"
-}
-
 object BgzfOutputStream {
   /** Max uncompressed payload per block — bgzip's own value (keeps the
     * compressed member safely under 64 KiB, the BSIZE field's ceiling).
@@ -56,8 +26,7 @@ object BgzfOutputStream {
     0x00, 0x00, 0x00, 0x00).map(_.toByte)
 }
 
-final class BgzfOutputStream(out: OutputStream)
-    extends CompressionOutputStream(out) {
+final class BgzfOutputStream(out: OutputStream) extends OutputStream {
   import BgzfOutputStream._
 
   private val buf = new Array[Byte](BlockPayload)
@@ -71,7 +40,7 @@ final class BgzfOutputStream(out: OutputStream)
     * 16) | in-block byte offset, the BGZF/tabix coordinate. Captured
     * before/after each record write, this is what lets an indexing
     * writer record chunk voffs DURING the emit instead of re-reading
-    * the shard ([[graft.sources.VcfWriter.writeIndexedBgzf]]).
+    * the shard.
     */
   def voff: Long = (cBytes << 16) | n.toLong
 
@@ -134,13 +103,14 @@ final class BgzfOutputStream(out: OutputStream)
 
   private var finished = false
 
-  // the base class close() calls finish() then out.close() — the guard
-  // keeps a finish()+close() sequence from emitting two EOF members
-  override def finish(): Unit = if (!finished) {
+  /** Flush the open block and write the EOF member. The guard keeps a
+    * finish()+close() sequence from emitting two EOF members. */
+  def finish(): Unit = if (!finished) {
     flushBlock()
     out.write(EofMarker)
     finished = true
   }
 
-  override def resetState(): Unit = { n = 0; deflater.reset() }
+  override def close(): Unit =
+    try finish() finally { deflater.end(); out.close() }
 }

@@ -13,14 +13,16 @@ import org.apache.spark.sql.types._
 
 import graft.sources.{BcfReader, BcfWriter}
 
-/** DataSource V2 WRITE path for the `vcf` and `bcf` formats — the API
-  * any Spark user reaches for first (`df.write.format("bcf")
+/** DataSource V2 WRITE path for the `vcf` and `bcf` formats — the
+  * engine's one VCF/BCF emitter (`df.write.format("bcf")
   * .mode("append").save(dir)`), the twin of the `format("vcf"|"bcf")`
-  * scans. The encoding is EXACTLY the library writers'
-  * ([[graft.sources.VcfWriter]] / [[BcfWriter.writeBcf]]; shared
-  * `encodePrologue`/`encodeRecord`/`composeHeader`/CSI padding), so
-  * shards written here read back through `format("bcf")` with the
-  * same splittability and region pruning.
+  * scans. BCF records encode through [[BcfWriter]]
+  * (`encodePrologue`/`encodeRecord`/`composeHeader`/CSI padding), and
+  * the landings read back through `format("vcf"|"bcf")` split and
+  * region-pruned by their in-write indexes. Sorting and sharding stay
+  * with the caller: `repartitionByRange(chrom, pos)` +
+  * `sortWithinPartitions(chrom, pos)` gives globally coordinate-sorted,
+  * indexable shards.
   *
   * Layout: one self-contained shard per partition DIRECTLY under the
   * save path (`part-<partition>-<task>.bcf` + `.csi` sibling, or
@@ -28,7 +30,9 @@ import graft.sources.{BcfReader, BcfWriter}
   * path round-trips with no layout knowledge.
   *
   * Options:
-  *  - `header` / `headerPath`: the VCF header text (inline / a file).
+  *  - `header` / `headerPath`: the VCF header text (inline / a file;
+  *    [[graft.sources.VcfReader.headerLines]] renders one from parsed
+  *    metadata).
   *    When ABSENT each task synthesizes a per-shard header from its
   *    own rows' vocabulary ([[BcfWriter.composeHeader]]) — rows are
   *    spooled to task-local disk (O(record) memory, one extra local
@@ -36,12 +40,16 @@ import graft.sources.{BcfReader, BcfWriter}
   *    dictionary, which isn't known until the shard's rows have been
   *    seen. At 100 TB prefer passing the real header: single-pass
   *    streaming, no spool.
-  *  - `index` (bcf only, default true): build the `.csi` sibling
-  *    during the emit. Requires each partition position-sorted
-  *    (`repartitionByRange(chrom, pos)` + `sortWithinPartitions`
-  *    upstream — the [[BcfWriter.writeBcf]] contract); unsorted input
-  *    fails loudly ("not position-sorted"), never writes a wrong
-  *    index. Set `"false"` for unsorted dumps.
+  *  - `bgzf` (vcf only, default false): stream each text shard
+  *    through [[BgzfOutputStream]] as `part-….vcf.gz`.
+  *  - `index` (default true for bcf and for bgzf vcf): build the
+  *    `.csi`/`.tbi` sibling during the emit. Requires each partition
+  *    position-sorted (`repartitionByRange(chrom, pos)` +
+  *    `sortWithinPartitions` upstream); unsorted input fails loudly
+  *    ("not position-sorted"), never writes a wrong index. Set
+  *    `"false"` for unsorted dumps. A vcf index needs `bgzf`: tabix
+  *    virtual offsets exist only in BGZF, so `index=true` on plain
+  *    text is rejected.
   *
   * COMMIT PROTOCOL (speculation-safe by construction): every attempt
   * writes `.stage-`-prefixed names that embed the task attempt id —
@@ -103,7 +111,10 @@ private[graft] object GraftWrite {
       alt: String, qual: String, filter: String, info: String,
       format: String, gtKeys: Array[String], gtVals: Array[String])
 
-  def extract(row: InternalRow, fm: FieldMap): Rec = {
+  /** `missingCall` is what a NULL call value in `genotypes` becomes —
+    * the writer's own encoding of an absent sample (`./.` in VCF text,
+    * `.` in BCF), so NULL and absent never diverge. */
+  def extract(row: InternalRow, fm: FieldMap, missingCall: String): Rec = {
     def s(i: Int): String =
       if (i < 0 || row.isNullAt(i)) "." else row.getUTF8String(i).toString
     require(!row.isNullAt(fm.chrom) && !row.isNullAt(fm.pos) &&
@@ -126,7 +137,7 @@ private[graft] object GraftWrite {
         while (i < n) {
           ks(i) = m.keyArray().getUTF8String(i).toString
           vs(i) =
-            if (m.valueArray().isNullAt(i)) "."
+            if (m.valueArray().isNullAt(i)) missingCall
             else m.valueArray().getUTF8String(i).toString
           i += 1
         }
@@ -136,9 +147,9 @@ private[graft] object GraftWrite {
       s(fm.filter), s(fm.info), s(fm.format), ks, vs)
   }
 
-  /** Incremental vocabulary for executor-side header synthesis — the
-    * same sets [[BcfWriter.synthesizeHeader]] collects with one agg,
-    * gathered row-by-row during the spool pass. Vocabulary-bounded.
+  /** Incremental vocabulary for executor-side header synthesis,
+    * gathered row-by-row during the spool pass and rendered by
+    * [[BcfWriter.composeHeader]]. Vocabulary-bounded.
     */
   final class Vocab {
     val contigs = mutable.LinkedHashSet.empty[String]
@@ -282,10 +293,12 @@ final class GraftBatchWrite(kind: String, dir: String,
     // plain text (tabix voffs are BGZF-only). bcf: index default ON.
     val bgzf = kind == "vcf" &&
       Option(info.options().get("bgzf")).exists(_.toBoolean)
-    val index =
-      if (kind == "bcf") Option(info.options().get("index"))
-        .forall(_.toBoolean)
-      else bgzf && Option(info.options().get("index")).forall(_.toBoolean)
+    val indexOpt = Option(info.options().get("index")).map(_.toBoolean)
+    require(!(kind == "vcf" && !bgzf && indexOpt.contains(true)),
+      "format(\"vcf\") option index=true needs bgzf=true: tabix " +
+        "virtual offsets exist only in BGZF, so a plain-text landing " +
+        "cannot be indexed")
+    val index = (kind == "bcf" || bgzf) && indexOpt.getOrElse(true)
     val p = new Path(dir)
     val fs = p.getFileSystem(hconf)
     if (truncate && fs.exists(p)) {
@@ -381,8 +394,7 @@ final class BcfDataWriter(dir: String, fm: GraftWrite.FieldMap,
       "header must carry ##contig lines (the BCF contig table)")
     samples = hdr.samples
     bgz = new BgzfOutputStream(fs.create(stage, true))
-    builder = if (index) new TabixIndex.Builder(14, 5, fin.toString)
-      else null
+    builder = if (index) new TabixIndex.Builder(fin.toString) else null
     bgz.write(BcfWriter.encodePrologue(headerText))
   }
 
@@ -398,7 +410,7 @@ final class BcfDataWriter(dir: String, fm: GraftWrite.FieldMap,
   }
 
   override def write(row: InternalRow): Unit = {
-    val r = extract(row, fm)
+    val r = extract(row, fm, ".")
     if (!wrote) {
       wrote = true
       header match {
@@ -446,9 +458,10 @@ final class BcfDataWriter(dir: String, fm: GraftWrite.FieldMap,
 }
 
 /** One self-contained VCF text shard per partition (header + lines) —
-  * the text twin of [[BcfDataWriter]], same option/commit semantics,
-  * missing samples emitted as `./.` (the [[graft.sources.VcfWriter]]
-  * convention). With `bgzf=true` the shard streams through
+  * the text twin of [[BcfDataWriter]], same option/commit semantics;
+  * absent samples and NULL call values are emitted as `./.`, and a
+  * header with no samples writes true 8-column sites-only lines (no
+  * FORMAT). With `bgzf=true` the shard streams through
   * [[BgzfOutputStream]] as `part-….vcf.gz` (a valid multi-member gzip
   * any gunzip reads), and with `index=true` (default under bgzf;
   * requires position-sorted partitions) the record virtual offsets
@@ -456,8 +469,7 @@ final class BcfDataWriter(dir: String, fm: GraftWrite.FieldMap,
   * the shard — `.csi` when the positions exceed tabix's fixed
   * geometry, htslib's own escalation rule — so the DSv2-written TEXT
   * landing is voff-splittable and region-prunable through
-  * `format("vcf")` exactly like the library writer's
-  * ([[graft.sources.VcfWriter.writeIndexedBgzf]]).
+  * `format("vcf")`.
   */
 final class VcfDataWriter(dir: String, fm: GraftWrite.FieldMap,
     header: Option[String], bgzf: Boolean, index: Boolean,
@@ -488,7 +500,7 @@ final class VcfDataWriter(dir: String, fm: GraftWrite.FieldMap,
     if (bgzf) {
       bgz = new BgzfOutputStream(fs.create(stage, true))
       out = bgz
-      if (index) builder = new TabixIndex.Builder(14, 5, fin.toString)
+      if (index) builder = new TabixIndex.Builder(fin.toString)
     } else
       out = new java.io.BufferedOutputStream(fs.create(stage, true), 1 << 16)
     out.write(headerText.getBytes(StandardCharsets.UTF_8))
@@ -512,7 +524,7 @@ final class VcfDataWriter(dir: String, fm: GraftWrite.FieldMap,
   }
 
   override def write(row: InternalRow): Unit = {
-    val r = extract(row, fm)
+    val r = extract(row, fm, "./.")
     if (!wrote) {
       wrote = true
       header match {

@@ -96,6 +96,27 @@ object TabixIndex {
     else None
   }
 
+  /** `idx`, checked against the `fileLen`-byte data file it indexes:
+    * every chunk must run forwards and end within the file, and every
+    * linear-index entry must point into it. An index whose voffs point
+    * past EOF would plan splits and region chunks over bytes that do
+    * not exist, and the scan would silently return fewer rows — so it
+    * fails here, and the planners treat it like any unreadable index.
+    */
+  def fitting(idx: Index, fileLen: Long, what: Path): Index = {
+    idx.refs.foreach { r =>
+      r.bins.valuesIterator.flatten.foreach { c =>
+        require(c.beg <= c.end && compressedOffset(c.end) <= fileLen,
+          s"$what: implausible chunk voffs [${c.beg}, ${c.end}) " +
+            s"for a $fileLen-byte file")
+      }
+      r.ioff.foreach(v => require(compressedOffset(v) <= fileLen,
+        s"$what: linear-index voff $v points past the " +
+          s"$fileLen-byte file"))
+    }
+    idx
+  }
+
   def read(fs: FileSystem, tbiPath: Path): Index = {
     val in = new GZIPInputStream(fs.open(tbiPath), 65536)
     val bytes = try in.readAllBytes() finally in.close()
@@ -371,27 +392,19 @@ object TabixIndex {
     0
   }
 
-  /** Build an [[Index]] for one position-sorted BGZF VCF shard by
-    * walking its blocks with [[BgzfLineReader]] — the engine indexes
-    * its OWN [[graft.sources.VcfWriter.writeShardedBgzf]] output with
-    * no external tooling, after which `format("vcf")` prunes regions
-    * and splits the shard like any tabix-indexed input. Record spans
-    * are [pos-1, pos-1+len(REF)) so deletions crossing a window
-    * boundary land in the covering parent bin ([[reg2bin]]). Refuses
-    * unsorted shards loudly (an index over unsorted data silently
-    * drops rows at query time — the failure mode to never ship).
-    */
   /** STREAMING index accumulator — feed it (chrom, pos, refLen,
     * record-start voff, record-end voff) in file order and it builds
-    * the binning index (adjacent-chunk merge), the 2^minShift linear
-    * index, and the sortedness checks, exactly as [[buildForBgzfVcf]]
-    * derives them from a re-read. This is what lets the WRITER record
-    * the index during the emit ([[graft.sources.VcfWriter
-    * .writeIndexedBgzf]]): [[BgzfOutputStream.voff]] supplies the
-    * offsets as blocks are laid down, so the shard is never read back.
+    * the binning index (adjacent-chunk merge), the 2^14 linear index,
+    * and the sortedness checks, exactly as [[buildForBgzfVcf]] derives
+    * them from a re-read. This is what lets the `format("vcf"|"bcf")`
+    * writers ([[GraftWrite]]) record the index during the emit:
+    * [[BgzfOutputStream.voff]] supplies the offsets as blocks are laid
+    * down, so the shard is never read back. The geometry is htslib's
+    * default (minShift 14, depth 5), escalated in depth only when the
+    * positions outgrow it ([[chosenDepth]]).
     */
-  final class Builder(val minShift: Int = 14, val depth: Int = 5,
-      context: => String = "stream") {
+  final class Builder(context: => String = "stream") {
+    val minShift = 14
     // per ref, the record log (beg0, end0Ex, v0, v1) in file order —
     // binning is DEFERRED to build() so the tree depth can escalate
     // once the largest position is known (htslib keeps its in-memory
@@ -428,11 +441,11 @@ object TabixIndex {
 
     def isEmpty: Boolean = refs.isEmpty
 
-    /** The depth actually used: the requested `depth`, escalated until
-      * the (minShift, depth) tree covers the largest end seen — the
-      * htslib rule behind its automatic `.csi` fallback. */
+    /** The depth actually used: tabix's 5, escalated until the
+      * (minShift, depth) tree covers the largest end seen — the htslib
+      * rule behind its automatic `.csi` fallback. */
     def chosenDepth: Int = {
-      var d = depth
+      var d = 5
       while ((1L << (minShift + 3 * d)) < maxEnd0) d += 1
       d
     }
@@ -478,13 +491,21 @@ object TabixIndex {
     }
   }
 
-  def buildForBgzfVcf(fs: FileSystem, dataPath: Path,
-      minShift: Int = 14, depth: Int = 5): Index = {
+  /** Build an [[Index]] for one position-sorted BGZF VCF shard by
+    * walking its blocks with [[BgzfLineReader]] — the re-read reference
+    * the writers' in-write index ([[Builder]]) is checked against.
+    * Record spans follow the INFO `END=` span or the REF footprint
+    * ([[graft.sources.BcfWriter.spanOfLen]]), so deletions crossing a
+    * window boundary land in the covering parent bin ([[reg2bin]]).
+    * Refuses unsorted shards loudly (an index over unsorted data
+    * silently drops rows at query time).
+    */
+  def buildForBgzfVcf(fs: FileSystem, dataPath: Path): Index = {
     val len = fs.getFileStatus(dataPath).getLen
     val endVoff = len << 16
     val r = new BgzfLineReader(fs.open(dataPath), 0L, len)
     try {
-      val builder = new Builder(minShift, depth, dataPath.toString)
+      val builder = new Builder(dataPath.toString)
       var v0 = r.nextVoff()
       var done = v0 == -1L
       while (!done) {
@@ -528,8 +549,8 @@ object TabixIndex {
     * ([[read]]'s exact field layout: VCF preset aux header, binning
     * index, 16 kb linear index). Only valid for the fixed tabix
     * geometry (minShift 14, depth 5) and positions < 2^29 — callers
-    * outgrow that into [[writeCsi]] ([[graft.sources.VcfWriter
-    * .writeIndexedBgzf]] decides per shard, as htslib's tabix does).
+    * outgrow that into [[writeCsi]] (the `format("vcf")` writer
+    * decides per shard, as htslib's tabix does).
     */
   def writeTbi(fs: FileSystem, out: Path, idx: Index): Unit = {
     val bos = new java.io.ByteArrayOutputStream()
@@ -593,18 +614,6 @@ object TabixIndex {
     }
     val gz = new java.util.zip.GZIPOutputStream(fs.create(out, true))
     try gz.write(bos.toByteArray) finally gz.close()
-  }
-
-  /** [[buildForBgzfVcf]] + [[writeCsi]] to the `.csi` sibling. */
-  def indexBgzfSibling(fs: FileSystem, dataPath: Path,
-      minShift: Int = 14, depth: Int = 5): Unit = {
-    val idx = buildForBgzfVcf(fs, dataPath, minShift, depth)
-    // the builder may have escalated depth past the request to cover
-    // the file's largest position — the written geometry must match
-    // the binning actually used
-    val (ms, d) = idx.refs.headOption
-      .map(r => (r.minShift, r.depth)).getOrElse((minShift, depth))
-    writeCsi(fs, csiSibling(dataPath), idx, ms, d)
   }
 
   /** BGZF blocks are at most 64 KiB compressed — reading this many raw

@@ -97,11 +97,11 @@ final class VcfTable(paths: Seq[String]) extends Table with SupportsRead
 }
 
 /** @param samplesOverride `.option("samples", "s1,s2,…")` — the sample
-  *                        list for HEADERLESS data shards (distributed
-  *                        writers emit header-free shards + one header
-  *                        file, the bgzip/bcftools convention VcfWriter
-  *                        follows); without it the list is parsed from
-  *                        each file's own leading `#` lines.
+  *                        list for HEADERLESS data shards (external
+  *                        writers that emit header-free shards + one
+  *                        header file, the bgzip/bcftools convention);
+  *                        without it the list is parsed from each
+  *                        file's own leading `#` lines.
   */
 final class VcfScanBuilder(paths: Seq[String],
     samplesOverride: Option[Array[String]] = None)
@@ -196,13 +196,15 @@ final class VcfScan(paths: Seq[String], required: StructType, filters: Array[Fil
         val isGz = st.getPath.getName.endsWith(".gz")
 
         // One sibling-index read per file, shared by region pruning and
-        // full-scan splitting. An unreadable/corrupt index DEGRADES to
-        // the unindexed path (warn + full scan) instead of failing the
-        // query — valid data must stay queryable behind a bad index
-        // (delete or rebuild the sibling to restore pruning).
+        // full-scan splitting. An unreadable/corrupt index, or one whose
+        // voffs do not fit the file, DEGRADES to the unindexed path
+        // (warn + full scan) instead of failing the query — valid data
+        // must stay queryable behind a bad index (delete or rebuild the
+        // sibling to restore pruning).
         val idx: Option[TabixIndex.Index] =
           if (isGz || region.chrom.isDefined) {
             try TabixIndex.readSibling(fs, st.getPath)
+              .map(TabixIndex.fitting(_, st.getLen, st.getPath))
             catch {
               case e: Exception =>
                 VcfScan.log.warn(

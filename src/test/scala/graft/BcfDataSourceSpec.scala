@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.BcfWriter
-
 /** `spark.read.format("bcf")` — the DSv2 twin of `format("vcf")` over
   * the binary container: same fixed 10-column schema, chrom/pos
   * PUSHDOWN that prunes to the `.csi` region chunks (and skips
@@ -43,13 +41,14 @@ class BcfDataSourceSpec extends AnyFunSuite with SparkSpec {
        THEN '1/1' ELSE '0/0' END) || ':' || CAST(id % 60 AS STRING))
        AS genotypes""")
 
+  /** Shards one level below `tmp/landing`, so a load of the parent
+    * exercises directory recursion. */
   private lazy val landing: String = {
-    val out = tmp.resolve("landing").toString
-    BcfWriter.writeBcf(
-      source.repartitionByRange(3, col("chrom"), col("pos"))
-        .sortWithinPartitions(col("chrom"), col("pos")),
-      headerText, out)
-    s"$out/shards"
+    val out = tmp.resolve("landing").resolve("shards").toString
+    source.repartitionByRange(3, col("chrom"), col("pos"))
+      .sortWithinPartitions(col("chrom"), col("pos"))
+      .write.format("bcf").mode("overwrite").option("header", headerText).save(out)
+    out
   }
 
   test("format(\"bcf\") full scan ≡ the frame it was written from, " +
@@ -106,10 +105,11 @@ class BcfDataSourceSpec extends AnyFunSuite with SparkSpec {
     } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
 
-  test("directory loads recurse into the writeBcf shards layout, and " +
-      "a path with no .bcf files fails loudly instead of planning a " +
-      "silent empty scan") {
-    // load(outDir) — the shards live one level down
+  test("directory loads recurse into nested landings, and a path " +
+      "with no .bcf files fails loudly instead of planning a silent " +
+      "empty scan") {
+    // load(parent) — the shards live one level down
+    landing
     val viaRoot = spark.read.format("bcf")
       .load(tmp.resolve("landing").toString)
     assert(viaRoot.count() === 30000)

@@ -4,12 +4,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, LessThanOrEqual}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.BcfWriter
 import graft.sources.v2.TabixIndex
 
 /** CSI-indexed SPLITTABLE + REGION-PRUNED `format("bcf")` reads, over a
   * multi-chrom, multi-block `.bcf` landing written and self-indexed by
-  * [[BcfWriter]], asserted on the scan's planned partitions:
+  * `format("bcf")`, asserted on the scan's planned partitions:
   *
   *  - a SPLIT full scan (small maxPartitionBytes → many voff-bounded
   *    tasks) reads row-identical to the unsplit scan — chunk-begin
@@ -60,11 +59,10 @@ class BcfSplitSpec extends AnyFunSuite with SparkSpec {
          THEN '1/1' ELSE '0/0' END) || ':' || CAST(id % 60 AS STRING))
          AS genotypes""")
     val out = tmp.resolve("landing").toString
-    BcfWriter.writeBcf(
-      df.repartitionByRange(3, col("chrom"), col("pos"))
-        .sortWithinPartitions(col("chrom"), col("pos")),
-      headerText, out)
-    s"$out/shards/*.bcf"
+    df.repartitionByRange(3, col("chrom"), col("pos"))
+      .sortWithinPartitions(col("chrom"), col("pos"))
+      .write.format("bcf").mode("overwrite").option("header", headerText).save(out)
+    s"$out/*.bcf"
   }
 
   private val cols = Seq("chrom", "pos", "info", "format", "genotypes")
@@ -104,8 +102,8 @@ class BcfSplitSpec extends AnyFunSuite with SparkSpec {
       full.map(_.toString).sorted.toSeq)
     // bytes-read observably shrink: the planned compressed span of the
     // region tasks is a small fraction of the landing's total bytes
-    val fileBytes = new java.io.File(tmp.resolve("landing").toString +
-      "/shards").listFiles().filter(_.getName.endsWith(".bcf"))
+    val fileBytes = tmp.resolve("landing").toFile
+      .listFiles().filter(_.getName.endsWith(".bcf"))
       .map(_.length).sum
     val planned = BcfFixture.planned(landing, region("2", 50000, 60000): _*)
     assert(planned.nonEmpty)

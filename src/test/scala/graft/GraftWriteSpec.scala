@@ -41,7 +41,7 @@ class GraftWriteSpec extends AnyFunSuite with SparkSpec {
 
   test("format(\"bcf\") write with a header option: round-trips " +
       "row-identical through format(\"bcf\") read, lands one .csi per " +
-      "shard, and the landing region-prunes + splits like writeBcf's") {
+      "shard, and the landing region-prunes + splits") {
     val dir = tmp.resolve("bcf-hdr").toString
     val df = cohort
     df.repartitionByRange(3, col("chrom"), col("pos"))
@@ -242,5 +242,46 @@ class GraftWriteSpec extends AnyFunSuite with SparkSpec {
     assert(back.count() === 300)
     assert(ScanMetrics.malformedLines(back) === 0,
       "index/litter bytes leaked into the scan")
+  }
+
+  test("a NULL call value in genotypes writes exactly like an absent " +
+      "sample: ./. in VCF text, . in BCF") {
+    val df = spark.sql("""SELECT '1' AS chrom, 100 AS pos, 'A' AS ref,
+      'G' AS alt, 'GT' AS format,
+      map('S1', CAST(NULL AS STRING), 'S2', '0/1') AS genotypes""")
+    val vcf = tmp.resolve("vcf-nullcall").toString
+    df.write.format("vcf").mode("overwrite").option("header", headerText)
+      .save(vcf)
+    val line = new java.io.File(vcf).listFiles
+      .filter(_.getName.endsWith(".vcf"))
+      .flatMap(f => java.nio.file.Files.readAllLines(f.toPath).toArray)
+      .map(_.toString).filterNot(_.startsWith("#")).toSeq
+    assert(line === Seq("1\t100\t.\tA\tG\t.\t.\t.\tGT\t./.\t0/1"))
+    val absent = df.selectExpr("chrom", "pos", "ref", "alt", "format",
+      "map('S2', '0/1') AS genotypes")
+    val vcfAbsent = tmp.resolve("vcf-absentcall").toString
+    absent.write.format("vcf").mode("overwrite")
+      .option("header", headerText).save(vcfAbsent)
+    assert(spark.read.format("vcf").load(vcf).select("genotypes").collect() ===
+      spark.read.format("vcf").load(vcfAbsent).select("genotypes").collect())
+    val bcf = tmp.resolve("bcf-nullcall").toString
+    df.write.format("bcf").mode("overwrite").option("header", headerText)
+      .save(bcf)
+    assert(spark.read.format("bcf").load(bcf)
+      .selectExpr("genotypes['S1']").head().getString(0) === ".")
+  }
+
+  test("format(\"vcf\") index=true without bgzf fails loudly: tabix " +
+      "virtual offsets exist only in BGZF") {
+    val dir = tmp.resolve("vcf-index-plain").toString
+    val e = intercept[Exception] {
+      cohort.limit(10).write.format("vcf").mode("overwrite")
+        .option("header", headerText).option("index", "true").save(dir)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.getMessage != null && t.getMessage.contains("needs bgzf")),
+      e.getMessage)
+    assert(!new java.io.File(dir).exists ||
+      new java.io.File(dir).listFiles.forall(!_.getName.endsWith(".vcf")))
   }
 }

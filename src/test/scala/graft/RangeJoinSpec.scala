@@ -606,11 +606,10 @@ class RangeJoinSpec extends AnyFunSuite with SparkSpec {
         .as("genotypes"))
     val out = java.nio.file.Files
       .createTempDirectory("graft-band-emit").toString
-    graft.sources.BcfWriter.writeBcfSynth(
-      wideFrame.repartitionByRange(1, col("chrom"), col("pos"))
-        .sortWithinPartitions(col("chrom"), col("pos")),
-      out)
-    val back = spark.read.format("bcf").load(s"$out/shards")
+    wideFrame.repartitionByRange(1, col("chrom"), col("pos"))
+      .sortWithinPartitions(col("chrom"), col("pos"))
+      .write.format("bcf").mode("overwrite").save(out)
+    val back = spark.read.format("bcf").load(out)
       .withColumn("sample_id", lit("sA"))
     // every original locus is covered with the same ref-ish state
     val loci = rows.select(col("chrom"), col("pos")).distinct()

@@ -1,66 +1,77 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{VcfReader, VcfWriter}
+import graft.sources.VcfReader
+import graft.sources.v2.TabixIndex
 
+/** VCF emission through `df.write.format("vcf")`: the header rendered
+  * from parsed metadata ([[VcfReader.headerLines]]), the data-line
+  * encoding, BGZF shards, and the `.tbi`/`.csi` recorded during the
+  * write against the re-read reference ([[TabixIndex.buildForBgzfVcf]]).
+  */
 class VcfWriterSpec extends AnyFunSuite with SparkSpec {
+
+  private val s1Header = Seq(
+    "##fileformat=VCFv4.2",
+    "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1").mkString("\n")
+
+  private def writeVcf(df: DataFrame, header: String, bgzf: Boolean = false): String = {
+    val out = Files.createTempDirectory("graft_vcf_out").toString
+    df.write.format("vcf").mode("overwrite").option("header", header)
+      .option("bgzf", bgzf.toString).save(out)
+    out
+  }
+
+  private def shards(out: String, ext: String): Seq[java.nio.file.Path] =
+    Files.list(Paths.get(out)).iterator().asScala
+      .filter(p => p.getFileName.toString.endsWith(ext) &&
+        !p.getFileName.toString.startsWith("."))
+      .toSeq.sortBy(_.getFileName.toString)
+
+  private def gunzipLines(p: java.nio.file.Path): List[String] = {
+    val in = new java.util.zip.GZIPInputStream(Files.newInputStream(p))
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+    finally in.close()
+  }
+
+  private def bag(df: DataFrame) =
+    df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+
+  /** `rows` chrom × 3000 records padded with poorly-compressing digits so
+    * each shard spans several 64 KiB BGZF blocks (split granularity). */
+  private def padded(chroms: Seq[String], step: Int): DataFrame = {
+    import spark.implicits._
+    (for { c <- chroms; i <- 1 to 3000 } yield (
+      c, i * step + 100, s"rs${c}_$i", "A", "G", "50", "PASS",
+      s"DP=$i;X=" + (i * 2654435761L).toString * 8,
+      "GT", Map("S1" -> "0/1")))
+      .toDF("chrom", "pos", "id", "ref", "alt", "qual",
+        "filter", "info", "format", "genotypes")
+  }
 
   test("read → write → read round-trips the fixture exactly") {
     val p = VcfFixture.write().toString
     val meta = VcfReader.metadata(spark, p)
     val first = VcfReader.read(spark, p)
-
-    val lines = VcfWriter.toVcfLines(first, meta.samples)
-    val again = VcfReader.parseLines(lines, meta.columns, meta.samples)
-
-    val a = first.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
-    val b = again.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
-    assert(a === b)
+    val out = writeVcf(first, VcfReader.headerLines(meta).mkString("\n"))
+    val again = spark.read.format("vcf").load(out)
+    assert(bag(first) === bag(again))
     // chrom came out normalized on first read, so re-reading the emitted
     // lines must not re-normalize anything away
     assert(again.count() === 7)
   }
 
-  test("symbolic/SV ALT alleles round-trip the writer byte-identically " +
-      "(<DEL>, <CN2>, breakend both orientations, star, mixed list)") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val p = VcfFixture.write().toString
-    val meta = VcfReader.metadata(spark, p)
-    val svAlts = Seq("<DEL>", "<CN2>", "A[chr2:321682[", "]13:123456]A",
-      "*", "C,<DEL>", "*,G")
-    val planted = VcfReader.read(spark, p)
-      .limit(svAlts.length)
-      .withColumn("__i", monotonically_increasing_id().cast("int"))
-      .withColumn("alt",
-        element_at(typedlit(svAlts), col("__i") + 1))
-      .drop("__i")
-    val lines = VcfWriter.toVcfLines(planted, meta.samples)
-    val again = VcfReader.parseLines(lines, meta.columns, meta.samples)
-    assert(again.select("alt").as[String].collect().sorted ===
-      svAlts.sorted.toArray)
-  }
-
-  test("VEP CSQ INFO strings round-trip the writer byte-identically " +
-      "(pipes, commas, & multi-consequences ride verbatim)") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val p = VcfFixture.write().toString
-    val meta = VcfReader.metadata(spark, p)
-    val csq = "DP=9;CSQ=C|missense_variant|MODERATE|BRCA2|1," +
-      "G|stop_gained&splice_region_variant|HIGH|BRCA2|2;AF=0.5"
-    val planted = VcfReader.read(spark, p).limit(1)
-      .withColumn("info", lit(csq))
-    val lines = VcfWriter.toVcfLines(planted, meta.samples)
-    val again = VcfReader.parseLines(lines, meta.columns, meta.samples)
-    assert(again.select("info").as[String].collect() === Array(csq))
-  }
-
   test("header emission is byte-faithful to the parsed metadata") {
     val meta = VcfReader.fromHeaderLines(
       VcfFixture.content.linesIterator.takeWhile(_.startsWith("#")).toSeq)
-    val hdr = VcfWriter.headerLines(meta)
+    val hdr = VcfReader.headerLines(meta)
     assert(hdr.head === "##fileformat=VCFv4.2")
     assert(hdr.last.startsWith("#CHROM\tPOS") && hdr.last.endsWith("NA1\tNA2"))
     assert(hdr.count(_.startsWith("##INFO=")) === 4)
@@ -72,7 +83,7 @@ class VcfWriterSpec extends AnyFunSuite with SparkSpec {
       "##contig=<ID=chr22,length=50818468>",
       "##contig=<ID=X,length=156040895>",
       "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tNA1"))
-    val hdr = VcfWriter.headerLines(meta)
+    val hdr = VcfReader.headerLines(meta)
     // the reader emits chrom '22', so the header must name '22', not 'chr22'
     assert(hdr.contains("##contig=<ID=22,length=50818468>"), hdr.mkString("\n"))
     assert(hdr.contains("##contig=<ID=X,length=156040895>"))
@@ -82,64 +93,44 @@ class VcfWriterSpec extends AnyFunSuite with SparkSpec {
       "##fileformat=VCFv4.2",
       "##contig=<length=50818468,ID=chr22>",
       "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tNA1"))
-    assert(VcfWriter.headerLines(meta2)
+    assert(VcfReader.headerLines(meta2)
       .contains("##contig=<length=50818468,ID=22>"))
-  }
-
-  test("writeSharded lays down header + shards that concatenate to a valid VCF") {
-    val p = VcfFixture.write().toString
-    val meta = VcfReader.metadata(spark, p)
-    val df = VcfReader.read(spark, p)
-    val out = java.nio.file.Files.createTempDirectory("graft_vcf_out").toString
-    VcfWriter.writeSharded(df, meta, out)
-
-    val hdr = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(out, "header.vcf")))
-    assert(hdr.startsWith("##fileformat"))
-    // re-read the shards as a VCF body: same row count, same chrom set
-    val body = spark.read.textFile(s"$out/shards").count()
-    assert(body === 7)
   }
 
   test("absent samples emit the missing call in order") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val df = Seq(("1", 10, "r", "A", "G", "q", "PASS", "i", "GT",
       Map("s2" -> "0/1")))
       .toDF("chrom", "pos", "id", "ref", "alt", "qual", "filter", "info",
         "format", "genotypes")
-    val line = VcfWriter.toVcfLines(df, Seq("s1", "s2")).as[String].head()
-    assert(line.endsWith("GT\t./.\t0/1"))
+    val out = writeVcf(df, "##fileformat=VCFv4.2\n" +
+      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\ts1\ts2")
+    val lines = shards(out, ".vcf").flatMap(Files.readAllLines(_).asScala)
+      .filterNot(_.startsWith("#"))
+    assert(lines === Seq("1\t10\tr\tA\tG\tq\tPASS\ti\tGT\t./.\t0/1"))
   }
 
-  test("writeShardedBgzf: shards are true BGZF and round-trip through every reader") {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
+  test("format(\"vcf\") bgzf shards are true BGZF and round-trip " +
+      "through every reader") {
     val p = VcfFixture.write().toString
     val meta = VcfReader.metadata(spark, p)
     val df = VcfReader.read(spark, p)
-    val out = Files.createTempDirectory("graft_vcf_bgzf").toString
-    VcfWriter.writeShardedBgzf(df, meta, out)
-
-    val shards = Files.list(Paths.get(out, "shards")).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".gz")).toSeq.sortBy(_.toString)
-    assert(shards.nonEmpty)
+    val out = writeVcf(df.repartition(2).sortWithinPartitions("chrom", "pos"),
+      VcfReader.headerLines(meta).mkString("\n"), bgzf = true)
+    val gz = shards(out, ".vcf.gz")
+    assert(gz.nonEmpty)
     // 1. every shard ends with the fixed 28-byte BGZF EOF member
-    shards.foreach { sh =>
+    gz.foreach { sh =>
       val bytes = Files.readAllBytes(sh)
       assert(bytes.length >= 28 &&
         bytes.takeRight(28).sameElements(graft.sources.v2.BgzfOutputStream.EofMarker),
         s"$sh does not end with the BGZF EOF marker")
     }
     // 2. plain gunzip reads the multi-member stream (bgzf IS gzip)
-    val viaGzip = shards.flatMap { sh =>
-      val in = new java.util.zip.GZIPInputStream(Files.newInputStream(sh))
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    }
-    assert(viaGzip.size === 7)
+    val viaGzip = gz.flatMap(gunzipLines)
+    assert(viaGzip.count(!_.startsWith("#")) === 7)
     // 3. the engine's own block-exact reader walks the blocks
-    val viaBlocks = shards.flatMap { sh =>
+    val viaBlocks = gz.flatMap { sh =>
       val hp = new org.apache.hadoop.fs.Path(sh.toUri)
       val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val r = new graft.sources.v2.BgzfLineReader(
@@ -148,225 +139,11 @@ class VcfWriterSpec extends AnyFunSuite with SparkSpec {
       finally r.close()
     }
     assert(viaBlocks === viaGzip, "block-exact read drifted from gunzip")
-    // 4. the DSv2 path round-trips the rows (headerless shards + the
-    // samples override)
-    val again = VcfReader.parseLines(
-      spark.read.text(s"$out/shards").withColumnRenamed("value", "value"),
-      meta.columns, meta.samples)
-    val a = df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
-    val b = again.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
-    assert(a === b)
-  }
-
-  test("indexBgzfShards: self-indexed bgzf output prunes regions and splits") {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // the full loop with ZERO external tooling: emit bgzf shards, index
-    // them with the engine's own CSI builder, read them back pruned +
-    // split through format("vcf")
-    // rows padded with poorly-compressing digits so each shard spans
-    // several 64 KiB BGZF blocks — split granularity is a block
-    val rows = for { c <- Seq("1", "2"); i <- 1 to 3000 } yield (
-      c, i * 137 + 100, s"rs${c}_$i", "A", "G", "50", "PASS",
-      s"DP=$i;X=" + (i * 2654435761L).toString * 8,
-      "GT", Map("S1" -> "0/1"))
-    val df = rows.toDF("chrom", "pos", "id", "ref", "alt", "qual",
-      "filter", "info", "format", "genotypes").repartition(2)
-    val meta = VcfReader.fromHeaderLines(Seq(
-      "##fileformat=VCFv4.2",
-      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1"))
-    val out = Files.createTempDirectory("graft_vcf_selfidx").toString
-    VcfWriter.writeShardedBgzf(df, meta, out)
-    VcfWriter.indexBgzfShards(spark, out)
-
-    val shardDir = java.nio.file.Paths.get(out, "shards")
-    val gz = Files.list(shardDir).iterator().asScala
-      .map(_.getFileName.toString).filter(_.endsWith(".gz")).toSeq
-    assert(gz.nonEmpty)
-    gz.foreach(g => assert(Files.exists(shardDir.resolve(g + ".csi")),
-      s"missing csi sibling for $g"))
-
-    val key = "spark.sql.files.maxPartitionBytes"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "2048")
-    try {
-      val glob = s"$out/shards/*.gz"
-      val full = spark.read.format("vcf").option("samples", "S1").load(glob)
-      assert(full.count() === 6000)
-      // the index makes the engine's own output SPLITTABLE
-      assert(full.rdd.getNumPartitions > gz.size,
-        s"no splits within self-indexed shards: ${full.rdd.getNumPartitions}")
-      // and PRUNABLE: a locus query reads fewer partitions, right rows
-      val region = spark.read.format("vcf").option("samples", "S1").load(glob)
-        .filter(col("chrom") === "1" && col("pos").between(100, 5000))
-      assert(region.count() === 35) // i*137+100 ≤ 5000 → i ≤ 35
-      assert(region.rdd.getNumPartitions < full.rdd.getNumPartitions,
-        "region query did not prune the self-indexed shards")
-    } finally spark.conf.set(key, old)
-  }
-
-  test("writeShardedByChromBgzf: per-chrom bgzf landing self-indexes, prunes and splits") {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // the composed layout: chrom=C dirs × bgzf shards × csi siblings —
-    // rows padded so each shard spans several 64 KiB BGZF blocks
-    // positions span ~4.5 MiB so the 1 MiB posBucket fans each chrom
-    // over several writers
-    val rows = for { c <- Seq("1", "2"); i <- 1 to 3000 } yield (
-      c, i * 1500 + 100, s"rs${c}_$i", "A", "G", "50", "PASS",
-      s"DP=$i;X=" + (i * 2654435761L).toString * 20,
-      "GT", Map("S1" -> "0/1"))
-    val df = rows.toDF("chrom", "pos", "id", "ref", "alt", "qual",
-      "filter", "info", "format", "genotypes").repartition(4)
-    val meta = VcfReader.fromHeaderLines(Seq(
-      "##fileformat=VCFv4.2",
-      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1"))
-    val out = Files.createTempDirectory("graft_vcf_bychrom_bgzf").toString
-    // pin AQE coalescing off so the KB fixture keeps the at-scale fan-out
-    val aqeKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val aqeOld = spark.conf.get(aqeKey)
-    spark.conf.set(aqeKey, "false")
-    try {
-      VcfWriter.writeShardedByChromBgzf(df, meta, out)
-      VcfWriter.indexBgzfShards(spark, out)
-    } finally spark.conf.set(aqeKey, aqeOld)
-
-    // layout: one dir per chrom, >1 bgzf shard per chrom (anti-straggler
-    // fan-out survives the composition), a csi sibling per shard
-    Seq("1", "2").foreach { c =>
-      val dir = java.nio.file.Paths.get(out, "shards", s"chrom=$c")
-      assert(Files.isDirectory(dir), s"missing chrom=$c dir")
-      val gz = Files.list(dir).iterator().asScala
-        .map(_.getFileName.toString).filter(_.endsWith(".gz")).toSeq
-      assert(gz.size > 1,
-        s"chrom $c landed as ${gz.size} bgzf shard(s) — per-chrom straggler is back")
-      gz.foreach(g => assert(Files.exists(dir.resolve(g + ".csi")),
-        s"missing csi sibling for chrom=$c/$g"))
-      // every shard is internally position-sorted (the index is usable)
-      gz.foreach { g =>
-        val in = new java.util.zip.GZIPInputStream(
-          Files.newInputStream(dir.resolve(g)))
-        val ps = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .map(_.split("\t")(1).toLong).toList
-        finally in.close()
-        assert(ps === ps.sorted, s"shard chrom=$c/$g is not position-sorted")
-      }
-    }
-
-    val key = "spark.sql.files.maxPartitionBytes"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "2048")
-    try {
-      val glob = s"$out/shards/*/*.gz"
-      val full = spark.read.format("vcf").option("samples", "S1").load(glob)
-      assert(full.count() === 6000)
-      // the self-built indexes make the landing SPLITTABLE…
-      val nShards = Files.list(java.nio.file.Paths.get(out, "shards"))
-        .iterator().asScala.filter(Files.isDirectory(_))
-        .flatMap(d => Files.list(d).iterator().asScala)
-        .count(_.getFileName.toString.endsWith(".gz"))
-      assert(full.rdd.getNumPartitions > nShards,
-        s"no splits within self-indexed per-chrom shards: ${full.rdd.getNumPartitions}")
-      // …and PRUNABLE: a single-chrom locus query reads fewer partitions
-      val region = spark.read.format("vcf").option("samples", "S1").load(glob)
-        .filter(col("chrom") === "1" && col("pos").between(100, 5000))
-      assert(region.count() === 3) // i*1500+100 ≤ 5000 → i ≤ 3
-      assert(region.rdd.getNumPartitions < full.rdd.getNumPartitions,
-        "region query did not prune the per-chrom self-indexed landing")
-    } finally spark.conf.set(key, old)
-  }
-
-  test("writeShardedSorted: filename-ordered shards concatenate to ONE sorted VCF") {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    import spark.implicits._
-    val rows = for { c <- Seq("1", "10", "2"); i <- 1 to 400 } yield (
-      c, i * 997 + 7, s"rs${c}_$i", "A", "G", "50", "PASS", s"DP=$i",
-      "GT", Map("S1" -> "0/1"))
-    // arrive unsorted and badly partitioned on purpose
-    val df = rows.reverse.toDF("chrom", "pos", "id", "ref", "alt", "qual",
-      "filter", "info", "format", "genotypes").repartition(7)
-    val meta = VcfReader.fromHeaderLines(Seq(
-      "##fileformat=VCFv4.2",
-      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1"))
-    val out = Files.createTempDirectory("graft_vcf_sorted").toString
-    VcfWriter.writeShardedSorted(df, meta, out, numShards = 5)
-
-    val shardDir = java.nio.file.Paths.get(out, "shards")
-    val parts = Files.list(shardDir).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(f => f.startsWith("part-") && !f.endsWith(".crc")).toSeq.sorted
-    assert(parts.size > 1, s"one shard defeats the point: $parts")
-    // cat in FILENAME order must be globally (chrom lex, pos) sorted
-    val cat = parts.flatMap(f =>
-      Files.readAllLines(shardDir.resolve(f)).asScala)
-    val keys = cat.map { l =>
-      val a = l.split("\t"); (a(0), a(1).toLong)
-    }
-    assert(keys === keys.sortBy(identity), "concatenated shards not globally sorted")
-    assert(cat.size === 1200)
-
-    // the bgzf variant: same global order through gunzip, and the
-    // self-indexed landing still prunes
-    val out2 = Files.createTempDirectory("graft_vcf_sorted_bgzf").toString
-    VcfWriter.writeShardedSorted(df, meta, out2, numShards = 5, bgzf = true)
-    VcfWriter.indexBgzfShards(spark, out2)
-    val dir2 = java.nio.file.Paths.get(out2, "shards")
-    val gz = Files.list(dir2).iterator().asScala
-      .map(_.getFileName.toString).filter(_.endsWith(".gz")).toSeq.sorted
-    assert(gz.size > 1)
-    gz.foreach(g => assert(Files.exists(dir2.resolve(g + ".csi")),
-      s"missing csi sibling for $g"))
-    val cat2 = gz.flatMap { g =>
-      val in = new java.util.zip.GZIPInputStream(Files.newInputStream(dir2.resolve(g)))
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    }
-    assert(cat2 === cat, "bgzf emission drifted from the plain-text order")
-  }
-
-  test("indexBgzfShards honors custom CSI geometry (minShift/depth)") {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val rows = (1 to 800).map(i => ("1", i * 997 + 7, s"rs$i", "A", "G",
-      "50", "PASS", s"DP=$i", "GT", Map("S1" -> "0/1")))
-    val df = rows.toDF("chrom", "pos", "id", "ref", "alt", "qual",
-      "filter", "info", "format", "genotypes").repartition(2)
-    val meta = VcfReader.fromHeaderLines(Seq(
-      "##fileformat=VCFv4.2",
-      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1"))
-    val out = Files.createTempDirectory("graft_vcf_csigeo").toString
-    VcfWriter.writeShardedBgzf(df, meta, out)
-    // finer bins, one level deeper — the geometry a >512 Mb contig needs
-    VcfWriter.indexBgzfShards(spark, out, minShift = 12, depth = 6)
-    val shardDir = java.nio.file.Paths.get(out, "shards")
-    val gz = Files.list(shardDir).iterator().asScala
-      .map(_.getFileName.toString).filter(_.endsWith(".gz")).toSeq
-    gz.foreach { g =>
-      assert(Files.exists(shardDir.resolve(g + ".csi")))
-      val hp = new org.apache.hadoop.fs.Path(shardDir.resolve(g).toUri)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val idx = graft.sources.v2.TabixIndex.readSibling(fs, hp).get
-      assert(idx.refs.nonEmpty)
-      idx.refs.foreach(r => assert(r.minShift === 12 && r.depth === 6,
-        s"index geometry not honored: ${r.minShift}/${r.depth}"))
-    }
-    // and the non-default-geometry index still answers region queries
-    val region = spark.read.format("vcf").option("samples", "S1")
-      .load(s"$out/shards/*.gz")
-      .filter(col("chrom") === "1" && col("pos").between(1000, 10000))
-    assert(region.count() === rows.count { case (_, p, _, _, _, _, _, _, _, _) =>
-      p >= 1000 && p <= 10000 })
+    // 4. the DSv2 read path round-trips the rows
+    assert(bag(df) === bag(spark.read.format("vcf").load(out)))
   }
 
   test("empty bgzf shard (EOF member only) indexes and reads as zero rows") {
-    import java.nio.file.Files
     // a writer task that receives no rows still closes its stream: the
     // shard is the bare 28-byte EOF member; the index builder and the
     // readers must treat it as an empty, not broken, file
@@ -375,42 +152,27 @@ class VcfWriterSpec extends AnyFunSuite with SparkSpec {
     Files.write(f, graft.sources.v2.BgzfOutputStream.EofMarker)
     val hp = new org.apache.hadoop.fs.Path(f.toUri)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sources.v2.TabixIndex.indexBgzfSibling(fs, hp)
+    TabixIndex.writeCsi(fs, TabixIndex.csiSibling(hp),
+      TabixIndex.buildForBgzfVcf(fs, hp))
     assert(Files.exists(dir.resolve("empty.vcf.gz.csi")))
-    val idx = graft.sources.v2.TabixIndex.readSibling(fs, hp)
+    val idx = TabixIndex.readSibling(fs, hp)
     assert(idx.exists(_.refs.isEmpty))
     val df = spark.read.format("vcf").option("samples", "S1").load(f.toString)
     assert(df.count() === 0)
   }
 
-  test("writeIndexedBgzf: index recorded DURING the write — .tbi " +
-      "siblings, identical to a post-hoc re-read index, and the " +
-      "engine's own output serves a pushed region query pruned") {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val rows = for { c <- Seq("1", "2"); i <- 1 to 3000 } yield (
-      c, i * 137 + 100, s"rs${c}_$i", "A", "G", "50", "PASS",
-      s"DP=$i;X=" + (i * 2654435761L).toString * 8,
-      "GT", Map("S1" -> "0/1"))
-    val df = rows.toDF("chrom", "pos", "id", "ref", "alt", "qual",
-      "filter", "info", "format", "genotypes").repartition(3)
-    val meta = VcfReader.fromHeaderLines(Seq(
-      "##fileformat=VCFv4.2",
-      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1"))
-    val out = Files.createTempDirectory("graft_vcf_inwrite").toString
-    VcfWriter.writeIndexedBgzf(df, meta, out, numShards = 4)
-
-    val shardDir = java.nio.file.Paths.get(out, "shards")
-    val gz = Files.list(shardDir).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.endsWith(".gz") && !n.startsWith(".")).toSeq
+  test("format(\"vcf\") bgzf write records the index DURING the write — " +
+      ".tbi siblings identical to a post-hoc re-read index, and the " +
+      "landing serves a pushed region query pruned") {
+    val df = padded(Seq("1", "2"), 137).repartition(3)
+    val out = writeVcf(df.repartitionByRange(4, col("chrom"), col("pos"))
+      .sortWithinPartitions("chrom", "pos"), s1Header, bgzf = true)
+    val gz = shards(out, ".vcf.gz")
     assert(gz.nonEmpty)
     gz.foreach { g =>
-      assert(Files.exists(shardDir.resolve(g + ".tbi")),
+      assert(Files.exists(Paths.get(g.toString + ".tbi")),
         s"missing tbi sibling for $g")
-      assert(!Files.exists(shardDir.resolve(g + ".csi")),
+      assert(!Files.exists(Paths.get(g.toString + ".csi")),
         s"positions fit tabix — csi must not be emitted for $g")
     }
 
@@ -419,9 +181,7 @@ class VcfWriterSpec extends AnyFunSuite with SparkSpec {
     // one legitimate difference is the LAST chunk's end voff — the
     // re-read pins it to file length, the in-write to the last
     // record's end)
-    import graft.sources.v2.TabixIndex
-    val hp = new org.apache.hadoop.fs.Path(
-      shardDir.resolve(gz.head).toUri)
+    val hp = new org.apache.hadoop.fs.Path(gz.head.toUri)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val inWrite = TabixIndex.read(fs, TabixIndex.sibling(hp))
     val reRead = TabixIndex.buildForBgzfVcf(fs, hp)
@@ -438,104 +198,66 @@ class VcfWriterSpec extends AnyFunSuite with SparkSpec {
 
     // and the landing serves a pushed region query through the
     // existing pruning path: fewer partitions, exact rows
-    val key = "spark.sql.files.maxPartitionBytes"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "2048")
-    try {
-      val glob = s"$out/shards/*.gz"
-      val full = spark.read.format("vcf").option("samples", "S1").load(glob)
+    withMaxSplit(2048L) {
+      val full = spark.read.format("vcf").load(out)
       assert(full.count() === 6000)
       assert(full.rdd.getNumPartitions > gz.size,
         s"no splits within in-write-indexed shards: ${full.rdd.getNumPartitions}")
-      val region = spark.read.format("vcf").option("samples", "S1").load(glob)
+      val region = spark.read.format("vcf").load(out)
         .filter(col("chrom") === "1" && col("pos").between(100, 5000))
       assert(region.count() === 35) // i*137+100 ≤ 5000 → i ≤ 35
       assert(region.rdd.getNumPartitions < full.rdd.getNumPartitions,
         "region query did not prune the in-write-indexed shards")
-    } finally spark.conf.set(key, old)
+    }
   }
 
-  test("writeIndexedBgzf: positions past 2^29 escalate the sibling to " +
-      ".csi (htslib's rule), and the region path still serves them") {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.functions._
+  test("format(\"vcf\") bgzf write: positions past 2^29 escalate the " +
+      "sibling to .csi (htslib's rule), and the region path still serves them") {
     import spark.implicits._
     // chromosome longer than tabix's 2^29 ceiling (~536.9 Mb)
-    val rows = (1 to 500).map(i => (
+    val df = (1 to 500).map(i => (
       "1", 600000000L + i * 1000L, s"rs$i", "A", "G", ".", "PASS",
       s"DP=$i", "GT", Map("S1" -> "1/1")))
-    val df = rows.toDF("chrom", "pos", "id", "ref", "alt", "qual",
-      "filter", "info", "format", "genotypes")
-    val meta = VcfReader.fromHeaderLines(Seq(
-      "##fileformat=VCFv4.2",
-      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1"))
-    val out = Files.createTempDirectory("graft_vcf_csi_esc").toString
-    VcfWriter.writeIndexedBgzf(df, meta, out, numShards = 2)
-    val shardDir = java.nio.file.Paths.get(out, "shards")
-    val gz = Files.list(shardDir).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.endsWith(".gz") && !n.startsWith(".")).toSeq
+      .toDF("chrom", "pos", "id", "ref", "alt", "qual",
+        "filter", "info", "format", "genotypes")
+    val out = writeVcf(df.repartitionByRange(2, col("chrom"), col("pos"))
+      .sortWithinPartitions("chrom", "pos"), s1Header, bgzf = true)
+    val gz = shards(out, ".vcf.gz")
     assert(gz.nonEmpty)
     gz.foreach { g =>
-      assert(Files.exists(shardDir.resolve(g + ".csi")),
+      assert(Files.exists(Paths.get(g.toString + ".csi")),
         s"missing csi sibling for $g")
-      assert(!Files.exists(shardDir.resolve(g + ".tbi")),
+      assert(!Files.exists(Paths.get(g.toString + ".tbi")),
         s"tbi cannot represent pos > 2^29 in $g")
     }
-    val glob = s"$out/shards/*.gz"
-    val region = spark.read.format("vcf").option("samples", "S1").load(glob)
+    val region = spark.read.format("vcf").load(out)
       .filter(col("chrom") === "1" &&
         col("pos").between(600000000L, 600100000L))
     assert(region.count() === 100)
   }
 
-  test("writeShardedByChrom: per-chrom dirs, fan-out shards, per-chrom cat is a valid VCF") {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    // two chroms spread over ~12 Mb of positions so the (chrom, pos
-    // bucket) shuffle fans each chromosome over several writers
-    val header = Seq(
-      "##fileformat=VCFv4.2",
-      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1")
-    val records = for { c <- Seq("1", "2"); i <- 1 to 40 }
-      yield s"$c\t${i * 300000}\trs${c}_$i\tA\tG\t50\tPASS\tDP=$i\tGT\t0/1"
-    val src = Files.createTempFile("graft-bychrom", ".vcf")
-    Files.writeString(src, (header ++ records).mkString("", "\n", "\n"))
-    val meta = VcfReader.metadata(spark, src.toString)
-    val df = VcfReader.read(spark, src.toString)
-    val out = Files.createTempDirectory("graft_vcf_bychrom").toString
-    // pin AQE coalescing off so the KB fixture keeps the at-scale fan-out
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try VcfWriter.writeShardedByChrom(df, meta, out)
-    finally spark.conf.set(key, old)
-
-    val chr1 = Paths.get(out, "shards", "chrom=1")
-    val parts = Files.list(chr1).iterator().asScala
-      .map(_.getFileName.toString).filter(_.startsWith("part-")).toSeq.sorted
-    assert(parts.size > 1,
-      s"chrom 1 landed as ${parts.size} shard(s) — per-chrom straggler is back")
-    // every shard is internally position-sorted (bgzip/tabix-friendly)
-    parts.foreach { f =>
-      val ps = Files.readAllLines(chr1.resolve(f)).asScala
-        .map(_.split("\t")(1).toLong)
-      assert(ps === ps.sorted, s"shard $f is not position-sorted")
+  test("range-partitioned format(\"vcf\") shards in filename order form " +
+      "ONE coordinate-sorted stream, plain and bgzf alike") {
+    import spark.implicits._
+    val rows = for { c <- Seq("1", "10", "2"); i <- 1 to 400 } yield (
+      c, i * 997 + 7, s"rs${c}_$i", "A", "G", "50", "PASS", s"DP=$i",
+      "GT", Map("S1" -> "0/1"))
+    // arrive unsorted and badly partitioned on purpose
+    val df = rows.reverse.toDF("chrom", "pos", "id", "ref", "alt", "qual",
+      "filter", "info", "format", "genotypes").repartition(7)
+      .repartitionByRange(5, col("chrom"), col("pos"))
+      .sortWithinPartitions("chrom", "pos")
+    val parts = shards(writeVcf(df, s1Header), ".vcf")
+    assert(parts.size > 1, s"one shard defeats the point: $parts")
+    // cat in FILENAME order must be globally (chrom lex, pos) sorted
+    val cat = parts.flatMap(Files.readAllLines(_).asScala).filterNot(_.startsWith("#"))
+    val keys = cat.map { l =>
+      val a = l.split("\t"); (a(0), a(1).toLong)
     }
-    // header + cat(chrom=1 shards) round-trips as a single-chrom VCF
-    val single = Files.createTempFile("graft-chr1", ".vcf")
-    val body = parts.flatMap(f => Files.readAllLines(chr1.resolve(f)).asScala)
-    Files.writeString(single,
-      Files.readString(Paths.get(out, "header.vcf")) + body.mkString("", "\n", "\n"))
-    val again = VcfReader.read(spark, single.toString)
-    assert(again.count() === 40)
-    assert(again.select("chrom").distinct().collect().map(_.getString(0)).toSeq === Seq("1"))
-    // content identical to the original chrom-1 slice (the data line
-    // still carries chrom even though the directory also encodes it)
-    val a = df.filter(org.apache.spark.sql.functions.col("chrom") === "1")
-      .collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
-    val b = again.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
-    assert(a === b)
+    assert(keys === keys.sortBy(identity), "concatenated shards not globally sorted")
+    assert(cat.size === 1200)
+    val cat2 = shards(writeVcf(df, s1Header, bgzf = true), ".vcf.gz")
+      .flatMap(gunzipLines).filterNot(_.startsWith("#"))
+    assert(cat2 === cat, "bgzf emission drifted from the plain-text order")
   }
 }
