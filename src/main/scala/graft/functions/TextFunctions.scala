@@ -63,8 +63,14 @@ object TextFunctions {
     * others. Hash values are identical bit for bit (spec-pinned).
     */
   def shingleHashes(text: Column, n: Int): Column =
-    array_distinct(graft.expressions.StringExprs.ngramHashes(
-      wsTokens(lower(cleanAscii(text))), n))
+    array_distinct(ngramHashesOf(text, n))
+
+  /** Every n-token window hash of a document, in window order and with
+    * repeats (the positional form of [[shingleHashes]], which is its
+    * distinct set); fewer than n tokens → empty array, NULL text → NULL.
+    */
+  def ngramHashesOf(text: Column, n: Int): Column =
+    graft.expressions.StringExprs.ngramHashes(wsTokens(lower(cleanAscii(text))), n)
 
   /** Fixed MinHash parameter banks (16 permutations of
     * h_j(x) = (a_j·x + b_j) mod 1e9+7) — shared with the DuckDB oracle.
@@ -84,15 +90,15 @@ object TextFunctions {
 
   /** The ONE definition of signature → LSH band-key strings (band b =
     * `"_"`-joined mins of its signature slice), shared by every minhash
-    * consumer of a [[minhashSignature]] array — streaming near-dup,
-    * corpus-near-dup probing — so the "EXACT batch band keys" guarantee
-    * cannot drift between call sites. Dedup.minhashBands builds the
-    * identical strings from its aggregated min columns (asserted by the
-    * streaming specs' candidates-agree checks).
+    * consumer of a [[minhashSignature]] array — Dedup.minhashBands,
+    * streaming near-dup, corpus-near-dup probing — so the "EXACT batch
+    * band keys" guarantee cannot drift between call sites.
     */
   def sigBandKeys(sig: Column, bands: Int): Seq[Column] = {
     require(bands > 0 && MinhashA.size % bands == 0,
-      s"bands must divide the signature size ${MinhashA.size}, got $bands")
+      s"bands must divide the signature size ${MinhashA.size}, got $bands " +
+        "(otherwise trailing permutations are silently ignored, and " +
+        "bands > size gives every doc one empty band key = quadratic join)")
     val rows = MinhashA.size / bands
     (0 until bands).map(b =>
       concat_ws("_", (0 until rows).map(r =>

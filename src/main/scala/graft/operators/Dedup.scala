@@ -27,16 +27,14 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dup_count"))
       .drop("__h")
 
-  /** (id, shingle-hash) long table: the join substrate for jaccard and
-    * minhash. Long form on purpose: explode the n-grams FIRST, then hash
-    * each as a scalar codegen expression — hashing inside nested array
-    * HOFs falls back to interpreted evaluation and was the dominant
-    * bench cost. Distinct per doc.
+  /** (id, shingle-hash) long table: the join substrate for jaccard,
+    * shared spans and capped minhash. Long form on purpose — the
+    * equi-joins key on the scalar hash — built by exploding the
+    * compiled [[ngramHashesOf]] kernel, one codegen'd pass per doc that
+    * never materializes the n-gram strings. Distinct per doc.
     */
   def shingleTable(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    df.select(col(idCol).as("id"),
-        explode(wordNgrams(wsTokens(lower(cleanAscii(col(textCol)))), n)).as("s"))
-      .select(col("id"), rollingHash(col("s")).as("sh"))
+    df.select(col(idCol).as("id"), explode(ngramHashesOf(col(textCol), n)).as("sh"))
       // explicit (vacuously true) not-null: downstream equi-joins on sh
       // infer this filter on THEIR branches, and a consumer without it
       // (the set-size aggregation) would fail sameResult against them —
@@ -71,9 +69,7 @@ object Dedup {
     require(w >= 2, s"w must be >= 2 (w = 1 keeps every shingle), got $w")
     val byPos = Window.partitionBy("id").orderBy("pos")
     df.select(col(idCol).as("id"),
-        posexplode(wordNgrams(wsTokens(lower(cleanAscii(col(textCol)))), n))
-          .as(Seq("pos", "s")))
-      .select(col("id"), col("pos"), rollingHash(col("s")).as("h"))
+        posexplode(ngramHashesOf(col(textCol), n)).as(Seq("pos", "h")))
       .withColumn("fp", min(col("h")).over(byPos.rangeBetween(0, w - 1)))
       .withColumn("__maxp", max(col("pos")).over(Window.partitionBy("id")))
       // truncated tail windows (< w shingles) select nothing — the
@@ -220,33 +216,32 @@ object Dedup {
     * persistable near-dup index (land it bucketed by (band, key) for
     * shuffle-free probing; see [[incrementalMinhashCandidates]]) and
     * the self-join input of [[minhashLshPairs]].
+    *
+    * One signature per INPUT ROW: uncapped, it is one narrow projection
+    * of the [[minhashSignature]] kernel over the row's shingle hashes
+    * (no exchange), so rows sharing an id are NOT pooled into one
+    * signature — pass one row per id (the [[simhashTable]] contract).
+    * With `maxDocFreq`, the capped shingle table is regrouped by id and
+    * fed to the same kernel. Band keys are [[sigBandKeys]], the
+    * definition every minhash consumer shares; docs without a shingle
+    * (blank, NULL, or fewer than n tokens) emit no rows.
     */
   def minhashBands(
       df: DataFrame, idCol: String, textCol: String,
       n: Int, bands: Int,
       maxDocFreq: Option[Int] = None): DataFrame = {
-    require(bands > 0 && MinhashA.size % bands == 0,
-      s"bands must divide the signature size ${MinhashA.size}, got $bands " +
-        "(otherwise trailing permutations are silently ignored, and " +
-        "bands > size gives every doc one empty band key = quadratic join)")
-    val rows = MinhashA.size / bands
-    // long form: one aggregation computes all 16 permutation-mins as
-    // scalar arithmetic over the exploded shingle table (fully codegen'd,
-    // one shuffle) — the array-HOF formulation recomputed the shingle
-    // pipeline per permutation, interpreted.
-    val raw = shingleTable(df, idCol, textCol, n)
-    val sig = maxDocFreq.fold(raw)(capDocFreq(raw, _))
-      .groupBy("id")
-      .agg(
-        min((col("sh") * MinhashA.head + MinhashB.head) % HashMod).as("m0"),
-        MinhashA.indices.tail.map(j =>
-          min((col("sh") * MinhashA(j) + MinhashB(j)) % HashMod).as(s"m$j")): _*)
-    sig.select(
-      col("id"),
-      posexplode(array((0 until bands).map(b =>
-        concat_ws("_", (0 until rows).map(r =>
-          col(s"m${b * rows + r}")): _*)): _*))
-        .as(Seq("band", "key")))
+    val keys = sigBandKeys(col("sig"), bands)
+    val sig = maxDocFreq match {
+      case None =>
+        df.select(col(idCol).as("id"),
+          minhashSignature(shingleHashes(col(textCol), n)).as("sig"))
+      case Some(cap) =>
+        capDocFreq(shingleTable(df, idCol, textCol, n), cap)
+          .groupBy("id")
+          .agg(minhashSignature(collect_list(col("sh"))).as("sig"))
+    }
+    sig.filter(col("sig").isNotNull)
+      .select(col("id"), posexplode(array(keys: _*)).as(Seq("band", "key")))
   }
 
   /** MinHash + LSH candidate pairs: signature of 16 permutation-mins,
@@ -262,8 +257,8 @@ object Dedup {
     // r18 (guide §3.1/§2.4): self-join via SHUFFLE_HASH on the band key,
     // not the planner's broadcast pick. (a) The two sides are the SAME
     // plan, so their (band, key) hash exchanges are canonically
-    // identical and the signature pipeline (shingle explode + 16-min
-    // agg — the candidates' whole upstream cost) runs ONCE behind a
+    // identical and the signature pipeline (the per-doc signature
+    // projection — the candidates' whole upstream cost) runs ONCE behind a
     // ReusedExchange; the broadcast shape re-ran it per side because
     // the probe side had no exchange to reuse. (b) Broadcasting the
     // banded CORPUS grows with the corpus — a driver/executor OOM at

@@ -1091,8 +1091,9 @@ object TextAnalysis {
       discountMicro: Long = 750000L): DataFrame = {
     require(discountMicro >= 0L && discountMicro <= 1000000L,
       s"discountMicro must be a micro-fraction in [0, 1e6], got $discountMicro")
-    // the shingleTable shape: explode word 2-grams FIRST, hash at TOP
-    // LEVEL where RollingHashExpr stays codegen'd. (Two rejected
+    // explode word 2-grams FIRST, hash at TOP LEVEL where
+    // RollingHashExpr stays codegen'd (each 2-gram needs the hashes of
+    // both its words, which ngramHashes does not give). (Two rejected
     // formulations, both measured on sf0.1: hashing inside a
     // `transform` HOF runs the kernel INTERPRETED per token — 16 µs a
     // call; and an unstaged hash array re-evaluated per pair element

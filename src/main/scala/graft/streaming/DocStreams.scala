@@ -352,8 +352,9 @@ object DocStreams {
       n: Int = 3, bands: Int = 4): DataFrame = {
     import graft.functions.TextFunctions._
     // `n` and `bands` MUST match the values the probed index was built
-    // with (Dedup.minhashBands) — different shingle widths or banding
-    // produce disjoint key spaces and every probe would miss
+    // with (Dedup.minhashBands, the same signature kernel and
+    // sigBandKeys) — different shingle widths or banding produce
+    // disjoint key spaces and every probe would miss
     val keyHashes = sigBandKeys(col("__sig"), bands).zipWithIndex.map {
       case (key, b) => xxhash64(lit(b), key)
     }

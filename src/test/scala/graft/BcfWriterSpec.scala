@@ -18,7 +18,7 @@ import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThanOrEqua
   */
 class BcfWriterSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val tmp = java.nio.file.Files.createTempDirectory("graft-bcfw")
+  private lazy val tmp = SparkSpec.tempDir("graft-bcfw")
 
   test("encoder reproduces the hand-encoded fixture byte-for-byte: " +
       "prologue + all four records — every typed class the fixture " +

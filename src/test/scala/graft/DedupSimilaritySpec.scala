@@ -154,6 +154,104 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(!mh.exists(p => p._1.startsWith("v") && p._2.startsWith("v")), mh.toString)
   }
 
+  /** The shingle paths as they were built before they moved onto the
+    * compiled n-gram kernels — `wordNgrams` → `rollingHash` HOFs, and
+    * minhash as an explode + distinct + 16-min aggregation — kept
+    * VERBATIM as parity references for [[Dedup.shingleTable]],
+    * [[Dedup.winnowingFingerprints]] and [[Dedup.minhashBands]].
+    */
+  private object legacy {
+    import graft.functions.TextFunctions._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+
+    def shingleTable(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+      df.select(col(idCol).as("id"),
+          explode(wordNgrams(wsTokens(lower(cleanAscii(col(textCol)))), n)).as("s"))
+        .select(col("id"), rollingHash(col("s")).as("sh"))
+        .filter(col("sh").isNotNull)
+        .distinct()
+
+    def winnowingFingerprints(
+        df: DataFrame, idCol: String, textCol: String, n: Int, w: Int): DataFrame = {
+      val byPos = Window.partitionBy("id").orderBy("pos")
+      df.select(col(idCol).as("id"),
+          posexplode(wordNgrams(wsTokens(lower(cleanAscii(col(textCol)))), n))
+            .as(Seq("pos", "s")))
+        .select(col("id"), col("pos"), rollingHash(col("s")).as("h"))
+        .withColumn("fp", min(col("h")).over(byPos.rangeBetween(0, w - 1)))
+        .withColumn("__maxp", max(col("pos")).over(Window.partitionBy("id")))
+        .filter(col("pos") <= col("__maxp") - (w - 1))
+        .select(col("id"), col("fp"))
+        .distinct()
+    }
+
+    private def capDocFreq(sh: DataFrame, cap: Int): DataFrame =
+      sh.withColumn("__df", count(lit(1)).over(Window.partitionBy(col("sh"))))
+        .filter(col("__df") <= cap)
+        .drop("__df")
+
+    def minhashBands(
+        df: DataFrame, idCol: String, textCol: String,
+        n: Int, bands: Int, maxDocFreq: Option[Int]): DataFrame = {
+      val rows = MinhashA.size / bands
+      val raw = shingleTable(df, idCol, textCol, n)
+      val sig = maxDocFreq.fold(raw)(capDocFreq(raw, _))
+        .groupBy("id")
+        .agg(
+          min((col("sh") * MinhashA.head + MinhashB.head) % HashMod).as("m0"),
+          MinhashA.indices.tail.map(j =>
+            min((col("sh") * MinhashA(j) + MinhashB(j)) % HashMod).as(s"m$j")): _*)
+      sig.select(
+        col("id"),
+        posexplode(array((0 until bands).map(b =>
+          concat_ws("_", (0 until rows).map(r =>
+            col(s"m${b * rows + r}")): _*)): _*))
+          .as(Seq("band", "key")))
+    }
+  }
+
+  test("shingle kernels: shingleTable, winnowing and minhashBands equal the " +
+      "legacy HOF/aggregation forms row for row") {
+    val rnd = new scala.util.Random(11)
+    val edge = Seq(
+      (1L, "two words"),                                   // < n tokens
+      (2L, ""),                                            // blank
+      (3L, "   \t  "),                                    // whitespace only
+      (4L, null),                                          // NULL text
+      (5L, "naïve café — ünïcödé words here, straße and 東京 too"), // non-ASCII
+      (6L, "la la la la la la la la la la la"),           // repeated shingles
+      (7L, "  spaced \t\t out   words\n\nwith  runs   of   space  "),
+      (8L, "spaced out words with runs of space"),         // 7's canonical twin
+      (9L, "exactly three tokens"))                        // = n tokens
+    val boiler = "all rights reserved contact us"
+    val random = (10L until 70L).map { i =>
+      val body = (0 until 4 + rnd.nextInt(14)).map(_ => s"w${rnd.nextInt(12)}")
+      (i, (body.mkString(" ") + (if (i % 3 == 0) s" $boiler" else "")))
+    }
+    val docs = (edge ++ random).toDF("id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.toList.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
+    for (n <- Seq(1, 3)) {
+      assert(rows(Dedup.shingleTable(docs, "id", "text", n)) ===
+        rows(legacy.shingleTable(docs, "id", "text", n)), s"shingleTable n=$n")
+      for (w <- Seq(2, 4))
+        assert(rows(Dedup.winnowingFingerprints(docs, "id", "text", n, w)) ===
+          rows(legacy.winnowingFingerprints(docs, "id", "text", n, w)),
+          s"winnowingFingerprints n=$n w=$w")
+      for (bands <- Seq(4, 8); cap <- Seq(None, Some(3))) {
+        val got = rows(Dedup.minhashBands(docs, "id", "text", n, bands, cap))
+        assert(got.nonEmpty)
+        assert(got === rows(legacy.minhashBands(docs, "id", "text", n, bands, cap)),
+          s"minhashBands n=$n bands=$bands maxDocFreq=$cap")
+      }
+    }
+    // the cap really bites on this fixture: the boilerplate's shingles
+    // sit in 20 docs, so capped signatures differ from uncapped ones
+    assert(rows(Dedup.minhashBands(docs, "id", "text", 3, 4, Some(3))) !==
+      rows(Dedup.minhashBands(docs, "id", "text", 3, 4, None)))
+  }
+
   test("simhash near-dup pairs: exact dup at hamming 0, banding finds planted pair") {
     val pairs = Dedup.simhashNearDupPairs(docs, "id", "text", maxHamming = 10)
       .collect().map(r => ((r.getString(0), r.getString(1)), r.getInt(2))).toMap

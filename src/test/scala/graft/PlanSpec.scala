@@ -15,6 +15,10 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
+  /** Plan-tree traversal that descends into AQE query stages. */
+  private object stages
+      extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
   private def formatted(name: String): String = {
     val df = SparkEntry.queries(name)(spark, dir)
     df.queryExecution.explainString(
@@ -389,6 +393,67 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     val scans = p.linesIterator.count(l =>
       l.contains("FileScan parquet") || l.contains("Scan parquet"))
     assert(scans <= 1, s"shingle subtree must not be recomputed per consumer:\n$p")
+  }
+
+  test("minhash LSH: signatures are a narrow projection below the (band, key) " +
+      "exchange, and both join sides read it once via ReusedExchange") {
+    import graft.operators.Dedup
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id").as("id"), col("text"))
+    val pairs = Dedup.minhashLshPairs(docs, "id", "text", n = 5, bands = 4)
+    pairs.collect() // finalize AQE so query stages and reuse are visible
+    val plan = pairs.queryExecution.executedPlan
+    def onBandKey(e: ShuffleExchangeExec) = e.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.collect { case a: AttributeReference => a.name }.toSet ==
+          Set("band", "key")
+      case _ => false
+    }
+    val bandEx = stages.collect(plan) { case e: ShuffleExchangeExec if onBandKey(e) => e }
+    assert(bandEx.size == 1, s"expected ONE (band, key) exchange:\n$plan")
+    val aggs = stages.collect(bandEx.head.child) { case a: BaseAggregateExec => a }
+    assert(aggs.isEmpty,
+      s"signatures must need no aggregate below the band exchange:\n$plan")
+    val reused = stages.collect(plan) {
+      case r: ReusedExchangeExec if r.child.isInstanceOf[ShuffleExchangeExec] &&
+        onBandKey(r.child.asInstanceOf[ShuffleExchangeExec]) => r
+    }
+    assert(reused.size == 1,
+      s"the other join side must reuse the band exchange:\n$plan")
+  }
+
+  test("shingle, winnowing and minhash-band plans hold no CodegenFallback " +
+      "expression (no array HOF or lambda)") {
+    import graft.operators.Dedup
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id").as("id"), col("text"))
+    val plans = Seq(
+      "shingleTable" -> Dedup.shingleTable(docs, "id", "text", 5),
+      "winnowingFingerprints" -> Dedup.winnowingFingerprints(docs, "id", "text", 5, 4),
+      "minhashBands" -> Dedup.minhashBands(docs, "id", "text", 5, 4),
+      "minhashBands(maxDocFreq)" ->
+        Dedup.minhashBands(docs, "id", "text", 5, 4, maxDocFreq = Some(50)))
+    for ((name, df) <- plans) {
+      val plan = df.queryExecution.executedPlan
+      // per-row scalar expressions only: the capped path's collect_list is
+      // an imperative aggregate, which ObjectHashAggregate runs as such
+      // by design, once per shingle row
+      val fallbacks = stages.collect(plan) { case n => n }.flatMap(_.expressions)
+        .flatMap(_.collect {
+          case e: CodegenFallback if !e.isInstanceOf[AggregateFunction] => e
+          case e: HigherOrderFunction => e
+          case e: LambdaFunction => e
+        })
+      assert(fallbacks.isEmpty,
+        s"$name evaluates interpreted: ${fallbacks.map(_.prettyName).distinct}\n$plan")
+    }
   }
 
   test("q118 grm: self-join sides share the dosage plan via ReusedExchange") {

@@ -168,7 +168,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
     // interrupted: process batch 1, STOP (the kill), add batch 2,
     // start a SECOND query over the same checkpoint
-    val d1 = java.nio.file.Files.createTempDirectory("graft_restart")
+    val d1 = SparkSpec.tempDir("graft_restart")
     val mem1 = MemoryStream[Event]
     mem1.addData(batch1)
     run(d1, mem1)
@@ -177,7 +177,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val interrupted = sessions(d1)
 
     // uninterrupted twin: same events, one run, fresh checkpoint
-    val d2 = java.nio.file.Files.createTempDirectory("graft_restart2")
+    val d2 = SparkSpec.tempDir("graft_restart2")
     val mem2 = MemoryStream[Event]
     mem2.addData(batch1 ++ batch2)
     run(d2, mem2)
@@ -478,7 +478,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     import graft.streaming.DocStreams
     import graft.streaming.DocStreams.Doc
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_flag_sink")
+    val dir = SparkSpec.tempDir("graft_flag_sink")
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val docs = Seq(
       Doc(ts(0), 1L, base),

@@ -56,12 +56,11 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
 
   test("byte-range splits lose no lines and duplicate none") {
     // 5000-line uncompressed VCF, forced into many small splits
-    val big = Files.createTempFile("graft-big", ".vcf")
+    val big = SparkSpec.tempDir("graft-big").resolve("big.vcf")
     val header = "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\n"
     val body = (1 to 5000).map(i =>
       s"chr${1 + i % 22}\t$i\trs$i\tA\tG\t50\tPASS\tNS=1\tGT\t0/1").mkString("\n")
     Files.writeString(big, "##fileformat=VCFv4.2\n" + header + body + "\n")
-    big.toFile.deleteOnExit()
 
     val prev = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "16384") // 16 KB splits
@@ -74,12 +73,11 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("multi-path load(p1, p2) reads both files (JSON 'paths' property)") {
-    val p2 = Files.createTempFile("graft-second", ".vcf")
+    val p2 = SparkSpec.tempDir("graft-second").resolve("second.vcf")
     Files.writeString(p2,
       "##fileformat=VCFv4.2\n" +
         "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tZ1\n" +
         "9\t900\trs9\tA\tT\t50\tPASS\tNS=1\tGT\t0/1\n")
-    p2.toFile.deleteOnExit()
     val df = spark.read.format("vcf").load(path, p2.toString)
     assert(df.count() === 8) // 7 fixture rows + 1
     assert(df.filter(col("pos") === 900).count() === 1)
@@ -98,14 +96,13 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
   test("CRLF line endings + no trailing newline survive byte-range splits") {
     // CRLF accounting drift would misplace split boundaries → lost or
     // duplicated rows; the last line is deliberately unterminated
-    val crlf = Files.createTempFile("graft-crlf", ".vcf")
+    val crlf = SparkSpec.tempDir("graft-crlf").resolve("crlf.vcf")
     val header = "##fileformat=VCFv4.2\r\n" +
       "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\r\n"
     val body = (1 to 2000).map(i =>
       s"chr${1 + i % 22}\t$i\trs$i\tA\tG\t50\tPASS\tNS=1\tGT\t0/1")
       .mkString("\r\n") // no trailing newline
     Files.writeString(crlf, header + body)
-    crlf.toFile.deleteOnExit()
 
     val prev = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "8192") // 8 KB splits
@@ -122,7 +119,7 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
     // 3000 good rows with two planted corruptions: a non-integer POS and
     // a truncated (<9 field) line, placed mid-file so small splits put
     // them near boundaries
-    val bad = Files.createTempFile("graft-corrupt", ".vcf")
+    val bad = SparkSpec.tempDir("graft-corrupt").resolve("corrupt.vcf")
     val header = "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\n"
     val rows = (1 to 3000).map {
       case 1500 => "chr1\tnotanint\trsX\tA\tG\t50\tPASS\tNS=1\tGT\t0/1"
@@ -130,7 +127,6 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
       case i => s"chr${1 + i % 22}\t$i\trs$i\tA\tG\t50\tPASS\tNS=1\tGT\t0/1"
     }.mkString("\n")
     Files.writeString(bad, "##fileformat=VCFv4.2\n" + header + rows + "\n")
-    bad.toFile.deleteOnExit()
 
     val prev = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "8192")
@@ -146,7 +142,7 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
 
   test("malformed-line count surfaces as a per-scan DSv2 custom metric") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val bad = Files.createTempFile("graft-metric", ".vcf")
+    val bad = SparkSpec.tempDir("graft-metric").resolve("metric.vcf")
     Files.writeString(bad,
       "##fileformat=VCFv4.2\n" +
         "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\n" +
@@ -154,7 +150,6 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
         "chr1\tnotanint\trsX\tA\tG\t50\tPASS\tNS=1\tGT\t0/1\n" + // bad POS
         "chr1\t300\n" + // truncated
         "chr1\t400\trs4\tA\tG\t50\tPASS\tNS=1\tGT\t0/1\n")
-    bad.toFile.deleteOnExit()
     val df = spark.read.format("vcf").load(bad.toString)
     assert(df.count() === 2)
     // a scan-only query plans non-adaptively, so the BatchScanExec (and
@@ -170,13 +165,12 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("sites-only VCF (8 columns, no FORMAT/samples) reads with null format") {
-    val sites = Files.createTempFile("graft-sites", ".vcf")
+    val sites = SparkSpec.tempDir("graft-sites").resolve("sites.vcf")
     Files.writeString(sites,
       "##fileformat=VCFv4.2\n" +
         "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n" +
         "chr7\t700\trs7\tA\tG\t50\tPASS\tNS=1\n" +
         "7\t701\trs8\tC\tT\t60\tPASS\tNS=2\n")
-    sites.toFile.deleteOnExit()
     val df = spark.read.format("vcf").load(sites.toString)
     val rows = df.orderBy("pos").collect()
     assert(rows.length === 2)

@@ -29,9 +29,8 @@ object VcfFixture {
 
   /** Write the fixture to a temp .vcf and return its path. */
   def write(): Path = {
-    val p = Files.createTempFile("graft-fixture", ".vcf")
+    val p = SparkSpec.tempDir("graft-fixture").resolve("fixture.vcf")
     Files.writeString(p, content)
-    p.toFile.deleteOnExit()
     p
   }
 }
