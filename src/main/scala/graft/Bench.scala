@@ -31,8 +31,7 @@ object Bench {
     // every gate/run reads the landing — the production input shape —
     // instead of re-deriving the fixture CASE trees 3 runs × ~60 gates
     // over. Verify never sets this, so the correctness gate stays pure.
-    val substrateDir =
-      java.nio.file.Files.createTempDirectory("graft-bench-substrate")
+    val substrateDir = TempDirs.create("graft-bench-substrate")
     sys.props("graft.bench.substrate") = substrateDir.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

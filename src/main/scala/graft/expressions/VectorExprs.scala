@@ -50,7 +50,7 @@ object VectorExprs {
     * integral embeddings (quantized int8/int32 stored as int/long) widen
     * per element exactly like the old HOF form's cast did.
     */
-  @inline private def elem(a: ArrayData, i: Int, code: Int): Double = code match {
+  @inline private[expressions] def elem(a: ArrayData, i: Int, code: Int): Double = code match {
     case 0 => a.getDouble(i)
     case 1 => a.getFloat(i).toDouble
     case 2 => a.getLong(i).toDouble

@@ -856,12 +856,11 @@ object Dedup {
     * The cell assignment IS the scale trick (the published recipe):
     * pairs are only formed within a cell, so the quadratic term is
     * bounded by the largest cell, not the corpus — pick nlist so cells
-    * fit (the [[Similarity.ivfAssign]] assignment is a narrow
-    * zero-shuffle projection below InlineCentroidLimit and a broadcast
-    * join above it; either way the corpus never shuffles to be
-    * assigned). The in-cell self-join is one equi-join on `cell`; the
-    * dropped-id set is pair-bounded and drives a final anti-join
-    * (broadcastable when drops are sparse — AQE decides).
+    * fit (the [[Similarity.ivfAssign]] assignment is one narrow
+    * zero-shuffle kernel projection at any nlist — the corpus never
+    * shuffles to be assigned). The in-cell self-join is one equi-join
+    * on `cell`; the dropped-id set is pair-bounded and drives a final
+    * anti-join (broadcastable when drops are sparse — AQE decides).
     *
     * Drop rule: "ANY lower-id τ-neighbor in the cell drops you" — a
     * single join predicate, order-free and partitioning-free, unlike

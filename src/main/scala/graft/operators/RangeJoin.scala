@@ -105,10 +105,9 @@ object RangeJoin {
     * re-planning / stage retry and whose nondeterministic marking
     * blocks predicate pushdown through the plan. Spark's partial
     * WindowGroupLimit reduces each point's candidates to one BEFORE
-    * the window exchange (the [[Similarity.ivfAssign]] fallback
-    * argument). Ties beyond (dist, start, end) break arbitrarily; the
-    * distance itself — what aggregates downstream should read — is
-    * always the true minimum. Output: point columns + `distCol` + the
+    * the window exchange. Ties beyond (dist, start, end) break
+    * arbitrarily; the distance itself — what aggregates downstream
+    * should read — is always the true minimum. Output: point columns + `distCol` + the
     * interval's non-join columns (`distCol` must not pre-exist on
     * either input).
     *

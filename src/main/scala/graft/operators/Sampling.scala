@@ -178,8 +178,8 @@ object Sampling {
     * order — replays must sum in the same order.
     */
   /** Above this stratum count the inlined target CASE chain hits the
-    * codegen-size wall (the Similarity.InlineCentroidLimit lesson);
-    * the targets become a broadcast (stratum, target) frame instead.
+    * codegen-size wall; the targets become a broadcast (stratum,
+    * target) frame instead.
     */
   private val InlineStratumLimit = 256
 

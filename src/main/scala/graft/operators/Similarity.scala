@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expressions.{QuantBank, QuantExprs}
+
 /** Vector similarity over embedding columns (Array[Float]/Array[Double]).
   *
   * Dot/cosine/L2 are strict left-to-right folds in DOUBLE — deterministic
@@ -192,75 +194,46 @@ object Similarity {
     * cells).
     *
     * The centroid set is collected to the driver (it is small by
-    * definition — the same rows a join would broadcast) and the argmin
-    * becomes ONE narrow projection: `least` over per-centroid
-    * (distance, cid) structs, lexicographic struct order giving the
-    * L2-then-cid tiebreak. Zero shuffle, fully codegen. The previous
-    * cross-join + row_number-window formulation hash-shuffled the ENTIRE
-    * corpus on the vector id just to reduce k rows back to one — a full
-    * 100 TB exchange the plan gate now forbids.
+    * definition — the same rows a join would broadcast) and bound by
+    * reference into ONE `nearest_code` kernel call per row
+    * ([[graft.expressions.QuantExprs]]): a narrow projection at every
+    * nlist, zero shuffle, fully codegen, and the same generated code for
+    * every centroid set. Ties and oddities follow Spark's struct order
+    * over (distance, cid): equal distances go to the lower cid, a NaN
+    * distance ranks last, and a vector of the wrong length (null
+    * distances) lands in the lowest cid. The previous cross-join +
+    * row_number-window formulation hash-shuffled the ENTIRE corpus on
+    * the vector id just to reduce k rows back to one — a full 100 TB
+    * exchange the plan gate now forbids.
     */
-  /** Above this centroid count the inlined-literal plan gets unwieldy
-    * (codegen method size, plan bytes shipped per task) and the
-    * broadcast-join path wins despite its shuffle.
-    */
-  private[graft] val InlineCentroidLimit = 256
-
   def ivfAssign(
       vecs: DataFrame, centroids: DataFrame,
       idCol: String = "vec_id", vecCol: String = "v",
       centIdCol: String = "cid", centVecCol: String = "cv"): DataFrame = {
-    // NOTE: counting/collecting the centroid side runs a (tiny) job at
+    // NOTE: collecting the centroid side runs a (tiny) job at
     // plan-build time — the training-loop semantics callers want:
     // centroid values freeze when the assignment is built.
-    val cents = collectCents(centroids, centIdCol, centVecCol)
+    val cents = collectCentroids(centroids, centIdCol, centVecCol)
     require(cents.nonEmpty, "ivfAssign needs at least one centroid")
-    assignPlan(vecs, cents, centroids, idCol, vecCol, centIdCol, centVecCol,
-      keepDist = false)
+    assignPlan(vecs, cents, idCol, vecCol, keepDist = false)
   }
 
   /** The shared assignment plan behind [[ivfAssign]] and the fused
-    * training scan: inline argmin below [[InlineCentroidLimit]],
-    * broadcast-join + per-physical-row top-1 above it. `keepDist = true`
-    * additionally retains the winning squared distance as `__dist` —
-    * the WCSS term [[kmeansStepWithObjective]] folds into its
-    * aggregation so training needs no separate objective scan.
+    * training scan. `keepDist = true` additionally retains the winning
+    * squared distance as `__dist` — the WCSS term
+    * [[kmeansStepWithObjective]] folds into its aggregation so training
+    * needs no separate objective scan.
     */
   private def assignPlan(
-      vecs: DataFrame, cents: Seq[(Long, Seq[Double])], centroids: DataFrame,
-      idCol: String, vecCol: String, centIdCol: String, centVecCol: String,
-      keepDist: Boolean): DataFrame = {
-    if (cents.length <= InlineCentroidLimit) {
-      val best = cents.map { case (cid, cv) =>
-        struct(l2sq(col(vecCol), typedLit(cv)).as("d"), lit(cid).as("cid"))
-      }.reduceLeft((a, b) => least(a, b))
-      val base = Seq(col(idCol), col(vecCol), best.getField("cid").as("cell"))
-      vecs.select(
-        (if (keepDist) base :+ best.getField("d").as("__dist") else base): _*)
-    } else {
-      // big-nlist fallback: dedupe on the (id, vector) VALUE with a
-      // multiplicity count, broadcast-join the centroids, take the
-      // argmin as ONE grouped min over (d, cid) structs (same (dist,
-      // cid) tiebreak as before), and restore each duplicate row by
-      // exploding the count — one row per input row, exactly the
-      // inline path's multiset. Row identity is never a synthetic
-      // monotonically_increasing_id: a retry-shifted id can drop or
-      // double rows through the top-1 filter, and downstream TRAINING
-      // aggregations (kmeansStep means) would silently corrupt. The
-      // exchange moves ~|vecs| (id, vec) rows — never |vecs|×k — and
-      // the argmin agg reuses the dedupe's partitioning. (The count
-      // casts to int: >2^31 copies of one exact (id, vector) pair is a
-      // degenerate corpus whose group would OOM far earlier.)
-      val grouped = vecs
-        .groupBy(col(idCol), col(vecCol)).agg(count(lit(1)).as("__n"))
-        .crossJoin(broadcast(centroids))
-        .withColumn("__d", l2sq(col(vecCol), col(centVecCol)))
-        .groupBy(col(idCol), col(vecCol), col("__n"))
-        .agg(min(struct(col("__d").as("d"), col(centIdCol).as("cid"))).as("__best"))
-        .withColumn("__dup", explode(array_repeat(lit(1), col("__n").cast("int"))))
-      val base = Seq(col(idCol), col(vecCol), col("__best.cid").as("cell"))
-      grouped.select((if (keepDist) base :+ col("__best.d").as("__dist") else base): _*)
-    }
+      vecs: DataFrame, cents: Seq[(Long, Seq[Double])],
+      idCol: String, vecCol: String, keepDist: Boolean): DataFrame = {
+    val bank = QuantBank.centroids(cents)
+    val base = Seq(col(idCol), col(vecCol),
+      QuantExprs.codeAt(col("__nc"), 0, bank).as("cell"))
+    vecs.select(col(idCol), col(vecCol),
+        QuantExprs.nearestCode(col(vecCol), bank).as("__nc"))
+      .select((if (keepDist) base :+ QuantExprs.distAt(col("__nc"), 0).as("__dist")
+        else base): _*)
   }
 
   /** SemDeDup within-cell near-duplicate PAIRS (Abbas et al. 2023 —
@@ -323,29 +296,22 @@ object Similarity {
     }.reduce(_ + _)
 
   /** Top-n cell assignment for PROBES (`nprobe > 1` search): each input
-    * row fans out to its n nearest cells. Narrow like [[ivfAssign]] —
-    * per-centroid distances are inlined, ranked in a sorted struct
-    * array, and the top n explode. Meant for the probe side (small);
-    * corpus rows keep single-cell assignment.
+    * row fans out to its n nearest cells, in (distance, cid) order.
+    * Narrow like [[ivfAssign]] — one top-n `nearest_code` kernel call
+    * per row, then the n cells explode. Meant for the probe side
+    * (small); corpus rows keep single-cell assignment.
     */
   def ivfAssignTopN(
       vecs: DataFrame, centroids: DataFrame, nprobe: Int,
       idCol: String = "vec_id", vecCol: String = "v",
       centIdCol: String = "cid", centVecCol: String = "cv"): DataFrame = {
     require(nprobe > 0)
-    val cents = centroids
-      .select(col(centIdCol).cast("long"), col(centVecCol).cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .sortBy(_._1)
+    val cents = collectCentroids(centroids, centIdCol, centVecCol)
     require(cents.nonEmpty, "ivfAssignTopN needs at least one centroid")
-    val ranked = array_sort(array(cents.map { case (cid, cv) =>
-      struct(l2sq(col(vecCol), typedLit(cv)).as("d"), lit(cid).as("cid"))
-    }: _*))
     vecs
-      .select(col(idCol), col(vecCol),
-        explode(slice(ranked, 1, math.min(nprobe, cents.length))).as("__c"))
-      .select(col(idCol), col(vecCol), col("__c.cid").as("cell"))
+      .select(col(idCol), col(vecCol), explode(QuantExprs.nearestCode(
+        col(vecCol), QuantBank.centroids(cents), nprobe)).as("__c"))
+      .select(col(idCol), col(vecCol), col("__c.code").as("cell"))
   }
 
   /** One Lloyd (k-means) iteration — how IVF centroids are actually
@@ -401,10 +367,9 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "v",
       centIdCol: String = "cid", centVecCol: String = "cv"): DataFrame = {
     import graft.queries.QueryUtil.{avg6, dec}
-    val cents = collectCents(centroids, centIdCol, centVecCol)
+    val cents = collectCentroids(centroids, centIdCol, centVecCol)
     require(cents.nonEmpty, "kmeansStepWithObjective needs at least one centroid")
-    assignPlan(vecs, cents, centroids, idCol, vecCol, centIdCol, centVecCol,
-      keepDist = true)
+    assignPlan(vecs, cents, idCol, vecCol, keepDist = true)
       .select(col("cell"), col("__dist"), posexplode(col(vecCol)).as(Seq("__p", "__x")))
       .groupBy(col("cell"), (col("__p") + 1).as("dim"))
       .agg(count(lit(1)).as("n"), sum(dec(col("__x"))).as("__s"),
@@ -414,39 +379,20 @@ object Similarity {
   }
 
   /** Total IVF quantization error `Σ_v min_c ‖v − c‖²` — the k-means
-    * objective. Below [[InlineCentroidLimit]] it is ONE narrow codegen
-    * scan (`least` over inlined per-centroid distances, the
-    * [[ivfAssign]] shape with the distance kept instead of the id);
-    * above it the same broadcast-join fallback as ivfAssign applies —
-    * the per-(vec, centroid) distances min-aggregate on the vector id
-    * (16-byte rows, one exchange, once per training round). Empty
-    * input scores 0 (an empty set is perfectly quantized).
+    * objective: ONE narrow codegen scan summing each vector's
+    * [[ivfAssign]] winning distance. Empty input scores 0 (an empty set
+    * is perfectly quantized).
     */
   def ivfQuantError(
       vecs: DataFrame, centroids: DataFrame,
       vecCol: String = "v",
       centIdCol: String = "cid", centVecCol: String = "cv"): Double = {
-    val cents = collectCents(centroids, centIdCol, centVecCol)
+    val cents = collectCentroids(centroids, centIdCol, centVecCol)
     require(cents.nonEmpty, "ivfQuantError needs at least one centroid")
-    val summed =
-      if (cents.length <= InlineCentroidLimit) {
-        val mind = cents.map { case (_, cv) => l2sq(col(vecCol), typedLit(cv)) }
-          .reduceLeft((a, b) => least(a, b))
-        vecs.select(mind.as("qe")).agg(sum(col("qe"))).collect()(0)
-      } else {
-        // dedupe on the vector VALUE with a multiplicity count and
-        // weight each min term (duplicate vectors contribute qe × n,
-        // every copy's term, exactly as the inline per-row sum) — a
-        // synthetic row id here shifts under stage retry and silently
-        // drops or doubles objective terms
-        val centsDf = centroids.select(col(centVecCol).as("__cv"))
-        vecs.groupBy(col(vecCol)).agg(count(lit(1)).as("__n"))
-          .crossJoin(broadcast(centsDf))
-          .select(col(vecCol), col("__n"), l2sq(col(vecCol), col("__cv")).as("__d"))
-          .groupBy(col(vecCol), col("__n")).agg(min(col("__d")).as("__q"))
-          .select((col("__q") * col("__n")).as("qe"))
-          .agg(sum(col("qe"))).collect()(0)
-      }
+    val summed = vecs
+      .select(QuantExprs.distAt(
+        QuantExprs.nearestCode(col(vecCol), QuantBank.centroids(cents)), 0).as("qe"))
+      .agg(sum(col("qe"))).collect()(0)
     if (summed.isNullAt(0)) 0.0 else summed.getDouble(0)
   }
 
@@ -478,7 +424,7 @@ object Similarity {
     import spark.implicits._
     def freeze(cs: Seq[(Long, Seq[Double])]): DataFrame =
       cs.toDF(centIdCol, centVecCol)
-    var cents = collectCents(seeds, centIdCol, centVecCol)
+    var cents = collectCentroids(seeds, centIdCol, centVecCol)
     require(cents.nonEmpty, "kmeansTrain needs at least one seed centroid")
     var cdf = freeze(cents)
     val hist = scala.collection.mutable.ListBuffer.empty[Double]
@@ -582,6 +528,13 @@ object Similarity {
   }
 
   // ---- product quantization ------------------------------------------
+  //
+  // Every PQ operator has ONE implementation over a QuantBank, narrow at
+  // any nlist: `nearest_code` for encode/train/error, `adc_table` for
+  // search. Flat PQ is residual PQ against a zero centroid (`0.0 + r` is
+  // r bit for bit), so the flat names run the shared code on a flat bank
+  // and the …Residual names on the books plus the IVF centroids, keyed
+  // by each row's `cell`.
 
   /** PQ codebooks from a driver-small seed frame: codeword k of
     * subspace m = the m-th subvector of the k-th seed (sorted by id).
@@ -604,149 +557,130 @@ object Similarity {
     (0 until m).map(mi => rows.map(v => v.slice(mi * sub, (mi + 1) * sub)).toSeq)
   }
 
-  private def subVec(vec: Column, mi: Int, sub: Int): Column =
-    slice(vec, mi * sub + 1, sub)
+  /** The residual bank: `books` relative to the collected centroids. */
+  private def residualBank(
+      centroids: DataFrame, books: Seq[Seq[Seq[Double]]],
+      centIdCol: String, centVecCol: String, op: String): QuantBank = {
+    val cents = collectCentroids(centroids, centIdCol, centVecCol)
+    require(cents.nonEmpty, s"$op needs at least one centroid")
+    QuantBank.codebooks(books, cents)
+  }
 
-  /** Shared re-estimation step of every PQ Lloyd iteration: from
-    * (m, k, dim, __r[, __n]) residual-component rows, decimal-exact
+  /** `df` plus `__nc`: per subspace the nearest codeword of `bank` (a
+    * residual bank reads the row's `cell`; an unknown cell gives null).
+    */
+  private def withCodes(df: DataFrame, bank: QuantBank, vecCol: String): DataFrame =
+    df.withColumn("__nc", QuantExprs.nearestCode(col(vecCol), bank,
+      cell = if (bank.residual) Some(col("cell")) else None))
+
+  /** Re-estimation step of every PQ Lloyd iteration: from
+    * (m, k, dim, __r) residual-component rows, decimal-exact
     * per-codeword means (per-dim values to decimal(18,6) before
     * summing, one IEEE divide — bit-deterministic and
     * oracle-replicable, the [[kmeansStep]] discipline); codewords that
-    * captured no vectors keep their previous value. A `__n` column is
-    * a row MULTIPLICITY weight (the vector-dedupe paths emit one row
-    * per DISTINCT vector): decimal × integer is exact, so the weighted
-    * sum equals the per-copy sum bit for bit.
+    * captured no vectors keep their value in `bank`.
     */
   private def booksFromResidRows(
-      residRows: DataFrame,
-      codebooks: Seq[Seq[Seq[Double]]]): Seq[Seq[Seq[Double]]] = {
+      residRows: DataFrame, bank: QuantBank): Seq[Seq[Seq[Double]]] = {
     import graft.queries.QueryUtil.{avg6, dec}
-    val m = codebooks.length
-    val w: Column =
-      if (residRows.columns.contains("__n")) col("__n") else lit(1L)
     val learned = residRows
       .groupBy("m", "k", "dim")
-      .agg(sum(w).as("n"), sum(dec(col("__r")) * w).as("__s"))
+      .agg(count(lit(1)).as("n"), sum(dec(col("__r"))).as("__s"))
       .select(col("m"), col("k"), col("dim"), avg6(col("__s"), col("n")).as("c"))
       .collect()
       .groupBy(r => (r.getInt(0), r.getInt(1)))
       .view.mapValues(_.map(r => r.getInt(2) -> r.getDouble(3)).sortBy(_._1).map(_._2).toSeq)
       .toMap
-    (0 until m).map { mi =>
-      codebooks(mi).zipWithIndex.map { case (old, k) =>
-        learned.getOrElse((mi, k), old)
+    bank.books.toSeq.zipWithIndex.map { case (book, mi) =>
+      book.toSeq.zipWithIndex.map { case (old, k) =>
+        learned.getOrElse((mi, k), old.toSeq)
       }
     }
   }
 
-  /** One Lloyd iteration over ALL PQ subspaces in a SINGLE corpus scan.
-    *
-    * The plan is LITERAL-FREE: the current books ride in as a broadcast
-    * (m, k, codeword) frame, per-subspace argmins are a grouped
-    * lexicographic `min` over (d, k) structs, and the vector posexplodes
-    * ONCE into (subspace, codeword, dim, x) rows for one grouped
-    * re-estimation — so every training iteration reuses the SAME
-    * generated code (codebook VALUES change, the plan doesn't). The
-    * previous inline formulation ([[pqTrainStepInline]], kept for the
-    * parity spec) embedded each iteration's books as `typedLit`s: every
-    * step was a fresh Catalyst analysis + Janino compile that could
-    * never hit the generated-code cache — measured as the r7 driver
-    * bench's q66/q69/q70 wall inflation (SURVEY §8 round-8). The price
-    * is one bounded exchange of the TRAINING SAMPLE per iteration (a
-    * vector-value dedupe whose partitioning the argmin agg reuses,
-    * pre-reduced map-side) — training runs on a sample at 100 TB, so
-    * cacheable plans win. Encode and search keep
-    * their inline codegen shapes ([[pqEncode]], [[pqAdcTopK]]): their
-    * books are fixed, so they compile once. Results are bit-identical
-    * to the inline step (same distance fold, same (d, k) tiebreak, same
-    * decimal means — spec-pinned).
+  /** One Lloyd iteration over ALL subspaces in ONE narrow corpus scan:
+    * per-row codes from `nearest_code`, one posexplode into (subspace,
+    * code, dim, residual component) rows, one grouped re-estimation.
+    * The books ride the kernel by reference, so every iteration reuses
+    * the same generated code. A residual bank subtracts the centroid
+    * component per exploded scalar (`x − c[cell][p]`, a broadcast join
+    * of the driver-small centroids), which also drops rows whose cell is
+    * not in the centroid set.
+    */
+  private def trainStep(
+      vecs: DataFrame, bank: QuantBank, vecCol: String): Seq[Seq[Seq[Double]]] = {
+    val sub = bank.sub
+    val mCol = (col("__p") / sub).cast("int")
+    val exploded = withCodes(vecs, bank, vecCol)
+      .select((if (bank.residual) Seq(col("cell")) else Nil) ++ Seq(
+        posexplode(col(vecCol)).as(Seq("__p", "__x")),
+        col("__nc").getField("code").cast("array<int>").as("__codes")): _*)
+    val resid =
+      if (!bank.residual) exploded.withColumn("__r", col("__x"))
+      else {
+        val spark = vecs.sparkSession
+        import spark.implicits._
+        val cents = bank.cellIds.toSeq.zip(bank.cells.toSeq.map(_.toSeq))
+        exploded.join(broadcast(cents.toDF("cell", "__ccv")), "cell")
+          .withColumn("__r", col("__x") - element_at(col("__ccv"), col("__p") + 1))
+      }
+    booksFromResidRows(resid.select(mCol.as("m"),
+      element_at(col("__codes"), mCol + 1).as("k"),
+      (col("__p") % sub + 1).as("dim"), col("__r")), bank)
+  }
+
+  /** One Lloyd iteration over ALL PQ subspaces in a SINGLE narrow
+    * corpus scan (see [[trainStep]]). Zero pre-aggregation shuffle: the
+    * only exchange is the (m, k, dim) re-estimation, pre-reduced
+    * map-side.
     */
   def pqTrainStep(
       vecs: DataFrame, codebooks: Seq[Seq[Seq[Double]]],
-      idCol: String = "vec_id", vecCol: String = "v"): Seq[Seq[Seq[Double]]] = {
-    val m = codebooks.length
-    val sub = codebooks.head.head.length
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val bdf = codebooks.zipWithIndex.flatMap { case (bk, mi) =>
-      bk.zipWithIndex.map { case (cw, k) => (mi, k, cw) }
-    }.toDF("__bm", "__bk", "__bcw")
-    val aggs = (0 until m).map(mi =>
-      min(when(col("__bm") === mi, struct(col("__d"), col("__bk"))))
-        .getField("__bk").as(s"__c$mi"))
-    val mCol = (col("__p") / sub).cast("int")
-    // Per-vector identity = the vector VALUE plus a multiplicity count,
-    // never a monotonically_increasing_id row tag: a synthetic id can
-    // shift across partial stage retries, double-counting or splitting
-    // a vector's contribution to the trained means — silent codebook
-    // corruption. The dedupe groupBy is the plan's one sample exchange
-    // (the argmin agg below reuses its partitioning), and the weighted
-    // mean (decimal × integer, exact) restores each duplicate's full
-    // influence bit for bit.
-    val residRows = vecs
-      .groupBy(col(vecCol)).agg(count(lit(1)).as("__n"))
-      .crossJoin(broadcast(bdf))
-      .withColumn("__d", joinedSubDist(vecCol, sub))
-      .groupBy(col(vecCol), col("__n"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("__n"), posexplode(col(vecCol)).as(Seq("__p", "__x")),
-        array((0 until m).map(mi => col(s"__c$mi")): _*).as("__codes"))
-      .select(mCol.as("m"),
-        element_at(col("__codes"), mCol + 1).as("k"),
-        (col("__p") % sub + 1).as("dim"), col("__x").as("__r"), col("__n"))
-    booksFromResidRows(residRows, codebooks)
-  }
+      idCol: String = "vec_id", vecCol: String = "v"): Seq[Seq[Seq[Double]]] =
+    trainStep(vecs, QuantBank.codebooks(codebooks), vecCol)
 
-  /** The original inlined-literal formulation of [[pqTrainStep]] — M
-    * `least` chains over `typedLit` codewords in one narrow projection,
-    * zero pre-aggregation shuffle. Retained ONLY as the parity oracle:
-    * its plan embeds the books as literals, so a training LOOP pays a
-    * fresh Janino compile per iteration (see [[pqTrainStep]]).
-    */
-  private[graft] def pqTrainStepInline(
-      vecs: DataFrame, codebooks: Seq[Seq[Seq[Double]]],
-      idCol: String = "vec_id", vecCol: String = "v"): Seq[Seq[Seq[Double]]] = {
-    val m = codebooks.length
-    val sub = codebooks.head.head.length
-    val codeCols = (0 until m).map { mi =>
-      codebooks(mi).zipWithIndex.map { case (cw, k) =>
-        struct(l2sq(subVec(col(vecCol), mi, sub), typedLit(cw)).as("d"),
-          lit(k).as("k"))
-      }.reduceLeft((a, b) => least(a, b)).getField("k").as(s"__c$mi")
-    }
-    val mCol = (col("__p") / sub).cast("int")
-    val residRows = vecs
-      .select(col(vecCol) +: codeCols: _*)
-      .select(posexplode(col(vecCol)).as(Seq("__p", "__x")),
-        array((0 until m).map(mi => col(s"__c$mi")): _*).as("__codes"))
-      .select(mCol.as("m"),
-        element_at(col("__codes"), mCol + 1).as("k"),
-        (col("__p") % sub + 1).as("dim"), col("__x").as("__r"))
-    booksFromResidRows(residRows, codebooks)
-  }
+  /** `df`'s id, `keep` columns and `code_0..code_{M-1}` (int). */
+  private def encode(df: DataFrame, bank: QuantBank, idCol: String, vecCol: String,
+      keep: Seq[String]): DataFrame =
+    withCodes(df, bank, vecCol).select(col(idCol) +: keep.map(col) ++:
+      (0 until bank.m).map(mi =>
+        QuantExprs.codeAt(col("__nc"), mi, bank).cast("int").as(s"code_$mi")): _*)
 
   /** PQ encoding — the 100 TB ANN memory story: each vector compresses
     * to M small codes (M bytes at K ≤ 256), so a billion-vector index
     * fits where raw floats never would. Per subspace the nearest
-    * codeword is an inlined-literal argmin (`least` over (dist, k)
-    * structs — the same narrow zero-shuffle shape as [[ivfAssign]]);
-    * output carries only (id, code_0..code_{M-1}).
+    * codeword (distance, then lower k) — one narrow zero-shuffle
+    * projection like [[ivfAssign]]; output carries only
+    * (id, keep…, code_0..code_{M-1}). `keep` carries index metadata
+    * (e.g. the IVF cell) through the same projection.
     */
   def pqEncode(
       vecs: DataFrame, codebooks: Seq[Seq[Seq[Double]]],
       idCol: String = "vec_id", vecCol: String = "v",
-      keep: Seq[String] = Nil): DataFrame = {
-    val m = codebooks.length
-    val sub = codebooks.head.head.length
-    val codeCols = (0 until m).map { mi =>
-      codebooks(mi).zipWithIndex.map { case (cw, k) =>
-        struct(l2sq(subVec(col(vecCol), mi, sub), typedLit(cw)).as("d"),
-          lit(k).as("k"))
-      }.reduceLeft((a, b) => least(a, b)).getField("k").as(s"code_$mi")
-    }
-    // `keep` carries index metadata (e.g. the IVF cell) through the
-    // encode projection — still one narrow select, no join needed
-    vecs.select(col(idCol) +: keep.map(col) ++: codeCols: _*)
+      keep: Seq[String] = Nil): DataFrame =
+    encode(vecs, QuantBank.codebooks(codebooks), idCol, vecCol, keep)
+
+  /** Top-k by asymmetric distance: `p` holds (probe_id[, cell], __dt)
+    * with each probe's M×K `adc_table`; candidates join it on `cell`
+    * when present (cell-restricted search), else cross it. The looked-up
+    * sum runs in a fixed left-to-right add order — deterministic,
+    * oracle-replicable; ties break on candidate id.
+    */
+  private def adcSearch(codes: DataFrame, p: DataFrame, bank: QuantBank, k: Int,
+      idCol: String): DataFrame = {
+    val adc = (0 until bank.m).map(mi =>
+      element_at(col("__dt"), col(s"code_$mi") + (mi * bank.k + 1))).reduce(_ + _)
+    val w = Window.partitionBy("probe_id").orderBy(col("adc").asc, col("cand_id").asc)
+    val cands = codes.withColumnRenamed(idCol, "cand_id")
+    // a corpus vector lives in exactly ONE cell, so the equi-join emits
+    // each (probe, candidate) pair at most once — no dedup needed
+    (if (p.columns.contains("cell")) cands.join(broadcast(p), "cell")
+      else cands.crossJoin(broadcast(p)))
+      .filter(col("cand_id") =!= col("probe_id"))
+      .withColumn("adc", adc)
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select("probe_id", "cand_id", "rnk", "adc")
   }
 
   /** Asymmetric-distance (ADC) top-k over a PQ-encoded corpus: each
@@ -763,55 +697,12 @@ object Similarity {
   def pqAdcTopK(
       codes: DataFrame, probes: DataFrame, codebooks: Seq[Seq[Seq[Double]]],
       k: Int, idCol: String = "vec_id", vecCol: String = "v"): DataFrame = {
-    val m = codebooks.length
-    val sub = codebooks.head.head.length
-    val dtCols = (0 until m).map { mi =>
-      array(codebooks(mi).map(cw =>
-        l2sq(subVec(col(vecCol), mi, sub), typedLit(cw))): _*).as(s"__dt$mi")
-    }
-    val p = probes.select(col(idCol).as("probe_id") +: dtCols: _*)
-    // fixed left-to-right add order — deterministic, oracle-replicable
-    val adc = (0 until m).map(mi =>
-      element_at(col(s"__dt$mi"), col(s"code_$mi") + 1)).reduce(_ + _)
-    val w = Window.partitionBy("probe_id").orderBy(col("adc").asc, col("cand_id").asc)
-    codes.withColumnRenamed(idCol, "cand_id")
-      .crossJoin(broadcast(p))
-      .filter(col("cand_id") =!= col("probe_id"))
-      .withColumn("adc", adc)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("probe_id", "cand_id", "rnk", "adc")
+    val bank = QuantBank.codebooks(codebooks)
+    adcSearch(codes, probes.select(col(idCol).as("probe_id"),
+      QuantExprs.adcTable(col(vecCol), bank).as("__dt")), bank, k, idCol)
   }
 
   // ---- residual IVF+PQ ------------------------------------------------
-
-  /** Per-cell SHIFTED codebooks — how residual PQ stays codegen-narrow:
-    * encoding the residual `v − c[cell]` against codeword `r` minimizes
-    * `‖(v − c) − r‖²  =  ‖v − (c + r)‖²`, so instead of materializing
-    * residual vectors (an array-HOF subtraction on the corpus path —
-    * CodegenFallback, the engine's banned pattern) each cell gets its
-    * codewords PRE-SHIFTED by its centroid, and both encode and ADC run
-    * the same inlined-literal argmin/table shapes as plain PQ on the
-    * ORIGINAL vectors. Driver-side, tiny (nlist × M × K codewords).
-    */
-  private def shiftedBooks(
-      cents: Seq[(Long, Seq[Double])],
-      books: Seq[Seq[Seq[Double]]]): Map[Long, Seq[Seq[Seq[Double]]]] = {
-    val sub = books.head.head.length
-    cents.map { case (cid, cv) =>
-      cid -> books.zipWithIndex.map { case (bk, mi) =>
-        bk.map(cw => cw.zipWithIndex.map { case (x, d) => cv(mi * sub + d) + x })
-      }
-    }.toMap
-  }
-
-  private def collectCents(centroids: DataFrame, centIdCol: String,
-      centVecCol: String): Seq[(Long, Seq[Double])] =
-    centroids
-      .select(col(centIdCol).cast("long"), col(centVecCol).cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .sortBy(_._1).toSeq
 
   /** Collect a (small-by-contract) centroid frame to the driver ONCE —
     * the hoist for pipelines that feed the same centroids into several
@@ -828,13 +719,16 @@ object Similarity {
     */
   def collectCentroids(centroids: DataFrame,
       centIdCol: String = "cid", centVecCol: String = "cv"): Seq[(Long, Seq[Double])] =
-    collectCents(centroids, centIdCol, centVecCol)
+    centroids
+      .select(col(centIdCol).cast("long"), col(centVecCol).cast("array<double>"))
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1)))
+      .sortBy(_._1).toSeq
 
   /** Re-wrap an already-collected centroid seq as a driver-local frame
-    * (LocalRelation): the operators' internal plan-build collects and
-    * broadcast fallbacks read it without launching a job. Column types
-    * are the collected (long, array<double>) — what [[collectCentroids]]
-    * casts to and what every inline path emits.
+    * (LocalRelation): the operators' internal plan-build collects read
+    * it without launching a job. Column types are the collected
+    * (long, array<double>) — what [[collectCentroids]] casts to.
     */
   def centroidFrame(spark: org.apache.spark.sql.SparkSession,
       cents: Seq[(Long, Seq[Double])],
@@ -843,260 +737,66 @@ object Similarity {
     cents.toDF(centIdCol, centVecCol)
   }
 
-  /** The shifted codebooks as a broadcastable (cell, __bm, __bk, __bcw)
-    * frame — the big-nlist twin of [[shiftedBooks]]' literal map.
-    * nlist × M × K rows of sub-dim codewords: driver-small relative to
-    * any corpus (a few MB even at nlist 65536, M 8, K 256), so it always
-    * broadcasts. Above [[InlineCentroidLimit]] cells, the residual
-    * family equi-joins this on `cell` instead of inlining a when-chain
-    * whose generated code grows as nlist × M × K (the exact
-    * codegen/constant-pool blowup the limit exists to prevent in
-    * [[ivfAssign]]).
-    */
-  private def shiftedBookDf(
-      spark: org.apache.spark.sql.SparkSession,
-      sb: Map[Long, Seq[Seq[Seq[Double]]]]): DataFrame = {
-    import spark.implicits._
-    sb.toSeq.sortBy(_._1).flatMap { case (cid, books) =>
-      books.zipWithIndex.flatMap { case (bk, mi) =>
-        bk.zipWithIndex.map { case (cw, k) => (cid, mi, k, cw) }
-      }
-    }.toDF("cell", "__bm", "__bk", "__bcw")
-  }
-
-  /** Per joined (vector row × codeword row) subspace distance:
-    * ‖v[sub m] − shifted codeword‖², with the subspace picked by the
-    * codeword row's own `__bm`. Same fold (and bits) as the inline
-    * path's `l2sq(subVec(v, mi, sub), literal)`; `slice` with a column
-    * start stays codegen'd.
-    */
-  private def joinedSubDist(vecCol: String, sub: Int): Column =
-    graft.expressions.VectorExprs.l2sq(
-      slice(col(vecCol), col("__bm") * sub + 1, lit(sub)), col("__bcw"))
-
   /** RESIDUAL PQ encoding: vectors (already carrying their [[ivfAssign]]
-    * `cell`) encode against their cell's shifted codebooks. The codes
+    * `cell`) encode `v − c[cell]` against the residual books. The codes
     * approximate `v ≈ c[cell] + r[code]`, the layout every production
     * IVF+PQ index uses because residuals cluster far tighter than raw
-    * vectors (quantization error drops at the same M×K budget).
-    *
-    * Up to `inlineLimit` cells this is one narrow projection — a
-    * `when`-chain over cells of inlined argmins, zero shuffle. Above it
-    * (production nlist ≥ 1024) the shifted codewords become a BROADCAST
-    * (cell, m, k, codeword) frame equi-joined on `cell`, and the
-    * per-subspace argmin a grouped `min` over (d, k) structs — the same
-    * lexicographic distance-then-k tiebreak as the inline `least`, and
-    * the same fallback shape as [[ivfAssign]]'s. One bounded exchange
-    * (the per-row argmin aggregation, pre-reduced map-side); the corpus
-    * never shuffles before the join.
+    * vectors (quantization error drops at the same M×K budget). The
+    * kernel computes `‖v − (c[cell] + r)‖² = ‖(v − c) − r‖²` on the
+    * ORIGINAL vector, so no residual is ever materialized: one narrow
+    * projection at any nlist, zero exchanges. A row whose cell is not in
+    * the centroid set keeps its row with null codes.
     */
   def pqEncodeResidual(
       vecsWithCell: DataFrame, centroids: DataFrame,
       codebooks: Seq[Seq[Seq[Double]]],
       idCol: String = "vec_id", vecCol: String = "v",
-      centIdCol: String = "cid", centVecCol: String = "cv",
-      inlineLimit: Int = InlineCentroidLimit): DataFrame = {
-    val cents = collectCents(centroids, centIdCol, centVecCol)
-    require(cents.nonEmpty, "pqEncodeResidual needs at least one centroid")
-    val sb = shiftedBooks(cents, codebooks)
-    val m = codebooks.length
-    val sub = codebooks.head.head.length
-    if (cents.length <= inlineLimit) {
-      val codeCols = (0 until m).map { mi =>
-        def argmin(cid: Long): Column =
-          sb(cid)(mi).zipWithIndex.map { case (cw, k) =>
-            struct(l2sq(subVec(col(vecCol), mi, sub), typedLit(cw)).as("d"),
-              lit(k).as("k"))
-          }.reduceLeft((a, b) => least(a, b)).getField("k")
-        cents.tail.foldLeft(
-          when(col("cell") === cents.head._1, argmin(cents.head._1))) {
-          case (w, (cid, _)) => w.when(col("cell") === cid, argmin(cid))
-        }.as(s"code_$mi")
-      }
-      vecsWithCell.select(col(idCol) +: col("cell") +: codeCols: _*)
-    } else {
-      val aggs = (0 until m).map(mi =>
-        min(when(col("__bm") === mi, struct(col("__d"), col("__bk"))))
-          .getField("__bk").as(s"code_$mi"))
-      // (id, cell, vector)-value dedupe with multiplicity restore — no
-      // synthetic row id (see ivfAssign's fallback for the retry
-      // argument); duplicates re-emit as identical code rows, the
-      // inline path's exact multiset
-      vecsWithCell
-        .groupBy(col(idCol), col("cell"), col(vecCol))
-        .agg(count(lit(1)).as("__n"))
-        // LEFT join: a row whose cell is not in the centroid set keeps
-        // its row with null codes, exactly like the inline when-chain
-        // (an inner join would silently drop it)
-        .join(broadcast(shiftedBookDf(vecsWithCell.sparkSession, sb)),
-          Seq("cell"), "left")
-        .withColumn("__d", joinedSubDist(vecCol, sub))
-        .groupBy(col(idCol), col("cell"), col(vecCol), col("__n"))
-        .agg(aggs.head, aggs.tail: _*)
-        .withColumn("__dup", explode(array_repeat(lit(1), col("__n").cast("int"))))
-        .select(col(idCol) +: col("cell") +:
-          (0 until m).map(mi => col(s"code_$mi")): _*)
-    }
+      centIdCol: String = "cid", centVecCol: String = "cv"): DataFrame = {
+    val bank = residualBank(centroids, codebooks, centIdCol, centVecCol,
+      "pqEncodeResidual")
+    encode(vecsWithCell, bank, idCol, vecCol, Seq("cell"))
   }
 
   /** One Lloyd iteration over RESIDUAL PQ codebooks, all subspaces in a
-    * SINGLE corpus scan — [[pqTrainStep]]'s shape lifted into residual
-    * space without ever materializing a residual vector: the per-subspace
-    * assignment argmins run against each cell's SHIFTED codewords
-    * (`‖(v−c)−r‖ = ‖v−(c+r)‖`, the [[pqEncodeResidual]] trick) on the
-    * ORIGINAL vectors, and the re-estimation mean subtracts the centroid
-    * component per exploded scalar (`x − c[cell][p]`, a when-chain over
-    * inlined centroid literals) — both stay inside WholeStageCodegen.
-    * Decimal-exact means as everywhere (per-dim residuals to
-    * decimal(18,6) before summing, one IEEE divide) so the trained books
-    * are bit-deterministic and the DuckDB oracle replays every iteration.
-    * Codewords that captured no vectors keep their previous value.
-    *
-    * `inlineLimit` DEFAULTS TO 0 — training always runs the broadcast
-    * shifted-codeword frame, whose plan is literal-free and therefore
-    * identical across iterations (one Janino compile for the whole
-    * training loop; the inline when-chains embed each iteration's books
-    * as literals and recompile every step — the r7 q69/q70 driver-bench
-    * wall inflation, SURVEY §8 round-8). Encode/search keep the inline
-    * default ([[InlineCentroidLimit]]): their books are fixed per index.
-    * Both branches are bit-identical (spec-pinned); pass a large
-    * `inlineLimit` to force the inline path.
+    * SINGLE narrow corpus scan ([[trainStep]] on the residual bank):
+    * assignment argmins on the ORIGINAL vectors (the
+    * [[pqEncodeResidual]] kernel), the re-estimation mean over the
+    * per-scalar residual `x − c[cell][p]`. Decimal-exact means as
+    * everywhere (per-dim residuals to decimal(18,6) before summing, one
+    * IEEE divide), so the trained books are bit-deterministic and the
+    * DuckDB oracle replays every iteration. Codewords that captured no
+    * vectors keep their previous value; rows whose cell is not in the
+    * centroid set do not train.
     */
   def pqTrainStepResidual(
       vecsWithCell: DataFrame, centroids: DataFrame,
       codebooks: Seq[Seq[Seq[Double]]],
       idCol: String = "vec_id", vecCol: String = "v",
-      centIdCol: String = "cid", centVecCol: String = "cv",
-      inlineLimit: Int = 0): Seq[Seq[Seq[Double]]] = {
-    val cents = collectCents(centroids, centIdCol, centVecCol)
-    require(cents.nonEmpty, "pqTrainStepResidual needs at least one centroid")
-    val sb = shiftedBooks(cents, codebooks)
-    val m = codebooks.length
-    val sub = codebooks.head.head.length
-    val mCol = (col("__p") / sub).cast("int")
-    // both branches produce the same residual rows — inline via
-    // when-chains of literals, big-nlist via the broadcast
-    // shifted-codeword frame (argmin as a grouped min over (d, k)
-    // structs after a (cell, vector)-value dedupe with multiplicity
-    // counts) plus a broadcast centroid join for the `x − c[cell][p]`
-    // component; the grouped decimal mean below is shared (weighted by
-    // the counts), so trained books are bit-identical across paths
-    val residRows = if (cents.length <= inlineLimit) {
-      val codeCols = (0 until m).map { mi =>
-        def argmin(cid: Long): Column =
-          sb(cid)(mi).zipWithIndex.map { case (cw, k) =>
-            struct(l2sq(subVec(col(vecCol), mi, sub), typedLit(cw)).as("d"),
-              lit(k).as("k"))
-          }.reduceLeft((a, b) => least(a, b)).getField("k")
-        cents.tail.foldLeft(
-          when(col("cell") === cents.head._1, argmin(cents.head._1))) {
-          case (w, (cid, _)) => w.when(col("cell") === cid, argmin(cid))
-        }.as(s"__c$mi")
-      }
-      // residual component at exploded position __p: x − centroid[cell][p]
-      val centComp = cents.tail.foldLeft(
-        when(col("cell") === cents.head._1,
-          element_at(typedLit(cents.head._2), col("__p") + 1))) {
-        case (w, (cid, cv)) =>
-          w.when(col("cell") === cid, element_at(typedLit(cv), col("__p") + 1))
-      }
-      vecsWithCell
-        .select(col(vecCol) +: col("cell") +: codeCols: _*)
-        .select(col("cell"),
-          posexplode(col(vecCol)).as(Seq("__p", "__x")),
-          array((0 until m).map(mi => col(s"__c$mi")): _*).as("__codes"))
-        .select(mCol.as("m"),
-          element_at(col("__codes"), mCol + 1).as("k"),
-          (col("__p") % sub + 1).as("dim"),
-          (col("__x") - centComp).as("__r"))
-    } else {
-      val aggs = (0 until m).map(mi =>
-        min(when(col("__bm") === mi, struct(col("__d"), col("__bk"))))
-          .getField("__bk").as(s"__c$mi"))
-      // from the already-collected driver-small seq, NOT the centroids
-      // DataFrame — re-planning that would re-scan its source per
-      // iteration (and the values are already in hand)
-      val spark0 = vecsWithCell.sparkSession
-      import spark0.implicits._
-      val centDf = cents.toDF("cell", "__ccv")
-      // vector-value + multiplicity identity, not a synthetic row id —
-      // see pqTrainStep: retry-shifted ids silently corrupt the means.
-      // `cell` is a deterministic function of the vector, so grouping
-      // on (cell, vector) is the per-distinct-vector dedupe.
-      vecsWithCell
-        .groupBy(col("cell"), col(vecCol)).agg(count(lit(1)).as("__n"))
-        .join(broadcast(shiftedBookDf(vecsWithCell.sparkSession, sb)), "cell")
-        .withColumn("__d", joinedSubDist(vecCol, sub))
-        .groupBy(col("cell"), col(vecCol), col("__n"))
-        .agg(aggs.head, aggs.tail: _*)
-        .select(col("cell"), col("__n"),
-          posexplode(col(vecCol)).as(Seq("__p", "__x")),
-          array((0 until m).map(mi => col(s"__c$mi")): _*).as("__codes"))
-        .join(broadcast(centDf), "cell")
-        .select(mCol.as("m"),
-          element_at(col("__codes"), mCol + 1).as("k"),
-          (col("__p") % sub + 1).as("dim"),
-          (col("__x") - element_at(col("__ccv"), col("__p") + 1)).as("__r"),
-          col("__n"))
-    }
-    booksFromResidRows(residRows, codebooks)
+      centIdCol: String = "cid", centVecCol: String = "cv"): Seq[Seq[Seq[Double]]] = {
+    trainStep(vecsWithCell, residualBank(centroids, codebooks, centIdCol, centVecCol,
+      "pqTrainStepResidual"), vecCol)
   }
 
   /** Total residual quantization error `Σ_v Σ_m min_k ‖(v−c[cell])−r_k‖²`
-    * under the given residual books — the Lloyd training objective,
-    * computed via shifted codewords on the ORIGINAL vectors (no residual
+    * under the given residual books — the Lloyd training objective, one
+    * narrow scan over the ORIGINAL vectors (no residual
     * materialization). The training diagnostic: each
     * [[pqTrainStepResidual]] must not increase it (assignment and mean
     * steps each minimize it; the decimal-rounded mean can drift it by at
-    * most ~1e-6 per dim). Like the train step, `inlineLimit` defaults to
-    * 0: the diagnostic runs inside training loops against CHANGING books,
-    * so the literal-free broadcast-frame plan (one compile, reused every
-    * iteration) beats the inline scan that recompiles per call.
+    * most ~1e-6 per dim). Rows whose cell is not in the centroid set
+    * contribute nothing.
     */
   def pqResidualQuantError(
       vecsWithCell: DataFrame, centroids: DataFrame,
       codebooks: Seq[Seq[Seq[Double]]],
       vecCol: String = "v",
-      centIdCol: String = "cid", centVecCol: String = "cv",
-      inlineLimit: Int = 0): Double = {
-    val cents = collectCents(centroids, centIdCol, centVecCol)
-    require(cents.nonEmpty, "pqResidualQuantError needs at least one centroid")
-    val sb = shiftedBooks(cents, codebooks)
-    val m = codebooks.length
-    val sub = codebooks.head.head.length
-    val summed =
-      if (cents.length <= inlineLimit) {
-        val dCols = (0 until m).map { mi =>
-          def mind(cid: Long): Column =
-            sb(cid)(mi).map(cw => l2sq(subVec(col(vecCol), mi, sub), typedLit(cw)))
-              .reduceLeft((a, b) => least(a, b))
-          cents.tail.foldLeft(
-            when(col("cell") === cents.head._1, mind(cents.head._1))) {
-            case (w, (cid, _)) => w.when(col("cell") === cid, mind(cid))
-          }
-        }
-        vecsWithCell.select(dCols.reduce(_ + _).as("qe"))
-          .agg(sum(col("qe"))).collect()(0)
-      } else {
-        // big-nlist fallback: per-(vector × codeword) distances via the
-        // broadcast shifted-codeword frame, min per subspace grouped on
-        // the vector VALUE with a multiplicity count (duplicate vectors
-        // contribute qe × count — each copy's full term, like the
-        // inline path; a synthetic row id here would shift under stage
-        // retry and drop/double terms)
-        val aggs = (0 until m).map(mi =>
-          min(when(col("__bm") === mi, col("__d"))).as(s"__q$mi"))
-        vecsWithCell
-          .groupBy(col("cell"), col(vecCol)).agg(count(lit(1)).as("__n"))
-          .join(broadcast(shiftedBookDf(vecsWithCell.sparkSession, sb)), "cell")
-          .select(col("cell"), col(vecCol), col("__n"), col("__bm"),
-            joinedSubDist(vecCol, sub).as("__d"))
-          .groupBy(col("cell"), col(vecCol), col("__n"))
-          .agg(aggs.head, aggs.tail: _*)
-          .select(((0 until m).map(mi => col(s"__q$mi")).reduce(_ + _) *
-            col("__n")).as("qe"))
-          .agg(sum(col("qe"))).collect()(0)
-      }
+      centIdCol: String = "cid", centVecCol: String = "cv"): Double = {
+    val bank = residualBank(centroids, codebooks, centIdCol, centVecCol,
+      "pqResidualQuantError")
+    val summed = withCodes(vecsWithCell, bank, vecCol)
+      .select((0 until bank.m).map(mi => QuantExprs.distAt(col("__nc"), mi))
+        .reduce(_ + _).as("qe"))
+      .agg(sum(col("qe"))).collect()(0)
     if (summed.isNullAt(0)) 0.0 else summed.getDouble(0)
   }
 
@@ -1110,7 +810,7 @@ object Similarity {
       seeds: DataFrame, centroids: DataFrame, m: Int,
       idCol: String = "vec_id", vecCol: String = "v",
       centIdCol: String = "cid", centVecCol: String = "cv"): Seq[Seq[Seq[Double]]] = {
-    val centMap = collectCents(centroids, centIdCol, centVecCol).toMap
+    val centMap = collectCentroids(centroids, centIdCol, centVecCol).toMap
     val seedRows = ivfAssign(seeds, centroids, idCol, vecCol, centIdCol, centVecCol)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1), r.getLong(2)))
@@ -1128,10 +828,10 @@ object Similarity {
   }
 
   /** ADC top-k over a RESIDUAL-encoded corpus, restricted to each
-    * probe's cells: per (probe, cell) row the M×K distance table is
-    * computed against that cell's shifted codewords, so the looked-up
-    * sum approximates `‖probe − (c[cell] + r[code])‖²` — true IVF+PQ
-    * asymmetric distance. Same broadcast equi-join on `cell` and
+    * probe's cells: per (probe, cell) row the M×K `adc_table` is taken
+    * against that cell's centroid plus the residual books, so the
+    * looked-up sum approximates `‖probe − (c[cell] + r[code])‖²` — true
+    * IVF+PQ asymmetric distance. Same broadcast equi-join on `cell` and
     * partial-WindowGroupLimit shape as [[pqAdcTopKInCells]]; the corpus
     * never re-shuffles.
     */
@@ -1139,57 +839,12 @@ object Similarity {
       codes: DataFrame, probes: DataFrame, centroids: DataFrame,
       codebooks: Seq[Seq[Seq[Double]]], k: Int,
       idCol: String = "vec_id", vecCol: String = "v",
-      centIdCol: String = "cid", centVecCol: String = "cv",
-      inlineLimit: Int = InlineCentroidLimit): DataFrame = {
-    val cents = collectCents(centroids, centIdCol, centVecCol)
-    require(cents.nonEmpty, "pqAdcTopKResidual needs at least one centroid")
-    val sb = shiftedBooks(cents, codebooks)
-    val m = codebooks.length
-    val sub = codebooks.head.head.length
-    val nK = codebooks.head.length
-    // both branches build the same per-(probe, cell) ADC tables; above
-    // inlineLimit they come from joining the probe side (tiny) against
-    // the broadcast shifted-codeword frame and aggregating into one
-    // map<m·K + k, d> per (probe, cell) — the corpus-side lookup and
-    // everything below the broadcast is identical, so ranks match the
-    // inline path bit for bit
-    val p = if (cents.length <= inlineLimit) {
-      val dtCols = (0 until m).map { mi =>
-        def dt(cid: Long): Column =
-          array(sb(cid)(mi).map(cw =>
-            l2sq(subVec(col(vecCol), mi, sub), typedLit(cw))): _*)
-        cents.tail.foldLeft(
-          when(col("cell") === cents.head._1, dt(cents.head._1))) {
-          case (w, (cid, _)) => w.when(col("cell") === cid, dt(cid))
-        }.as(s"__dt$mi")
-      }
-      probes.select(col(idCol).as("probe_id") +: col("cell") +: dtCols: _*)
-    } else {
-      probes
-        .select(col(idCol).as("probe_id"), col("cell"), col(vecCol))
-        .join(broadcast(shiftedBookDf(probes.sparkSession, sb)), "cell")
-        .select(col("probe_id"), col("cell"),
-          (col("__bm") * nK + col("__bk")).as("__mk"),
-          joinedSubDist(vecCol, sub).as("__d"))
-        .groupBy(col("probe_id"), col("cell"))
-        .agg(map_from_entries(collect_list(struct(col("__mk"), col("__d"))))
-          .as("__dt"))
-    }
-    val adc =
-      if (cents.length <= inlineLimit)
-        (0 until m).map(mi =>
-          element_at(col(s"__dt$mi"), col(s"code_$mi") + 1)).reduce(_ + _)
-      else
-        (0 until m).map(mi =>
-          element_at(col("__dt"), lit(mi * nK) + col(s"code_$mi"))).reduce(_ + _)
-    val w = Window.partitionBy("probe_id").orderBy(col("adc").asc, col("cand_id").asc)
-    codes.withColumnRenamed(idCol, "cand_id")
-      .join(broadcast(p), "cell")
-      .filter(col("cand_id") =!= col("probe_id"))
-      .withColumn("adc", adc)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("probe_id", "cand_id", "rnk", "adc")
+      centIdCol: String = "cid", centVecCol: String = "cv"): DataFrame = {
+    val bank = residualBank(centroids, codebooks, centIdCol, centVecCol,
+      "pqAdcTopKResidual")
+    adcSearch(codes, probes.select(col(idCol).as("probe_id"), col("cell"),
+      QuantExprs.adcTable(col(vecCol), bank, Some(col("cell"))).as("__dt")),
+      bank, k, idCol)
   }
 
   /** End-to-end trained IVF+PQ index build — the one-call production
@@ -1264,26 +919,9 @@ object Similarity {
   def pqAdcTopKInCells(
       codes: DataFrame, probes: DataFrame, codebooks: Seq[Seq[Seq[Double]]],
       k: Int, idCol: String = "vec_id", vecCol: String = "v"): DataFrame = {
-    val m = codebooks.length
-    val sub = codebooks.head.head.length
-    val dtCols = (0 until m).map { mi =>
-      array(codebooks(mi).map(cw =>
-        l2sq(subVec(col(vecCol), mi, sub), typedLit(cw))): _*).as(s"__dt$mi")
-    }
-    val p = probes.select(
-      col(idCol).as("probe_id") +: col("cell") +: dtCols: _*)
-    val adc = (0 until m).map(mi =>
-      element_at(col(s"__dt$mi"), col(s"code_$mi") + 1)).reduce(_ + _)
-    val w = Window.partitionBy("probe_id").orderBy(col("adc").asc, col("cand_id").asc)
-    // a corpus vector lives in exactly ONE cell, so the equi-join emits
-    // each (probe, candidate) pair at most once — no dedup needed
-    codes.withColumnRenamed(idCol, "cand_id")
-      .join(broadcast(p), "cell")
-      .filter(col("cand_id") =!= col("probe_id"))
-      .withColumn("adc", adc)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("probe_id", "cand_id", "rnk", "adc")
+    val bank = QuantBank.codebooks(codebooks)
+    adcSearch(codes, probes.select(col(idCol).as("probe_id"), col("cell"),
+      QuantExprs.adcTable(col(vecCol), bank).as("__dt")), bank, k, idCol)
   }
 
   /** Trained PCA basis: per-dim mean, orthonormal components (rows,

@@ -1032,7 +1032,7 @@ object LlmQueries extends QuerySet {
     "q48_ivf_nprobe_recall",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("embedding"))
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
       val brute = Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 5), k = 5)
         .select(col("probe_id"), col("cand_id"))
 
@@ -1186,7 +1186,7 @@ object LlmQueries extends QuerySet {
       (s, dir) => {
         val e = t(s, dir, "embeddings").select(
           col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("v"))
+          col("embedding").cast("array<double>").as("v"))
         val cents = e.filter(col("vec_id").between(100, 107))
           .select(col("vec_id").as("cid"), col("v").as("cv"))
         val assigned = Similarity.ivfAssign(e, cents)
@@ -1365,7 +1365,7 @@ object LlmQueries extends QuerySet {
     (s, dir) => {
       val e = t(s, dir, "embeddings").select(
         col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+        col("embedding").cast("array<double>").as("v"))
       var books = Similarity.pqCodebooks(
         e.filter(col("vec_id").between(200, 207)), m = 4)
       for (_ <- 0 until PqTrainSteps) books = Similarity.pqTrainStep(e, books)
@@ -1546,7 +1546,7 @@ object LlmQueries extends QuerySet {
     (s, dir) => {
       val e = t(s, dir, "embeddings").select(
         col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+        col("embedding").cast("array<double>").as("v"))
       // hoist the centroid collect: the five centroid-consuming ops
       // below each re-collect their centroid argument at plan-build
       // time, and against the parquet-derived frame that was five tiny
@@ -1697,7 +1697,7 @@ object LlmQueries extends QuerySet {
     (s, dir) => {
       val e = t(s, dir, "embeddings").select(
         col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+        col("embedding").cast("array<double>").as("v"))
       // hoist the centroid collect (see q69): one job instead of ~8 —
       // assign, the three train steps, encode, probe assign and ADC
       // each re-collect the centroid argument at plan-build time, and

@@ -6384,8 +6384,7 @@ object VcfQueries extends QuerySet {
             s"e$c 50000000 - $qs ${qs + b2 + 35 + 80} $id\n"
           sb ++= s"$b2 25 35\n80\n\n"
         }
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-q244-chain")
+        val tmp = graft.TempDirs.create("graft-q244-chain")
         val f = tmp.resolve("lift.over.chain")
         java.nio.file.Files.writeString(f, sb.toString)
         val chain = graft.operators.Liftover.readChain(s, f.toString)
@@ -6465,7 +6464,7 @@ object VcfQueries extends QuerySet {
       val sb = new StringBuilder(len)
       (1 to len).foreach(p => sb.append(if ((p - 1) % 16 == 0) 'C' else 'A'))
       // write the genome as a real 70-col FASTA + its .fai sidecar
-      val tmp = java.nio.file.Files.createTempDirectory("graft-q245-fa")
+      val tmp = graft.TempDirs.create("graft-q245-fa")
       val fa = tmp.resolve("ref.fa")
       val faText = new StringBuilder(len + len / 70 + 16)
       faText ++= ">1 synthetic periodic\n"

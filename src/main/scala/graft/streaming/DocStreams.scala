@@ -450,8 +450,8 @@ object DocStreams {
     * .semanticDedup]]'s drop rule with the corpus as the index (the
     * semantic member of the q74/q76 probe family): each arriving
     * vector is assigned to its k-means cell — a NARROW projection
-    * (ivfAssign's inline argmin; the stream never shuffles to be
-    * assigned) — then
+    * (ivfAssign's `nearest_code` kernel, at any centroid count; the
+    * stream never shuffles to be assigned) — then
     * stream-static inner equi-joins the indexed corpus assignment on
     * `cell` with the EXACT cosine ≥ `tau` check in-join. Fully
     * stateless: no state store, no watermark, streams at scan speed;
@@ -462,26 +462,12 @@ object DocStreams {
     * over the corpus with the SAME centroids (persist it bucketed on
     * `cell` for an exchange-free static side); upsert = append the
     * arriving batch's own assignment rows, the q74 contract.
-    *
-    * Centroid count is capped at [[graft.operators.Similarity
-    * .InlineCentroidLimit]]: ivfAssign's big-nlist broadcast-join
-    * fallback ranks candidates with a per-row-id window, which
-    * Structured Streaming rejects (non-time-based window) — only the
-    * inline narrow argmin streams. A bigger nlist belongs on the
-    * batch side: coarsen the streaming cell map (probe-side recall is
-    * cell-bounded anyway) or pre-assign upstream.
     */
   def semanticProbeStream(
       vecs: DataFrame, corpusAsg: DataFrame, centroids: DataFrame,
       tau: Double, idCol: String = "vec_id", vecCol: String = "v"): DataFrame = {
     import graft.operators.Similarity
     require(tau > 0 && tau <= 1, s"tau must be in (0, 1], got $tau")
-    val nCents = centroids.count()
-    require(nCents <= Similarity.InlineCentroidLimit,
-      s"semanticProbeStream supports at most ${Similarity.InlineCentroidLimit} " +
-        s"centroids (got $nCents): ivfAssign's big-nlist fallback needs a " +
-        "per-row window, which streaming DataFrames reject — coarsen the " +
-        "streaming cell map or assign cells upstream")
     Similarity.ivfAssign(vecs, centroids, idCol, vecCol).as("pb")
       .join(corpusAsg.as("ix"), col("pb.cell") === col("ix.cell"))
       .withColumn("cosine",

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BcfDataSourceSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val tmp = SparkSpec.tempDir("graft-bcfds")
+  private lazy val tmp = TempDirs.create("graft-bcfds")
 
   private val headerText = Seq(
     "##fileformat=VCFv4.2",

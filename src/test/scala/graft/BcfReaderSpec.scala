@@ -16,7 +16,7 @@ import graft.sources.BcfReader.BcfHeader
   */
 class BcfReaderSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val tmp = SparkSpec.tempDir("graft-bcf")
+  private lazy val tmp = TempDirs.create("graft-bcf")
   private lazy val bcfPath = BcfFixture.buildBcf(tmp)
   private lazy val vcfPath = {
     val f = tmp.resolve("twin.vcf")

@@ -22,7 +22,7 @@ import graft.sources.v2.TabixIndex
   */
 class BcfSplitSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val tmp = SparkSpec.tempDir("graft-bcfs")
+  private lazy val tmp = TempDirs.create("graft-bcfs")
 
   private val headerText = Seq(
     "##fileformat=VCFv4.2",

@@ -18,7 +18,7 @@ import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThanOrEqua
   */
 class BcfWriterSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val tmp = SparkSpec.tempDir("graft-bcfw")
+  private lazy val tmp = TempDirs.create("graft-bcfw")
 
   test("encoder reproduces the hand-encoded fixture byte-for-byte: " +
       "prologue + all four records — every typed class the fixture " +

@@ -17,7 +17,7 @@ import graft.sources.BgenReader.BgenEnc
 class BgenSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  private lazy val tmp = SparkSpec.tempDir("graft-bgen")
+  private lazy val tmp = TempDirs.create("graft-bgen")
 
   private val samples = Seq("sA", "sB", "sC")
 
@@ -182,7 +182,7 @@ class BgenSpec extends AnyFunSuite with SparkSpec {
     val encMiss = BgenEnc("v2", "rs2", "7", 6000L, Seq("A", "G"),
       Seq(null, Array(0L, 255L), Array(0L)),
       ploidy = Seq(2, 2, 1), phased = true)
-    val f = SparkSpec.tempDir("graft-phased").resolve("phased.bgen")
+    val f = TempDirs.create("graft-phased").resolve("phased.bgen")
     val out = java.nio.file.Files.newOutputStream(f)
     try writeBgen(out, Seq("s0", "s1", "s2"),
       Iterator(enc, encMiss), bBits = 8, zlib = true)
@@ -231,7 +231,7 @@ class BgenSpec extends AnyFunSuite with SparkSpec {
       Seq(Array(255L, 0L),  // diploid: stored P(AA)=1, P(AG)=0
         Array(51L)),        // haploid: stored P(A)=51/255 = 0.2
       ploidy = Seq(2, 1), phased = false)
-    val f = SparkSpec.tempDir("graft-chrx").resolve("chrx.bgen")
+    val f = TempDirs.create("graft-chrx").resolve("chrx.bgen")
     val out = java.nio.file.Files.newOutputStream(f)
     try writeBgen(out, Seq("s0", "s1"), Iterator(enc),
       bBits = 8, zlib = false)

@@ -16,7 +16,7 @@ import graft.sources.BgenReader.BgenEnc
 class BgiIndexSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  private lazy val tmp = SparkSpec.tempDir("graft-bgi")
+  private lazy val tmp = TempDirs.create("graft-bgi")
 
   private def fixturePath(name: String): String = {
     val url = getClass.getResource("/" + name)

@@ -21,7 +21,7 @@ class BgzfSplitSpec extends AnyFunSuite with SparkSpec {
   private def partitions(df: DataFrame): Int = df.rdd.getNumPartitions
 
   test("multi-chrom bgzf full scan splits and equals the plain-text read row-for-row") {
-    val dir = SparkSpec.tempDir("graft_bgzf_split")
+    val dir = TempDirs.create("graft_bgzf_split")
     val (gz, plain, n) = BgzfFixture.multiChromFixture(dir, Seq("1", "2", "3"), 400)
 
     withMaxSplit(2048) {
@@ -44,7 +44,7 @@ class BgzfSplitSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("split count tracks maxPartitionBytes and stays lossless at every granularity") {
-    val dir = SparkSpec.tempDir("graft_bgzf_gran")
+    val dir = TempDirs.create("graft_bgzf_gran")
     val (gz, _, n) = BgzfFixture.multiChromFixture(dir, Seq("7", "8"), 300, blockLines = 5)
     val counts = Seq(1024L, 4096L, 1L << 30).map { ms =>
       withMaxSplit(ms) {
@@ -103,7 +103,7 @@ class BgzfSplitSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("an unindexed .gz still reads whole-file (single partition, no failure)") {
-    val dir = SparkSpec.tempDir("graft_bgzf_noidx")
+    val dir = TempDirs.create("graft_bgzf_noidx")
     val (gz, _, n) = BgzfFixture.multiChromFixture(dir, Seq("5"), 50)
     java.nio.file.Files.delete(dir.resolve("multi.vcf.gz.csi"))
     withMaxSplit(1024) {
@@ -114,7 +114,7 @@ class BgzfSplitSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a corrupt sibling index degrades to an unpruned full scan, not a failure") {
-    val dir = SparkSpec.tempDir("graft_bgzf_corrupt")
+    val dir = TempDirs.create("graft_bgzf_corrupt")
     val (gz, _, n) = BgzfFixture.multiChromFixture(dir, Seq("9"), 50)
     // overwrite the sibling with gzip'd garbage (valid gzip, not a CSI)
     val out = new java.util.zip.GZIPOutputStream(
@@ -134,7 +134,7 @@ class BgzfSplitSpec extends AnyFunSuite with SparkSpec {
     // the 100 TB arrival shape: MANY headerless bgzipped shards + one
     // `samples` option serving every file — no per-file header fetch,
     // and each file still splits on its own index's record voffs
-    val dir = SparkSpec.tempDir("graft_bgzf_glob")
+    val dir = TempDirs.create("graft_bgzf_glob")
     val perFile = 300
     val chroms = Seq("1", "2", "3")
     chroms.foreach { c =>
@@ -165,7 +165,7 @@ class BgzfSplitSpec extends AnyFunSuite with SparkSpec {
   test("many-file glob discovers per-file header samples (pooled fetch)") {
     // the no-override path: planning fetches each file's header with the
     // bounded thread pool; samples must resolve per file across a glob
-    val dir = SparkSpec.tempDir("graft_bgzf_many")
+    val dir = TempDirs.create("graft_bgzf_many")
     val chroms = Seq("1", "2", "3", "4", "5", "6")
     val header = Seq(
       "##fileformat=VCFv4.2",

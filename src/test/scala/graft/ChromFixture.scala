@@ -21,7 +21,7 @@ import scala.collection.mutable
   */
 object ChromFixture {
 
-  private lazy val dir = SparkSpec.tempDir("graft-chrom-fixtures")
+  private lazy val dir = TempDirs.create("graft-chrom-fixtures")
 
   val Chr22Start = 16050075
   val Chr22Records = 10000

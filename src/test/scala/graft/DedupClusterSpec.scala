@@ -76,7 +76,7 @@ class DedupClusterSpec extends AnyFunSuite with SparkSpec {
   test("reliable checkpointing reaches the same fixed point") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
       .toDF("id_a", "id_b")
-    val dir = SparkSpec.tempDir("graft_cc_ckpt").toString
+    val dir = TempDirs.create("graft_cc_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     val rel = Dedup.connectedComponents(pairs, reliable = true)
       .as[(Long, Long)].collect().toMap

@@ -41,7 +41,7 @@ class FastaReaderSpec extends AnyFunSuite with SparkSpec {
     FaiEntry("chrB", 10L, 41L, 4, 5))
 
   private def writeTemp(suffix: String, text: String): String = {
-    val f = SparkSpec.tempDir("graft-fasta").resolve("fasta" + suffix)
+    val f = TempDirs.create("graft-fasta").resolve("fasta" + suffix)
     java.nio.file.Files.writeString(f, text)
     f.toString
   }
@@ -72,7 +72,7 @@ class FastaReaderSpec extends AnyFunSuite with SparkSpec {
     assert(scanned === Map(
       "chrA" -> "GGGCACACAGGG", "chrB" -> "ACGTACGTAA"))
     // plant the sidecar next to a second copy — the indexed road
-    val fa2 = SparkSpec.tempDir("graft-fasta2").resolve("fasta2.fa")
+    val fa2 = TempDirs.create("graft-fasta2").resolve("fasta2.fa")
     java.nio.file.Files.writeString(fa2, faText)
     java.nio.file.Files.writeString(
       java.nio.file.Path.of(fa2.toString + ".fai"),

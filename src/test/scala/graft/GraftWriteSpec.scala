@@ -13,7 +13,7 @@ import graft.sources.BcfReader
   */
 class GraftWriteSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val tmp = SparkSpec.tempDir("graft-dsw")
+  private lazy val tmp = TempDirs.create("graft-dsw")
 
   private val headerText = Seq(
     "##fileformat=VCFv4.2",

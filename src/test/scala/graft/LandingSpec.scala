@@ -26,14 +26,14 @@ class LandingSpec extends AnyFunSuite with SparkSpec {
       c <- Seq("1", "2")
       i <- 1 to 40
     } yield s"$c\t${i * 300000}\trs${c}_$i\tA\tG\t50\tPASS\tDP=$i\tGT\t0/1"
-    val p = SparkSpec.tempDir("graft-landing").resolve("landing.vcf")
+    val p = TempDirs.create("graft-landing").resolve("landing.vcf")
     Files.writeString(p, (header ++ records).mkString("", "\n", "\n"))
     p
   }
 
   test("toParquet fans one chromosome over multiple writer tasks") {
     val vcf = writeWideVcf()
-    val out = SparkSpec.tempDir("graft_landing").resolve("landed")
+    val out = TempDirs.create("graft_landing").resolve("landed")
     // AQE rightly coalesces this KB-sized fixture into one reducer; at
     // landing scale each (chrom, pos_bucket) shard is GBs and stays its
     // own task — pin coalescing off so the test sees the scale shape

@@ -110,7 +110,7 @@ class LiftoverSpec extends AnyFunSuite with SparkSpec {
       "chain 900 1 100000 + 2999 3099 d2 10000 - 2000 2100 2",
       "100"
     ).mkString("\n") + "\n"
-    val f = SparkSpec.tempDir("graft-chain").resolve("chain.chain")
+    val f = TempDirs.create("graft-chain").resolve("chain.chain")
     java.nio.file.Files.writeString(f, chainText)
     val chain = Liftover.readChain(spark, f.toString)
     val got = chain.as[(String, Int, Int, String, Int, String)]
@@ -139,7 +139,7 @@ class LiftoverSpec extends AnyFunSuite with SparkSpec {
       "undershoots the header's tEnd/qEnd, and a header opened before " +
       "the previous chain closed — silent wrong spans are never parsed") {
     def parse(text: String): Unit = {
-      val f = SparkSpec.tempDir("graft-chain-bad").resolve("chain-bad.chain")
+      val f = TempDirs.create("graft-chain-bad").resolve("chain-bad.chain")
       java.nio.file.Files.writeString(f, text)
       try Liftover.readChain(spark, f.toString).collect()
       finally java.nio.file.Files.delete(f)

@@ -15,7 +15,7 @@ class PedReaderSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   private def writePed(text: String): String = {
-    val f = SparkSpec.tempDir("graft-ped").resolve("ped.fam")
+    val f = TempDirs.create("graft-ped").resolve("ped.fam")
     java.nio.file.Files.writeString(f, text)
     f.toString
   }

@@ -108,8 +108,8 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
 
   test("q43 kmeans assign is a narrow projection: no join, no corpus shuffle") {
     val p = planOf("q43_kmeans_step")
-    // centroids are inlined as literals into one least(struct…) argmin
-    // projection — no join operator at all, and the only exchanges are
+    // centroids ride one nearest_code kernel call per row — no join
+    // operator at all, and the only exchanges are
     // the (cell, dim) aggregation and the tiny ordered output. The
     // cross-join + window formulation this replaced shuffled the whole
     // corpus on vec_id.
@@ -200,8 +200,8 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       cents, books, k = 5)
     top.collect()
     val p = top.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    // per-cell shifted books are a when-chain INSIDE the projection —
-    // the corpus side must stay an unshuffled scan under a broadcast
+    // the residual bank is bound INSIDE the projection — the corpus
+    // side must stay an unshuffled scan under a broadcast
     assert(p.contains("BroadcastHashJoin"), s"cell join must broadcast probes:\n$p")
     assert(!p.contains("Exchange hashpartitioning(cell"),
       s"corpus must not shuffle on cell:\n$p")
@@ -215,21 +215,21 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     import graft.operators.Similarity
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
-    val cents = e.filter(col("vec_id").between(100, 107))
+    // 300 cells: past the 256-centroid limit that used to switch the
+    // family onto a broadcast-codeword join; the kernels have one path
+    val cents = e.filter(col("vec_id") < 300)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
     val seedBooks = Similarity.seedResidualBooks(
-      e.filter(col("vec_id").between(200, 207)), cents, m = 4)
+      e.filter(col("vec_id").between(300, 307)), cents, m = 4)
     val asg = Similarity.ivfAssign(e, cents)
-    // inlineLimit=0 forces the broadcast-codeword fallback — the plan
-    // the production nlist ≥ 1024 build runs on
-    val codes = Similarity.pqEncodeResidual(asg, cents, seedBooks, inlineLimit = 0)
+    val codes = Similarity.pqEncodeResidual(asg, cents, seedBooks)
     val top = Similarity.pqAdcTopKResidual(
       codes, Similarity.ivfAssignTopN(e.filter(col("vec_id") < 5), cents, nprobe = 2),
-      cents, seedBooks, k = 5, inlineLimit = 0)
+      cents, seedBooks, k = 5)
     top.collect()
     val p = top.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    // probe tables and codeword frame broadcast; the encoded corpus side
-    // must never hash-shuffle on its own keys
+    // probe tables broadcast; the encoded corpus side must never
+    // hash-shuffle on its own keys
     assert(p.contains("BroadcastHashJoin"), s"cell join must broadcast probes:\n$p")
     assert(!p.contains("Exchange hashpartitioning(cell"),
       s"corpus must not shuffle on cell:\n$p")
@@ -238,11 +238,9 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     // per-probe top-k still pre-reduces below the one probe exchange
     assert(p.contains("WindowGroupLimit") && p.contains("Partial"),
       s"expected partial WindowGroupLimit before the exchange:\n$p")
-    // the encode side's only exchange is the per-row argmin aggregation
-    val encP = codes.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    val encEx = encP.linesIterator.count(l =>
-      l.contains("Exchange hashpartitioning"))
-    assert(encEx <= 1, s"fallback encode must have ONE bounded exchange:\n$encP")
+    // the encode is one narrow projection: no exchange of any kind
+    val encP = codes.queryExecution.executedPlan.toString
+    assert(!encP.contains("Exchange"), s"residual encode must not exchange:\n$encP")
   }
 
   test("q77 chunking and q78 shard shuffle stay narrow") {
@@ -426,12 +424,26 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       s"the other join side must reuse the band exchange:\n$plan")
   }
 
-  test("shingle, winnowing and minhash-band plans hold no CodegenFallback " +
-      "expression (no array HOF or lambda)") {
-    import graft.operators.Dedup
+  /** Per-row expressions of `df`'s plan that run interpreted: any
+    * `CodegenFallback`, array HOF or lambda. Aggregate functions are left
+    * out on purpose: `collect_list` is an imperative aggregate that
+    * ObjectHashAggregate evaluates as such by design.
+    */
+  private def interpretedExprs(df: org.apache.spark.sql.DataFrame): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction}
     import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
     import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    stages.collect(df.queryExecution.executedPlan) { case n => n }.flatMap(_.expressions)
+      .flatMap(_.collect {
+        case e: CodegenFallback if !e.isInstanceOf[AggregateFunction] => e
+        case e: HigherOrderFunction => e
+        case e: LambdaFunction => e
+      }).map(_.prettyName).distinct
+  }
+
+  test("shingle, winnowing and minhash-band plans hold no CodegenFallback " +
+      "expression (no array HOF or lambda)") {
+    import graft.operators.Dedup
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id").as("id"), col("text"))
     val plans = Seq(
@@ -441,18 +453,20 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       "minhashBands(maxDocFreq)" ->
         Dedup.minhashBands(docs, "id", "text", 5, 4, maxDocFreq = Some(50)))
     for ((name, df) <- plans) {
-      val plan = df.queryExecution.executedPlan
-      // per-row scalar expressions only: the capped path's collect_list is
-      // an imperative aggregate, which ObjectHashAggregate runs as such
-      // by design, once per shingle row
-      val fallbacks = stages.collect(plan) { case n => n }.flatMap(_.expressions)
-        .flatMap(_.collect {
-          case e: CodegenFallback if !e.isInstanceOf[AggregateFunction] => e
-          case e: HigherOrderFunction => e
-          case e: LambdaFunction => e
-        })
-      assert(fallbacks.isEmpty,
-        s"$name evaluates interpreted: ${fallbacks.map(_.prettyName).distinct}\n$plan")
+      val fallbacks = interpretedExprs(df)
+      assert(fallbacks.isEmpty, s"$name evaluates interpreted: $fallbacks\n" +
+        df.queryExecution.executedPlan)
+    }
+  }
+
+  test("q42/q48/q66/q69/q70 quantizer plans hold no CodegenFallback " +
+      "expression (no array HOF or lambda)") {
+    for (name <- Seq("q42_ivf_ann", "q48_ivf_nprobe_recall", "q66_pq_trained_recall",
+        "q69_ivfpq_residual_recall", "q70_ivfpq_trained_recall")) {
+      val df = SparkEntry.queries(name)(spark, dir)
+      val fallbacks = interpretedExprs(df)
+      assert(fallbacks.isEmpty, s"$name evaluates interpreted: $fallbacks\n" +
+        df.queryExecution.executedPlan)
     }
   }
 

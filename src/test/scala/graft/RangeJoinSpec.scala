@@ -604,7 +604,7 @@ class RangeJoinSpec extends AnyFunSuite with SparkSpec {
       map(col("sample_id"),
         concat_ws(":", col("gt"), col("gq").cast("string")))
         .as("genotypes"))
-    val out = SparkSpec.tempDir("graft-band-emit").toString
+    val out = TempDirs.create("graft-band-emit").toString
     wideFrame.repartitionByRange(1, col("chrom"), col("pos"))
       .sortWithinPartitions(col("chrom"), col("pos"))
       .write.format("bcf").mode("overwrite").save(out)

@@ -23,7 +23,7 @@ import graft.sources.v2.TabixIndex
   */
 class ReadPathPropertySpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val tmp = SparkSpec.tempDir("graft-readpath")
+  private lazy val tmp = TempDirs.create("graft-readpath")
   private val samples = Seq("S1", "S2", "S3")
   private val cols = Seq("chrom", "pos", "id", "ref", "alt", "qual",
     "filter", "info", "format", "genotypes")

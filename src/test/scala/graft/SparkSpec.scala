@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path}
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.Suite
 
@@ -28,27 +26,6 @@ object SparkSpec {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
     .getOrCreate()
-
-  /** A fresh directory under java.io.tmpdir whose whole tree (whatever
-    * the spec writes into it later) is deleted when the JVM exits. Every
-    * spec and fixture makes its scratch space here, so repeated suite
-    * runs leave nothing behind. */
-  def tempDir(prefix: String): Path = {
-    val dir = Files.createTempDirectory(prefix)
-    tempDirs.add(dir)
-    dir
-  }
-
-  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]
-  sys.addShutdownHook(tempDirs.forEach(deleteTree(_)))
-
-  private def deleteTree(root: Path): Unit =
-    try {
-      val paths = Files.walk(root)
-      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally paths.close()
-    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
 }
 
 /** Reads a DataSource V2 scan's custom metrics after running its plan. */

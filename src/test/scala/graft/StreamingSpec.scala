@@ -168,7 +168,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
     // interrupted: process batch 1, STOP (the kill), add batch 2,
     // start a SECOND query over the same checkpoint
-    val d1 = SparkSpec.tempDir("graft_restart")
+    val d1 = TempDirs.create("graft_restart")
     val mem1 = MemoryStream[Event]
     mem1.addData(batch1)
     run(d1, mem1)
@@ -177,7 +177,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val interrupted = sessions(d1)
 
     // uninterrupted twin: same events, one run, fresh checkpoint
-    val d2 = SparkSpec.tempDir("graft_restart2")
+    val d2 = TempDirs.create("graft_restart2")
     val mem2 = MemoryStream[Event]
     mem2.addData(batch1 ++ batch2)
     run(d2, mem2)
@@ -478,7 +478,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     import graft.streaming.DocStreams
     import graft.streaming.DocStreams.Doc
     implicit val sqlCtx = spark.sqlContext
-    val dir = SparkSpec.tempDir("graft_flag_sink")
+    val dir = TempDirs.create("graft_flag_sink")
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val docs = Seq(
       Doc(ts(0), 1L, base),
@@ -719,20 +719,48 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       s"diff probe unexpectedly stateful: ${p.stateOperators.mkString(",")}"))
   }
 
-  test("semantic probe refuses centroid counts past the streamable inline limit") {
+  test("streaming semantic probe at 300 centroids matches batch semanticDedup") {
     import graft.streaming.DocStreams
-    import graft.operators.Similarity
-    // ivfAssign's big-nlist fallback ranks with a per-row window —
-    // streaming-unsupported — so the probe must fail FAST with a
-    // descriptive error, not at writeStream.start()
-    val many = (0L until (Similarity.InlineCentroidLimit + 1L))
-      .map(i => (i, Seq(i.toDouble, 1.0))).toDF("cid", "cv")
-    val corpusAsg = Seq((1L, Seq(1.0, 0.0), 0L)).toDF("vec_id", "v", "cell")
-    val e = intercept[IllegalArgumentException] {
-      DocStreams.semanticProbeStream(
-        Seq((9L, Seq(1.0, 0.0))).toDF("vec_id", "v"), corpusAsg, many, tau = 0.9)
+    import graft.operators.{Dedup, Similarity}
+    implicit val sqlCtx = spark.sqlContext
+    // 300 unit-circle centroids 1.2° apart — past the 256-centroid cap
+    // the probe used to refuse, now one narrow kernel assignment
+    def at(deg: Double) = {
+      val r = math.toRadians(deg); Seq(math.cos(r), math.sin(r))
     }
-    assert(e.getMessage.contains("streaming"), e.getMessage)
+    val cents = (0 until 300).map(i => (i.toLong, at(i * 1.2))).toDF("cid", "cv")
+    // corpus vectors sit 0.1° off cells 0, 5, 10, …
+    val corpus = (0 until 60).map(i => (i.toLong + 1, at(i * 6.0 + 0.1)))
+    val corpusAsg = Similarity.ivfAssign(corpus.toDF("vec_id", "v"), cents)
+    val arriving = Seq(
+      (1001L, at(0.2)),    // cell 0, 0.1° from corpus 1 → flags
+      (1002L, at(120.25)), // cell 100, 0.15° from corpus 21 → flags
+      (1003L, at(3.6)),    // cell 3 holds no corpus vector → clean
+      (1004L, at(12.5)))   // cell 10, 0.4° from corpus 3: below τ → clean
+    val tau = 0.99999
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Seq[Double])]
+    mem.addData(arriving)
+    val q = DocStreams.semanticProbeStream(
+        mem.toDF().toDF("vec_id", "v"), corpusAsg, cents, tau)
+      .writeStream.format("memory").queryName("graft_semprobe300_test")
+      .outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val streamPairs = spark.table("graft_semprobe300_test")
+      .select("probe_id", "corpus_id").as[(Long, Long)].collect().toSet
+    assert(streamPairs === Set((1001L, 1L), (1002L, 21L)), s"got $streamPairs")
+    // batch: semanticDedup over corpus ∪ arriving drops exactly the
+    // arriving vectors the stream flagged (arriving ids are higher)
+    val kept = Dedup.semanticDedup((corpus ++ arriving).toDF("vec_id", "v"), cents, tau)
+      .select("vec_id").as[Long].collect().toSet
+    assert(arriving.map(_._1).toSet -- kept === streamPairs.map(_._1))
+    assert(corpus.map(_._1).toSet.subsetOf(kept))
+    val batches = q.recentProgress.filter(_.numInputRows > 0)
+    assert(batches.nonEmpty, "no progress recorded — nothing was asserted")
+    batches.foreach(p => assert(p.stateOperators.isEmpty,
+      s"semantic probe unexpectedly stateful: ${p.stateOperators.mkString(",")}"))
   }
 
   test("nearDupFlags refuses maxHamming beyond the pigeonhole guarantee") {

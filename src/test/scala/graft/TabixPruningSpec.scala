@@ -167,7 +167,7 @@ class TabixPruningSpec extends AnyFunSuite with SparkSpec {
   test(".csi fallback prunes a region identically to the .tbi") {
     // a copy of the chr22 fixture with ONLY a .csi sibling (converted
     // from its .tbi, so the chunk layout is the same)
-    val dir = SparkSpec.tempDir("graft_csi")
+    val dir = TempDirs.create("graft_csi")
     val copy = dir.resolve("chr22.vcf.gz")
     java.nio.file.Files.copy(java.nio.file.Paths.get(chr22), copy)
     val fs = new Path(chr22).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -195,7 +195,7 @@ class TabixPruningSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("readCsi rejects implausible tree shapes and nameless CSI, loudly") {
-    val dir = SparkSpec.tempDir("graft_csi_bad")
+    val dir = TempDirs.create("graft_csi_bad")
     val fs = new Path(chr22).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tbi = TabixIndex.read(fs, TabixIndex.sibling(new Path(chr22)))
 

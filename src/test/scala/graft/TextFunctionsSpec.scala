@@ -312,7 +312,7 @@ class TextFunctionsSpec extends AnyFunSuite with SparkSpec {
     import graft.operators.TextAnalysis._
     val docs = Seq((1L, "spark join"), (2L, "window lead"), (3L, "spark"))
       .toDF("doc_id", "text")
-    val dir = SparkSpec.tempDir("graft_bm25_idx").toString
+    val dir = TempDirs.create("graft_bm25_idx").toString
     termPostings(docs, "doc_id", "text").write.mode("overwrite").parquet(dir)
     val q = bm25TopKIndexed(spark.read.parquet(dir),
       corpusStats(docs, "doc_id", "text"), Seq("spark"), k = 5)

@@ -643,7 +643,7 @@ class VariantAnnotatorSpec extends AnyFunSuite with SparkSpec {
     // the larger-than-cluster fallback: landing the kept-site catalog
     // as a parquet table instead of a localCheckpoint must produce the
     // IDENTICAL panel (and the landed table IS the kept site list)
-    val dir = SparkSpec.tempDir("graft-panel").toString + "/kept"
+    val dir = TempDirs.create("graft-panel").toString + "/kept"
     val landed = graft.operators.VariantQc.kinshipPanel(
       ann, mafMicroMin = 100000L, maxDist = 50, r2MicroMax = 990000L,
       keptSitesPath = Some(dir))

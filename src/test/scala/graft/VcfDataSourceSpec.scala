@@ -56,7 +56,7 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
 
   test("byte-range splits lose no lines and duplicate none") {
     // 5000-line uncompressed VCF, forced into many small splits
-    val big = SparkSpec.tempDir("graft-big").resolve("big.vcf")
+    val big = TempDirs.create("graft-big").resolve("big.vcf")
     val header = "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\n"
     val body = (1 to 5000).map(i =>
       s"chr${1 + i % 22}\t$i\trs$i\tA\tG\t50\tPASS\tNS=1\tGT\t0/1").mkString("\n")
@@ -73,7 +73,7 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("multi-path load(p1, p2) reads both files (JSON 'paths' property)") {
-    val p2 = SparkSpec.tempDir("graft-second").resolve("second.vcf")
+    val p2 = TempDirs.create("graft-second").resolve("second.vcf")
     Files.writeString(p2,
       "##fileformat=VCFv4.2\n" +
         "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tZ1\n" +
@@ -96,7 +96,7 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
   test("CRLF line endings + no trailing newline survive byte-range splits") {
     // CRLF accounting drift would misplace split boundaries → lost or
     // duplicated rows; the last line is deliberately unterminated
-    val crlf = SparkSpec.tempDir("graft-crlf").resolve("crlf.vcf")
+    val crlf = TempDirs.create("graft-crlf").resolve("crlf.vcf")
     val header = "##fileformat=VCFv4.2\r\n" +
       "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\r\n"
     val body = (1 to 2000).map(i =>
@@ -119,7 +119,7 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
     // 3000 good rows with two planted corruptions: a non-integer POS and
     // a truncated (<9 field) line, placed mid-file so small splits put
     // them near boundaries
-    val bad = SparkSpec.tempDir("graft-corrupt").resolve("corrupt.vcf")
+    val bad = TempDirs.create("graft-corrupt").resolve("corrupt.vcf")
     val header = "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\n"
     val rows = (1 to 3000).map {
       case 1500 => "chr1\tnotanint\trsX\tA\tG\t50\tPASS\tNS=1\tGT\t0/1"
@@ -142,7 +142,7 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
 
   test("malformed-line count surfaces as a per-scan DSv2 custom metric") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val bad = SparkSpec.tempDir("graft-metric").resolve("metric.vcf")
+    val bad = TempDirs.create("graft-metric").resolve("metric.vcf")
     Files.writeString(bad,
       "##fileformat=VCFv4.2\n" +
         "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\n" +
@@ -165,7 +165,7 @@ class VcfDataSourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("sites-only VCF (8 columns, no FORMAT/samples) reads with null format") {
-    val sites = SparkSpec.tempDir("graft-sites").resolve("sites.vcf")
+    val sites = TempDirs.create("graft-sites").resolve("sites.vcf")
     Files.writeString(sites,
       "##fileformat=VCFv4.2\n" +
         "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n" +

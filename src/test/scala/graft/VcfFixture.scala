@@ -29,7 +29,7 @@ object VcfFixture {
 
   /** Write the fixture to a temp .vcf and return its path. */
   def write(): Path = {
-    val p = SparkSpec.tempDir("graft-fixture").resolve("fixture.vcf")
+    val p = TempDirs.create("graft-fixture").resolve("fixture.vcf")
     Files.writeString(p, content)
     p
   }

@@ -56,7 +56,7 @@ class VcfReaderSpec extends AnyFunSuite with SparkSpec {
 
   test("mergeCohort: site-keyed union, './.' fill, lowest-input site columns") {
     def vcf(sample: String, rows: Seq[String]): String = {
-      val dir = SparkSpec.tempDir("graft_cohort")
+      val dir = TempDirs.create("graft_cohort")
       val p = dir.resolve(s"$sample.vcf")
       val header = Seq("##fileformat=VCFv4.2",
         s"#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\t$sample")

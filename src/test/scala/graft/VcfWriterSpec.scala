@@ -23,7 +23,7 @@ class VcfWriterSpec extends AnyFunSuite with SparkSpec {
     "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1").mkString("\n")
 
   private def writeVcf(df: DataFrame, header: String, bgzf: Boolean = false): String = {
-    val out = SparkSpec.tempDir("graft_vcf_out").toString
+    val out = TempDirs.create("graft_vcf_out").toString
     df.write.format("vcf").mode("overwrite").option("header", header)
       .option("bgzf", bgzf.toString).save(out)
     out
@@ -147,7 +147,7 @@ class VcfWriterSpec extends AnyFunSuite with SparkSpec {
     // a writer task that receives no rows still closes its stream: the
     // shard is the bare 28-byte EOF member; the index builder and the
     // readers must treat it as an empty, not broken, file
-    val dir = SparkSpec.tempDir("graft_bgzf_empty")
+    val dir = TempDirs.create("graft_bgzf_empty")
     val f = dir.resolve("empty.vcf.gz")
     Files.write(f, graft.sources.v2.BgzfOutputStream.EofMarker)
     val hp = new org.apache.hadoop.fs.Path(f.toUri)

@@ -21,7 +21,7 @@ object ProfileBgzf {
 
     val real = graft.ChromFixture.chr22
     // unindexed twin: same bytes, no sibling index → whole-file path
-    val dir = graft.SparkSpec.tempDir("graft_profile_bgzf")
+    val dir = graft.TempDirs.create("graft_profile_bgzf")
     val noidx = dir.resolve("chr22.vcf.gz")
     java.nio.file.Files.copy(java.nio.file.Paths.get(real), noidx)
 

@@ -38,7 +38,7 @@ object ProfileBm25 {
     val queries = (0 until nQueries).map(i =>
       Seq(vocab(2 * i), vocab(2 * i + 1)).distinct)
 
-    val idxDir = graft.SparkSpec.tempDir("graft_bm25_ab").toString
+    val idxDir = graft.TempDirs.create("graft_bm25_ab").toString
     termPostings(docs, "doc_id", "text")
       .write.mode("overwrite").partitionBy("term").parquet(idxDir)
     val stats = corpusStats(docs, "doc_id", "text")

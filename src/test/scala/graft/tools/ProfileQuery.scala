@@ -23,7 +23,7 @@ object ProfileQuery {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     if (sys.env.get("SPARK_GRAFT_SUBSTRATE").contains("1")) {
-      val dir = graft.SparkSpec.tempDir("graft-profile-substrate")
+      val dir = graft.TempDirs.create("graft-profile-substrate")
       sys.props("graft.bench.substrate") = dir.toString
     }
     val spark = SparkSession.builder()
