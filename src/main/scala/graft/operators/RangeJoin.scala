@@ -18,6 +18,11 @@ import org.apache.spark.sql.functions._
   * (chrom, bucket) — or zero times when the points land pre-bucketed
   * (`VcfReader.toBucketedTable`'s (chrom, pos_bucket) layout uses the
   * same `pos >> 20` bucket function at the default shift).
+  *
+  * The nearest-feature join is not a bucket join: a point's nearest
+  * interval may sit any number of buckets away, so [[nearestInterval]]
+  * is one per-chromosome sort-merge sweep at every radius, with one
+  * tie rule (covered, then left, then max end / min start).
   */
 object RangeJoin {
 
@@ -85,131 +90,16 @@ object RangeJoin {
       .drop(col("l.__b")).drop(col("r.__b"))
   }
 
-  /** NEAREST-feature join with a bounded search radius — the
-    * distributed `bedtools closest -d` analogue ("which gene is each
-    * intergenic variant closest to"): for every point, the same-chrom
-    * interval minimizing `dist = max(start − pos, pos − end, 0)` among
-    * those with `dist ≤ maxDist`; points with no interval in radius are
-    * dropped (an unbounded nearest cannot decompose — a point's true
-    * nearest may sit arbitrarily many buckets away, so the radius is
-    * the contract, exactly bedtools' practical `-d` usage).
+  /** NEAREST-feature join — the distributed `bedtools closest -d`
+    * analogue ("which gene is each intergenic variant closest to"): for
+    * every point, the same-chrom interval minimizing
+    * `dist = max(start − pos, pos − end, 0)`, kept when `dist ≤ maxDist`
+    * (the default `Long.MaxValue` is the radius-free `bedtools closest`).
+    * Points with no interval in radius, or on a chromosome with no
+    * intervals, drop. Every point ROW emits at most one row, so
+    * byte-identical duplicate point rows each keep their own output.
     *
-    * Shape: intervals burst over their maxDist-EXPANDED bucket span
-    * (`dist ≤ maxDist ⟺ start−maxDist ≤ pos ≤ end+maxDist`, so
-    * expansion captures every in-radius pair and, the point living in
-    * exactly ONE bucket, each pair arises exactly once); equi-join on
-    * (chrom, bucket); per-point argmin as a row_number window keyed on
-    * a DETERMINISTIC composite of the point's own columns (`idCols` if
-    * given, else every point column) — never a synthetic
-    * `monotonically_increasing_id`, whose lineage shifts under AQE
-    * re-planning / stage retry and whose nondeterministic marking
-    * blocks predicate pushdown through the plan. Spark's partial
-    * WindowGroupLimit reduces each point's candidates to one BEFORE
-    * the window exchange. Ties beyond (dist, start, end) break
-    * arbitrarily; the distance itself — what aggregates downstream
-    * should read — is always the true minimum. Output: point columns + `distCol` + the
-    * interval's non-join columns (`distCol` must not pre-exist on
-    * either input).
-    *
-    * Point identity caveat: rows identical on the composite key are ONE
-    * logical point (one output row). Pass `idCols` naming a unique
-    * caller key to keep duplicate payload rows distinct. (Unlike
-    * [[AsOfJoin.lastBefore]], which restores duplicate multiplicity
-    * with a join-back, this operator keeps distinct-point semantics by
-    * default: its inputs are genomic SITES, where byte-identical
-    * duplicate rows are a data bug, and the join-back would double the
-    * operator's exchanges for every caller to serve them.)
-    */
-  def nearestInterval(
-      points: DataFrame, intervals: DataFrame, maxDist: Long,
-      chromCol: String = "chrom", posCol: String = "pos",
-      startCol: String = "start", endCol: String = "end",
-      bucketShift: Int = 20, distCol: String = "dist",
-      idCols: Seq[String] = Seq.empty,
-      maxCandidatesPerPoint: Long = 1024L): DataFrame = {
-    require(maxDist >= 0, s"maxDist must be non-negative, got $maxDist")
-    require(bucketShift >= 0 && bucketShift < 32,
-      s"bucketShift must be in [0, 32), got $bucketShift")
-    // CANDIDATE-BLOWUP GUARD (r17 verdict #4): when the maxDist-expanded
-    // interval span approaches the chromosome span, the bucket
-    // decomposition degenerates — every interval of a chrom lands in the
-    // point's bucket and the "equi-join" goes quadratic in ONE
-    // low-cardinality (chrom, bucket) stage (the q83 geometry: 90 kb
-    // chrom span under 1 Mb buckets put ~0.7B candidate pairs in 4
-    // tasks). The failure is DATA-dependent, so the guard is a one-job
-    // per-chrom stats pass over the INTERVAL side (small by the
-    // operator's contract) at plan-build time: it predicts the average
-    // per-point candidate count and fails LOUDLY — pointing at
-    // [[nearestIntervalUnbounded]] + a dist filter, whose sweep computes
-    // the same true minimum distance in O(n log n) — rather than
-    // auto-routing, because the two forms break payload ties differently
-    // and a silent route would change which interval row ties report.
-    // `maxCandidatesPerPoint = 0` disables the guard (and its stats job).
-    if (maxCandidatesPerPoint > 0) {
-      val bw = 1L << bucketShift
-      val worst = intervals.groupBy(col(chromCol))
-        .agg(count(lit(1)).cast("long").as("n"),
-          min(greatest(col(startCol).cast("long") - maxDist, lit(0L))).as("lo"),
-          max(col(endCol).cast("long") + maxDist).as("hi"),
-          avg(col(endCol).cast("long") - col(startCol).cast("long") + 1L).as("w"))
-        .collect()
-        .map { r =>
-          val (n, lo, hi, w) =
-            (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))
-          // buckets an avg expanded interval spans (+1 partial each end)
-          val ivBuckets = (w + 2.0 * maxDist) / bw + 2.0
-          val nBuckets = ((hi >> bucketShift) - (lo >> bucketShift) + 1L).toDouble
-          (r.get(0), n * math.min(1.0, ivBuckets / nBuckets))
-        }
-        .maxByOption(_._2)
-      worst.filter(_._2 > maxCandidatesPerPoint.toDouble).foreach {
-        case (chrom, est) => throw new IllegalArgumentException(
-          f"nearestInterval: predicted ~$est%.0f candidate intervals per " +
-            f"point on chrom '$chrom' (> guard $maxCandidatesPerPoint) — " +
-            "the maxDist-expanded intervals blanket the chromosome's bucket " +
-            "range, so the bucket join degenerates toward per-chrom " +
-            "all-pairs. Use nearestIntervalUnbounded + a dist <= maxDist " +
-            "filter (same true minimum distance, different payload " +
-            "tie-break), raise bucketShift resolution, or raise/disable " +
-            "the guard (maxCandidatesPerPoint = 0) if the volume is intended.")
-      }
-    }
-    require(!points.columns.contains(distCol) && !intervals.columns.contains(distCol),
-      s"output column '$distCol' already exists on an input — pass distCol to rename it")
-    val iv = intervals.withColumn("__b", explode(sequence(
-        shiftright(greatest(col(startCol) - maxDist, lit(0L)), bucketShift),
-        shiftright(col(endCol) + maxDist, bucketShift))))
-      .alias("i")
-    val ridCols = if (idCols.nonEmpty) idCols else points.columns.toSeq
-    require(ridCols.forall(points.columns.contains),
-      s"idCols ${idCols.filterNot(points.columns.contains)} missing from points")
-    val p = points
-      .withColumn("__rid", struct(ridCols.map(col): _*))
-      .withColumn("__b", shiftright(col(posCol), bucketShift))
-      .alias("p")
-    val dist = greatest(
-      (col(s"i.$startCol") - col(s"p.$posCol")).cast("long"),
-      (col(s"p.$posCol") - col(s"i.$endCol")).cast("long"), lit(0L))
-    val w = Window.partitionBy(col("__rid"))
-      .orderBy(col("__dist").asc, col(s"i.$startCol").asc, col(s"i.$endCol").asc)
-    p.join(iv,
-        col(s"p.$chromCol") === col(s"i.$chromCol") &&
-          col("p.__b") === col("i.__b"))
-      .withColumn("__dist", dist)
-      .filter(col("__dist") <= maxDist)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .withColumn(distCol, col("__dist"))
-      .drop(col(s"i.$chromCol"))
-      .drop(col("p.__b")).drop(col("i.__b"))
-      .drop(col("__rid")).drop(col("__rn")).drop(col("__dist"))
-  }
-
-  /** UNBOUNDED nearest-feature join — `bedtools closest` without a
-    * radius, the common call [[nearestInterval]] deliberately refuses
-    * (a bucket decomposition cannot bound an unbounded search: the true
-    * nearest may sit arbitrarily many buckets away). Closed with a
-    * per-chromosome SORT-MERGE SWEEP instead, the [[mergeIntervals]]
+    * Shape: one per-chromosome SORT-MERGE SWEEP, the [[mergeIntervals]]
     * window pattern: union the points with the intervals keyed at their
     * start coordinate, then over ONE (chrom)-partitioned ordering take
     * (a) the running max-end interval among starts ≤ pos — if its end
@@ -217,26 +107,27 @@ object RangeJoin {
     * LEFT neighbor (every uncovered start-≤-pos interval ends before
     * pos) — and (b) in the reversed ordering the running min-start
     * interval among starts ≥ pos, the nearest RIGHT neighbor; emit the
-    * nearer (ties: left, then max end / min start — deterministic, a
-    * different tie order than [[nearestInterval]]'s (dist, start, end);
-    * `dist` itself is always the true minimum). Points on a chromosome
-    * with no intervals drop, matching the bounded form's no-match rule.
+    * nearer. Tie rule: covered, then left, then the left neighbor with
+    * the max (end, start, payload…) / the right neighbor with the min
+    * (start, end, payload…) — deterministic; `dist` itself is always
+    * the true minimum, which is what aggregates downstream should read.
     *
     * Cost: ONE exchange on chrom (the second window reuses the first's
     * partitioning — opposite sort, no re-shuffle), O(points +
-    * intervals) rows, no join fan-out at all. Same per-chrom window
-    * scale note as [[mergeIntervals]]: partition work is bounded by
-    * per-chrom row counts, and a sweep is the right primitive because
-    * nearest-without-radius, like merging, cannot decompose into
-    * buckets. Interval payload + start/end columns must not collide
-    * with point columns (caller renames, the [[intervalOverlap]]
-    * contract).
+    * intervals) rows, no join fan-out and no radius-dependent work for
+    * any interval geometry. Each chromosome is one task, the
+    * [[mergeIntervals]] scale note. Interval payload + start/end columns
+    * must not collide with point columns (caller renames, the
+    * [[intervalOverlap]] contract), and `distCol` must not pre-exist on
+    * either input.
     */
-  def nearestIntervalUnbounded(
+  def nearestInterval(
       points: DataFrame, intervals: DataFrame,
+      maxDist: Long = Long.MaxValue,
       chromCol: String = "chrom", posCol: String = "pos",
       startCol: String = "start", endCol: String = "end",
       distCol: String = "dist"): DataFrame = {
+    require(maxDist >= 0, s"maxDist must be non-negative, got $maxDist")
     val ivPayload = intervals.columns.toSeq
       .filterNot(Set(chromCol, startCol, endCol))
     val clash = (ivPayload :+ startCol :+ endCol).filter(points.columns.contains)
@@ -287,8 +178,9 @@ object RangeJoin {
     iv.unionByName(pt)
       .withColumn("__bl", max(col("__il")).over(wl))
       .withColumn("__br", min(col("__ir")).over(wr))
-      .filter(col("__tag") === 1 &&
-        (col("__bl").isNotNull || col("__br").isNotNull))
+      // `dist` is NULL only with no interval on either side, so the
+      // radius test also drops points on interval-less chromosomes
+      .filter(col("__tag") === 1 && dist <= maxDist)
       .select(col(chromCol) +: ptCols.map(col) ++: Seq(
         pick(col("__bl.__s"), col("__br.__s")).as(startCol),
         pick(col("__bl.__e"), col("__br.__e")).as(endCol)) ++:
@@ -363,8 +255,7 @@ object RangeJoin {
   def subtractIntervals(
       regions: DataFrame, mask: DataFrame,
       chromCol: String = "chrom",
-      startCol: String = "start", endCol: String = "end",
-      bucketShift: Int = 20): DataFrame = {
+      startCol: String = "start", endCol: String = "end"): DataFrame = {
     val reserved = Seq("__bs", "__be", "__b", "__gs", "__ge", "__maxbe")
     require(!regions.columns.exists(reserved.contains),
       s"regions carries a reserved internal column " +
@@ -378,7 +269,7 @@ object RangeJoin {
       .select(col(chromCol), col(startCol).as("__bs"),
         col(endCol).as("__be"))
     val ov = intervalOverlap(regions, bm, chromCol, startCol, endCol,
-      "__bs", "__be", bucketShift)
+      "__bs", "__be")
     val wR = Window
       .partitionBy(Seq(chromCol, startCol, endCol).map(col): _*)
       .orderBy(col("__bs"))

@@ -2111,21 +2111,22 @@ object VariantQc {
     *
     * Haploid and half-missing calls never enter (their zygosity is
     * het-miss, excluded with hom classes). Gene assignment reuses
-    * [[RangeJoin.pointInInterval]]'s bucket decomposition — an
-    * equi-join on (chrom, pos-bucket), never a range cross join — and
-    * the rollup is ONE partial-aggregated groupBy(sample, gene).
+    * [[RangeJoin.pointInInterval]]'s bucket decomposition at 16 kb
+    * (gene-sized) buckets — an equi-join on (chrom, pos-bucket), never
+    * a range cross join — and the rollup is ONE partial-aggregated
+    * groupBy(sample, gene).
     */
   def compoundHet(
       ann: DataFrame, genes: DataFrame,
-      geneIdCol: String = "region_id", sampleCol: String = "sample_id",
-      bucketShift: Int = 14): DataFrame = {
+      geneIdCol: String = "region_id",
+      sampleCol: String = "sample_id"): DataFrame = {
     val het = ann
       .filter(col("zygosity").isin("het-ref", "het-alt"))
       .select(col(sampleCol).as("sample_id"), col("chrom"), col("pos"),
         (col("phase") === "|" && col("gt1") =!= "0").as("__h1"),
         (col("phase") === "|" && col("gt2") =!= "0").as("__h2"),
         (col("phase") === "/").as("__unph"))
-    RangeJoin.pointInInterval(het, genes, bucketShift = bucketShift)
+    RangeJoin.pointInInterval(het, genes, bucketShift = 14)
       .groupBy(col("sample_id"), col(geneIdCol))
       .agg(
         count(lit(1)).as("n_sites"),

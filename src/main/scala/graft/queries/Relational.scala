@@ -244,7 +244,7 @@ object Relational extends QuerySet {
       val ev = events(s, dir)
         .withColumn("uk", col("user_id") % 1500 + 1)
         .select("event_id", "uk", "ts")
-      // sorted variant: 2.3× faster here than join+agg (ProfileAsOf at
+      // sorted variant: 2.3× faster here than join+agg (measured at
       // sf0.1) and O(left+right) through one sort vs O(left × history)
       // pair fanout — the margin grows with history length
       AsOfJoin.lastBeforeSorted(

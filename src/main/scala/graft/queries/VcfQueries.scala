@@ -1464,30 +1464,22 @@ object VcfQueries extends QuerySet {
   /** NEAREST-feature join (variants × regions, bounded radius) — the
     * distributed `bedtools closest -d` rung above q81: for each variant
     * site the closest synthetic region within 5 kb, via
-    * [[graft.operators.RangeJoin.nearestInterval]]'s expanded-bucket
-    * decomposition (radius-widened interval burst, one candidate
-    * emission per in-radius pair, per-point argmin pre-reduced by
-    * partial WindowGroupLimit). The gate aggregates `dist` only — the
+    * [[graft.operators.RangeJoin.nearestInterval]]'s per-chrom
+    * sort-merge sweep (one chrom exchange, running max-end left
+    * neighbor / min-start right neighbor, covered ⇒ dist 0) and its
+    * `dist ≤ 5000` radius filter. The gate aggregates `dist` only — the
     * minimum distance is unique per site even when the winning interval
-    * ties — so the hash is insensitive to tie order. DuckDB replays the
-    * derivation with a grouped min.
+    * ties (covered, then left, then max end / min start) — so the hash
+    * is insensitive to tie order. DuckDB replays the derivation with a
+    * grouped min.
     */
   private val q83 = Q(
     "q83_nearest_feature",
     (s, dir) => {
       val sites = wide(s, dir).select(col("chrom"), col("pos")).distinct()
       val regions = syntheticRegions(s, dir)
-      // r17: same statistic through the per-chrom sort-merge sweep +
-      // radius filter — identical dist per site (the sweep reports the
-      // TRUE minimum; a site has a region within 5 kb iff its true
-      // nearest is ≤ 5 kb), but O(n log n) instead of the bucket
-      // decomposition's in-bucket candidate product, which on THESE
-      // dense overlapping regions (width ≤ 4.7 kb + 2×5 kb radius vs a
-      // 90 kb chrom span) evaluated ~0.7B candidate pairs — 228 of the
-      // gate's 264 exec-core-s in one 4-task stage. Oracle unchanged.
       graft.operators.RangeJoin
-        .nearestIntervalUnbounded(sites, regions)
-        .filter(col("dist") <= 5000L)
+        .nearestInterval(sites, regions, 5000L)
         .groupBy("chrom")
         .agg(count(lit(1)).as("n_sites"),
           sum(col("dist")).as("sum_dist"),
@@ -1511,15 +1503,13 @@ object VcfQueries extends QuerySet {
     """))
 
   /** UNBOUNDED nearest-feature join ([[graft.operators.RangeJoin
-    * .nearestIntervalUnbounded]]) — `bedtools closest` WITHOUT a
-    * radius, the call q83's bounded operator refuses: every variant
-    * site finds its nearest region however far away, via the per-chrom
-    * sort-merge sweep (one chrom exchange, running max-end left
-    * neighbor / min-start right neighbor, covered ⇒ dist 0) instead of
-    * a bucket decomposition that cannot bound the search. Gate
-    * aggregates dist only (tie-insensitive, the q83 rule); DuckDB
-    * replays with an unfiltered grouped min. Every site on a chrom
-    * with ≥1 region emits, so n_sites also pins the no-drop contract.
+    * .nearestInterval]] at its default radius) — `bedtools closest`
+    * WITHOUT a radius: every variant site finds its nearest region
+    * however far away, through the same per-chrom sort-merge sweep as
+    * q83 with no radius filter. Gate aggregates dist only
+    * (tie-insensitive, the q83 rule); DuckDB replays with an unfiltered
+    * grouped min. Every site on a chrom with ≥1 region emits, so
+    * n_sites also pins the no-drop contract.
     */
   private val q101 = Q(
     "q101_nearest_unbounded",
@@ -1527,7 +1517,7 @@ object VcfQueries extends QuerySet {
       val sites = wide(s, dir).select(col("chrom"), col("pos")).distinct()
       val regions = syntheticRegions(s, dir)
       graft.operators.RangeJoin
-        .nearestIntervalUnbounded(sites, regions)
+        .nearestInterval(sites, regions)
         .groupBy("chrom")
         .agg(count(lit(1)).as("n_sites"),
           sum(col("dist")).as("sum_dist"),

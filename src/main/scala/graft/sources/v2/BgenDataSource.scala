@@ -160,7 +160,8 @@ final class BgenScan(paths: Seq[String], required: StructType,
             s"declares ${header.mVariants} — rebuild the index")
         // exact block-level pruning from the index alone
         val kept = entries.filter(e => region.matches(e.chrom, e.pos))
-        (fp.toString, header, kept.map(e => (e.fileStart, e.sizeBytes)))
+        (fp.toString, header,
+          kept.map(e => (e.fileStart, e.sizeBytes)).toIndexedSeq)
       } else {
         val raw = fs.open(fp)
         try {
@@ -175,8 +176,8 @@ final class BgenScan(paths: Seq[String], required: StructType,
             override def skip(n: Long): Long = {
               val s = super.skip(n); count += s; s }
           }
-          val blocks =
-            Seq.newBuilder[(Long, Long)]
+          // indexed: the run loop below reads blocks(e) per step
+          val blocks = IndexedSeq.newBuilder[(Long, Long)]
           var i = 0
           while (i < header.mVariants) {
             val start = header.firstVariantOffset + counting.count

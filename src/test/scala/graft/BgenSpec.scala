@@ -304,4 +304,36 @@ class BgenSpec extends AnyFunSuite with SparkSpec {
     }
     assert(e3.getMessage.contains("phased"))
   }
+
+  test("offset-walk planning of a .bgi-less file tiles every block " +
+      "exactly once: contiguous partitions whose counts sum to " +
+      "mVariants across thousands of variants") {
+    val n = 5000
+    val f = tmp.resolve("walk.bgen").toFile
+    val out = new java.io.FileOutputStream(f)
+    try BgenReader.writeBgen(out, Seq("s0"), Iterator.tabulate(n) { i =>
+        BgenEnc(s"v$i", s"rs$i", "1", 1000L + i, Seq("A", "G"),
+          Seq(Array(255L, 0L)))
+      }, bBits = 8, zlib = true)
+    finally out.close()
+    val header = {
+      val in = new java.io.FileInputStream(f)
+      try BgenReader.readHeader(in) finally in.close()
+    }
+    assert(header.mVariants === n.toLong)
+    val parts = withMaxSplit(4096L) {
+      new graft.sources.v2.BgenScanBuilder(Seq(f.toString)).build()
+        .toBatch.planInputPartitions().toSeq
+        .map(_.asInstanceOf[graft.sources.v2.BgenPartition])
+    }
+    assert(parts.length > 10, s"4 KB budget planned only ${parts.length} tasks")
+    assert(parts.head.startOffset === header.firstVariantOffset)
+    parts.zip(parts.tail).foreach { case (a, b) =>
+      assert(b.startOffset === a.startOffset + a.bytes,
+        s"gap or overlap between $a and $b")
+    }
+    assert(parts.last.startOffset + parts.last.bytes === f.length())
+    assert(parts.map(_.count.toLong).sum === header.mVariants)
+    assert(parts.forall(_.count >= 1))
+  }
 }

@@ -270,18 +270,25 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
         s"$name planned as a nested loop:\n$p")
       assert(p.contains("Join"), p)
     }
-    // q83 (r17): the nearest-within-radius statistic now rides the
-    // per-chrom sort-merge SWEEP — the bucket decomposition's
-    // in-bucket candidate product was ~0.7B pairs on this data (radius
-    // ≈ a large fraction of the chrom span). The sweep plan must have
-    // NO join at all (two chrom-partitioned windows over one union)
-    // and in particular no nested loop.
-    val q83 = SparkEntry.queries("q83_nearest_feature")(spark, dir)
-    q83.collect()
-    val p83 = q83.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    assert(!p83.contains("Join"), s"q83 must be the join-free sweep:\n$p83")
-    assert(p83.contains("Window"), s"q83 sweep windows missing:\n$p83")
+    // nearestInterval is the per-chrom sort-merge SWEEP at every radius
+    // (q83 bounded, q101 unbounded, and the bare operator): NO join at
+    // all (two chrom-partitioned windows over one union), in particular
+    // no nested loop and no bucket-candidate product
+    def sweepOnly(label: String, q: org.apache.spark.sql.DataFrame): Unit = {
+      q.collect()
+      val p = q.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head
+      assert(!p.contains("Join"), s"$label must be the join-free sweep:\n$p")
+      assert(p.contains("Window"), s"$label sweep windows missing:\n$p")
+    }
+    for (name <- Seq("q83_nearest_feature", "q101_nearest_unbounded"))
+      sweepOnly(name, SparkEntry.queries(name)(spark, dir))
+    import spark.implicits._
+    val points = Seq(("1", 25), ("1", 70), ("2", 45)).toDF("chrom", "pos")
+    val intervals = Seq(("1", 10, 40), ("1", 100, 130), ("2", 50, 60))
+      .toDF("chrom", "start", "end")
+    sweepOnly("nearestInterval(points, intervals, 50)",
+      graft.operators.RangeJoin.nearestInterval(points, intervals, 50L))
   }
 
   test("q79/q80 family QC read ONE annotate plan via ReusedExchange") {

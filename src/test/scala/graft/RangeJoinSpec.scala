@@ -5,16 +5,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.RangeJoin
 
-/** Hand-computed truth for the nearest-feature join (q83's operator) —
-  * the oracled gate aggregates distances per chrom, so the pairwise
-  * contract (who matched whom, radius drops, exactly-once emission
-  * across straddled buckets) is pinned here.
+/** Hand-computed truth for the nearest-feature join (q83/q101's
+  * operator) — the oracled gates aggregate distances per chrom, so the
+  * pairwise contract (who matched whom, radius drops, one row per point
+  * row, the sweep's tie rule: covered, then left, then max end / min
+  * start) is pinned here, along with the other interval operators.
   */
 class RangeJoinSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  // bucketShift 4 → 16 bp buckets: small enough that intervals straddle
-  // several buckets and the radius expansion crosses bucket lines
+  // bucketShift 4 → 16 bp buckets for the liftover specs: small enough
+  // that chain blocks straddle several buckets
   private val shift = 4
 
   private lazy val intervals = Seq(
@@ -26,10 +27,9 @@ class RangeJoinSpec extends AnyFunSuite with SparkSpec {
 
   test("nearestInterval: containment wins at dist 0, exactly once") {
     val points = Seq(("1", 25, "p_in")).toDF("chrom", "pos", "id")
-    val got = RangeJoin.nearestInterval(points, intervals, maxDist = 50L,
-      bucketShift = shift).collect()
-    // the interval spans buckets 0,1,2 and its ±50 expansion many more;
-    // the contained point must still emit exactly ONE row
+    val got = RangeJoin.nearestInterval(points, intervals, maxDist = 50L)
+      .collect()
+    // g_a covers the point; g_b/g_c lie 75 away: exactly ONE row
     assert(got.length === 1)
     assert(got.head.getAs[String]("gene") === "g_a")
     assert(got.head.getAs[Long]("dist") === 0L)
@@ -43,53 +43,20 @@ class RangeJoinSpec extends AnyFunSuite with SparkSpec {
       ("2", 45, "p_c2"),    // 5 from g_d; chrom 1 intervals must not leak
       ("3", 55, "p_c3"))    // right pos, wrong chrom
       .toDF("chrom", "pos", "id")
-    val got = RangeJoin.nearestInterval(points, intervals, maxDist = 50L,
-      bucketShift = shift)
+    val got = RangeJoin.nearestInterval(points, intervals, maxDist = 50L)
       .collect().map(r => r.getAs[String]("id") ->
         (r.getAs[String]("gene"), r.getAs[Long]("dist"))).toMap
     assert(!got.contains("p_far"), "out-of-radius point leaked through")
     assert(!got.contains("p_c3"), "nearest join crossed chromosomes")
     assert(got("p_c2") === ("g_d", 5L))
-    // p_mid ties g_a/g_b/g_c at 30?  g_a end=40 → dist 30; g_b start=100
-    // → dist 30; tiebreak (dist, start, end) picks the smaller start: g_a
+    // p_mid: g_a end=40 → dist 30 on the left; g_b/g_c start=100 → dist
+    // 30 on the right; an equal-distance tie picks the LEFT neighbor
     assert(got("p_mid") === ("g_a", 30L))
-    // p_near: g_b and g_c tie at dist 5 with equal start; (dist, start,
-    // end) picks the shorter interval g_b; dist is the true minimum
-    // either way
+    // p_near: right neighbors g_b and g_c tie at dist 5 with equal
+    // start; the min (start, end) right neighbor is the shorter g_b;
+    // dist is the true minimum either way
     assert(got("p_near")._2 === 5L)
     assert(got("p_near")._1 === "g_b")
-  }
-
-  test("nearestInterval: candidate-blowup guard fires on bucket-degenerate " +
-      "geometry, is disableable, and stays quiet on spread-out intervals") {
-    // q83's degenerate geometry in miniature: many intervals crammed into
-    // a span far smaller than one bucket (default shift 20 → 1 Mb), so
-    // every interval of the chrom shares the point's bucket and the
-    // bucket join degenerates to per-chrom all-pairs
-    val dense = (0 until 2000).map(i => ("1", 100 + i, 110 + i))
-      .toDF("chrom", "start", "end")
-    val points = Seq(("1", 105, "p")).toDF("chrom", "pos", "id")
-    val ex = intercept[IllegalArgumentException] {
-      RangeJoin.nearestInterval(points, dense, maxDist = 5000L)
-    }
-    assert(ex.getMessage.contains("nearestIntervalUnbounded"),
-      s"guard message must route the caller to the sweep: ${ex.getMessage}")
-    // guard off → the same call plans and runs (the volume is intended)
-    val forced = RangeJoin.nearestInterval(points, dense, maxDist = 5000L,
-      maxCandidatesPerPoint = 0L).collect()
-    assert(forced.length === 1 && forced.head.getAs[Long]("dist") === 0L)
-    // the sweep route the guard points at computes the same true minimum
-    val swept = RangeJoin.nearestIntervalUnbounded(points, dense)
-      .filter(col("dist") <= 5000L).collect()
-    assert(swept.length === 1 && swept.head.getAs[Long]("dist") === 0L)
-    // same interval count spread over one bucket EACH stays quiet: the
-    // predicted per-point candidates are density-bounded, not n-bounded
-    val spread = (0 until 2000).map(i => ("1", i << 20, (i << 20) + 10))
-      .toDF("chrom", "start", "end")
-    val ok = RangeJoin.nearestInterval(points, spread, maxDist = 5000L)
-      .collect()
-    // nearest spread interval to pos 105 is [0, 10] → dist 95
-    assert(ok.length === 1 && ok.head.getAs[Long]("dist") === 95L)
   }
 
   test("mergeIntervals: chains fuse, gaps split, slack bridges, one shuffle") {
@@ -210,28 +177,27 @@ class RangeJoinSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("nearestInterval: deterministic plan (no synthetic row ids), idCols honored") {
-    val points = Seq(("1", 25, "a"), ("1", 25, "b")).toDF("chrom", "pos", "id")
+  test("nearestInterval: deterministic plan (no synthetic row ids), " +
+      "duplicate point rows each emit") {
+    val points = Seq(("1", 25, "a"), ("1", 25, "b"), ("1", 25, "b"))
+      .toDF("chrom", "pos", "id")
     // no nondeterministic expression anywhere in the plan: under AQE
-    // re-planning or stage retry a monotonically_increasing_id window
-    // key could shift row identity; the composite-key form cannot
-    val analyzed = RangeJoin.nearestInterval(points, intervals, maxDist = 50L,
-      bucketShift = shift).queryExecution.analyzed
+    // re-planning or stage retry a monotonically_increasing_id key
+    // could shift row identity; the sweep carries none
+    val analyzed = RangeJoin.nearestInterval(points, intervals, maxDist = 50L)
+      .queryExecution.analyzed
     val nondet = analyzed.collect {
       case p if p.expressions.exists(!_.deterministic) => p.nodeName }
     assert(nondet.isEmpty && !analyzed.toString.contains("monotonically_increasing_id"),
       s"nearestInterval plan carries a nondeterministic expression in: $nondet")
-    // default key = all point columns → the id column keeps the two
-    // same-position rows distinct; idCols=["id"] does the same explicitly
-    val byAll = RangeJoin.nearestInterval(points, intervals, maxDist = 50L,
-      bucketShift = shift).collect()
-    assert(byAll.length === 2)
-    val byId = RangeJoin.nearestInterval(points, intervals, maxDist = 50L,
-      bucketShift = shift, idCols = Seq("id")).collect()
-    assert(byId.map(_.getAs[String]("id")).sorted.toSeq === Seq("a", "b"))
+    // every point ROW is its own point: the byte-identical "b" rows
+    // keep both outputs
+    val ids = RangeJoin.nearestInterval(points, intervals, maxDist = 50L)
+      .collect().map(_.getAs[String]("id")).sorted.toSeq
+    assert(ids === Seq("a", "b", "b"))
   }
 
-  test("nearestIntervalUnbounded: sweep matches brute force, edges + ties + one exchange") {
+  test("nearestInterval unbounded: sweep matches hand truth, edges + ties + one exchange") {
     val points = Seq(
       ("1", 3, "p_before"),   // before the first interval: nearest g_a at 7
       ("1", 25, "p_in"),      // covered by g_a: dist 0
@@ -240,7 +206,7 @@ class RangeJoinSpec extends AnyFunSuite with SparkSpec {
       ("2", 45, "p_c2"),      // 5 from g_d; chrom-1 intervals must not leak
       ("3", 55, "p_none"))    // chromosome with no intervals: drops
       .toDF("chrom", "pos", "id")
-    val got = RangeJoin.nearestIntervalUnbounded(points, intervals)
+    val got = RangeJoin.nearestInterval(points, intervals)
       .collect().map(r => r.getAs[String]("id") ->
         (r.getAs[String]("gene"), r.getAs[Long]("dist"))).toMap
     assert(!got.contains("p_none"), "point on an interval-less chromosome leaked")
@@ -249,34 +215,103 @@ class RangeJoinSpec extends AnyFunSuite with SparkSpec {
     assert(got("p_tie") === ("g_a", 30L), "equal-distance tie must pick the left neighbor")
     assert(got("p_after") === ("g_c", 4870L), "left neighbor must be the max-END interval")
     assert(got("p_c2") === ("g_d", 5L))
-    // radius-free ≡ bounded where the bounded form matches at all, and
-    // every distance is the brute-force minimum
-    val bounded = RangeJoin.nearestInterval(points, intervals, maxDist = 50L,
-      bucketShift = shift).collect()
-      .map(r => r.getAs[String]("id") -> r.getAs[Long]("dist")).toMap
-    bounded.foreach { case (id, d) => assert(got(id)._2 === d,
-      s"sweep dist for $id disagrees with the bounded operator") }
+    // a radius keeps exactly the in-radius rows of the unbounded call
+    val bounded = RangeJoin.nearestInterval(points, intervals, maxDist = 50L)
+      .collect().map(r => r.getAs[String]("id") ->
+        (r.getAs[String]("gene"), r.getAs[Long]("dist"))).toMap
+    assert(bounded === got.filter(_._2._2 <= 50L))
     // ONE exchange: the reversed second window reuses the chrom
     // partitioning — only a re-sort, never a re-shuffle
-    val plan = RangeJoin.nearestIntervalUnbounded(points, intervals)
+    val plan = RangeJoin.nearestInterval(points, intervals)
       .queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(plan.linesIterator.count(_.contains("Exchange hashpartitioning")) <= 1,
-      s"unbounded nearest shuffles more than once:\n$plan")
-    val nondet = RangeJoin.nearestIntervalUnbounded(points, intervals)
-      .queryExecution.analyzed.collect {
-        case p if p.expressions.exists(!_.deterministic) => p.nodeName }
-    assert(nondet.isEmpty, s"nondeterministic expressions in: $nondet")
+      s"nearest sweep shuffles more than once:\n$plan")
   }
 
   test("nearestInterval: every point emits at most one row (no bucket dup)") {
-    // points sprayed across bucket lines near a long interval's
-    // expansion: each must emit 0 or 1 rows, never more
+    // points sprayed across a long interval's radius: each must emit 0
+    // or 1 rows, never more
     val points = (0 until 200).map(i => ("1", i * 3, s"p$i"))
       .toDF("chrom", "pos", "id")
-    val out = RangeJoin.nearestInterval(points, intervals, maxDist = 40L,
-      bucketShift = shift)
+    val out = RangeJoin.nearestInterval(points, intervals, maxDist = 40L)
       .groupBy("id").count().filter(col("count") > 1).collect()
     assert(out.isEmpty, s"duplicate emissions: ${out.mkString(",")}")
+  }
+
+  test("nearestInterval property sweep: 8 seeded-random fixtures × 4 " +
+      "radii match the brute-force minimum dist and the tie rule, one " +
+      "row per in-radius point row") {
+    val rnd = new scala.util.Random(20261019L)
+    type Iv = (String, Int, Int, String)
+    def dist(pos: Int, iv: Iv): Long =
+      math.max(math.max(iv._2 - pos, pos - iv._3), 0).toLong
+    // the documented pick, in plain Scala: the max (end, start, gene)
+    // interval starting at or before pos covers it or is the left
+    // neighbor; the min (start, end, gene) one starting at or after pos
+    // is the right neighbor; covered, then left on equal distance
+    def pick(chrom: String, pos: Int, ivs: Seq[Iv]): Option[Iv] = {
+      val on = ivs.filter(_._1 == chrom)
+      val l = on.filter(_._2 <= pos).maxByOption(iv => (iv._3, iv._2, iv._4))
+      val r = on.filter(_._2 >= pos).minByOption(iv => (iv._2, iv._3, iv._4))
+      (l, r) match {
+        case (Some(a), Some(b)) => Some(if (dist(pos, a) <= dist(pos, b)) a else b)
+        case _ => l.orElse(r)
+      }
+    }
+    (1 to 8).foreach { case_ =>
+      // c0/c1 carry intervals, c2 none; some intervals nest inside
+      // another, possibly sharing its start or end
+      val base = (0 until 2).flatMap { ci =>
+        (0 until 1 + rnd.nextInt(10)).map { k =>
+          val s = rnd.nextInt(400)
+          (s"c$ci", s, s + rnd.nextInt(60), s"g$ci-$k")
+        }
+      }
+      val nested = base.filter(_ => rnd.nextInt(3) == 0).zipWithIndex.map {
+        case ((c, s, e, g), k) =>
+          val ns = s + rnd.nextInt(e - s + 1)
+          (c, ns, ns + rnd.nextInt(e - ns + 1), s"$g-n$k")
+      }
+      val ivs = base ++ nested
+      // equal-distance ties: a point midway between a left interval's
+      // end and a right interval's start
+      val ties = for {
+        a <- ivs; b <- ivs
+        if a._1 == b._1 && b._2 > a._3 && (b._2 - a._3) % 2 == 0
+      } yield (a._1, (a._3 + b._2) / 2)
+      val sites = (0 until 40).map(_ =>
+          (s"c${rnd.nextInt(3)}", rnd.nextInt(500))) ++
+        ivs.take(3).map(iv => (iv._1, iv._2 + (iv._3 - iv._2) / 2)) ++ // covered
+        rnd.shuffle(ties).take(5)
+      val points = sites.zipWithIndex.map { case ((c, p), i) => (c, p, s"p$i") }
+      // byte-identical duplicate rows: each must emit its own row
+      val rows = points ++ points.take(4)
+      val pointsDf = rows.toDF("chrom", "pos", "id")
+      val ivDf = ivs.toDF("chrom", "start", "end", "gene")
+      for (radius <- Seq(0L, 7L, 40L, Long.MaxValue)) {
+        val out =
+          (if (radius == Long.MaxValue) RangeJoin.nearestInterval(pointsDf, ivDf)
+           else RangeJoin.nearestInterval(pointsDf, ivDf, radius))
+            .select("chrom", "pos", "id", "start", "end", "gene", "dist")
+            .as[(String, Int, String, Int, Int, String, Long)].collect()
+        val byId = out.groupBy(_._3)
+        val ctx = s"case $case_ radius $radius: intervals=$ivs points=$rows"
+        points.foreach { case (c, p, id) =>
+          val onChrom = ivs.filter(_._1 == c)
+          val want = onChrom.map(dist(p, _)).minOption.filter(_ <= radius)
+          val got = byId.get(id).toSeq.flatten
+          val copies = rows.count(_._3 == id)
+          assert(got.length === (if (want.isDefined) copies else 0),
+            s"$id at $c:$p emitted ${got.length} rows; $ctx")
+          got.foreach { r =>
+            assert(Some(r._7) === want, s"$id dist ${r._7} != brute-force $want; $ctx")
+            assert(pick(c, p, ivs).contains((c, r._4, r._5, r._6)),
+              s"$id picked ${(r._4, r._5, r._6)}, tie rule says ${pick(c, p, ivs)}; $ctx")
+          }
+        }
+        assert(byId.keySet.subsetOf(points.map(_._3).toSet), ctx)
+      }
+    }
   }
 
   test("coverageDepth: hand-computed histogram, adjacency, chrom isolation") {
