@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import graft.functions.TextFunctions._
 
@@ -515,71 +516,123 @@ object Dedup {
         .select(keepCols: _*))
   }
 
-  /** Connected components over an undirected near-dup pair list:
-    * (id_a, id_b) → (id, comp), comp = min node id of the component.
-    * The step near-dup pipelines need between "pairs found" and "corpus
-    * deduplicated": transitive closure groups a↔b↔c into one cluster so
-    * exactly one representative survives.
+  /** Connected components over an undirected near-dup pair list of
+    * integral ids: (id_a, id_b) → (id, comp), comp = min node id of the
+    * component (a self-pair (9, 9) makes 9 its own component). The step
+    * between "pairs found" and "corpus deduplicated": transitive closure
+    * groups a↔b↔c into one cluster so exactly one representative survives.
     *
-    * Iterative min-label propagation (the GraphX shape without the
-    * dependency): each round every node adopts the min label in its
-    * neighborhood; converges in O(max component diameter) rounds —
-    * near-dup clusters are shallow stars around a template doc, so
-    * usually ≤5. Each round is one shuffle over the (id, comp) table
-    * (never the corpus), lineage truncated per round via localCheckpoint
-    * so the plan stays constant-size. The per-round convergence count is
-    * a driver action by design: the standard fixed-point pattern for
-    * iterative graph algorithms on Spark.
+    * Contract locally, merge only where needed. The pairs hash on their
+    * least end (one shuffle, AQE-coalesced when small) and each partition
+    * runs a union-find, emitting (node, local min). When one partition
+    * held every pair, those local mins are the answer and the job that
+    * materializes them is the only one. Otherwise the star edges run
+    * large-star / small-star rounds (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC 2014) to one star per
+    * component: O(log² n) rounds whatever the diameter, and stars that
+    * no node straddles come back from the first round unchanged. Every
+    * check is an `Observation` on the job that materializes its table,
+    * never a separate count.
+    *
+    * Tables are node-sized, cut by localCheckpoint (blocks of superseded
+    * rounds are released by the ContextCleaner). Those blocks die with
+    * their executor: at 100 TB pass reliable = true (requires
+    * sparkContext.setCheckpointDir) to cut through the checkpoint
+    * DIRECTORY — restartable for one fs round-trip per table.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
+  def connectedComponents(pairs: DataFrame,
       reliable: Boolean = false): DataFrame = {
-    // localCheckpoint blocks live on executors: one executor death
-    // mid-iteration kills a long CC run. For 100 TB dedup jobs pass
-    // reliable = true (requires sparkContext.setCheckpointDir) to cut
-    // lineage through the checkpoint DIRECTORY instead — restartable at
-    // the cost of one fs round-trip per iteration.
-    require(!reliable ||
-      pairs.sparkSession.sparkContext.getCheckpointDir.isDefined,
+    val spark = pairs.sparkSession
+    require(!reliable || spark.sparkContext.getCheckpointDir.isDefined,
       "reliable = true needs spark.sparkContext.setCheckpointDir(...)")
-    // r17 (guide §5.2 — the driver loop): checkpoints are LAZY and the
-    // round's convergence count is what materializes them, so each
-    // round pays ONE job instead of eager-checkpoint + count; the
-    // changed flag rides the label row itself, replacing the previous
-    // spelling's extra next⋈labels self-join. q182 wall was 9.9 s on
-    // 3.9 exec-s — pure per-job scheduling/planning overhead.
-    def cp(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(false) else df.localCheckpoint(false)
-    val edges = cp(pairs
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct())
-    var labels = cp(edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("comp")))
-    var done = false
-    var i = 0
-    while (!done && i < maxIter) {
-      val nbr = edges
-        .join(labels.select(col("id").as("src"), col("comp")), "src")
-        .groupBy(col("dst").as("id")).agg(min("comp").as("__nc"))
-      // __ch ⟺ the min neighbor label beats the own label — exactly
-      // the previous "next.comp < prev.comp" (labels only decrease)
-      val next = cp(labels.join(nbr, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("__nc"), col("comp"))).as("comp"),
-          (coalesce(col("__nc"), col("comp")) < col("comp")).as("__ch")))
-      val changed = next.filter(col("__ch")).count()
-      // the previous round's checkpoint blocks are released by Spark's
-      // ContextCleaner once this reassignment drops the last reference
-      // (localCheckpoint persists RDD-side; Dataset.unpersist can't reach
-      // it) — storage holds at most ~2 rounds of the label table
-      labels = next.drop("__ch")
-      done = changed == 0
-      i += 1
+    import spark.implicits._
+    val ends = pairs.select(least(col("id_a"), col("id_b")).as("a"),
+      greatest(col("id_a"), col("id_b")).as("b"))
+    val idType = ends.schema("a").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"connectedComponents needs integral ids, got $idType")
+    def cp(df: DataFrame, eager: Boolean): DataFrame =
+      if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
+    val contracted = Observation()
+    val stars = cp(ends.filter(col("a").isNotNull)
+      .select(col("a").cast("long"), col("b").cast("long"))
+      .repartition(col("a")).as[(Long, Long)]
+      .mapPartitions(localStars).toDF("id", "root", "part")
+      .observe(contracted, count(lit(1)).as("rows"),
+        min("part").as("first"), max("part").as("last")), eager = true)
+    val seen = contracted.get
+    // one partition held every pair: its local mins are the global ones
+    val labels = if (seen("first") == seen("last")) {
+      stars.select(col("id"), col("root").as("comp"))
+    } else {
+      // star rows bound the node count from above
+      val rows = seen("rows").asInstanceOf[Long]
+      val bound = math.pow(65 - java.lang.Long.numberOfLeadingZeros(rows), 2).toInt
+      var edges = stars.filter(col("id") =!= col("root"))
+        .select(col("id").as("hi"), col("root").as("lo"))
+      var round = 0
+      var settled = false
+      while (!settled) {
+        round += 1
+        require(round <= bound, s"connectedComponents: merge round $round " +
+          s"exceeds the O(log² n) bound of $bound rounds for $rows star rows")
+        val signal = Observation()
+        edges = cp(largeStar(edges, signal), eager = true)
+        settled = signal.get("unsettled") == 0L
+        if (!settled) edges = smallStar(edges)
+      }
+      // a leaf takes its star's center; centers and singletons keep themselves
+      stars.select("id").distinct().join(edges, col("id") === col("hi"), "left")
+        .select(col("id"), coalesce(col("lo"), col("id")).as("comp"))
     }
-    require(done, s"connectedComponents did not converge in $maxIter rounds " +
-      "(component diameter exceeds maxIter); raise maxIter")
-    labels
+    labels.select(col("id").cast(idType).as("id"), col("comp").cast(idType).as("comp"))
   }
+
+  /** One partition's union-find (union by min, path halving): (node,
+    * local min, partition) for every node its edges touch, boxed so the
+    * label columns stay nullable like the corpus ids they label.
+    */
+  private def localStars(edges: Iterator[(Long, Long)])
+      : Iterator[(java.lang.Long, java.lang.Long, Int)] = {
+    val parent = new scala.collection.mutable.LongMap[Long]()
+    def find(x: Long): Long = {
+      var n = x
+      while (parent(n) != n) { parent(n) = parent(parent(n)); n = parent(n) }
+      n
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(parent.getOrElseUpdate(a, a)), find(parent.getOrElseUpdate(b, b)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val part = org.apache.spark.TaskContext.getPartitionId()
+    parent.keys.toArray.iterator.map(n => (Long.box(n), Long.box(find(n)), part))
+  }
+
+  /** Large-star over (hi > lo) edges: each node's larger neighbors hang
+    * off the least of its closed neighborhood. `unsettled` counts nodes
+    * that are neither a center (all neighbors larger) nor a leaf (one,
+    * smaller) — zero iff the input was already a star forest, returned
+    * unchanged.
+    */
+  private def largeStar(edges: DataFrame, signal: Observation): DataFrame =
+    edges.select(col("hi").as("u"), col("lo").as("v"))
+      .unionAll(edges.select(col("lo").as("u"), col("hi").as("v")))
+      .groupBy("u").agg(collect_set("v").as("ns"))
+      .select(col("u"), col("ns"), array_min(col("ns")).as("mn"))
+      .observe(signal,
+        count(when(col("mn") < col("u") && size(col("ns")) > 1, 1)).as("unsettled"))
+      .select(explode(col("ns")).as("hi"), least(col("u"), col("mn")).as("lo"), col("u"))
+      .filter(col("hi") > col("u"))
+      .select("hi", "lo")
+
+  /** Small-star over (hi > lo) edges: each node and its smaller neighbors
+    * hang off the least of them.
+    */
+  private def smallStar(edges: DataFrame): DataFrame =
+    edges.groupBy("hi").agg(collect_set("lo").as("ns"))
+      .select(explode(array_union(col("ns"), array(col("hi")))).as("hi"),
+        array_min(col("ns")).as("lo"))
+      .filter(col("hi") =!= col("lo"))
 
   /** INCREMENTAL component maintenance — fold a new batch of near-dup
     * pairs into a STANDING label table without recomputing from the
@@ -590,26 +643,25 @@ object Dedup {
     * lossless summary of all prior connectivity that is NODES-sized,
     * not pairs-sized (a viral cluster of 10⁶ members contributed up to
     * 10⁶·banding pairs over its history but exactly 10⁶ star edges
-    * here), and stars have diameter 2, so the fixed point lands in
-    * 2–3 rounds regardless of how deep the ORIGINAL pair chains were.
-    * Labels stay canonical (comp = min node id of the merged
-    * component) because old labels are themselves member ids: min
-    * propagates through the union exactly as it would over the full
-    * history (batch ≡ incremental, spec-pinned including cross-batch
-    * bridges that merge two standing components).
+    * here), and a star edge's least end is its center, so a standing
+    * star hashes whole into one partition and the local union-find
+    * contracts it however deep the ORIGINAL pair chains were. Labels
+    * stay canonical (comp = min node id of the merged component)
+    * because old labels are themselves member ids: the merged min is
+    * the min over the full history (batch ≡ incremental, spec-pinned
+    * including cross-batch bridges that merge two standing components).
     *
     * Self-labeled singletons pass through as self-edges and keep
     * themselves. At 100 TB this is the difference between re-running
     * CC over the accumulated pair log per ingest and one nodes-sized
-    * fixed point per batch.
+    * contraction per batch.
     */
   def mergeComponents(
-      state: DataFrame, newPairs: DataFrame, maxIter: Int = 25,
+      state: DataFrame, newPairs: DataFrame,
       reliable: Boolean = false): DataFrame = {
     val starEdges = state.select(col("id").as("id_a"), col("comp").as("id_b"))
     connectedComponents(
-      starEdges.unionAll(newPairs.select(col("id_a"), col("id_b"))),
-      maxIter, reliable)
+      starEdges.unionAll(newPairs.select(col("id_a"), col("id_b"))), reliable)
   }
 
   /** One representative per near-dup cluster: docs joined to their
@@ -617,21 +669,22 @@ object Dedup {
     * min id within the cluster AMONG DOCS PRESENT — docs may be a
     * filtered view of the corpus the pairs were computed on, and a
     * cluster whose label-doc was filtered out must still elect a
-    * survivor. The rep aggregation runs on the component-matched subset
-    * only (bounded by paired docs, tiny next to the corpus); the
-    * corpus-side cost is two joins whose strategy is left to AQE — comp
-    * is usually broadcast-small, but a heavily-duplicated corpus can
-    * make it arbitrarily large, and forcing broadcast would OOM exactly
-    * when dedup matters most. Never a corpus-wide window/sort.
+    * survivor. The election is a window over the label table semi-joined
+    * to the docs (bounded by paired docs, tiny next to the corpus, one id
+    * per row however often docs repeats one); the corpus-side cost is
+    * that semi-join plus one left join, both strategies left to AQE —
+    * the labels are usually broadcast-small, but a heavily-duplicated
+    * corpus can make them arbitrarily large, and forcing broadcast would
+    * OOM exactly when dedup matters most. Never a corpus-wide
+    * window/sort.
     */
   def representatives(
       docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val comp = connectedComponents(pairs)
+    val lab = connectedComponents(pairs)
       .select(col("id").as(idCol), col("comp"))
-    val present = docs.select(col(idCol)).join(comp, Seq(idCol))
-    val reps = present.groupBy("comp").agg(min(col(idCol)).as("__rep"))
-    docs.join(comp, Seq(idCol), "left")
-      .join(reps, Seq("comp"), "left")
+      .join(docs.select(col(idCol)), Seq(idCol), "left_semi")
+      .withColumn("__rep", min(col(idCol)).over(Window.partitionBy("comp")))
+    docs.join(lab, Seq(idCol), "left")
       .withColumn("cluster", coalesce(col("comp"), col(idCol))).drop("comp")
       .withColumn("is_rep", col(idCol) === coalesce(col("__rep"), col(idCol)))
       .drop("__rep")
@@ -688,7 +741,7 @@ object Dedup {
     * space goes to 'test'.
     *
     * Scale shape: the near-dup pair list and CC labeling are the q38
-    * machinery (banded equi-joins, label-table-only iteration); this
+    * machinery (banded equi-joins, node-sized label contraction); this
     * adds one broadcast-sized join of labels onto docs and a NARROW
     * hash projection — no new exchange class. Note the split is
     * cluster-COUNT-balanced, not token-balanced: a giant cluster tips

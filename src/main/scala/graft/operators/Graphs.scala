@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Iterative GRAPH algebra beyond [[Dedup.connectedComponents]]'
-  * min-label propagation: damped PageRank as a fixed number of
+  * contraction: damped PageRank as a fixed number of
   * join-aggregate rounds — the relational rendering of the power
   * iteration every distributed graph engine (GraphX/Pregel) runs, with
   * the scores in MICRO fixed-point int64 so every round is exact
@@ -84,8 +84,8 @@ object Graphs {
             .as("p"))
       // cut mid-run only: the FINAL round stays lazy so the caller's
       // downstream plan composes with it (prior checkpoint blocks are
-      // released by the ContextCleaner as references drop — the
-      // connectedComponents storage contract: ~2 rounds of |V| rows)
+      // released by the ContextCleaner as references drop, so storage
+      // holds ~2 rounds of |V| rows)
       p = if (deep && i % cutEvery == 0 && i < iters) cp(next) else next
     }
     p
@@ -120,8 +120,8 @@ object Graphs {
     * how many triangles each edge participates in. Support-0 edges are
     * the bridges/noise a community-detection pass prunes first; a
     * k-truss keeps edges with support ≥ k−2 (iterate prune →
-    * re-support to convergence, the [[Dedup.connectedComponents]]
-    * fixed-point pattern — each round is THIS operator over the
+    * re-support to convergence, [[trussEdges]]' fixed point — each
+    * round is THIS operator over the
     * surviving edge set). Same enumeration cost as [[triangleCounts]]
     * (one triangle list, the degree-ordered O(√m) wedge bound), plus
     * a 3-edge fan-out and one canonical-pair partial agg. Returns
@@ -147,7 +147,7 @@ object Graphs {
     * the surviving edge set + one anti-filter; lineage cut per round
     * (localCheckpoint, or the checkpoint directory with
     * `reliable = true` — the [[Dedup.connectedComponents]] contract),
-    * convergence count a driver action by design. Returns the
+    * convergence count one action per round. Returns the
     * surviving canonical (u, v) edges.
     */
   def trussEdges(
@@ -193,8 +193,8 @@ object Graphs {
     * cascade exactly like the truss (a node held at degree k by a
     * peeled neighbor dies next round). Each round is one degree agg +
     * one semi-join of edges against surviving nodes; lineage cut per
-    * round, convergence count a driver action by design (the
-    * [[Dedup.connectedComponents]] contract). Returns the surviving
+    * round (the [[Dedup.connectedComponents]] checkpoint contract),
+    * convergence count one action per round. Returns the surviving
     * (node, degree) rows — degree measured in the FINAL subgraph, the
     * k-core's own degrees (all ≥ k).
     */

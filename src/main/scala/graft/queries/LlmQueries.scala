@@ -686,7 +686,7 @@ object LlmQueries extends QuerySet {
     * per-cluster summary. Closes the dedup loop: transitive a↔b↔c
     * groups become ONE cluster (one survivor), which pair lists alone
     * can't express. Oracle = recursive reachability in DuckDB (min
-    * reachable id ≡ the min-label fixed point).
+    * reachable id ≡ the component's min-id label).
     */
   private val q38 = Q(
     "q38_dedup_cluster",

@@ -87,6 +87,94 @@ class DedupClusterSpec extends AnyFunSuite with SparkSpec {
       10L -> 10L, 11L -> 10L))
   }
 
+  /** Plain-Scala union-find: every node of `pairs` → its component's min. */
+  private def referenceLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(n => n -> find(n)).toMap
+  }
+
+  private def withCoalescing[A](on: Boolean)(body: => A): A = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, on.toString)
+    try body finally spark.conf.set(key, old)
+  }
+
+  test("property: labels are the component min id on random paths, stars, " +
+      "cliques and forests with self, duplicate and reversed pairs, " +
+      "coalesced or at 8 partitions, local or reliable") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    if (spark.sparkContext.getCheckpointDir.isEmpty)
+      spark.sparkContext.setCheckpointDir(TempDirs.create("graft_cc_prop").toString)
+    def shape(ids: Seq[Long]): Gen[Seq[(Long, Long)]] = Gen.oneOf(
+      Gen.const(ids.zip(ids.tail)),                                     // path
+      Gen.const(ids.tail.map(ids.head -> _)),                           // star
+      Gen.const(ids.combinations(2).map(c => (c(0), c(1))).toSeq),      // clique
+      Gen.sequence[Seq[(Long, Long)], (Long, Long)](ids.indices.tail    // random tree
+        .map(i => Gen.choose(0, i - 1).map(j => (ids(j), ids(i))))))
+    val graph: Gen[Seq[(Long, Long)]] = for {
+      sizes <- Gen.listOfN(6, Gen.choose(1, 12))
+      picked <- Gen.pick(sizes.sum, 0L until 500L)
+      order <- Gen.long
+      ids = new scala.util.Random(order).shuffle(picked.toVector)
+      comps <- Gen.sequence[Seq[Seq[(Long, Long)]], Seq[(Long, Long)]](
+        sizes.scanLeft(0)(_ + _).zip(sizes).map { case (at, n) => shape(ids.slice(at, at + n)) })
+      edges = comps.flatten
+      dups <- Gen.someOf(edges)
+      selfs <- Gen.someOf(ids)
+      flips <- Gen.listOfN(edges.length + dups.length, Gen.prob(0.5))
+    } yield (edges ++ dups).zip(flips).map { case (e, f) => if (f) e.swap else e } ++
+      selfs.map(i => (i, i))
+    def check(pairs: Seq[(Long, Long)]): Boolean = {
+      val want = referenceLabels(pairs)
+      val df = pairs.toDF("id_a", "id_b")
+      for (coalesce <- Seq(true, false); reliable <- Seq(false, true)) {
+        val got = withCoalescing(coalesce) {
+          Dedup.connectedComponents(df, reliable = reliable).as[(Long, Long)].collect()
+        }
+        assert(got.length === want.size && got.toMap === want,
+          s"coalesce=$coalesce reliable=$reliable pairs=$pairs")
+      }
+      true
+    }
+    assert(check(Seq.empty))
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(6)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261019L)), Prop.forAllNoShrink(graph)(check))
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  /** Jobs `body` starts, counted from the listener bus once it is quiet. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { quiesce(jobs); jobs.set(0); body; quiesce(jobs); jobs.get() }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a pair list that coalesces to one partition: connectedComponents " +
+      "runs ≤ 3 jobs, representatives ≤ 6") {
+    // near-dup shaped: two template stars, a chain and a bridge pair
+    val pairs = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (10L, 11L),
+      (10L, 12L), (20L, 21L), (21L, 22L), (22L, 23L), (30L, 31L)).toDF("id_a", "id_b")
+    val docs = (1L to 40L).map(i => (i, s"doc $i")).toDF("id", "text")
+    val cc = jobsOf(Dedup.connectedComponents(pairs).collect())
+    assert(cc <= 3, s"connectedComponents ran $cc jobs")
+    val reps = jobsOf(Dedup.representatives(docs, "id", pairs).collect())
+    assert(reps <= 6, s"representatives ran $reps jobs")
+  }
+
   test("bestPerCluster keeps the max-score member, ties to lowest id") {
     val docs = Seq((1L, 5L), (2L, 9L), (3L, 9L), (9L, 4L))
       .toDF("id", "score")
@@ -114,11 +202,19 @@ class DedupClusterSpec extends AnyFunSuite with SparkSpec {
     assert(minId === Seq(1L), "control: min-id election keeps the mirror")
   }
 
-  test("maxIter too small for the diameter fails loudly instead of silently") {
-    val pairs = (1L until 8L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(pairs, maxIter = 2)
+  test("a 10k-node path spread over 8 partitions converges") {
+    // diameter 9999: far past any per-hop round budget. Uncoalesced, the
+    // path's edges land in 8 partitions, so nodes straddle and the
+    // large-star/small-star merge loop must run
+    val n = 10000L
+    val order = new scala.util.Random(7).shuffle((0L until n - 1).toVector)
+    val pairs = order.map(i => if (i % 2 == 0) (i, i + 1) else (i + 1, i))
+      .toDF("id_a", "id_b").repartition(8)
+    val m = withCoalescing(false) {
+      Dedup.connectedComponents(pairs).as[(Long, Long)].collect()
     }
+    assert(m.length === n)
+    assert(m.forall(_._2 == 0L), m.filter(_._2 != 0L).take(5).mkString(","))
   }
 
   test("leakFreeSplit: near-dup clusters never straddle the split") {

@@ -727,23 +727,6 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(books1(1)(0) === Seq(mean, mean))
   }
 
-  /** Wait until an async listener counter has been STABLE for several
-    * consecutive windows — the fixed Thread.sleep it replaces raced the
-    * listener bus both ways (stray pre-reset events landing after the
-    * reset = false failure; the measured query's trailing events
-    * landing after the read = a real regression undercounted).
-    */
-  private def quiesce(c: java.util.concurrent.atomic.AtomicInteger): Unit = {
-    var last = -1
-    var stable = 0
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (stable < 3 && System.nanoTime() < deadline) {
-      Thread.sleep(100)
-      val v = c.get()
-      if (v == last) stable += 1 else { stable = 0; last = v }
-    }
-  }
-
   test("pqTrainStep runs ONE corpus scan for all subspaces") {
     // scan counting, not job counting: AQE turns every shuffle-bearing
     // collect into ≥2 jobs — the invariant that matters is that the

@@ -15,6 +15,23 @@ trait SparkSpec { self: Suite =>
     spark.conf.set(key, bytes.toString)
     try body finally spark.conf.set(key, old)
   }
+
+  /** Wait until an async listener counter has been STABLE for several
+    * consecutive windows — a fixed Thread.sleep races the listener bus
+    * both ways (stray pre-reset events landing after the reset = false
+    * failure; the measured query's trailing events landing after the
+    * read = a real regression undercounted).
+    */
+  protected def quiesce(c: java.util.concurrent.atomic.AtomicInteger): Unit = {
+    var last = -1
+    var stable = 0
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (stable < 3 && System.nanoTime() < deadline) {
+      Thread.sleep(100)
+      val v = c.get()
+      if (v == last) stable += 1 else { stable = 0; last = v }
+    }
+  }
 }
 
 object SparkSpec {
