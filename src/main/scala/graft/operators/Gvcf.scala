@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
+import graft.expressions.{IntervalExprs, IntervalIndex}
+
 /** gVCF REFERENCE-BLOCK semantics — the `<NON_REF>` + `END` INFO span
   * model (GATK gVCF / VCF 4.2 §1.6.1 reserved END key): a banded gVCF
   * compresses runs of reference-confident positions into ONE record
@@ -49,26 +51,36 @@ object Gvcf {
 
   /** Which gVCF record covers each locus: `loci` (chrom, pos, …)
     * range-joined to the banded records whose span contains the
-    * position. Rides [[RangeJoin.pointInInterval]]'s bucket
-    * decomposition — an EQUI-join on (chrom, bucket) with the exact
-    * range predicate in-join, never a nested loop; both sides shuffle
-    * once on (chrom, bucket), zero times off a (chrom, pos_bucket)
-    * bucketed landing at the same shift. Inner semantics: an
-    * uncovered locus (a gap between bands) emits nothing — left-join
-    * the probe list back downstream to surface gaps. The record's own
-    * `pos` column is dropped in favor of `start` so the probe's pos
-    * survives unambiguously.
+    * position. The loci — the small probe list — are collected into an
+    * [[graft.expressions.IntervalIndex]] of `[pos, pos]` points, and
+    * each gVCF span probes it in one narrow compiled stage: no join, no
+    * exchange of the gVCF side. Inner semantics: an uncovered locus (a
+    * gap between bands) emits nothing — left-join the probe list back
+    * downstream to surface gaps. Output is the loci columns, then the
+    * record's columns minus chrom; the record's own `pos` column is
+    * dropped in favor of `start` so the probe's pos survives
+    * unambiguously.
     */
   def locusQuery(
       gvcf: DataFrame, loci: DataFrame,
       chromCol: String = "chrom", posCol: String = "pos",
-      refCol: String = "ref", infoCol: String = "info",
-      bucketShift: Int = 20): DataFrame =
-    RangeJoin.pointInInterval(
-      loci,
-      expandToSpans(gvcf, posCol, refCol, infoCol).drop(posCol),
-      chromCol = chromCol, posCol = posCol,
-      bucketShift = bucketShift)
+      refCol: String = "ref", infoCol: String = "info"): DataFrame = {
+    val spans = expandToSpans(gvcf, posCol, refCol, infoCol).drop(posCol)
+    val ix = IntervalIndex.collect(loci, chromCol, posCol, posCol,
+      "Gvcf.locusQuery", "loci")
+    val g = spans.columns.toSeq
+    val l = loci.columns.toSeq.filterNot(_ == chromCol)
+    // positional names: record and locus columns may share a name
+    val probed = spans
+      .select(col("*"), inline(IntervalExprs.hits(col(chromCol), col("start"), col("end"), ix)))
+      .toDF(g.indices.map(i => s"__g$i") ++ l.indices.map(i => s"__l$i"): _*)
+    val lociOut = loci.columns.toSeq.map { c =>
+      if (c == chromCol) col(s"__g${g.indexOf(chromCol)}").as(c)
+      else col(s"__l${l.indexOf(c)}").as(c)
+    }
+    val spanOut = g.indices.filter(g(_) != chromCol).map(i => col(s"__g$i").as(g(i)))
+    probed.select(lociOut ++ spanOut: _*)
+  }
 
   /** COHORT LOCUS STATE — the GenotypeGVCFs-shaped question "what
     * does EVERY sample say at locus X": per (locus, sample) the
@@ -83,7 +95,7 @@ object Gvcf {
     * (chrom, pos); a sample whose records overlap a locus more than
     * once (malformed banding) emits one row per covering record.
     *
-    * Shape: [[locusQuery]]'s bucket equi-join + a loci × sample-panel
+    * Shape: [[locusQuery]]'s index probe + a loci × sample-panel
     * grid (the panel is parameter-small — BROADCAST; the grid is
     * |loci|·|samples| rows, the answer's own size) + one left join
     * back on (chrom, pos, sample). No corpus-side extra exchanges.
@@ -92,13 +104,12 @@ object Gvcf {
       gvcf: DataFrame, loci: DataFrame,
       sampleCol: String = "sample_id",
       chromCol: String = "chrom", posCol: String = "pos",
-      refCol: String = "ref", infoCol: String = "info",
-      bucketShift: Int = 20): DataFrame = {
+      refCol: String = "ref", infoCol: String = "info"): DataFrame = {
     // the range join runs on the bare (chrom, pos) probe — any loci
     // payload columns ride in from the grid side, never duplicated
     val covered = locusQuery(gvcf,
       loci.select(col(chromCol), col(posCol)), chromCol, posCol, refCol,
-      infoCol, bucketShift)
+      infoCol)
     val samples = gvcf.select(col(sampleCol)).distinct()
     val grid = loci.crossJoin(broadcast(samples))
     grid.join(covered, Seq(chromCol, posCol, sampleCol), "left")
@@ -132,7 +143,7 @@ object Gvcf {
     * arity (nAlts+1)(nAlts+2)/2 and the haploid arity nAlts+1 never
     * coincide for nAlts ≥ 1, so the two calls can't be confused.
     *
-    * Shape: [[cohortLocusState]]'s plan (bucket equi-join + the
+    * Shape: [[cohortLocusState]]'s plan (index probe + the
     * answer-sized broadcast grid) + ONE narrow projection whose PL
     * fold is one compiled [[graft.expressions.JointCallKernel]] call
     * referenced once (§8 staging rule — each element parses once,
@@ -144,10 +155,9 @@ object Gvcf {
       sampleCol: String = "sample_id",
       gtCol: String = "gt", plCol: String = "pl",
       chromCol: String = "chrom", posCol: String = "pos",
-      refCol: String = "ref", infoCol: String = "info",
-      bucketShift: Int = 20): DataFrame = {
+      refCol: String = "ref", infoCol: String = "info"): DataFrame = {
     val st = cohortLocusState(gvcf, loci, sampleCol, chromCol, posCol,
-      refCol, infoCol, bucketShift)
+      refCol, infoCol)
     // ONE compiled pass carrying (min, argmin, second-min, cursor,
     // bad) — the q213 single-pass pattern extended with the GQ gap;
     // r17: the previous Column `aggregate` HOF ran INTERPRETED per

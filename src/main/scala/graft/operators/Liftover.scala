@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * that mixes GRCh37 and GRCh38 resources runs it): map each
   * variant's (chrom, pos) through a CHAIN of alignment blocks — the
   * UCSC chain-file model, here a plain DataFrame so the chain lands
-  * as parquet and broadcasts like any dimension — rewriting position
+  * as parquet and is indexed like any dimension — rewriting position
   * and, on minus-strand blocks, REVERSE-COMPLEMENTING the alleles.
   *
   * Chain schema (one row per ungapped alignment block):
@@ -34,14 +34,13 @@ import org.apache.spark.sql.functions._
   *    ride VERBATIM — reverse-complementing a symbolic allele would
   *    corrupt it, and flagging beats mangling.
   *
-  * Shape: the q81 [[RangeJoin]] bucket decomposition as a LEFT join —
-  * the chain side explodes each block over its covered buckets, the
-  * variant side computes one bucket, and the equi-join on
-  * (chrom, bucket) carries the exact range predicate in-join (never a
-  * nested loop; a chain is dimension-sized, so with statistics it
-  * BROADCASTS and the variant stream never shuffles). Left semantics
-  * keep unmapped rows without a second pass. One narrow projection
-  * computes position arithmetic + the allele flip.
+  * Shape: the chain is dimension-sized, so it is collected into an
+  * [[graft.expressions.IntervalIndex]] when the operator is called and
+  * each variant probes it (`inline_outer` of `interval_hits`) in one
+  * narrow compiled stage — no join, and the variant stream never
+  * shuffles. The outer probe keeps unmapped rows without a second pass.
+  * One narrow projection computes position arithmetic + the allele
+  * flip.
   */
 object Liftover {
 
@@ -61,7 +60,7 @@ object Liftover {
     *
     * The file is read DRIVER-side: a chain file is dimension-sized
     * (tens of MB for a whole-genome lift — the same rows [[liftover]]
-    * broadcasts), and block lines are meaningless outside their
+    * indexes), and block lines are meaningless outside their
     * header's cursor state, so a distributed line parse would need a
     * whole-file shuffle anyway. Comment (`#`) and blank lines skipped.
     */
@@ -171,11 +170,9 @@ object Liftover {
       vcf: DataFrame, chain: DataFrame,
       chromCol: String = "chrom", posCol: String = "pos",
       refCol: String = "ref", altCol: String = "alt",
-      bucketShift: Int = 20,
       dstGenome: Map[String, String] = Map.empty,
       gtCols: Seq[String] = Nil): DataFrame =
     liftoverImpl(vcf, chain, chromCol, posCol, refCol, altCol,
-      bucketShift,
       if (dstGenome.isEmpty) null
       else graft.expressions.Genome.inline(dstGenome), gtCols)
 
@@ -186,30 +183,21 @@ object Liftover {
   def liftover(vcf: DataFrame, chain: DataFrame,
       dstGenome: graft.expressions.Genome,
       gtCols: Seq[String]): DataFrame =
-    liftoverImpl(vcf, chain, "chrom", "pos", "ref", "alt", 20,
+    liftoverImpl(vcf, chain, "chrom", "pos", "ref", "alt",
       dstGenome, gtCols)
 
   private def liftoverImpl(
       vcf: DataFrame, chain: DataFrame,
       chromCol: String, posCol: String,
       refCol: String, altCol: String,
-      bucketShift: Int,
       dstGenome: graft.expressions.Genome,
       gtCols: Seq[String]): DataFrame = {
-    require(bucketShift >= 0 && bucketShift < 32,
-      s"bucketShift must be in [0, 32), got $bucketShift")
-    val iv = chain
-      .select(col("chrom").as("__c"), col("start").as("__s"),
-        col("end").as("__e"), col("dst_chrom"), col("dst_start"),
-        col("strand"))
-      .withColumn("__b", explode(sequence(
-        shiftright(col("__s"), bucketShift),
-        shiftright(col("__e"), bucketShift))))
-    val p = vcf.withColumn("__b", shiftright(col(posCol), bucketShift))
-    val joined = p.join(iv,
-      p(chromCol) === iv("__c") && p("__b") === iv("__b") &&
-        p(posCol).between(iv("__s"), iv("__e")),
-      "left")
+    val ix = graft.expressions.IntervalIndex.collect(
+      chain.select(col("chrom"), col("start").as("__s"), col("end").as("__e"),
+        col("dst_chrom"), col("dst_start"), col("strand")),
+      "chrom", "__s", "__e", "Liftover.liftover", "chain")
+    val joined = vcf.select(col("*"), inline_outer(graft.expressions.IntervalExprs
+      .hits(col(chromCol), col(posCol), col(posCol), ix)))
     val minus = col("strand") === "-"
     val liftedPos = when(minus, col("dst_start") + (col("__e") - col(posCol)))
       .otherwise(col("dst_start") + (col(posCol) - col("__s")))
@@ -230,7 +218,7 @@ object Liftover {
           .when(minus, array_join(
             transform(split(col(altCol), ","), a => flipAllele(a)), ","))
           .otherwise(col(altCol)))
-      .drop("__b", "__c", "__s", "__e", "dst_chrom", "dst_start", "strand")
+      .drop("__s", "__e", "dst_chrom", "dst_start", "strand")
     if (dstGenome == null) lifted
     else validateRef(lifted, dstGenome, gtCols)
   }

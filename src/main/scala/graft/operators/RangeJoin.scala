@@ -4,90 +4,61 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Distributed genomic RANGE join (point-in-interval) — the operator
-  * behind "which gene/regulatory region does each variant fall in".
-  * Spark has no index nested-loop join, and a naive
-  * `chrom = chrom AND pos BETWEEN start AND end` plans the inequality
-  * as a per-chromosome broadcast-nested-loop — quadratic per chrom at
-  * 100 TB. The standard distributed reduction: decompose intervals into
-  * the fixed-width position buckets they span (explode — intervals are
-  * the small side and grow by span/width rows only), bucket the point
-  * side's position, and EQUI-join on (chrom, bucket) with the exact
-  * range predicate applied in-join. Candidates per point are bounded by
-  * interval-density × (width/bucket + 1); both sides shuffle once on
-  * (chrom, bucket) — or zero times when the points land pre-bucketed
-  * (`VcfReader.toBucketedTable`'s (chrom, pos_bucket) layout uses the
-  * same `pos >> 20` bucket function at the default shift).
+import graft.expressions.{IntervalExprs, IntervalIndex}
+
+/** Distributed genomic RANGE joins — the operators behind "which
+  * gene/regulatory region does each variant fall in". Spark has no index
+  * nested-loop join, and a naive `chrom = chrom AND pos BETWEEN start
+  * AND end` plans the inequality as a per-chromosome broadcast nested
+  * loop. Here the interval side — features, regions, chain blocks, the
+  * small side in every genomics join — is collected once, when the
+  * operator is called, into an [[graft.expressions.IntervalIndex]]: per
+  * chromosome the intervals sorted by start with an implicit interval
+  * tree (Li & Rong's IITree). The large side never shuffles: each of
+  * its rows probes the index in one narrow compiled stage
+  * (`interval_hits` for overlap, `interval_nearest` for the nearest
+  * feature), O(log n + hits) per probe for any interval geometry, with
+  * no bucket width to tune.
   *
-  * The nearest-feature join is not a bucket join: a point's nearest
-  * interval may sit any number of buckets away, so [[nearestInterval]]
-  * is one per-chromosome sort-merge sweep at every radius, with one
-  * tie rule (covered, then left, then max end / min start).
+  * Null rule, every operator: a row with a null chromosome, start, end
+  * or position never matches. Size guard: the indexed side must fit
+  * Spark's broadcast-table bounds, or the call fails naming the side
+  * that must be the small one.
   */
 object RangeJoin {
 
   /** Join `points` (chromCol, posCol, …) to every row of `intervals`
     * (chromCol, startCol, endCol, …) whose closed interval contains the
     * point. Output carries the point columns plus the interval's
-    * non-join columns. `bucketShift` sets the bucket width (2^shift bp)
-    * — match it to interval width (width ≈ bucket ⇒ ≤2 buckets per
-    * interval); the default 20 (~1 Mb) matches the landing layout.
+    * non-chrom columns; an interval row contained twice matches twice.
+    * `intervals` is the indexed (small) side.
     */
   def pointInInterval(
       points: DataFrame, intervals: DataFrame,
       chromCol: String = "chrom", posCol: String = "pos",
-      startCol: String = "start", endCol: String = "end",
-      bucketShift: Int = 20): DataFrame = {
-    require(bucketShift >= 0 && bucketShift < 32,
-      s"bucketShift must be in [0, 32), got $bucketShift")
-    val iv = intervals.withColumn("__b",
-      explode(sequence(
-        shiftright(col(startCol), bucketShift),
-        shiftright(col(endCol), bucketShift))))
-      .alias("i")
-    val p = points
-      .withColumn("__b", shiftright(col(posCol), bucketShift))
-      .alias("p")
-    p.join(iv,
-        col(s"p.$chromCol") === col(s"i.$chromCol") &&
-          col("p.__b") === col("i.__b") &&
-          col(s"p.$posCol").between(col(s"i.$startCol"), col(s"i.$endCol")))
-      .drop(col(s"i.$chromCol"))
-      .drop(col("p.__b")).drop(col("i.__b"))
+      startCol: String = "start", endCol: String = "end"): DataFrame = {
+    val ix = IntervalIndex.collect(intervals, chromCol, startCol, endCol,
+      "pointInInterval", "intervals")
+    points.select(col("*"),
+      inline(IntervalExprs.hits(col(chromCol), col(posCol), col(posCol), ix)))
   }
 
   /** Interval-interval OVERLAP join (closed intervals; `left` carries
     * `startCol`/`endCol`, `right` carries `rStartCol`/`rEndCol` — the
-    * caller renames so output columns cannot collide). Same bucket
-    * decomposition as [[pointInInterval]], both sides exploded; each
-    * overlapping pair is emitted EXACTLY once because only the bucket
-    * containing `max(start_l, start_r)` emits it — that bucket lies in
-    * both spans precisely when the intervals overlap (max(start) ≤
-    * min(end)), so no downstream distinct is needed (a distinct would
-    * be a second shuffle of the full pair stream).
+    * caller renames so output columns cannot collide). Output is the
+    * left columns plus the right's non-chrom columns, each overlapping
+    * row pair EXACTLY once. `right` is the indexed (small) side; each
+    * left row probes it.
     */
   def intervalOverlap(
       left: DataFrame, right: DataFrame,
       chromCol: String = "chrom",
       startCol: String = "start", endCol: String = "end",
-      rStartCol: String = "r_start", rEndCol: String = "r_end",
-      bucketShift: Int = 20): DataFrame = {
-    require(bucketShift >= 0 && bucketShift < 32,
-      s"bucketShift must be in [0, 32), got $bucketShift")
-    def burst(df: DataFrame, s: String, e: String) =
-      df.withColumn("__b", explode(sequence(
-        shiftright(col(s), bucketShift), shiftright(col(e), bucketShift))))
-    val l = burst(left, startCol, endCol).alias("l")
-    val r = burst(right, rStartCol, rEndCol).alias("r")
-    l.join(r,
-        col(s"l.$chromCol") === col(s"r.$chromCol") &&
-          col("l.__b") === col("r.__b") &&
-          col(s"l.$startCol") <= col(s"r.$rEndCol") &&
-          col(s"r.$rStartCol") <= col(s"l.$endCol") &&
-          col("l.__b") === shiftright(
-            greatest(col(s"l.$startCol"), col(s"r.$rStartCol")), bucketShift))
-      .drop(col(s"r.$chromCol"))
-      .drop(col("l.__b")).drop(col("r.__b"))
+      rStartCol: String = "r_start", rEndCol: String = "r_end"): DataFrame = {
+    val ix = IntervalIndex.collect(right, chromCol, rStartCol, rEndCol,
+      "intervalOverlap", "right")
+    left.select(col("*"),
+      inline(IntervalExprs.hits(col(chromCol), col(startCol), col(endCol), ix)))
   }
 
   /** NEAREST-feature join — the distributed `bedtools closest -d`
@@ -99,27 +70,21 @@ object RangeJoin {
     * intervals, drop. Every point ROW emits at most one row, so
     * byte-identical duplicate point rows each keep their own output.
     *
-    * Shape: one per-chromosome SORT-MERGE SWEEP, the [[mergeIntervals]]
-    * window pattern: union the points with the intervals keyed at their
-    * start coordinate, then over ONE (chrom)-partitioned ordering take
-    * (a) the running max-end interval among starts ≤ pos — if its end
-    * ≥ pos the point is COVERED (dist 0), else it is the true nearest
-    * LEFT neighbor (every uncovered start-≤-pos interval ends before
-    * pos) — and (b) in the reversed ordering the running min-start
+    * Shape: the intervals are indexed (the small side) with their
+    * neighbour tables, and each point probes `interval_nearest` in one
+    * narrow stage: (a) the max-(end, start, payload…) interval among
+    * starts ≤ pos — if its end ≥ pos the point is COVERED (dist 0), else
+    * it is the true nearest LEFT neighbor (every uncovered start-≤-pos
+    * interval ends before pos) — and (b) the min-(start, end, payload…)
     * interval among starts ≥ pos, the nearest RIGHT neighbor; emit the
     * nearer. Tie rule: covered, then left, then the left neighbor with
     * the max (end, start, payload…) / the right neighbor with the min
     * (start, end, payload…) — deterministic; `dist` itself is always
     * the true minimum, which is what aggregates downstream should read.
-    *
-    * Cost: ONE exchange on chrom (the second window reuses the first's
-    * partitioning — opposite sort, no re-shuffle), O(points +
-    * intervals) rows, no join fan-out and no radius-dependent work for
-    * any interval geometry. Each chromosome is one task, the
-    * [[mergeIntervals]] scale note. Interval payload + start/end columns
-    * must not collide with point columns (caller renames, the
-    * [[intervalOverlap]] contract), and `distCol` must not pre-exist on
-    * either input.
+    * No exchange and no radius-dependent work for any interval geometry.
+    * Interval payload + start/end columns must not collide with point
+    * columns (caller renames, the [[intervalOverlap]] contract), and
+    * `distCol` must not pre-exist on either input.
     */
   def nearestInterval(
       points: DataFrame, intervals: DataFrame,
@@ -132,59 +97,29 @@ object RangeJoin {
       .filterNot(Set(chromCol, startCol, endCol))
     val clash = (ivPayload :+ startCol :+ endCol).filter(points.columns.contains)
     require(clash.isEmpty,
-      s"interval columns $clash collide with point columns — rename them before the sweep")
+      s"interval columns $clash collide with point columns — rename them before the probe")
     require(!points.columns.contains(distCol) && !intervals.columns.contains(distCol),
       s"output column '$distCol' already exists on an input — pass distCol to rename it")
-    val reserved = ivPayload.filter(Set("__e", "__s"))
+    val reserved = points.columns.filter(Set("__bl", "__br"))
     require(reserved.isEmpty,
-      s"interval payload columns $reserved collide with the sweep's internal struct fields")
+      s"point columns ${reserved.mkString(", ")} collide with the probe's neighbour columns")
+    val ix = IntervalIndex.collect(intervals, chromCol, startCol, endCol,
+      "nearestInterval", "intervals", nearest = true)
 
-    // one unified event stream: interval rows enter at coord = start
-    // carrying themselves twice — end-major for the left pass's running
-    // max, start-major for the right pass's running min (struct
-    // comparison is field-order lexicographic)
-    val ivL = struct(col(endCol).as("__e") +: col(startCol).as("__s") +:
-      ivPayload.map(col): _*)
-    val ivR = struct(col(startCol).as("__s") +: col(endCol).as("__e") +:
-      ivPayload.map(col): _*)
     val ptCols = points.columns.toSeq.filterNot(_ == chromCol)
-    val iv = intervals.select(
-      col(chromCol) +: col(startCol).cast("long").as("__coord") +:
-        lit(0).as("__tag") +: ivL.as("__il") +: ivR.as("__ir") +:
-        ptCols.map(c => lit(null).cast(points.schema(c).dataType).as(c)): _*)
-    val ivLType = intervals.select(ivL).schema.head.dataType
-    val ivRType = intervals.select(ivR).schema.head.dataType
-    val pt = points.select(
-      col(chromCol) +: col(posCol).cast("long").as("__coord") +:
-        lit(1).as("__tag") +: lit(null).cast(ivLType).as("__il") +:
-        lit(null).cast(ivRType).as("__ir") +: ptCols.map(col): _*)
-
-    // intervals sort before points at equal coordinate (tag asc) so a
-    // start == pos interval is visible to the covering test
-    val wl = Window.partitionBy(col(chromCol))
-      .orderBy(col("__coord").asc, col("__tag").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wr = Window.partitionBy(col(chromCol))
-      .orderBy(col("__coord").desc, col("__tag").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val pos = col("__coord")
-    val covered = col("__bl").isNotNull && col("__bl.__e") >= pos
-    val ld = when(col("__bl").isNotNull, (pos - col("__bl.__e")).cast("long"))
-    val rd = when(col("__br").isNotNull, (col("__br.__s") - pos).cast("long"))
+    val pos = col(posCol).cast("long")
+    val covered = col("__bl").isNotNull && col(s"__bl.$endCol") >= pos
+    val ld = when(col("__bl").isNotNull, (pos - col(s"__bl.$endCol")).cast("long"))
+    val rd = when(col("__br").isNotNull, (col(s"__br.$startCol") - pos).cast("long"))
     val useLeft = covered ||
       (col("__bl").isNotNull && (col("__br").isNull || ld <= rd))
     val dist = when(covered, lit(0L)).otherwise(least(ld, rd))
-    def pick(l: Column, r: Column) = when(useLeft, l).otherwise(r)
-    iv.unionByName(pt)
-      .withColumn("__bl", max(col("__il")).over(wl))
-      .withColumn("__br", min(col("__ir")).over(wr))
-      // `dist` is NULL only with no interval on either side, so the
-      // radius test also drops points on interval-less chromosomes
-      .filter(col("__tag") === 1 && dist <= maxDist)
-      .select(col(chromCol) +: ptCols.map(col) ++: Seq(
-        pick(col("__bl.__s"), col("__br.__s")).as(startCol),
-        pick(col("__bl.__e"), col("__br.__e")).as(endCol)) ++:
-        ivPayload.map(c => pick(col(s"__bl.$c"), col(s"__br.$c")).as(c)) :+
+    def pick(c: String) = when(useLeft, col(s"__bl.$c")).otherwise(col(s"__br.$c"))
+    points
+      .select(col("*"), inline(IntervalExprs.nearest(col(chromCol), col(posCol), ix)))
+      .filter(dist <= maxDist)
+      .select(col(chromCol) +: ptCols.map(col) ++:
+        (Seq(startCol, endCol) ++ ivPayload).map(c => pick(c).as(c)) :+
         dist.as(distCol): _*)
   }
 
@@ -245,8 +180,8 @@ object RangeJoin {
     * of one `lag` pass.
     *
     * Scale shape: mask merge = [[mergeIntervals]]'s one window; the
-    * region×mask pairing is the [[intervalOverlap]] bucket equi-join
-    * (each pair exactly once); the gap walk windows per REGION — the
+    * region×mask pairing is one [[intervalOverlap]] probe of the merged
+    * mask's index (each pair exactly once); the gap walk windows per REGION — the
     * partition is a region's own overlap count, never a chromosome;
     * the after-last-mask piece is one partial-aggregated groupBy on
     * the same key; untouched regions return via one anti-join. No
@@ -256,7 +191,7 @@ object RangeJoin {
       regions: DataFrame, mask: DataFrame,
       chromCol: String = "chrom",
       startCol: String = "start", endCol: String = "end"): DataFrame = {
-    val reserved = Seq("__bs", "__be", "__b", "__gs", "__ge", "__maxbe")
+    val reserved = Seq("__bs", "__be", "__gs", "__ge", "__maxbe")
     require(!regions.columns.exists(reserved.contains),
       s"regions carries a reserved internal column " +
         s"(${reserved.mkString(", ")}); rename it first")
@@ -306,48 +241,35 @@ object RangeJoin {
     * `dst_start + (end − pos)` on '−' blocks (the strand flip);
     * points no block covers survive with NULL target columns and
     * `mapped = false` — remap pipelines need the unmapped rows (they
-    * are the QC output), so this is ONE bucketed LEFT equi-join, not
-    * an inner join plus a second anti-join pass over the corpus.
+    * are the QC output), so this is ONE outer probe of the chain's
+    * index, not an inner join plus a second anti-join pass.
     *
     * Contract: chain blocks must be source-disjoint per chromosome
     * (the chain-file invariant) — overlapping blocks would duplicate
     * points. Scale shape: chain files are bounded by genome size, not
-    * corpus size (~thousands of blocks), so the exploded chain
-    * BROADCASTS and the point side — the 100 TB side — never
-    * shuffles and keeps its partitioning.
+    * corpus size (~thousands of blocks), so the chain is the indexed
+    * side and the point side — the 100 TB side — never shuffles and
+    * keeps its partitioning.
     */
   def liftover(
       points: DataFrame, chain: DataFrame,
       chromCol: String = "chrom", posCol: String = "pos",
       startCol: String = "start", endCol: String = "end",
       dstChromCol: String = "dst_chrom", dstStartCol: String = "dst_start",
-      strandCol: String = "strand",
-      bucketShift: Int = 20): DataFrame = {
-    require(bucketShift >= 0 && bucketShift < 32,
-      s"bucketShift must be in [0, 32), got $bucketShift")
-    val iv = chain.withColumn("__b",
-      explode(sequence(
-        shiftright(col(startCol), bucketShift),
-        shiftright(col(endCol), bucketShift))))
-      .alias("i")
-    val p = points
-      .withColumn("__b", shiftright(col(posCol), bucketShift))
-      .alias("p")
-    p.join(broadcast(iv),
-        col(s"p.$chromCol") === col(s"i.$chromCol") &&
-          col("p.__b") === col("i.__b") &&
-          col(s"p.$posCol").between(col(s"i.$startCol"), col(s"i.$endCol")),
-        "left")
-      .withColumn("new_chrom", col(s"i.$dstChromCol"))
-      .withColumn("new_pos",
-        when(col(s"i.$strandCol") === "+",
-          col(s"i.$dstStartCol") + (col(s"p.$posCol") - col(s"i.$startCol")))
-          .when(col(s"i.$strandCol") === "-",
-            col(s"i.$dstStartCol") + (col(s"i.$endCol") - col(s"p.$posCol"))))
+      strandCol: String = "strand"): DataFrame = {
+    val ix = IntervalIndex.collect(
+      chain.select(col(chromCol), col(startCol).as("__s"), col(endCol).as("__e"),
+        col(dstChromCol).as("__dc"), col(dstStartCol).as("__ds"),
+        col(strandCol).as("__st")),
+      chromCol, "__s", "__e", "liftover", "chain")
+    points.select(col("*"),
+        inline_outer(IntervalExprs.hits(col(chromCol), col(posCol), col(posCol), ix)))
+      .select(points.columns.map(col) ++ Seq(
+        col("__dc").as("new_chrom"),
+        when(col("__st") === "+", col("__ds") + (col(posCol) - col("__s")))
+          .when(col("__st") === "-", col("__ds") + (col("__e") - col(posCol)))
+          .as("new_pos")): _*)
       .withColumn("mapped", col("new_pos").isNotNull)
-      .select(col("p.*") +: Seq(col("new_chrom"), col("new_pos"),
-        col("mapped")): _*)
-      .drop("__b")
   }
 
   /** COVERAGE-DEPTH histogram over closed intervals — the `bedtools
@@ -361,10 +283,9 @@ object RangeJoin {
     * collapse in one partial-aggregated (chrom, pos) groupBy, a
     * per-chrom prefix sum turns deltas into the depth of the segment
     * [pos, next_pos), and one aggregation bins segment lengths by
-    * depth. Like [[mergeIntervals]] (and unlike the bucket joins) the
+    * depth. Like [[mergeIntervals]] (and unlike the indexed joins) the
     * sweep is the correct distributed shape here: depth CHAINS through
-    * every preceding event, so a bucket decomposition cannot localize
-    * it, while the window's per-chrom partitions are bounded by
+    * every preceding event, so no per-row probe can localize it, while the window's per-chrom partitions are bounded by
     * DISTINCT event positions (≤ 2·intervals). All arithmetic is exact
     * int64; the zero-depth gaps and the unbounded tail after the last
     * event carry no rows by construction (Σdeltas = 0 per chrom).

@@ -1703,7 +1703,7 @@ object VariantQc {
     * array (one slot per sample, −1 = missing; the site groupBy rides
     * the annotate window's site partitioning — zero extra exchange),
     * so pair generation and the statistics never touch per-sample
-    * rows. Pairs come from the RangeJoin bucket rule — the left side
+    * rows. Pairs come from a position-bucket rule — the left side
     * is emitted into buckets ⌊pos/maxDist⌋ and ⌊pos/maxDist⌋+1, the
     * right into its own, so each in-range pair (ordered by the
     * composite site key) arises EXACTLY once from one equi-join on
@@ -2110,11 +2110,10 @@ object VariantQc {
     *   - `single` — one het site only.
     *
     * Haploid and half-missing calls never enter (their zygosity is
-    * het-miss, excluded with hom classes). Gene assignment reuses
-    * [[RangeJoin.pointInInterval]]'s bucket decomposition at 16 kb
-    * (gene-sized) buckets — an equi-join on (chrom, pos-bucket), never
-    * a range cross join — and the rollup is ONE partial-aggregated
-    * groupBy(sample, gene).
+    * het-miss, excluded with hom classes). Gene assignment is one
+    * [[RangeJoin.pointInInterval]] probe of the genes' interval index
+    * (narrow, never a range cross join), and the rollup is ONE
+    * partial-aggregated groupBy(sample, gene).
     */
   def compoundHet(
       ann: DataFrame, genes: DataFrame,
@@ -2126,7 +2125,7 @@ object VariantQc {
         (col("phase") === "|" && col("gt1") =!= "0").as("__h1"),
         (col("phase") === "|" && col("gt2") =!= "0").as("__h2"),
         (col("phase") === "/").as("__unph"))
-    RangeJoin.pointInInterval(het, genes, bucketShift = 14)
+    RangeJoin.pointInInterval(het, genes)
       .groupBy(col("sample_id"), col(geneIdCol))
       .agg(
         count(lit(1)).as("n_sites"),

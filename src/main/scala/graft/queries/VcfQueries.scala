@@ -1314,7 +1314,7 @@ object VcfQueries extends QuerySet {
     * in TRANS (one per haplotype). Phased calls confirm (`trans`) or
     * clear (`cis`); any unphased het in a ≥2-site gene leaves a
     * `candidate` for parental phasing. Gene assignment rides the q81
-    * bucket equi-join; DuckDB replays the phase classification, the
+    * interval-index probe; DuckDB replays the phase classification, the
     * interval join, and the status ladder. The corpus generator only
     * ever phases alts onto haplotype 2 (`0|1`/`2|2`), which would
     * leave `trans` unreachable and the gate's core branch vacuous —
@@ -1388,10 +1388,10 @@ object VcfQueries extends QuerySet {
   /** Genomic RANGE join (variants × regions) — "which region does each
     * variant fall in": synthetic intervals derived deterministically
     * from `part`, joined to distinct variant sites through
-    * [[graft.operators.RangeJoin.pointInInterval]]'s bucket
-    * decomposition (equi-join on (chrom, bucket) + in-join range
-    * check — never a per-chrom nested loop; PlanSpec forbids the
-    * cartesian shapes). DuckDB replays the interval derivation and the
+    * [[graft.operators.RangeJoin.pointInInterval]]: the regions are
+    * collected into a per-chromosome interval index and each site
+    * probes it in one narrow stage — no join, never a per-chrom nested
+    * loop (PlanSpec gates the probe shape). DuckDB replays the interval derivation and the
     * range join directly.
     */
   private val q81 = Q(
@@ -1400,7 +1400,7 @@ object VcfQueries extends QuerySet {
       val sites = wide(s, dir).select(col("chrom"), col("pos")).distinct()
       val regions = syntheticRegions(s, dir)
       graft.operators.RangeJoin
-        .pointInInterval(sites, regions, bucketShift = 14)
+        .pointInInterval(sites, regions)
         .groupBy("region_id")
         .agg(count(lit(1)).as("n_variants"),
           min("pos").as("min_pos"), max("pos").as("max_pos"))
@@ -1418,10 +1418,9 @@ object VcfQueries extends QuerySet {
     """))
 
   /** Interval-interval OVERLAP join (regions × capture targets) — the
-    * two-sided range-join rung above q81: both interval sets bucket-
-    * decompose, each overlapping pair emitted exactly once (only the
-    * max-start bucket emits — no distinct, no second shuffle of the
-    * pair stream). Gate aggregates per chrom: pair count + total
+    * two-sided range-join rung above q81: the targets are indexed and
+    * each region probes them, every overlapping pair emitted exactly
+    * once (no distinct, no shuffle of the pair stream). Gate aggregates per chrom: pair count + total
     * overlapped bases, DuckDB replaying the derivations and a direct
     * range join.
     */
@@ -1439,7 +1438,7 @@ object VcfQueries extends QuerySet {
           (col("r_start") + lit(200) +
             pmod(col("target_id"), lit(5L)).cast("int") * 900).cast("int"))
       graft.operators.RangeJoin
-        .intervalOverlap(regions, targets, bucketShift = 14)
+        .intervalOverlap(regions, targets)
         .groupBy("chrom")
         .agg(count(lit(1)).as("n_pairs"),
           sum(least(col("end"), col("r_end")) -
@@ -1673,7 +1672,7 @@ object VcfQueries extends QuerySet {
     * genotype" query burden tests start from): annotate → per-site alt
     * dosage + carrier counts (one agg) → pointInInterval against the
     * q81 regions → per-region sites/SNPs/dosage/carriers. One annotate
-    * exchange, one site agg, the bucket-decomposed equi-join, one
+    * exchange, one site agg, the narrow interval-index probe, one
     * region agg — every stage's shape already plan-gated individually
     * (q13-q15, q81); this pins that they COMPOSE. DuckDB replays the
     * dosage CASE and the direct range join.
@@ -1693,7 +1692,7 @@ object VcfQueries extends QuerySet {
         .withColumn("vartype",
           vartype(col("ref"), element_at(split(col("alt"), ","), 1)))
       graft.operators.RangeJoin
-        .pointInInterval(sites, syntheticRegions(s, dir), bucketShift = 14)
+        .pointInInterval(sites, syntheticRegions(s, dir))
         .groupBy("region_id")
         .agg(count(lit(1)).as("n_sites"),
           sum(when(col("vartype") === "snp", 1L).otherwise(0L)).as("n_snp"),
@@ -1971,7 +1970,7 @@ object VcfQueries extends QuerySet {
 
   /** LD-DECAY curve over pairwise r² ([[graft.operators.VariantQc
     * .ldR2Pairs]], plink `--r2` unphased estimator): every
-    * same-chromosome biallelic site pair within 1 kb (RangeJoin bucket
+    * same-chromosome biallelic site pair within 1 kb (position-bucket
     * rule — exactly-once, never all-pairs), genotype-correlation r²
     * from exact int64 sums with ONE micro-floored division per pair,
     * then the classic decay aggregate: pair counts and r² mass per
@@ -2600,8 +2599,8 @@ object VcfQueries extends QuerySet {
     * mapped through the synthetic chain into target coordinates — '+'
     * blocks shift, '−' blocks flip within the block — with unmapped
     * sites SURVIVING as (NULL, mapped = false) rows, because in a real
-    * remap the unmapped set IS the QC deliverable. One bucketed
-    * broadcast LEFT equi-join: the corpus side never shuffles. DuckDB
+    * remap the unmapped set IS the QC deliverable. One outer probe of
+    * the chain's interval index: the corpus side never shuffles. DuckDB
     * replays the chain derivation (groupBy/min dedup included), the
     * containment join, and both strand arithmetics.
     */
@@ -2610,7 +2609,7 @@ object VcfQueries extends QuerySet {
     (s, dir) => {
       val sites = wide(s, dir).select(col("chrom"), col("pos")).distinct()
       graft.operators.RangeJoin
-        .liftover(sites, syntheticChain(s, dir), bucketShift = 14)
+        .liftover(sites, syntheticChain(s, dir))
         .select(col("chrom"), col("pos"), col("new_chrom"),
           col("new_pos").cast("long").as("new_pos"), col("mapped"))
         .orderBy("chrom", "pos")
@@ -4633,8 +4632,8 @@ object VcfQueries extends QuerySet {
     * deletions (END is not NON_REF-specific, per spec), multi-base-REF
     * variant rows covering their footprint, and 1 bp SNV rows — and
     * probes them with an independent locus stream; covering records
-    * come out of the q81 bucket equi-join (plan-gated elsewhere: the
-    * pointInInterval substrate never nested-loops). DuckDB replays the
+    * come out of one probe of the loci's interval index per record
+    * span (plan-gated elsewhere: the probe never nested-loops). DuckDB replays the
     * span rule and the raw BETWEEN range join.
     */
   private lazy val q218 = {
@@ -4672,7 +4671,7 @@ object VcfQueries extends QuerySet {
         val loci = t(s, dir, "orders")
           .selectExpr("o_orderkey AS lk")
           .selectExpr("lk", lcChrom, lcPos)
-        graft.operators.Gvcf.locusQuery(gv, loci, bucketShift = 12)
+        graft.operators.Gvcf.locusQuery(gv, loci)
           .select(col("lk"), col("chrom"), col("pos"),
             col("k").as("gk"), col("start").as("span_start"),
             col("end").as("span_end"), col("ref"), col("alt"))
@@ -4920,7 +4919,7 @@ object VcfQueries extends QuerySet {
           .selectExpr("o_orderkey AS lk")
           .selectExpr("lk", lcChrom, lcPos)
           .groupBy("chrom", "pos").agg(min(col("lk")).as("lk"))
-        graft.operators.Gvcf.cohortLocusState(gv, loci, bucketShift = 12)
+        graft.operators.Gvcf.cohortLocusState(gv, loci)
           .select(col("lk"), col("chrom"), col("pos"), col("sample_id"),
             col("k").as("gk"), col("state"), col("gt"),
             col("start").as("span_start"), col("end").as("span_end"))
@@ -5048,7 +5047,7 @@ object VcfQueries extends QuerySet {
           .selectExpr("o_orderkey AS lk")
           .selectExpr("lk", lcChrom, lcPos)
           .groupBy("chrom", "pos").agg(min(col("lk")).as("lk"))
-        graft.operators.Gvcf.jointGenotype(gv, loci, bucketShift = 12)
+        graft.operators.Gvcf.jointGenotype(gv, loci)
           .select(col("lk"), col("chrom"), col("pos"), col("sample_id"),
             col("k").as("gk"), col("state"), col("gt"),
             col("called_gt"), col("gq"))
@@ -5226,7 +5225,7 @@ object VcfQueries extends QuerySet {
           .where("lk % 3 = 0")
           .selectExpr("lk", lcChrom, lcPos)
           .groupBy("chrom", "pos").agg(min(col("lk")).as("lk"))
-        graft.operators.Gvcf.jointGenotype(gv, loci, bucketShift = 12)
+        graft.operators.Gvcf.jointGenotype(gv, loci)
           .select(col("lk"), col("chrom"), col("pos"), col("sample_id"),
             col("k").as("gk"), col("state"), col("gt"),
             col("called_gt"), col("gq"))
@@ -5402,7 +5401,7 @@ object VcfQueries extends QuerySet {
         val chain = t(s, dir, "orders")
           .selectExpr("o_orderkey AS ck").where("ck % 50 = 0")
           .selectExpr(chChrom, chStart, chEnd, chDst, chDstStart, chStrand)
-        graft.operators.Liftover.liftover(sites, chain, bucketShift = 12)
+        graft.operators.Liftover.liftover(sites, chain)
           .groupBy("lift_status", "lifted_chrom")
           .agg(count(lit(1)).as("n"),
             sum(col("pos").cast("long")).as("pos_sum"),
@@ -5705,7 +5704,7 @@ object VcfQueries extends QuerySet {
           .selectExpr("o_orderkey AS ck").where("ck % 10 = 0")
           .selectExpr(chChrom, chStart, chEnd, "'d1' AS dst_chrom",
             chDstStart, chStrand)
-        graft.operators.Liftover.liftover(snps, chain, bucketShift = 12,
+        graft.operators.Liftover.liftover(snps, chain,
             dstGenome = genome, gtCols = Seq("gt"))
           .groupBy("lift_status")
           .agg(count(lit(1)).as("n"),
@@ -6010,13 +6009,8 @@ object VcfQueries extends QuerySet {
         // distinct map side is the cheaper trade
         val loci = gv.filter(col("alt") =!= "<NON_REF>")
           .select("chrom", "pos").distinct()
-        // bucketShift 8 (256-position buckets): the all-variant-site
-        // locus grid is ~16× denser than q229's decimated probe grid,
-        // so shift-12 collapses to ~550 (chrom, bucket) join keys with
-        // ~500k in-bucket pairs each — the r15 bucket-degeneracy
-        // lesson; records span ≤ ~110 so they explode into ≤ 2 buckets
         val jc = graft.operators.Gvcf
-          .jointGenotype(gv, loci, bucketShift = 8)
+          .jointGenotype(gv, loci)
           .filter(col("state") === "variant")
           // ONE call per (site, sample): the min-k covering record —
           // deterministic on both engines (overlapping same-sample
@@ -6379,7 +6373,7 @@ object VcfQueries extends QuerySet {
         java.nio.file.Files.writeString(f, sb.toString)
         val chain = graft.operators.Liftover.readChain(s, f.toString)
         val sites = wide(s, dir).select("chrom", "pos", "ref", "alt")
-        graft.operators.Liftover.liftover(sites, chain, bucketShift = 12)
+        graft.operators.Liftover.liftover(sites, chain)
           .groupBy("lift_status", "lifted_chrom")
           .agg(count(lit(1)).as("n"),
             sum(col("pos").cast("long")).as("pos_sum"),

@@ -13,6 +13,16 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Collect a frame's rows as Catalyst rows (UnsafeRow copies), one
+    * tracked SQL execution — `Dataset.collect` without the Row decode.
+    */
+  def collectInternal(df: org.apache.spark.sql.DataFrame)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe)(
+      qe.executedPlan.executeCollect())
+  }
+
   /** Register a SQL function on an ALREADY-RUNNING session (extensions
     * only apply at session construction; sessionState is private[sql]).
     */

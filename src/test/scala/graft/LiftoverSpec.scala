@@ -33,7 +33,7 @@ class LiftoverSpec extends AnyFunSuite with SparkSpec {
       ("1", 999, "T", "C"),          // uncovered → unmapped
       ("2", 150, "G", "A"))          // chrom-2 block
       .toDF("chrom", "pos", "ref", "alt")
-    val got = Liftover.liftover(vcf, chain, bucketShift = 4)
+    val got = Liftover.liftover(vcf, chain)
       .select("chrom", "pos", "lift_status", "lifted_chrom",
         "lifted_pos", "lifted_ref", "lifted_alt")
       .as[(String, Int, String, String, Option[Int], String, String)]
@@ -67,7 +67,7 @@ class LiftoverSpec extends AnyFunSuite with SparkSpec {
       ("1", 350, "AC", "G", "0/1"),   // → d2 absent from genome → ride
       ("1", 999, "T", "C", "0/0"))    // unmapped
       .toDF("chrom", "pos", "ref", "alt", "gt")
-    val got = Liftover.liftover(vcf, chain, bucketShift = 4,
+    val got = Liftover.liftover(vcf, chain,
         dstGenome = genome, gtCols = Seq("gt"))
       .filter(col("lifted_chrom").isNull || col("lifted_chrom") =!= "d3")
       .select("pos", "lift_status", "lifted_ref", "lifted_alt", "gt")
@@ -90,7 +90,7 @@ class LiftoverSpec extends AnyFunSuite with SparkSpec {
     val d2 = "N" * 9049 + "C" + "A" * 60
     val vcf = Seq(("1", 350, "A", "G", "0/1"))
       .toDF("chrom", "pos", "ref", "alt", "gt")
-    val got = Liftover.liftover(vcf, chain, bucketShift = 4,
+    val got = Liftover.liftover(vcf, chain,
         dstGenome = Map("d2" -> d2), gtCols = Seq("gt"))
       .select("lift_status", "lifted_ref", "lifted_alt", "gt")
       .as[(String, String, String, String)].collect().toSet
@@ -125,7 +125,7 @@ class LiftoverSpec extends AnyFunSuite with SparkSpec {
       ("1", 1175, "C", "G"),   // inside the GAP → unmapped
       ("1", 3050, "A", "G"))   // '-': 7901 + (3099 − 3050) = 7950
       .toDF("chrom", "pos", "ref", "alt")
-    val out = Liftover.liftover(vcf, chain, bucketShift = 4)
+    val out = Liftover.liftover(vcf, chain)
       .select("pos", "lift_status", "lifted_pos")
       .as[(Int, String, Option[Int])].collect().toSet
     assert(out === Set(
@@ -176,7 +176,7 @@ class LiftoverSpec extends AnyFunSuite with SparkSpec {
     val vcf = Seq(("1", 100, "A", "T"), ("1", 200, "C", "G"),
       ("1", 300, "G", "A"), ("1", 400, "T", "C"))
       .toDF("chrom", "pos", "ref", "alt")
-    val got = Liftover.liftover(vcf, chain, bucketShift = 4)
+    val got = Liftover.liftover(vcf, chain)
       .filter(col("lifted_chrom").isin("d1", "d2"))
       .select("pos", "lifted_chrom", "lifted_pos")
       .as[(Int, String, Int)].collect().toSet

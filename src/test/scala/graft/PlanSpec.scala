@@ -259,36 +259,39 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       s"shard assignment must be narrow:\n$p78")
   }
 
-  test("q81/q82/q83 range joins are equi-joins on (chrom, bucket), never nested loops") {
-    for (name <- Seq("q81_region_join", "q82_interval_overlap")) {
-      val q = SparkEntry.queries(name)(spark, dir)
-      q.collect()
-      val p = q.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-      // the bucket decomposition must reduce the inequality join to an
-      // equi-join — a BNLJ/cartesian here is the per-chrom quadratic scan
-      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-        s"$name planned as a nested loop:\n$p")
-      assert(p.contains("Join"), p)
-    }
-    // nearestInterval is the per-chrom sort-merge SWEEP at every radius
-    // (q83 bounded, q101 unbounded, and the bare operator): NO join at
-    // all (two chrom-partitioned windows over one union), in particular
-    // no nested loop and no bucket-candidate product
-    def sweepOnly(label: String, q: org.apache.spark.sql.DataFrame): Unit = {
-      q.collect()
-      val p = q.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(!p.contains("Join"), s"$label must be the join-free sweep:\n$p")
-      assert(p.contains("Window"), s"$label sweep windows missing:\n$p")
-    }
-    for (name <- Seq("q83_nearest_feature", "q101_nearest_unbounded"))
-      sweepOnly(name, SparkEntry.queries(name)(spark, dir))
+  test("range joins (q81, q82, q83, q101, q132, q233 and the bare operators) " +
+      "are one narrow interval-index probe, also with codegen fallback off") {
+    // each range join is a Generate over interval_hits/interval_nearest:
+    // no join node (so no nested loop, no Cartesian product), no
+    // exchange feeding the probe, no interpreted CodegenFallback; with
+    // spark.sql.codegen.fallback=false a stage Janino rejects fails
     import spark.implicits._
-    val points = Seq(("1", 25), ("1", 70), ("2", 45)).toDF("chrom", "pos")
-    val intervals = Seq(("1", 10, 40), ("1", 100, 130), ("2", 50, 60))
-      .toDF("chrom", "start", "end")
-    sweepOnly("nearestInterval(points, intervals, 50)",
-      graft.operators.RangeJoin.nearestInterval(points, intervals, 50L))
+    import graft.operators.{Gvcf, Liftover, RangeJoin}
+    val key = "spark.sql.codegen.fallback"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      for (name <- Seq("q81_region_join", "q82_interval_overlap", "q83_nearest_feature",
+          "q101_nearest_unbounded", "q132_liftover", "q233_liftover"))
+        PlanGates.assertNarrowProbe(name, SparkEntry.queries(name)(spark, dir), bare = false)
+      val points = Seq(("1", 25), ("1", 70), ("2", 45)).toDF("chrom", "pos")
+      val intervals = Seq(("1", 10, 40, "a"), ("1", 100, 130, "b"), ("2", 50, 60, "c"))
+        .toDF("chrom", "start", "end", "name")
+      val chain = Seq(("1", 10, 39, "c1", 100, "-"))
+        .toDF("chrom", "start", "end", "dst_chrom", "dst_start", "strand")
+      val gv = Seq(("1", 20, "A", "<NON_REF>", "END=99"))
+        .toDF("chrom", "pos", "ref", "alt", "info")
+      val bare = Seq(
+        "pointInInterval" -> RangeJoin.pointInInterval(points, intervals),
+        "intervalOverlap" -> RangeJoin.intervalOverlap(intervals,
+          intervals.select($"chrom", $"start".as("r_start"), $"end".as("r_end"))),
+        "nearestInterval" -> RangeJoin.nearestInterval(points, intervals, 50L),
+        "RangeJoin.liftover" -> RangeJoin.liftover(points, chain),
+        "Liftover.liftover" -> Liftover.liftover(
+          points.withColumn("ref", lit("A")).withColumn("alt", lit("C")), chain),
+        "Gvcf.locusQuery" -> Gvcf.locusQuery(gv, points))
+      for ((label, q) <- bare) PlanGates.assertNarrowProbe(label, q)
+    } finally spark.conf.set(key, old)
   }
 
   test("q79/q80 family QC read ONE annotate plan via ReusedExchange") {
@@ -792,16 +795,16 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       s"coverage must attach by equi-join:\n$p229")
   }
 
-  test("q233 liftover and q235 semantic dedup join on equi-keys, " +
-      "never a nested loop; q234 trio phasing reads ONE annotate plan") {
-    for (name <- Seq("q233_liftover", "q235_semantic_dedup")) {
-      val q = SparkEntry.queries(name)(spark, dir)
+  test("q235 semantic dedup joins on equi-keys, never a nested loop; " +
+      "q234 trio phasing reads ONE annotate plan") {
+    {
+      val q = SparkEntry.queries("q235_semantic_dedup")(spark, dir)
       q.collect()
       val pl = q.queryExecution.executedPlan.toString
         .split("== Initial Plan ==").head
       assert(!pl.contains("BroadcastNestedLoopJoin") &&
         !pl.contains("CartesianProduct"),
-        s"$name planned as a nested loop:\n$pl")
+        s"q235_semantic_dedup planned as a nested loop:\n$pl")
       assert(pl.contains("Join"), pl)
     }
     // the trio's three sample views must share one annotate scan

@@ -14,12 +14,8 @@ import graft.operators.RangeJoin
 class RangeJoinSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  // bucketShift 4 → 16 bp buckets for the liftover specs: small enough
-  // that chain blocks straddle several buckets
-  private val shift = 4
-
   private lazy val intervals = Seq(
-    ("1", 10, 40, "g_a"),   // buckets 0..2
+    ("1", 10, 40, "g_a"),
     ("1", 100, 120, "g_b"),
     ("1", 100, 130, "g_c"), // same start as g_b, longer
     ("2", 50, 60, "g_d"))
@@ -343,7 +339,7 @@ class RangeJoinSpec extends AnyFunSuite with SparkSpec {
     val chain = Seq(
       ("1", 10, 19, "c1", 100, "+"),
       ("1", 30, 39, "c1", 200, "-"),  // strand flip
-      ("2", 5, 40, "c2", 500, "+"))   // straddles buckets at shift 4
+      ("2", 5, 40, "c2", 500, "+"))
       .toDF("chrom", "start", "end", "dst_chrom", "dst_start", "strand")
     val pts = Seq(
       ("1", 10), ("1", 19),           // '+' block boundaries
@@ -352,7 +348,7 @@ class RangeJoinSpec extends AnyFunSuite with SparkSpec {
       ("2", 33),                      // inside the straddling block
       ("3", 10))                      // chrom with no chain → unmapped
       .toDF("chrom", "pos")
-    val out = graft.operators.RangeJoin.liftover(pts, chain, bucketShift = shift)
+    val out = graft.operators.RangeJoin.liftover(pts, chain)
     // every point emits EXACTLY one row — mapped or not
     assert(out.count() === 7)
     val m = out.collect().map(r => (r.getString(0), r.getInt(1)) ->
@@ -380,11 +376,11 @@ class RangeJoinSpec extends AnyFunSuite with SparkSpec {
       .toDF("chrom", "start", "end", "dst_chrom", "dst_start", "strand")
     val pts = (10 to 19).map(("1", _)) ++ (30 to 39).map(("1", _))
     val once = graft.operators.RangeJoin
-      .liftover(pts.toDF("chrom", "pos"), chain, bucketShift = shift)
+      .liftover(pts.toDF("chrom", "pos"), chain)
       .select(col("new_chrom").as("chrom"), col("new_pos").as("pos"),
         col("chrom").as("orig_chrom"), col("pos").as("orig_pos"))
     val back = graft.operators.RangeJoin
-      .liftover(once, inverse, bucketShift = shift)
+      .liftover(once, inverse)
       .select("orig_chrom", "orig_pos", "new_chrom", "new_pos", "mapped")
       .collect()
     assert(back.length === 20)
@@ -395,19 +391,11 @@ class RangeJoinSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("liftover plan: broadcast left join, point side never shuffles") {
+  test("liftover plan: one narrow index probe, point side never shuffles") {
     val chain = Seq(("1", 10, 19, "c1", 100, "+"))
       .toDF("chrom", "start", "end", "dst_chrom", "dst_start", "strand")
     val pts = Seq(("1", 12)).toDF("chrom", "pos")
-    val plan = graft.operators.RangeJoin.liftover(pts, chain)
-      .queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    assert(plan.contains("BroadcastHashJoin"), s"chain must broadcast:\n$plan")
-    assert(!plan.contains("SortMergeJoin") &&
-      !plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"),
-      s"liftover must stay an equi-join:\n$plan")
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"the corpus side must keep its partitioning:\n$plan")
+    PlanGates.assertNarrowProbe("liftover", graft.operators.RangeJoin.liftover(pts, chain))
   }
 
   // ---- gVCF reference blocks (<NON_REF> + END spans) ----
@@ -471,7 +459,7 @@ class RangeJoinSpec extends AnyFunSuite with SparkSpec {
       .split("== Initial Plan ==").head
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
-      s"gvcf locus query must stay the bucket equi-join:\n$plan")
+      s"gvcf locus query must never nested-loop:\n$plan")
   }
 
   test("Gvcf.cohortLocusState: per (locus, sample) the three-way " +

@@ -242,13 +242,13 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("streaming range joins: point-in-interval and overlap stream as-is, equal batch") {
     implicit val sqlCtx = spark.sqlContext
     // a stream of arriving loci/regions against a STATIC interval table
-    // (gene models, capture targets) is a stateless stream-static inner
-    // equi-join — the bucket decomposition is a narrow generator on the
-    // stream side, so RangeJoin composes on a stream UNCHANGED: no
+    // (gene models, capture targets) is a stateless stream-static probe —
+    // the static side is indexed and the probe is a narrow generator on
+    // the stream side, so RangeJoin composes on a stream UNCHANGED: no
     // state store, no watermark, exactly-once pair emission intact
     val targets = Seq(
       ("1", 100L, 2000000L, "t_a"),
-      ("1", 1500000L, 3000000L, "t_b"), // straddles bucket 1
+      ("1", 1500000L, 3000000L, "t_b"), // overlaps t_a
       ("2", 100L, 500000L, "t_c"))
       .toDF("chrom", "r_start", "r_end", "target")
 
@@ -300,8 +300,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
           .toDF("chrom", "start", "end", "region_id"), targets)
       .collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
     assert(streamedO === batchO)
-    // exactly-once emission survives streaming: r1×t_a spans shared
-    // buckets but lands exactly once
+    // exactly-once emission survives streaming: r1×t_a overlaps over
+    // 1.5 Mb but lands exactly once
     assert(streamedO.values.forall(_ === 1))
     assert(streamedO.keys.map(r => (r(3), r(6))).toSet ===
       Set(("r1", "t_a"), ("r1", "t_b")))
