@@ -59,11 +59,4 @@ object Genome {
   def broadcast(spark: SparkSession, genome: Map[String, String]): Genome =
     new Genome(null,
       spark.sparkContext.broadcast(LeftAlignKernel.genomeMap(genome)))
-
-  /** [[broadcast]] over an already-built uppercase HashMap (the
-    * [[graft.sources.FastaReader]] hand-off — avoids copying a
-    * multi-GB map a second time). */
-  def broadcastRaw(spark: SparkSession,
-      genome: java.util.HashMap[String, String]): Genome =
-    new Genome(null, spark.sparkContext.broadcast(genome))
 }

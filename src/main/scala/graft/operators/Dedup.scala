@@ -534,27 +534,20 @@ object Dedup {
     * check is an `Observation` on the job that materializes its table,
     * never a separate count.
     *
-    * Tables are node-sized, cut by localCheckpoint (blocks of superseded
-    * rounds are released by the ContextCleaner). Those blocks die with
-    * their executor: at 100 TB pass reliable = true (requires
-    * sparkContext.setCheckpointDir) to cut through the checkpoint
-    * DIRECTORY — restartable for one fs round-trip per table.
+    * Tables are node-sized and cut eagerly by [[Lineage.cut]], since
+    * each cut's `Observation` is read right after it (blocks of
+    * superseded rounds are released by the ContextCleaner).
     */
-  def connectedComponents(pairs: DataFrame,
-      reliable: Boolean = false): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
-    require(!reliable || spark.sparkContext.getCheckpointDir.isDefined,
-      "reliable = true needs spark.sparkContext.setCheckpointDir(...)")
     import spark.implicits._
     val ends = pairs.select(least(col("id_a"), col("id_b")).as("a"),
       greatest(col("id_a"), col("id_b")).as("b"))
     val idType = ends.schema("a").dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
       s"connectedComponents needs integral ids, got $idType")
-    def cp(df: DataFrame, eager: Boolean): DataFrame =
-      if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
     val contracted = Observation()
-    val stars = cp(ends.filter(col("a").isNotNull)
+    val stars = Lineage.cut(ends.filter(col("a").isNotNull)
       .select(col("a").cast("long"), col("b").cast("long"))
       .repartition(col("a")).as[(Long, Long)]
       .mapPartitions(localStars).toDF("id", "root", "part")
@@ -577,7 +570,7 @@ object Dedup {
         require(round <= bound, s"connectedComponents: merge round $round " +
           s"exceeds the O(log² n) bound of $bound rounds for $rows star rows")
         val signal = Observation()
-        edges = cp(largeStar(edges, signal), eager = true)
+        edges = Lineage.cut(largeStar(edges, signal), eager = true)
         settled = signal.get("unsettled") == 0L
         if (!settled) edges = smallStar(edges)
       }
@@ -656,12 +649,9 @@ object Dedup {
     * CC over the accumulated pair log per ingest and one nodes-sized
     * contraction per batch.
     */
-  def mergeComponents(
-      state: DataFrame, newPairs: DataFrame,
-      reliable: Boolean = false): DataFrame = {
+  def mergeComponents(state: DataFrame, newPairs: DataFrame): DataFrame = {
     val starEdges = state.select(col("id").as("id_a"), col("comp").as("id_b"))
-    connectedComponents(
-      starEdges.unionAll(newPairs.select(col("id_a"), col("id_b"))), reliable)
+    connectedComponents(starEdges.unionAll(newPairs.select(col("id_a"), col("id_b"))))
   }
 
   /** One representative per near-dup cluster: docs joined to their

@@ -27,50 +27,30 @@ object Graphs {
     * sides hash on the same key — the exchange layout is reusable
     * round to round), one partial-aggregated groupBy(dst), one left
     * join back onto the node set. Each round deepens the plan chain
-    * (like the k-means training loop), so past `cutEvery` rounds the
-    * at-scale posture is ENFORCED, not advisory: the node set and the
-    * degree-joined edge table are materialized once, and the score
-    * table's lineage is cut every `cutEvery` rounds — localCheckpoint
-    * by default, or the checkpoint DIRECTORY with `reliable = true`
-    * (requires sparkContext.setCheckpointDir; survives executor loss
-    * — the [[Dedup.connectedComponents]] contract). Runs of
-    * ≤ `cutEvery` rounds keep the pure declarative chain (the oracled
-    * q136 path: no materialization, plan-gated). Note the scores frame
-    * is |V| rows — broadcastable for moderate graphs.
+    * (like the k-means training loop), so the node set and the
+    * degree-joined edge table are cut once, and runs past
+    * [[Lineage.Every]] rounds cut the score table's lineage mid-run
+    * ([[Lineage]] owns the policy). Runs of ≤ [[Lineage.Every]] rounds
+    * keep the score chain declarative (the oracled q136 path). Note the
+    * scores frame is |V| rows — broadcastable for moderate graphs.
     */
   def pageRankMicro(
       edges: DataFrame, iters: Int,
-      dampMicro: Long = 850000L,
-      cutEvery: Int = 4,
-      reliable: Boolean = false): DataFrame = {
+      dampMicro: Long = 850000L): DataFrame = {
     require(iters >= 1 && iters <= 64, s"iters must be in [1, 64], got $iters")
     require(dampMicro >= 0L && dampMicro <= 1000000L,
       s"dampMicro must be a micro-fraction in [0, 1e6], got $dampMicro")
-    require(cutEvery >= 1, s"cutEvery must be >= 1, got $cutEvery")
-    require(!reliable ||
-      edges.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliable = true needs spark.sparkContext.setCheckpointDir(...)")
-    // r17 (guide §5.2): LAZY cuts — the logical plan is truncated
-    // immediately (bounded plans for deep runs, same as before) but
-    // materialization happens inside the caller's one action instead
-    // of an eager job per cut
-    def cp(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(false) else df.localCheckpoint(false)
-    val deep = iters > cutEvery
     val nodes0 = edges.select(col("src").as("node"))
       .unionAll(edges.select(col("dst").as("node"))).distinct()
     val withDeg0 = edges
       .join(edges.groupBy("src").agg(count(lit(1)).as("__outdeg")), "src")
     // EVERY round re-reads these — cut them unconditionally (r17: the
-    // ≤ cutEvery declarative chain re-ran the edge scan + degree agg
-    // per iteration: q136's 3 rounds re-derived the lineitem distinct
-    // ~7× inside one job; the lazy cut computes each once and the
-    // rounds read the persisted blocks). Trade-off: localCheckpoint
-    // blocks live on executors, so short runs are now also
-    // non-recomputable after executor loss — reliable=true remains
-    // the restartable path (the connectedComponents contract).
-    val nodes = cp(nodes0)
-    val withDeg = cp(withDeg0)
+    // uncut declarative chain re-ran the edge scan + degree agg per
+    // iteration: q136's 3 rounds re-derived the lineitem distinct ~7×
+    // inside one job; the lazy cut computes each once and the rounds
+    // read the persisted blocks)
+    val nodes = Lineage.cut(nodes0)
+    val withDeg = Lineage.cut(withDeg0)
     val base = lit(1000000L - dampMicro)
     var p = nodes.withColumn("p", lit(1000000L))
     for (i <- 1 to iters) {
@@ -82,11 +62,9 @@ object Graphs {
         .select(col("node"),
           (base + expr(s"$dampMicro * coalesce(__in, 0L) DIV 1000000"))
             .as("p"))
-      // cut mid-run only: the FINAL round stays lazy so the caller's
-      // downstream plan composes with it (prior checkpoint blocks are
-      // released by the ContextCleaner as references drop, so storage
-      // holds ~2 rounds of |V| rows)
-      p = if (deep && i % cutEvery == 0 && i < iters) cp(next) else next
+      // prior checkpoint blocks are released by the ContextCleaner as
+      // references drop, so storage holds ~2 rounds of |V| rows
+      p = if (Lineage.due(i, iters)) Lineage.cut(next) else next
     }
     p
   }
@@ -145,25 +123,17 @@ object Graphs {
     * that was supported only by pruned triangles dies next round),
     * repeat until stable. Each round is one [[edgeSupport]] pass over
     * the surviving edge set + one anti-filter; lineage cut per round
-    * (localCheckpoint, or the checkpoint directory with
-    * `reliable = true` — the [[Dedup.connectedComponents]] contract),
-    * convergence count one action per round. Returns the
-    * surviving canonical (u, v) edges.
+    * ([[Lineage.cut]]), convergence count one action per round.
+    * Returns the surviving canonical (u, v) edges.
     */
   def trussEdges(
-      edges: DataFrame, k: Int, maxIter: Int = 25,
-      reliable: Boolean = false): DataFrame = {
+      edges: DataFrame, k: Int, maxIter: Int = 25): DataFrame = {
     require(k >= 3, s"k must be >= 3 (k = 3 keeps any triangle edge), got $k")
-    require(!reliable ||
-      edges.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliable = true needs spark.sparkContext.setCheckpointDir(...)")
     // r17 (guide §5.2): LAZY cuts + the surviving count carried in a
     // var — each round pays ONE count action (which also materializes
     // the cut) instead of eager-checkpoint + two counts
-    def cp(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(false) else df.localCheckpoint(false)
     val minSup = (k - 2).toLong
-    var cur = cp(edges.select(
+    var cur = Lineage.cut(edges.select(
         least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct())
@@ -173,7 +143,7 @@ object Graphs {
     while (!done && i < maxIter) {
       val sup = edgeSupport(
         cur.select(col("u").as("src"), col("v").as("dst")))
-      val next = cp(cur.join(sup, Seq("u", "v"), "left")
+      val next = Lineage.cut(cur.join(sup, Seq("u", "v"), "left")
         .filter(coalesce(col("support"), lit(0L)) >= minSup)
         .select("u", "v"))
       val nextCnt = next.count()
@@ -193,27 +163,20 @@ object Graphs {
     * cascade exactly like the truss (a node held at degree k by a
     * peeled neighbor dies next round). Each round is one degree agg +
     * one semi-join of edges against surviving nodes; lineage cut per
-    * round (the [[Dedup.connectedComponents]] checkpoint contract),
-    * convergence count one action per round. Returns the surviving
-    * (node, degree) rows — degree measured in the FINAL subgraph, the
-    * k-core's own degrees (all ≥ k).
+    * round ([[Lineage.cut]]), convergence count one action per round.
+    * Returns the surviving (node, degree) rows — degree measured in the
+    * FINAL subgraph, the k-core's own degrees (all ≥ k).
     */
   def kCoreNodes(
-      edges: DataFrame, k: Int, maxIter: Int = 50,
-      reliable: Boolean = false): DataFrame = {
+      edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    require(!reliable ||
-      edges.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliable = true needs spark.sparkContext.setCheckpointDir(...)")
     // r17 (guide §5.2): LAZY cuts + carried count — one action per
     // round (see trussEdges)
-    def cp(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(false) else df.localCheckpoint(false)
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("node"))
         .unionAll(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("degree"))
-    var cur = cp(edges.select(
+    var cur = Lineage.cut(edges.select(
         least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct())
@@ -223,7 +186,7 @@ object Graphs {
     while (!done && i < maxIter) {
       val keep = degrees(cur).filter(col("degree") >= k.toLong)
         .select(col("node"))
-      val next = cp(cur
+      val next = Lineage.cut(cur
         .join(keep.select(col("node").as("u")), "u", "leftsemi")
         .join(keep.select(col("node").as("v")), "v", "leftsemi")
         .select("u", "v"))

@@ -169,7 +169,7 @@ object Multimodal {
     require(planes.forall(_.length == dim), "planes must share one dimension")
     val feats = extractFeatures(media, decoder)
       .select(col("media_id"), col("modality"),
-        transform(col("feature"), x => x.cast("double")).as("fv"))
+        col("feature").cast("array<double>").as("fv"))
       // a feature whose length disagrees with the planes would dot to
       // null → every row lands in bucket 0 → silent per-modality
       // all-pairs comparison; fail loudly instead
@@ -223,7 +223,7 @@ object Multimodal {
       media: DataFrame, decoder: Decoder = new FakeDecoder()): DataFrame =
     extractFeatures(media, decoder)
       .select(col("media_id"),
-        transform(col("feature"), x => x.cast("double")).as("fv"))
+        col("feature").cast("array<double>").as("fv"))
 
   /** Media embedding ANN INDEX — the corpus-scale rung above
     * [[mediaNearDupPairs]]' single LSH tier, completing the multimodal

@@ -60,34 +60,29 @@ object RankEval {
     * rounding can produce).
     *
     * Shape: ONE corpus pass (groupBy(winner, loser) count); every MM
-    * round runs on the item-pair table (items²-bounded — tiny) with a
-    * localCheckpoint per `cutEvery` rounds. Returns (item, wins,
+    * round runs on the item-pair table (items²-bounded — tiny), its
+    * lineage cut mid-run by [[Lineage]]. Returns (item, wins,
     * n_comparisons, score_micro).
     */
   def bradleyTerryMicro(
       comparisons: DataFrame, winnerCol: String, loserCol: String,
-      iters: Int = 8, cutEvery: Int = 4): DataFrame = {
+      iters: Int = 8): DataFrame = {
     require(iters >= 1 && iters <= 64, s"iters must be in [1, 64], got $iters")
-    require(cutEvery >= 1, s"cutEvery must be >= 1, got $cutEvery")
     val w = comparisons
       .groupBy(col(winnerCol).as("a"), col(loserCol).as("b"))
       .agg(count(lit(1)).as("__w"))
-    val e = w.select(col("a"), col("b"), col("__w"))
+    // the caller's one action materializes e/wins once and every MM
+    // round reads the cut blocks
+    val e = Lineage.cut(w.select(col("a"), col("b"), col("__w"))
       .unionByName(w.select(col("b").as("a"), col("a").as("b"), col("__w")))
-      .groupBy("a", "b").agg(sum(col("__w")).as("__n"))
-      // r17 (guide §5.2): LAZY cuts — the caller's one action
-      // materializes e/wins once and every MM round reads the
-      // persisted blocks; the eager form paid two up-front driver
-      // jobs (q193: 3.5 s wall on 0.27 exec-s — pure job overhead)
-      .localCheckpoint(false)
-    val wins = e.select(col("a").as("item"))
+      .groupBy("a", "b").agg(sum(col("__w")).as("__n")))
+    val wins = Lineage.cut(e.select(col("a").as("item"))
       .distinct()
       .join(w.groupBy(col("a").as("item")).agg(sum(col("__w")).as("wins")),
         Seq("item"), "left")
       .na.fill(0L, Seq("wins"))
       .join(e.groupBy(col("a").as("item")).agg(sum(col("__n")).as("n_comparisons")),
-        Seq("item"))
-      .localCheckpoint(false)
+        Seq("item")))
     val dec = "decimal(38,0)"
     var p = wins.select(col("item"), lit(1000000L).as("p"))
     for (i <- 1 to iters) {
@@ -109,7 +104,7 @@ object RankEval {
           when(col("__tp") <= 0L, lit(0L)).otherwise(expr(
             s"CAST(CAST(__p1 AS $dec) * (__k * 1000000) AS $dec) DIV __tp"))
             .as("p"))
-      p = if (i % cutEvery == 0 && i < iters) next.localCheckpoint(false) else next
+      p = if (Lineage.due(i, iters)) Lineage.cut(next) else next
     }
     wins.join(p, Seq("item"))
       .select(col("item"), col("wins"), col("n_comparisons"),

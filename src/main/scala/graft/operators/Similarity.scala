@@ -104,7 +104,9 @@ object Similarity {
     * loop is k ROUNDS of candidate-pool-sized joins (each round one
     * co-keyed join to the selected set, one partial-agg max-penalty
     * groupBy, one per-probe WindowGroupLimit pick), so cost is
-    * O(k·|probes|·m) rows — the corpus is never touched.
+    * O(k·|probes|·m) rows — the corpus is never touched. The pool is
+    * cut once and runs past [[Lineage.Every]] rounds cut mid-run
+    * ([[Lineage]] owns the policy).
     *
     * Determinism: scores are exact int64 (λ_micro·rel_micro −
     * (10⁶−λ_micro)·pen_micro; penalties micro-floored cosines whose
@@ -116,36 +118,15 @@ object Similarity {
   def mmrRerank(
       cands: DataFrame, k: Int, lambdaMicro: Long,
       probeCol: String = "probe_id", candCol: String = "cand_id",
-      relCol: String = "rel_micro", vecCol: String = "cv",
-      cutEvery: Int = 8, reliable: Boolean = false): DataFrame = {
+      relCol: String = "rel_micro", vecCol: String = "cv"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(lambdaMicro >= 0L && lambdaMicro <= 1000000L,
       s"lambdaMicro must be in [0, 1000000], got $lambdaMicro")
-    require(cutEvery >= 1, s"cutEvery must be >= 1, got $cutEvery")
-    require(!reliable ||
-      cands.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliable = true needs spark.sparkContext.setCheckpointDir(...)")
-    // k rounds each append joins to BOTH running frames — past
-    // `cutEvery` rounds the lineage is cut (localCheckpoint, or the
-    // checkpoint dir with reliable = true), the pageRankMicro
-    // contract: deep reranks get bounded plans instead of an
-    // analyzer blowup at k ≈ 64. r17: the candidate POOL is also cut
-    // on every run (see below) — short runs are otherwise pure
-    // declarative. localCheckpoint blocks live on executors, so any
-    // cut run is non-recomputable after executor loss; reliable=true
-    // remains the restartable path (the connectedComponents
-    // contract).
-    // r17 (guide §5.2): LAZY cuts — plan truncation is immediate but
-    // materialization rides the caller's one action (no eager job per
-    // cut)
-    def cp(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(false) else df.localCheckpoint(false)
-    val deep = k > cutEvery
     // the candidate pool is re-referenced by EVERY round's penalty +
     // score joins, so an un-cut pool subtree (q183: bruteForceTopK's
     // crossJoin + window + embedding join) re-ran once per reference —
     // cut it unconditionally; it is parameter-small by contract
-    val base = cp(cands.select(col(probeCol).as("probe_id"),
+    val base = Lineage.cut(cands.select(col(probeCol).as("probe_id"),
       col(candCol).as("cand_id"), col(relCol).cast("long").as("rel_micro"),
       col(vecCol).as("__v")))
     val wPick = Window.partitionBy("probe_id")
@@ -174,12 +155,12 @@ object Similarity {
       selected = selected.unionAll(picked)
       remaining = remaining.join(picked.select("probe_id", "cand_id"),
         Seq("probe_id", "cand_id"), "left_anti")
-      // cut mid-run only — the final round stays lazy so the caller's
-      // downstream plan composes (prior checkpoint blocks released by
-      // the ContextCleaner as references drop)
-      if (deep && r % cutEvery == 0 && r < k) {
-        selected = cp(selected)
-        remaining = cp(remaining)
+      // each round appends joins to BOTH running frames — deep reranks
+      // cut both mid-run for bounded plans instead of an analyzer
+      // blowup at k ≈ 64
+      if (Lineage.due(r, k)) {
+        selected = Lineage.cut(selected)
+        remaining = Lineage.cut(remaining)
       }
     }
     selected.select("probe_id", "cand_id", "rnk", "rel_micro")

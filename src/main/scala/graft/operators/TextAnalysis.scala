@@ -913,10 +913,11 @@ object TextAnalysis {
     * Scale shape: ONE corpus pass (token explode + partial-agg word
     * groupBy, capped to `maxWords` by TakeOrdered); each of the
     * `nMerges` rounds is one pair-explode + partial-agg + top-1 over
-    * the ≤`maxWords`-row table, localCheckpointed per round so round
-    * r never replays rounds 1..r−1 (the k-means/pageRank loop
-    * posture). Driver round-trips are one 1-row collect per merge —
-    * the argmax IS the training state, exactly like centroids.
+    * the ≤`maxWords`-row table, lineage cut per round
+    * ([[Lineage.cut]]) so round r never replays rounds 1..r−1 (the
+    * k-means/pageRank loop posture). Driver round-trips are one 1-row
+    * collect per merge — the argmax IS the training state, exactly like
+    * centroids.
     */
   def bpeTrainMerges(
       docs: DataFrame, nMerges: Int,
@@ -924,16 +925,15 @@ object TextAnalysis {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     require(maxWords >= 1, s"maxWords must be >= 1, got $maxWords")
     val spark = docs.sparkSession
-    var w = toks(textCol, docs)
+    // each round's top-pair collect materializes the lazy cut, so a
+    // merge round pays ONE job, not two
+    var w = Lineage.cut(toks(textCol, docs)
       .select(explode(col("__w")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("word").asc).limit(maxWords)
       .select(col("word"), col("cnt"),
         concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 "),
-          lit("</w> ")).as("syms"))
-      // r17 (guide §5.2): LAZY — each round's top-pair collect
-      // materializes the cut, so a merge round pays ONE job, not two
-      .localCheckpoint(false)
+          lit("</w> ")).as("syms")))
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, String, Long)]
     var r = 0
@@ -952,10 +952,9 @@ object TextAnalysis {
         val Array(l, rr) = pair.split(" ", 2)
         val merged = l + rr
         merges += ((r + 1, l, rr, merged, c))
-        w = w.withColumn("syms",
-            call_function("replace", col("syms"),
-              lit(" " + pair + " "), lit(" " + merged + " ")))
-          .localCheckpoint(false)
+        w = Lineage.cut(w.withColumn("syms",
+          call_function("replace", col("syms"),
+            lit(" " + pair + " "), lit(" " + merged + " "))))
         r += 1
       }
     }
@@ -1110,14 +1109,13 @@ object TextAnalysis {
         rollingHash(substring_index(col("__s"), " ", 1)).as("h1"),
         rollingHash(substring_index(col("__s"), " ", -1)).as("h2")): _*)
     }
-    // LINEAGE CUT on the trained LM (the kinshipPanel/Graphs cutEvery
-    // precedent): big feeds FOUR consumers (the pair join, uni, back,
-    // B) — uncut, each re-reads and re-shingles the train corpus
-    // (four FileScans in the executed plan, measured). The cut table
-    // is the vocab-bounded pair-type LM — wiki-sized by construction.
-    val big = bigrams(train, withId = false)
-      .groupBy("h1", "h2").agg(count(lit(1)).as("__c12"))
-      .localCheckpoint(false)
+    // LINEAGE CUT on the trained LM ([[Lineage.cut]]): big feeds FOUR
+    // consumers (the pair join, uni, back, B) — uncut, each re-reads
+    // and re-shingles the train corpus (four FileScans in the executed
+    // plan, measured). The cut table is the vocab-bounded pair-type LM
+    // — wiki-sized by construction.
+    val big = Lineage.cut(bigrams(train, withId = false)
+      .groupBy("h1", "h2").agg(count(lit(1)).as("__c12")))
     val uni = big.groupBy("h1").agg(
       sum(col("__c12")).as("__c1"), count(lit(1)).as("__fwd"))
     val back = big.groupBy("h2").agg(count(lit(1)).as("__back"))

@@ -182,7 +182,7 @@ object VariantAnnotator {
     * exchanges; the rebuild is a narrow projection. The input subtree
     * is referenced twice (the explode chain and the join-back) —
     * callers with an expensive upstream should cut it (q241's lazy
-    * localCheckpoint).
+    * lineage cut).
     */
   def fillInfoTags(
       df: DataFrame,

@@ -161,19 +161,18 @@ object VariantQc {
           col("__c").cast("double") * lit(1000000.0)).cast("long")
         >= mafMicroMin)
       .drop("__b", "__c")
-    // LINEAGE CUT on the kept-panel SITE LIST (the Graphs/mmrRerank
-    // cutEvery precedent): the list feeds the final semi-join AND
-    // every downstream kinship self-join side — uncut, each consumer
-    // re-runs annotate → MAF → the whole LD prune (measured 800
-    // exec-core-s on the sf0.1 gate; cut, the chain runs once). The
-    // default cut is localCheckpoint — site KEYS only (the variant
-    // catalog, ~40 GB at biobank scale), executor-memory/disk
-    // resident. `keptSitesPath` LANDS the catalog as a parquet table
-    // instead and reads it back (the larger-than-cluster fallback,
-    // now an API flag — spec pins path-vs-checkpoint panel identity).
+    // LINEAGE CUT on the kept-panel SITE LIST ([[Lineage.cut]]): the
+    // list feeds the final semi-join AND every downstream kinship
+    // self-join side — uncut, each consumer re-runs annotate → MAF →
+    // the whole LD prune (measured 800 exec-core-s on the sf0.1 gate;
+    // cut, the chain runs once). The cut holds site KEYS only (the
+    // variant catalog, ~40 GB at biobank scale). `keptSitesPath` LANDS
+    // the catalog as a parquet table instead and reads it back (the
+    // larger-than-cluster fallback, now an API flag — spec pins
+    // path-vs-checkpoint panel identity).
     val pruned = ldPrune(common, maxDist, r2MicroMax, sampleCol)
     val kept = keptSitesPath match {
-      case None => pruned.localCheckpoint(false)
+      case None => Lineage.cut(pruned)
       case Some(path) =>
         pruned.write.mode("overwrite").parquet(path)
         ann.sparkSession.read.parquet(path)

@@ -850,7 +850,7 @@ object LlmQueries extends QuerySet {
   private def emb2(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
     e.select(col("vec_id").as("id"), col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+        col("embedding").cast("array<double>").as("v"))
       .unionAll(e.filter(col("vec_id") % 20 === 0)
         .select((col("vec_id") + 1000000L).as("id"), col("label"),
           transform(col("embedding"), x => x.cast("double") * 1.02 + 0.01).as("v")))
@@ -876,7 +876,7 @@ object LlmQueries extends QuerySet {
     "q40_cosine_topk",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("embedding"))
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
       Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 5), k = 10)
         .select(col("probe_id"), col("cand_id"), col("rnk"),
           micro(col("cosine")).as("cos_micro"))
@@ -917,7 +917,7 @@ object LlmQueries extends QuerySet {
       flips: Seq[Long] = Seq(0L)): DataFrame = {
     val e = t(s, dir, "embeddings").select(
       col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
+      col("embedding").cast("array<double>").as("v"))
       .withColumn("bucket", Similarity.lshBucket(col("v"), LshPlanes))
     val probes = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"),
@@ -987,7 +987,7 @@ object LlmQueries extends QuerySet {
     "q44_ann_recall",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("embedding"))
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
       val brute = Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 5), k = 5)
         .select(col("probe_id"), col("cand_id"))
       val lsh = lshTopK(s, dir, 5).select(col("probe_id"), col("cand_id"))
@@ -1101,7 +1101,7 @@ object LlmQueries extends QuerySet {
     "q45_multiprobe_recall",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("embedding"))
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
       val brute = Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 5), k = 5)
         .select(col("probe_id"), col("cand_id"))
       val multi = lshTopK(s, dir, 5, MultiProbeFlips)
@@ -1226,7 +1226,7 @@ object LlmQueries extends QuerySet {
     (s, dir) => {
       val e = t(s, dir, "embeddings").select(
         col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+        col("embedding").cast("array<double>").as("v"))
       val cents = e.filter(col("vec_id").between(100, 107))
         .select(col("vec_id").as("cid"), col("v").as("cv"))
       Similarity.kmeansStep(e, cents)
@@ -1262,7 +1262,7 @@ object LlmQueries extends QuerySet {
     (s, dir) => {
       val e = t(s, dir, "embeddings").select(
         col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+        col("embedding").cast("array<double>").as("v"))
       val books = Similarity.pqCodebooks(
         e.filter(col("vec_id").between(200, 207)), m = 4)
       val codes = Similarity.pqEncode(e, books)
@@ -1452,7 +1452,7 @@ object LlmQueries extends QuerySet {
     (s, dir) => {
       val e = t(s, dir, "embeddings").select(
         col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+        col("embedding").cast("array<double>").as("v"))
       val cents = e.filter(col("vec_id").between(100, 107))
         .select(col("vec_id").as("cid"), col("v").as("cv"))
       val books = Similarity.pqCodebooks(
@@ -2756,7 +2756,7 @@ object LlmQueries extends QuerySet {
     (s, dir) => {
       val e = t(s, dir, "embeddings").select(
         col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+        col("embedding").cast("array<double>").as("v"))
       val cents = e.filter(col("vec_id").between(100, 107))
         .select(col("vec_id").as("cid"), col("v").as("cv"))
       val assigned = Similarity.ivfAssign(e, cents)
@@ -2861,13 +2861,13 @@ object LlmQueries extends QuerySet {
     (s, dir) => {
       val e = t(s, dir, "embeddings").select(
         col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+        col("embedding").cast("array<double>").as("v"))
       val (mins, maxs) = Similarity.sqTrain(e, "v")
       val wts = typedLit((1 to mins.length).map(_.toDouble))
       Similarity.sqEncode(e, "vec_id", "v", mins, maxs)
         .select(
           col("vec_id"),
-          Similarity.dot(transform(col("code"), c => c.cast("double")), wts)
+          Similarity.dot(col("code").cast("array<double>"), wts)
             .cast("long").as("code_dot"),
           micro(col("err")).as("err_micro"))
         .orderBy("vec_id")
@@ -3251,7 +3251,7 @@ object LlmQueries extends QuerySet {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         val e = t(s, dir, "embeddings").select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("embedding"))
+          col("embedding").cast("array<double>").as("embedding"))
         val et = e.select(col("vec_id"),
           slice(col("embedding"), 1, 16).as("embedding"))
         val shortlist = Similarity
@@ -3831,7 +3831,7 @@ object LlmQueries extends QuerySet {
           Window.orderBy(col("score_micro").desc, col("id").asc)))
         .select(lit(0).as("qid"), col("id"), col("rnk"))
       val e = t(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("embedding"))
+        col("embedding").cast("array<double>").as("embedding"))
       val dense = Similarity
         .bruteForceTopK(e, e.filter(col("vec_id") === 0), k = 20)
         .select(lit(0).as("qid"), col("cand_id").as("id"), col("rnk"))
@@ -4519,7 +4519,7 @@ object LlmQueries extends QuerySet {
     (s, dir) => {
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("embedding"),
+          col("embedding").cast("array<double>").as("embedding"),
           col("label"))
       Similarity.hardNegatives(e, e.filter(col("vec_id") < 6), k = 8)
         .select(col("probe_id"), col("probe_label"), col("cand_id"),
@@ -4651,7 +4651,7 @@ object LlmQueries extends QuerySet {
     (s, dir) => {
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("embedding"))
+          col("embedding").cast("array<double>").as("embedding"))
       val pool = Similarity
         .bruteForceTopK(e, e.filter(col("vec_id") < 3), k = 8)
         .select(col("probe_id"), col("cand_id"),
@@ -5434,7 +5434,7 @@ object LlmQueries extends QuerySet {
     (s, dir) => {
       val e = t(s, dir, "embeddings")
       val a = e.select(col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+        col("embedding").cast("array<double>").as("v"))
       val flip = when(col("vec_id") % 5 === 0, lit(-1.0)).otherwise(lit(1.0))
       val shift = when(col("label") % 3 === 0, lit(0.05)).otherwise(lit(0.0))
       // label%7=3 groups VANISH from snapshot b — the one-sided case
@@ -5775,7 +5775,7 @@ object LlmQueries extends QuerySet {
       import graft.operators.Similarity
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("v"))
+          col("embedding").cast("array<double>").as("v"))
       val cents = e.filter(col("vec_id").between(100, 107))
         .select(col("vec_id").as("cid"), col("v").as("cv"))
       val assigned = Similarity.ivfAssign(e, cents)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VariantFunctions
 import graft.functions.VariantFunctions._
-import graft.operators.VariantAnnotator
+import graft.operators.{Lineage, VariantAnnotator}
 import graft.sources.VcfReader
 import QueryUtil._
 import SyntheticVariants._
@@ -3839,7 +3839,7 @@ object VcfQueries extends QuerySet {
       // representative: classes preserved — only the planted g5 clone
       // reads duplicate, exactly as on the full site set.
       // under Bench the kept-site catalog lands as parquet instead of
-      // a localCheckpoint (the r14 verdict's keptSitesPath ask): the
+      // a lineage cut (the r14 verdict's keptSitesPath ask): the
       // heap-resident checkpoint blocks were q208's GC carrier
       val panel = graft.operators.VariantQc.kinshipPanel(
         withDup, mafMicroMin = 100000L, maxDist = 100,
@@ -4350,7 +4350,7 @@ object VcfQueries extends QuerySet {
       // process (the ann-ad/ld-vecs substrate rule, r17): the
       // interpreted planting lambda was the gate's residual GC
       // carrier once the operator itself became a compiled kernel.
-      val planted = QueryUtil.substrate(s,
+      val planted = Lineage.cut(QueryUtil.substrate(s,
         s"pl-planted-${QueryUtil.digest(dir)}") {
         wide(s, dir)
           .withColumn("format", lit("GT:DP:AD:PL"))
@@ -4361,7 +4361,7 @@ object VcfQueries extends QuerySet {
                 i => ((col("k") + si * 7 + i * 13) % 60).cast("string")), ",")
               concat(call, lit(":"), pl)
             }))
-      }.localCheckpoint(false)
+      })
       VariantAnnotator.callFromPl(planted)
         .select(col("k"),
           explode(col("genotypes")).as(Seq("sample_id", "call")))
@@ -6030,16 +6030,15 @@ object VcfQueries extends QuerySet {
               struct(col("sample_id"), col("cgt")))).as("gr"),
             map_from_entries(collect_list(
               struct(col("sample_id"), col("ogt")))).as("go"))
-        val both = sites.select(
+        // r17 (guide §2.1/§5.2): fillInfoTags references its input
+        // twice (part agg + join-back) — LAZY lineage cut so the
+        // jointGenotype upstream runs once per action, materialized
+        // inside the gate's own job (no cross-run state)
+        val both = Lineage.cut(sites.select(
           col("chrom"), col("pos"), col("ref"), col("alt"),
           explode(map(lit("r"), col("gr"), lit("o"), col("go")))
             .as(Seq("which", "genotypes")))
-          .withColumn("info", lit("."))
-          // r17 (guide §2.1/§5.2): fillInfoTags references its input
-          // twice (part agg + join-back) — LAZY lineage cut so the
-          // jointGenotype upstream runs once per action, materialized
-          // inside the gate's own job (no cross-run state)
-          .localCheckpoint(false)
+          .withColumn("info", lit(".")))
         VariantAnnotator.fillInfoTags(both,
             siteKey = Seq("chrom", "pos", "ref", "alt", "which"))
           .groupBy("chrom", "pos", "ref", "alt")

@@ -63,28 +63,19 @@ class DedupClusterSpec extends AnyFunSuite with SparkSpec {
     assert(out === Set((2L, 1L, true), (3L, 1L, false)))
   }
 
-  test("reliable without a checkpoint dir is refused up front") {
-    // declared before the test that sets the dir (shared session)
-    val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      intercept[IllegalArgumentException] {
-        Dedup.connectedComponents(pairs, reliable = true)
-      }
-    }
-  }
-
   test("reliable checkpointing reaches the same fixed point") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
-      .toDF("id_a", "id_b")
-    val dir = TempDirs.create("graft_cc_ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    val rel = Dedup.connectedComponents(pairs, reliable = true)
-      .as[(Long, Long)].collect().toMap
-    val local = Dedup.connectedComponents(pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(rel === local)
-    assert(rel === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
-      10L -> 10L, 11L -> 10L))
+    withCheckpointDir { dir =>
+      val got = Dedup.connectedComponents(pairs.toDF("id_a", "id_b"))
+        .as[(Long, Long)].collect().toMap
+      assert(got === referenceLabels(pairs))
+      // the session's directory made the cuts durable: files under it
+      val root = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(dir).toUri.getPath)
+      val files = java.nio.file.Files.walk(root)
+      val written = try files.filter(java.nio.file.Files.isRegularFile(_)).count()
+        finally files.close()
+      assert(written > 0, s"no checkpoint files under $dir")
+    }
   }
 
   /** Plain-Scala union-find: every node of `pairs` → its component's min. */
@@ -112,8 +103,6 @@ class DedupClusterSpec extends AnyFunSuite with SparkSpec {
       "cliques and forests with self, duplicate and reversed pairs, " +
       "coalesced or at 8 partitions, local or reliable") {
     import org.scalacheck.{Gen, Prop, Test => Check}
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(TempDirs.create("graft_cc_prop").toString)
     def shape(ids: Seq[Long]): Gen[Seq[(Long, Long)]] = Gen.oneOf(
       Gen.const(ids.zip(ids.tail)),                                     // path
       Gen.const(ids.tail.map(ids.head -> _)),                           // star
@@ -137,9 +126,10 @@ class DedupClusterSpec extends AnyFunSuite with SparkSpec {
       val want = referenceLabels(pairs)
       val df = pairs.toDF("id_a", "id_b")
       for (coalesce <- Seq(true, false); reliable <- Seq(false, true)) {
-        val got = withCoalescing(coalesce) {
-          Dedup.connectedComponents(df, reliable = reliable).as[(Long, Long)].collect()
+        def run() = withCoalescing(coalesce) {
+          Dedup.connectedComponents(df).as[(Long, Long)].collect()
         }
+        val got = if (reliable) withCheckpointDir(_ => run()) else run()
         assert(got.length === want.size && got.toMap === want,
           s"coalesce=$coalesce reliable=$reliable pairs=$pairs")
       }
@@ -149,18 +139,6 @@ class DedupClusterSpec extends AnyFunSuite with SparkSpec {
     val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(6)
       .withInitialSeed(org.scalacheck.rng.Seed(20261019L)), Prop.forAllNoShrink(graph)(check))
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
-  }
-
-  /** Jobs `body` starts, counted from the listener bus once it is quiet. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { quiesce(jobs); jobs.set(0); body; quiesce(jobs); jobs.get() }
-    finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("a pair list that coalesces to one partition: connectedComponents " +

@@ -559,19 +559,21 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     // ~exponentially with k (k=12 uncut OOMed the shared-suite JVM;
     // k≈32 is not analyzable in reasonable time — exactly why the
     // cuts exist)
-    def picks(k: Int, cutEvery: Int) =
-      Similarity.mmrRerank(pool, k, 500000L, cutEvery = cutEvery)
+    def picks(k: Int) =
+      Similarity.mmrRerank(pool, k, 500000L)
         .orderBy("rnk").collect()
         .map(r => (r.getLong(1), r.getInt(2))).toSeq
-    val cut6 = picks(6, 2)
-    assert(cut6 === picks(6, 64)) // cutEvery > k → zero cuts
+    // the greedy prefix: a k = 6 run cuts once (after round 4), a
+    // k = 4 run never, and their first 4 picks agree
+    val cut6 = picks(6)
     assert(cut6.length === 6)
+    assert(cut6.take(4) === picks(4))
     // bounded growth: with cuts every 4 rounds a k=12 run's FINAL
     // plan stacks only the rounds since the last cut — it must not
     // exceed a small multiple of an uncut 4-round plan
-    val plan4 = Similarity.mmrRerank(pool, k = 4, 500000L, cutEvery = 64)
+    val plan4 = Similarity.mmrRerank(pool, k = 4, 500000L)
       .queryExecution.optimizedPlan.toString.length
-    val deep = Similarity.mmrRerank(pool, k = 12, 500000L, cutEvery = 4)
+    val deep = Similarity.mmrRerank(pool, k = 12, 500000L)
     val plan12 = deep.queryExecution.optimizedPlan.toString.length
     assert(plan12 < plan4.toLong * 8,
       s"lineage cut did not bound the deep plan: $plan12 vs 4-round $plan4")

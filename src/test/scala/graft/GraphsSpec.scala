@@ -49,17 +49,19 @@ class GraphsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("pageRank: deep runs cut lineage without changing a single score") {
-    // iters = 9 crosses the cutEvery = 4 default twice (rounds 4 and
-    // 8): the checkpointed path must be value-identical to the pure
-    // declarative chain (cutEvery = 100 → never cuts)
+    // iters = 9 cuts twice (rounds 4 and 8): the cut run must equal a
+    // plain-Scala replay of the int64 recurrence
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (5L, 1L),
       (1L, 4L))
-    val edges = pairs.toDF("src", "dst")
-    val cut = Graphs.pageRankMicro(edges, iters = 9)
-      .as[(Long, Long)].collect().toSet
-    val pure = Graphs.pageRankMicro(edges, iters = 9, cutEvery = 100)
-      .as[(Long, Long)].collect().toSet
-    assert(cut === pure)
+    val cut = Graphs.pageRankMicro(pairs.toDF("src", "dst"), iters = 9)
+      .as[(Long, Long)].collect().toMap
+    val out = pairs.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+    var p = pairs.flatMap(e => Seq(e._1, e._2)).map(_ -> 1000000L).toMap
+    for (_ <- 1 to 9) {
+      val in = pairs.groupMapReduce(_._2)(e => p(e._1) / out(e._1))(_ + _)
+      p = p.map { case (v, _) => v -> (150000L + 850000L * in.getOrElse(v, 0L) / 1000000L) }
+    }
+    assert(cut === p)
   }
 
   test("triangles: K4 has 4, each counted once at its ≺-min pivot; " +

@@ -70,7 +70,7 @@ class RankEvalSpec extends AnyFunSuite with SparkSpec {
       Seq.fill(2)(("A", "C")) ++ Seq.fill(2)(("B", "C")) ++
       Seq.fill(2)(("C", "B")) ++ Seq.fill(2)(("A", "D")))
       .toDF("winner", "loser")
-    val got = RankEval.bradleyTerryMicro(cmp, "winner", "loser", iters = 3)
+    def got(iters: Int) = RankEval.bradleyTerryMicro(cmp, "winner", "loser", iters)
       .select("item", "wins", "n_comparisons", "score_micro")
       .as[(String, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
@@ -82,25 +82,32 @@ class RankEvalSpec extends AnyFunSuite with SparkSpec {
     val items = Seq("A", "B", "C", "D")
     val wins = items.map(i =>
       i -> wd.collect { case ((a, _), n) if a == i => n }.sum).toMap
-    var p = items.map(_ -> 1000000L).toMap
-    for (_ <- 1 to 3) {
-      val s = items.map(i => i -> e.collect {
-        case ((a, b), n) if a == i =>
-          n * (1000000000000L / math.max(p(i) + p(b), 1L))
-      }.sum).toMap
-      val q = items.map(i => i -> (if (wins(i) == 0L || s(i) <= 0L) 0L
-        else (BigInt(wins(i)) * BigInt("1000000000000") / s(i)).toLong)).toMap
-      val tp = q.values.map(BigInt(_)).sum
-      p = items.map(i => i -> (if (tp <= 0) 0L
-        else (BigInt(q(i)) * (items.size * 1000000L) / tp).toLong)).toMap
+    def replay(iters: Int): Map[String, Long] = {
+      var p = items.map(_ -> 1000000L).toMap
+      for (_ <- 1 to iters) {
+        val s = items.map(i => i -> e.collect {
+          case ((a, b), n) if a == i =>
+            n * (1000000000000L / math.max(p(i) + p(b), 1L))
+        }.sum).toMap
+        val q = items.map(i => i -> (if (wins(i) == 0L || s(i) <= 0L) 0L
+          else (BigInt(wins(i)) * BigInt("1000000000000") / s(i)).toLong)).toMap
+        val tp = q.values.map(BigInt(_)).sum
+        p = items.map(i => i -> (if (tp <= 0) 0L
+          else (BigInt(q(i)) * (items.size * 1000000L) / tp).toLong)).toMap
+      }
+      p
     }
-    items.foreach { i =>
-      val nc = e.collect { case ((a, _), n) if a == i => n }.sum
-      assert(got(i) === ((wins(i), nc, p(i))), s"item $i")
+    // iters = 9 cuts lineage mid-run (rounds 4 and 8), iters = 3 never
+    for (iters <- Seq(3, 9)) {
+      val (g, p) = (got(iters), replay(iters))
+      items.foreach { i =>
+        val nc = e.collect { case ((a, _), n) if a == i => n }.sum
+        assert(g(i) === ((wins(i), nc, p(i))), s"item $i at iters = $iters")
+      }
+      assert(g("A")._3 > g("B")._3 && g("B")._3 > g("C")._3,
+        s"strength ordering broke: $g")
+      assert(g("D")._3 === 0L)
     }
-    assert(got("A")._3 > got("B")._3 && got("B")._3 > got("C")._3,
-      s"strength ordering broke: $got")
-    assert(got("D")._3 === 0L)
     intercept[IllegalArgumentException] {
       RankEval.bradleyTerryMicro(cmp, "winner", "loser", iters = 0)
     }

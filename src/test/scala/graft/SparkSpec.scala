@@ -16,6 +16,30 @@ trait SparkSpec { self: Suite =>
     try body finally spark.conf.set(key, old)
   }
 
+  /** Jobs `body` starts, counted from the listener bus once it is quiet. */
+  protected def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { quiesce(jobs); jobs.set(0); body; quiesce(jobs); jobs.get() }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Runs `body` with the shared session's checkpoint directory set to a
+    * fresh one, which `body` receives, and restores the previous setting
+    * after: left set, every later suite's lineage cuts would turn durable.
+    */
+  protected def withCheckpointDir[A](body: String => A): A = {
+    val sc = spark.sparkContext
+    val old = sc.getCheckpointDir
+    sc.setCheckpointDir(TempDirs.create("graft_ckpt").toString)
+    try body(sc.getCheckpointDir.get)
+    finally org.apache.spark.CheckpointDirs.restore(sc, old)
+  }
+
   /** Wait until an async listener counter has been STABLE for several
     * consecutive windows — a fixed Thread.sleep races the listener bus
     * both ways (stray pre-reset events landing after the reset = false

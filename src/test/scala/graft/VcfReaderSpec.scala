@@ -14,6 +14,15 @@ class VcfReaderSpec extends AnyFunSuite with SparkSpec {
     assert(m.headerKv.contains(("fileformat", "VCFv4.2")))
     assert(m.columns.take(5) === Seq("#CHROM", "POS", "ID", "REF", "ALT"))
     assert(m.samples === Seq("NA1", "NA2"))
+    // header_df parity: the ##key=value rows in file order, then the
+    // sample list and the column line
+    val rows = VcfReader.headerDf(spark, path)
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(rows.take(2) === Seq("fileformat" -> "VCFv4.2", "source" -> "graft-test"))
+    assert(rows.count(_._1 == "INFO") === 4 && rows.count(_._1 == "FORMAT") === 3)
+    assert(rows.takeRight(2) === Seq("SampleIDs" -> "NA1,NA2",
+      "ColumnHeader" -> "#CHROM,POS,ID,REF,ALT,QUAL,FILTER,INFO,FORMAT,NA1,NA2"))
+    assert(rows.length === 11)
   }
 
   test("read produces the wide graft schema with normalized chrom") {
