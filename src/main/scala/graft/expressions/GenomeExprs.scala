@@ -54,6 +54,22 @@ object GenomeExprs {
   def gtSwap(call: Column, k: Column): Column =
     Bridge.column(GtSwapExpr(Bridge.expression(call), Bridge.expression(k)))
 
+  /** `alt_flip(alt)` — the minus-strand liftover rewrite of a
+    * comma-separated ALT: each pure `[ACGTacgt]+` token is
+    * reverse-complemented; symbolic, `.` and empty tokens ride verbatim.
+    * Null for a null ALT. The one-call form of
+    * `array_join(transform(split(alt, ","), flip), ",")`.
+    */
+  def altFlip(alt: Column): Column = Bridge.column(AltFlipExpr(Bridge.expression(alt)))
+
+  /** `alt_swap(alt, from, to)` — every comma-separated token of `alt`
+    * equal to `from` becomes `to`, the others ride verbatim: liftover's
+    * REF⇄ALT swap. Null when any input is null.
+    */
+  def altSwap(alt: Column, from: Column, to: Column): Column =
+    Bridge.column(AltSwapExpr(Bridge.expression(alt), Bridge.expression(from),
+      Bridge.expression(to)))
+
   /** `trio_phase_pl(pl_child, pl_mother, pl_father)` — the PL-weighted
     * max-posterior transmission resolution of a double-het trio (GATK
     * PhaseByTransmission's likelihood core, hard-call `ambiguous`
@@ -225,6 +241,93 @@ case class GtSwapExpr(call: Expression, k: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): GtSwapExpr =
     copy(call = newLeft, k = newRight)
+}
+
+/** Token rewrites of a comma-separated ALT (see [[GenomeExprs.altFlip]]
+  * and [[GenomeExprs.altSwap]]): the tokens are `split(alt, ",")`'s,
+  * empty ones included, and the commas come back where they were. */
+object AltKernel {
+  private def pure(s: String, from: Int, until: Int): Boolean = until > from && {
+    var i = from
+    while (i < until && "ACGTacgt".indexOf(s.charAt(i)) >= 0) i += 1
+    i == until
+  }
+
+  private def complement(c: Char): Char = c match {
+    case 'A' => 'T'; case 'C' => 'G'; case 'G' => 'C'; case 'T' => 'A'
+    case 'a' => 't'; case 'c' => 'g'; case 'g' => 'c'; case _ => 'a'
+  }
+
+  def flip(altU: UTF8String): UTF8String = {
+    val s = altU.toString
+    val out = new java.lang.StringBuilder(s.length)
+    var i = 0
+    while (i <= s.length) {
+      val j = { val c = s.indexOf(',', i); if (c < 0) s.length else c }
+      if (pure(s, i, j)) { var p = j - 1; while (p >= i) { out.append(complement(s.charAt(p))); p -= 1 } }
+      else out.append(s, i, j)
+      if (j < s.length) out.append(',')
+      i = j + 1
+    }
+    UTF8String.fromString(out.toString)
+  }
+
+  def swap(altU: UTF8String, fromU: UTF8String, toU: UTF8String): UTF8String = {
+    val s = altU.toString
+    val from = fromU.toString
+    val to = toU.toString
+    val out = new java.lang.StringBuilder(s.length + to.length)
+    var i = 0
+    while (i <= s.length) {
+      val j = { val c = s.indexOf(',', i); if (c < 0) s.length else c }
+      if (j - i == from.length && s.startsWith(from, i)) out.append(to)
+      else out.append(s, i, j)
+      if (j < s.length) out.append(',')
+      i = j + 1
+    }
+    UTF8String.fromString(out.toString)
+  }
+}
+
+/** (alt) → the minus-strand-flipped ALT (see [[GenomeExprs.altFlip]]). */
+case class AltFlipExpr(alt: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  override def child: Expression = alt
+  override def prettyName: String = "alt_flip"
+  override def dataType: DataType = StringType
+  override def checkInputDataTypes(): TypeCheckResult = alt.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(s"$prettyName expects string, got $other")
+  }
+  override protected def nullSafeEval(a: Any): Any = AltKernel.flip(a.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.expressions.AltKernel.flip($a)")
+  override protected def withNewChildInternal(newChild: Expression): AltFlipExpr =
+    copy(alt = newChild)
+}
+
+/** (alt, from, to) → `alt` with its `from` tokens replaced by `to` (see
+  * [[GenomeExprs.altSwap]]). */
+case class AltSwapExpr(alt: Expression, from: Expression, to: Expression)
+    extends TernaryExpression {
+  override def first: Expression = alt
+  override def second: Expression = from
+  override def third: Expression = to
+  override def prettyName: String = "alt_swap"
+  override def dataType: DataType = StringType
+  override def checkInputDataTypes(): TypeCheckResult =
+    (alt.dataType, from.dataType, to.dataType) match {
+      case (StringType, StringType, StringType) => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects (string, string, string), got $other")
+    }
+  override protected def nullSafeEval(a: Any, f: Any, t: Any): Any = AltKernel.swap(
+    a.asInstanceOf[UTF8String], f.asInstanceOf[UTF8String], t.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, f, t) => s"graft.expressions.AltKernel.swap($a, $f, $t)")
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression): AltSwapExpr =
+    copy(alt = newFirst, from = newSecond, to = newThird)
 }
 
 object TrioPhaseKernel {

@@ -1,5 +1,6 @@
 package graft.expressions
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -109,6 +110,17 @@ object QuantKernels {
   val CodeType: StructType = StructType(Seq(
     StructField("d", DoubleType, nullable = true),
     StructField("code", LongType, nullable = false)))
+
+  /** The `vf` element code of a vector column: double 0, float 1, long 2,
+    * int 3 (the `VectorExprs.elem` widening). */
+  def vecCode(dt: DataType): Int = dt match {
+    case ArrayType(DoubleType, _) => 0
+    case ArrayType(FloatType, _) => 1
+    case ArrayType(LongType, _) => 2
+    case ArrayType(IntegerType, _) => 3
+    case other => throw new IllegalArgumentException(
+      s"a quantizer expects array<double|float|long|int> vectors, got ${other.simpleString}")
+  }
 
   /** Whether subspace `mi` of `v` yields distances (see object doc). */
   private def valid(v: ArrayData, bank: QuantBank, mi: Int): Boolean = {
@@ -234,6 +246,206 @@ object QuantKernels {
   }
 }
 
+/** One codeword's Lloyd partials: per dim the element count `n`, null
+  * elements included, and the exact sum of the non-null decimal(18,6)
+  * elements as a 128-bit unscaled integer; and the objective term, the
+  * sum of its vectors' non-null winning distances. Decimal addition is
+  * exact, so partials merge in any order to the sum Spark's
+  * `sum(decimal(18,6))` returns.
+  */
+final class LloydSlot extends Serializable {
+  private var n, hi, lo = Array.emptyLongArray
+  private var some = Array.emptyBooleanArray
+  private var qe = 0.0
+
+  /** Dims this codeword saw elements at: [0, dims). */
+  def dims: Int = n.length
+  def count(dim: Int): Long = n(dim)
+  def objective: Double = qe
+
+  private[expressions] def reserve(len: Int): Unit = if (len > n.length) {
+    n = java.util.Arrays.copyOf(n, len)
+    hi = java.util.Arrays.copyOf(hi, len)
+    lo = java.util.Arrays.copyOf(lo, len)
+    some = java.util.Arrays.copyOf(some, len)
+  }
+
+  /** Counts an element at `dim`; a null `x` counts but adds nothing. */
+  private[expressions] def addElem(dim: Int, x: Decimal): Unit = {
+    n(dim) += 1
+    if (x != null) {
+      val l = x.toUnscaledLong
+      add(dim, l >> 63, l)
+    }
+  }
+
+  private[expressions] def addDist(d: Double): Unit = qe += d
+
+  private def add(d: Int, h: Long, l: Long): Unit = {
+    val a = lo(d)
+    val r = a + l
+    hi(d) += h + (if (java.lang.Long.compareUnsigned(r, a) < 0) 1L else 0L)
+    lo(d) = r
+    some(d) = true
+  }
+
+  /** The sum at `dim` as decimal(28,6), Spark's `sum` result type: null
+    * when every element was null, and past 28 digits null (or, with
+    * `ansi`, an overflow error) like Spark's overflowing sum.
+    */
+  def sum(dim: Int, ansi: Boolean): java.math.BigDecimal =
+    if (!some(dim)) null
+    else {
+      val h = hi(dim)
+      val l = lo(dim)
+      val unscaled =
+        if (h == (l >> 63)) java.math.BigInteger.valueOf(l)
+        else java.math.BigInteger.valueOf(h).shiftLeft(64)
+          .add(new java.math.BigInteger(java.lang.Long.toUnsignedString(l)))
+      val s = new java.math.BigDecimal(unscaled, 6)
+      if (s.precision <= 28) s
+      else if (ansi) throw new ArithmeticException(s"decimal(28,6) sum overflow: $s")
+      else null
+    }
+
+  /** Adds `o` into this one and returns it. */
+  def merge(o: LloydSlot): LloydSlot = {
+    reserve(o.dims)
+    var d = 0
+    while (d < o.dims) {
+      n(d) += o.n(d)
+      if (o.some(d)) add(d, o.hi(d), o.lo(d))
+      d += 1
+    }
+    qe += o.qe
+    this
+  }
+}
+
+/** The partials of one Lloyd re-estimation over a bank's codewords, one
+  * [[LloydSlot]] per codeword that captured a vector: slot m·K + k for
+  * subspace m, codeword k (an IVF cell is slot k of its M = 1 bank).
+  */
+final class LloydSums private (private val slots: Array[LloydSlot]) extends Serializable {
+
+  /** Slot `s`'s partials; None when it captured nothing. */
+  def apply(s: Int): Option[LloydSlot] = Option(slots(s))
+
+  /** The objective: every slot's term, summed in slot order. */
+  def objective: Double = slots.iterator.filter(_ != null).map(_.objective).sum
+
+  private def slot(s: Int): LloydSlot = {
+    if (slots(s) == null) slots(s) = new LloydSlot
+    slots(s)
+  }
+
+  /** Adds `o` into this one and returns it. */
+  def merge(o: LloydSums): LloydSums = {
+    for (s <- slots.indices if o.slots(s) != null) slot(s).merge(o.slots(s))
+    this
+  }
+
+  private def touched: Iterator[(Int, LloydSlot)] =
+    slots.iterator.zipWithIndex.collect { case (c, s) if c != null => s -> c }
+}
+
+object LloydSums {
+
+  def empty(bank: QuantBank): LloydSums = new LloydSums(new Array[LloydSlot](bank.m * bank.k))
+
+  /** The most partial bytes a round sends to the driver as task results
+    * (see [[reduce]]); a quarter of `spark.driver.maxResultSize` when
+    * that is smaller. */
+  val DirectBytes: Long = 16L << 20
+
+  /** Casts a double to decimal(18,6) by Spark's rule under the session's
+    * ANSI mode: the residual re-estimation casts `x − c[cell][p]`.
+    */
+  def decimalCast(): Expression = org.apache.spark.sql.catalyst.expressions.Cast(
+    org.apache.spark.sql.catalyst.expressions.BoundReference(0, DoubleType, nullable = true),
+    DecimalType(18, 6))
+
+  /** One re-estimation round over `rows` (see [[fold]]) as one job: each
+    * task folds its partition into one partial. A partial holds at most
+    * codewords × dims × 25 bytes (dims = the bank's dimension; only a
+    * vector longer than that, which the quantizer scores null, goes
+    * past it). When partitions × that bound fits [[DirectBytes]], the
+    * job is one stage and the driver merges the partials in partition
+    * order. Past it, the executors merge them first, per codeword
+    * through `reduceByKey` as Spark MLlib's KMeans does (one shuffle),
+    * so the driver receives about one partial's bytes whatever the
+    * partition count, and `spark.driver.maxResultSize` bounds the bank,
+    * not the partition count.
+    */
+  def reduce(rows: RDD[InternalRow], bank: QuantBank, vf: Int, cast: Expression): LloydSums = {
+    val partials = rows.mapPartitions(it => Iterator(fold(bank, vf, cast, it)))
+    val parts = partials.getNumPartitions
+    val slots = bank.m * bank.k
+    val maxResult = rows.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val limit = if (maxResult > 0) math.min(DirectBytes, maxResult / 4) else DirectBytes
+    if (parts.toLong * slots * (bank.sub * 25L + 64) <= limit)
+      partials.collect().foldLeft(empty(bank))(_ merge _)
+    else {
+      val out = empty(bank)
+      partials.flatMap(_.touched).reduceByKey(_ merge _, math.min(parts, slots)).collect()
+        .foreach { case (s, c) => out.slots(s) = c }
+      out
+    }
+  }
+
+  /** One partition's partials. Each row is (v, dv) — the vector and its
+    * elements cast to decimal(18,6) — under a flat bank, and (v, cell)
+    * under a residual one, whose residual components `x − c[cell][p]`
+    * go through `cast` ([[decimalCast]]). Each row is assigned with
+    * [[QuantKernels.nearestK]]: the (distance, code) ties, NaN and
+    * wrong-length handling of every quantizer operator. Every element p
+    * of the vector counts at (slot of its subspace's code, its dim):
+    * under an IVF (exact) bank all of them, dim p; under a PQ bank those
+    * of the M subspaces, dim p mod sub. A residual row whose cell is
+    * null or not in the bank, and a null vector, add nothing.
+    */
+  def fold(bank: QuantBank, vf: Int, cast: Expression,
+      rows: Iterator[InternalRow]): LloydSums = {
+    val out = empty(bank)
+    val one = new GenericInternalRow(1)
+    while (rows.hasNext) {
+      val row = rows.next()
+      val v = if (row.isNullAt(0)) null else row.getArray(0)
+      val cellNull = bank.residual && row.isNullAt(1)
+      val cell = if (bank.residual && !cellNull) row.getLong(1) else 0L
+      val nc = if (v == null) null else QuantKernels.nearestK(bank, v, vf, cellNull, cell, 1)
+      if (nc != null && v.numElements() > 0) {
+        val len = if (bank.exact) v.numElements() else math.min(v.numElements(), bank.m * bank.sub)
+        val cent = if (bank.residual) bank.cells(bank.cellIndex(cell)) else null
+        val dv = if (bank.residual) null else row.getArray(1)
+        val subspaces = if (bank.exact) 1 else (len + bank.sub - 1) / bank.sub
+        var mi = 0
+        while (mi < subspaces) {
+          val hit = nc.getStruct(mi, 2)
+          val c = out.slot(mi * bank.k + java.util.Arrays.binarySearch(bank.ids, hit.getLong(1)))
+          if (!hit.isNullAt(0)) c.addDist(hit.getDouble(0))
+          val from = mi * bank.sub
+          val until = if (bank.exact) len else math.min(len, from + bank.sub)
+          c.reserve(until - from)
+          var p = from
+          while (p < until) {
+            c.addElem(p - from,
+              if (v.isNullAt(p)) null
+              else if (dv != null) dv.getDecimal(p, 18, 6)
+              else {
+                one.update(0, VectorExprs.elem(v, p, vf) - cent(p))
+                cast.eval(one).asInstanceOf[Decimal]
+              })
+            p += 1
+          }
+          mi += 1
+        }
+      }
+    }
+    out
+  }
+}
+
 /** Shared shape of the two quantizer expressions: children are the
   * vector and, for a residual bank, its IVF cell (bigint).
   */
@@ -246,12 +458,7 @@ sealed abstract class QuantExpr extends Expression {
 
   override def nullable: Boolean = bank.residual
 
-  private def vf: Int = children.head.dataType match {
-    case ArrayType(DoubleType, _) => 0
-    case ArrayType(FloatType, _) => 1
-    case ArrayType(LongType, _) => 2
-    case _ => 3
-  }
+  private def vf: Int = QuantKernels.vecCode(children.head.dataType)
 
   override def checkInputDataTypes(): TypeCheckResult = children.map(_.dataType) match {
     case ArrayType(DoubleType | FloatType | LongType | IntegerType, _) +: cell

@@ -215,8 +215,7 @@ object Liftover {
           .otherwise(col(refCol)))
       .withColumn("lifted_alt",
         when(col("__s").isNull, lit(null).cast("string"))
-          .when(minus, array_join(
-            transform(split(col(altCol), ","), a => flipAllele(a)), ","))
+          .when(minus, graft.expressions.GenomeExprs.altFlip(col(altCol)))
           .otherwise(col(altCol)))
       .drop("__s", "__e", "dst_chrom", "dst_start", "strand")
     if (dstGenome == null) lifted
@@ -263,9 +262,8 @@ object Liftover {
           col("__dst_ref") =!= col("lifted_ref"), k).otherwise(lit(0)))
     val validated = base
       .withColumn("lifted_alt",
-        when(swapped, array_join(transform(alts, a =>
-          when(a === col("__dst_ref"), col("lifted_ref")).otherwise(a)),
-          ","))
+        when(swapped, GenomeExprs.altSwap(col("lifted_alt"), col("__dst_ref"),
+          col("lifted_ref")))
           .otherwise(col("lifted_alt")))
       .withColumn("lifted_ref",
         when(swapped, col("__dst_ref")).otherwise(col("lifted_ref")))

@@ -19,10 +19,24 @@ object Lineage {
     * final one, so the caller's downstream plan composes with it. */
   def due(round: Int, rounds: Int): Boolean = round % Every == 0 && round < rounds
 
+  /** Each live cut frame keeps the frame it cut reachable: a lazy cut
+    * truncates its RDD lineage when its first job materializes it, and
+    * if that dropped the last reference to the pre-cut plan, a GC could
+    * collect the plan's SQL-metric accumulators while another stage that
+    * reads the cut still reports updates to them (LineageSpec's GC
+    * probe). The price is one generation of blocks: the pre-cut plan
+    * holds its inputs, in a round loop the previous cut's blocks, so
+    * ContextCleaner frees those only once the newer cut frame is gone. */
+  private val cutFrom = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, DataFrame]())
+
   /** Truncates `df`'s plan. Lazy by default: the caller's next action
     * materializes the cut instead of an up-front job per cut (eager
     * cuts were q193's 3.5 s of pure job overhead). */
-  def cut(df: DataFrame, eager: Boolean = false): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
-    else df.localCheckpoint(eager)
+  def cut(df: DataFrame, eager: Boolean = false): DataFrame = {
+    val c = if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
+      else df.localCheckpoint(eager)
+    cutFrom.put(c, df)
+    c
+  }
 }

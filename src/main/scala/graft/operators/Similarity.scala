@@ -1,10 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
-import graft.expressions.{QuantBank, QuantExprs}
+import graft.expressions.{LloydSlot, LloydSums, QuantBank, QuantExprs, QuantKernels}
+import graft.queries.QueryUtil.avg6
 
 /** Vector similarity over embedding columns (Array[Float]/Array[Double]).
   *
@@ -196,25 +201,10 @@ object Similarity {
     // centroid values freeze when the assignment is built.
     val cents = collectCentroids(centroids, centIdCol, centVecCol)
     require(cents.nonEmpty, "ivfAssign needs at least one centroid")
-    assignPlan(vecs, cents, idCol, vecCol, keepDist = false)
-  }
-
-  /** The shared assignment plan behind [[ivfAssign]] and the fused
-    * training scan. `keepDist = true` additionally retains the winning
-    * squared distance as `__dist` — the WCSS term
-    * [[kmeansStepWithObjective]] folds into its aggregation so training
-    * needs no separate objective scan.
-    */
-  private def assignPlan(
-      vecs: DataFrame, cents: Seq[(Long, Seq[Double])],
-      idCol: String, vecCol: String, keepDist: Boolean): DataFrame = {
     val bank = QuantBank.centroids(cents)
-    val base = Seq(col(idCol), col(vecCol),
-      QuantExprs.codeAt(col("__nc"), 0, bank).as("cell"))
     vecs.select(col(idCol), col(vecCol),
         QuantExprs.nearestCode(col(vecCol), bank).as("__nc"))
-      .select((if (keepDist) base :+ QuantExprs.distAt(col("__nc"), 0).as("__dist")
-        else base): _*)
+      .select(col(idCol), col(vecCol), QuantExprs.codeAt(col("__nc"), 0, bank).as("cell"))
   }
 
   /** SemDeDup within-cell near-duplicate PAIRS (Abbas et al. 2023 —
@@ -295,30 +285,84 @@ object Similarity {
       .select(col(idCol), col(vecCol), col("__c.code").as("cell"))
   }
 
+  // ---- Lloyd training ------------------------------------------------
+  //
+  // Every Lloyd trainer (k-means, flat and residual PQ) re-estimates
+  // through ONE fold, the way Spark MLlib's KMeans runs one aggregation
+  // per iteration over one input RDD: the training frame is planned once,
+  // and each round is one job whose tasks assign their rows with the
+  // quantizer kernel (`QuantKernels.nearestK`: the same bank, tie rule and
+  // NaN/wrong-length handling as every IVF/PQ operator) and sum, per
+  // (codeword, dim), the element count and the exact decimal(18,6) sum
+  // ([[graft.expressions.LloydSums]]). The job is one stage while the
+  // partials sent to the driver stay small (`LloydSums.DirectBytes`:
+  // 16 MB, at most a quarter of spark.driver.maxResultSize); past that
+  // the executors merge them per codeword with one shuffle first
+  // (`LloydSums.reduce`). The driver applies avg6: per-dim values are
+  // projected to decimal(18,6) BEFORE summing, decimal addition is exact,
+  // and the mean is one IEEE divide of the rounded sum — bit-identical on
+  // any partitioning and in DuckDB, the contract the relational oracles
+  // use.
+
+  private val KmeansStepSchema = StructType(Seq(
+    StructField("cell", LongType, nullable = false),
+    StructField("dim", IntegerType, nullable = false),
+    StructField("n", LongType, nullable = false),
+    StructField("c", DoubleType, nullable = true)))
+
+  /** The training frame, planned once: (v, v cast to array<decimal(18,6)>
+    * by Spark — its ANSI, NaN and overflow rules) for a flat bank,
+    * (v, cell) for a residual one.
+    */
+  private def lloydScan(vecs: DataFrame, residual: Boolean, vecCol: String): Bridge.PlannedScan =
+    new Bridge.PlannedScan(vecs.select(col(vecCol),
+      if (residual) col("cell").cast("long") else col(vecCol).cast("array<decimal(18,6)>")))
+
+  /** One re-estimation round under `bank`: one job over `scan`. */
+  private def lloydRound(scan: Bridge.PlannedScan, bank: QuantBank): LloydSums = {
+    val vf = QuantKernels.vecCode(scan.schema.head.dataType)
+    val cast = if (bank.residual) LloydSums.decimalCast() else null
+    scan.run(LloydSums.reduce(_, bank, vf, cast))
+  }
+
+  private def ansi(vecs: DataFrame): Boolean =
+    vecs.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
+
+  /** The avg6 mean of codeword `c` at `dim` (0-based); null when every
+    * element there was null. */
+  private def lloydMean(c: LloydSlot, dim: Int, ansi: Boolean): java.lang.Double =
+    avg6(c.sum(dim, ansi), c.count(dim))
+
+  /** `slot`'s re-estimated codeword over the dims it saw, or None when it
+    * captured nothing (the caller keeps the old one). */
+  private def learned(sums: LloydSums, slot: Int, ansi: Boolean): Option[Seq[Double]] =
+    sums(slot).map(c => (0 until c.dims).map { d =>
+      val m = lloydMean(c, d, ansi)
+      require(m != null, s"codeword $slot averages only null elements at dim ${d + 1}")
+      m.doubleValue
+    })
+
   /** One Lloyd (k-means) iteration — how IVF centroids are actually
     * learned before [[ivfAssign]] serves queries: assign every vector to
     * its nearest centroid, re-estimate each centroid as the per-cell
-    * per-dimension mean. Emitted long-form (cell, dim, n, c): the shape
-    * that aggregates distributedly with ONE shuffle (groupBy cell+dim
-    * after a narrow posexplode) and no array rebuild on the hot path.
-    *
-    * Determinism at scale: per-dim values are projected to decimal(18,6)
-    * BEFORE summing (exact decimal addition — aggregation order can't
-    * flip bits), and the mean is one IEEE divide of the rounded sum —
-    * the same avg6 contract the relational oracles use, so the result is
-    * bit-identical on any partitioning and in DuckDB.
+    * per-dimension mean. Returned long-form (cell, dim, n, c) as a
+    * driver-local frame sorted by (cell, dim), built with one centroid
+    * collect and one fold job over `vecs` (see "Lloyd training"). `n`
+    * counts every element of the cell's vectors at that dim, null ones
+    * included; `c` is null when all of them were null. A cell that
+    * captured no element has no rows.
     */
   def kmeansStep(
-      vecs: DataFrame, centroids: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "v",
+      vecs: DataFrame, centroids: DataFrame, vecCol: String = "v",
       centIdCol: String = "cid", centVecCol: String = "cv"): DataFrame = {
-    import graft.queries.QueryUtil.{avg6, dec}
-    ivfAssign(vecs, centroids, idCol, vecCol, centIdCol, centVecCol)
-      .select(col("cell"), posexplode(col(vecCol)).as(Seq("__p", "__x")))
-      .groupBy(col("cell"), (col("__p") + 1).as("dim"))
-      .agg(count(lit(1)).as("n"), sum(dec(col("__x"))).as("__s"))
-      .select(col("cell"), col("dim"), col("n"),
-        avg6(col("__s"), col("n")).as("c"))
+    val cents = collectCentroids(centroids, centIdCol, centVecCol)
+    require(cents.nonEmpty, "kmeansStep needs at least one centroid")
+    val bank = QuantBank.centroids(cents)
+    val sums = lloydRound(lloydScan(vecs, residual = false, vecCol), bank)
+    val a = ansi(vecs)
+    val rows = for (slot <- 0 until bank.k; c <- sums(slot).toSeq; d <- 0 until c.dims)
+      yield Row(bank.ids(slot), d + 1, c.count(d), lloydMean(c, d, a))
+    vecs.sparkSession.createDataFrame(rows.asJava, KmeansStepSchema)
   }
 
   /** Widen a [[kmeansStep]] result back to (cid, cv) centroid vectors —
@@ -330,34 +374,6 @@ object Similarity {
       .agg(transform(
         array_sort(collect_list(struct(col("dim"), col("c")))),
         s => s("c")).as("cv"))
-
-  /** [[kmeansStep]] fused with the k-means objective — ONE corpus scan
-    * yields both. The same assignment the step aggregates over also
-    * knows each vector's winning squared distance (the WCSS term of the
-    * centroids it was assigned against); parking it on that vector's
-    * dim-1 row counts it exactly once, so
-    * `Σ qe  =  ivfQuantError(vecs, centroids)` up to double-summation
-    * order (the identity [[kmeansTrain]] uses to halve its training
-    * scans: the objective of round i's centroids falls out of round i's
-    * step scan — no separate objective pass). Output is kmeansStep's
-    * (cell, dim, n, c) plus `qe`, null off the dim-1 rows;
-    * [[kmeansCentroids]] consumes it unchanged.
-    */
-  def kmeansStepWithObjective(
-      vecs: DataFrame, centroids: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "v",
-      centIdCol: String = "cid", centVecCol: String = "cv"): DataFrame = {
-    import graft.queries.QueryUtil.{avg6, dec}
-    val cents = collectCentroids(centroids, centIdCol, centVecCol)
-    require(cents.nonEmpty, "kmeansStepWithObjective needs at least one centroid")
-    assignPlan(vecs, cents, idCol, vecCol, keepDist = true)
-      .select(col("cell"), col("__dist"), posexplode(col(vecCol)).as(Seq("__p", "__x")))
-      .groupBy(col("cell"), (col("__p") + 1).as("dim"))
-      .agg(count(lit(1)).as("n"), sum(dec(col("__x"))).as("__s"),
-        sum(when(col("__p") === 0, col("__dist"))).as("qe"))
-      .select(col("cell"), col("dim"), col("n"),
-        avg6(col("__s"), col("n")).as("c"), col("qe"))
-  }
 
   /** Total IVF quantization error `Σ_v min_c ‖v − c‖²` — the k-means
     * objective: ONE narrow codegen scan summing each vector's
@@ -378,52 +394,49 @@ object Similarity {
   }
 
   /** Train IVF centroids to CONVERGENCE — the production loop upstream
-    * of [[ivfAssign]] serving: iterate [[kmeansStep]], freezing each
-    * round's (driver-small) centroids, until the objective's relative
-    * improvement drops below `relTol` or `maxIters` is hit. Returns the
-    * BEST-objective centroids seen and the full objective history (seed
-    * value first), so callers can log the curve and gate on it like the
-    * specs do: a final round whose decimal-rounding drift nudges the
-    * objective up is recorded in the history but its centroids are not
-    * adopted. A cell that captures no vectors in a round keeps its
-    * previous centroid (same contract as [[pqTrainStep]]'s empty
-    * codewords) — k never silently shrinks. Each iteration costs ONE
-    * fused corpus scan ([[kmeansStepWithObjective]]): the WCSS identity
-    * means round i's scan yields both the objective of round i's
-    * centroids (history entry i) and the re-estimation that becomes
-    * round i+1's — maxIters+1 scans total where a separate
-    * [[ivfQuantError]] pass per round paid 2·maxIters+1. Nothing
+    * of [[ivfAssign]] serving: iterate the [[kmeansStep]] re-estimation,
+    * freezing each round's (driver-small) centroids, until the
+    * objective's relative improvement drops below `relTol` or `maxIters`
+    * is hit. Returns the BEST-objective centroids seen and the full
+    * objective history (seed value first), so callers can log the curve
+    * and gate on it like the specs do: a final round whose
+    * decimal-rounding drift nudges the objective up is recorded in the
+    * history but its centroids are not adopted. A cell that captures no
+    * vectors in a round keeps its previous centroid (same contract as
+    * [[pqTrainStep]]'s empty codewords) — k never silently shrinks.
+    *
+    * `vecs` is planned once, and each history entry costs ONE fold job
+    * over it (see "Lloyd training"). That job yields both the objective of
+    * the round's centroids (each cell's non-null winning distances over
+    * vectors with at least one element — [[ivfQuantError]] up to
+    * summation order) and the re-estimation that becomes the next
+    * round's: one seed collect plus maxIters+1 jobs at most, each one
+    * stage while its partials fit `LloydSums.DirectBytes`. Nothing
     * iterative lives on the executors.
     */
   def kmeansTrain(
       vecs: DataFrame, seeds: DataFrame,
-      maxIters: Int = 10, relTol: Double = 1e-3,
-      idCol: String = "vec_id", vecCol: String = "v",
+      maxIters: Int = 10, relTol: Double = 1e-3, vecCol: String = "v",
       centIdCol: String = "cid", centVecCol: String = "cv"): (DataFrame, Seq[Double]) = {
     require(maxIters >= 0 && relTol >= 0)
     val spark = vecs.sparkSession
     import spark.implicits._
-    def freeze(cs: Seq[(Long, Seq[Double])]): DataFrame =
-      cs.toDF(centIdCol, centVecCol)
     var cents = collectCentroids(seeds, centIdCol, centVecCol)
     require(cents.nonEmpty, "kmeansTrain needs at least one seed centroid")
-    var cdf = freeze(cents)
+    val scan = lloydScan(vecs, residual = false, vecCol)
+    val a = ansi(vecs)
     val hist = scala.collection.mutable.ListBuffer.empty[Double]
-    var best = cdf
+    var best = cents
     var bestErr = Double.NaN
     var it = 0
     var stop = false
     while (!stop) {
-      // one fused scan: objective of the CURRENT centroids + the Lloyd
-      // re-estimation under them, collected together (k×d rows,
-      // driver-small — the same rows kmeansCentroids would widen)
-      val rows = kmeansStepWithObjective(
-        vecs, cdf, idCol, vecCol, centIdCol, centVecCol)
-        .select(col("cell"), col("dim"), col("c"), col("qe")).collect()
-      val err = rows.iterator.filterNot(_.isNullAt(3)).map(_.getDouble(3)).sum
+      val bank = QuantBank.centroids(cents)
+      val sums = lloydRound(scan, bank)
+      val err = sums.objective
       if (it == 0) { bestErr = err; hist += err }
       else {
-        if (err < bestErr) { best = cdf; bestErr = err }
+        if (err < bestErr) { best = cents; bestErr = err }
         // decimal-rounded means can drift the objective by ~1e-6/dim, so
         // "no meaningful improvement" is the stop, not strict decrease
         stop = hist.last - err <= relTol * math.max(hist.last, Double.MinPositiveValue)
@@ -431,18 +444,13 @@ object Similarity {
       }
       if (it == maxIters) stop = true
       if (!stop) {
-        // widen the step rows driver-side (sort-by-dim per cell — what
-        // kmeansCentroids does distributedly, on ≤ k×d collected rows)
-        val learned = rows.groupBy(_.getLong(0)).map { case (cell, rs) =>
-          cell -> rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
-        }
+        val next = (0 until bank.k).flatMap(s => learned(sums, s, a).map(bank.ids(s) -> _)).toMap
         // empty cells keep their previous centroid — k never shrinks
-        cents = cents.map { case (cid, cv) => cid -> learned.getOrElse(cid, cv) }
-        cdf = freeze(cents)
+        cents = cents.map { case (cid, cv) => cid -> next.getOrElse(cid, cv) }
         it += 1
       }
     }
-    (best, hist.toSeq)
+    (best.toDF(centIdCol, centVecCol), hist.toSeq)
   }
 
   // ---- scalar (int8) quantization ------------------------------------
@@ -554,70 +562,34 @@ object Similarity {
     df.withColumn("__nc", QuantExprs.nearestCode(col(vecCol), bank,
       cell = if (bank.residual) Some(col("cell")) else None))
 
-  /** Re-estimation step of every PQ Lloyd iteration: from
-    * (m, k, dim, __r) residual-component rows, decimal-exact
-    * per-codeword means (per-dim values to decimal(18,6) before
-    * summing, one IEEE divide — bit-deterministic and
-    * oracle-replicable, the [[kmeansStep]] discipline); codewords that
-    * captured no vectors keep their value in `bank`.
+  /** One Lloyd iteration over ALL subspaces: one fold job over `vecs`
+    * (see "Lloyd training" above). Each row's per-subspace code comes
+    * from the `nearest_code` kernel, and every element of the
+    * M subspaces counts at (subspace, code, dim); a longer vector's tail
+    * is ignored, the kernel's `slice` contract. A residual bank averages
+    * the residual `x − c[cell][p]` (computed in double, cast to
+    * decimal(18,6) by Spark's rule) and skips rows whose cell is null or
+    * not in the centroid set. Codewords that captured nothing keep their
+    * value in `bank`.
     */
-  private def booksFromResidRows(
-      residRows: DataFrame, bank: QuantBank): Seq[Seq[Seq[Double]]] = {
-    import graft.queries.QueryUtil.{avg6, dec}
-    val learned = residRows
-      .groupBy("m", "k", "dim")
-      .agg(count(lit(1)).as("n"), sum(dec(col("__r"))).as("__s"))
-      .select(col("m"), col("k"), col("dim"), avg6(col("__s"), col("n")).as("c"))
-      .collect()
-      .groupBy(r => (r.getInt(0), r.getInt(1)))
-      .view.mapValues(_.map(r => r.getInt(2) -> r.getDouble(3)).sortBy(_._1).map(_._2).toSeq)
-      .toMap
+  private def trainStep(
+      vecs: DataFrame, bank: QuantBank, vecCol: String): Seq[Seq[Seq[Double]]] = {
+    val sums = lloydRound(lloydScan(vecs, bank.residual, vecCol), bank)
+    val a = ansi(vecs)
     bank.books.toSeq.zipWithIndex.map { case (book, mi) =>
       book.toSeq.zipWithIndex.map { case (old, k) =>
-        learned.getOrElse((mi, k), old.toSeq)
+        learned(sums, mi * bank.k + k, a).getOrElse(old.toSeq)
       }
     }
   }
 
-  /** One Lloyd iteration over ALL subspaces in ONE narrow corpus scan:
-    * per-row codes from `nearest_code`, one posexplode into (subspace,
-    * code, dim, residual component) rows, one grouped re-estimation.
-    * The books ride the kernel by reference, so every iteration reuses
-    * the same generated code. A residual bank subtracts the centroid
-    * component per exploded scalar (`x − c[cell][p]`, a broadcast join
-    * of the driver-small centroids), which also drops rows whose cell is
-    * not in the centroid set.
-    */
-  private def trainStep(
-      vecs: DataFrame, bank: QuantBank, vecCol: String): Seq[Seq[Seq[Double]]] = {
-    val sub = bank.sub
-    val mCol = (col("__p") / sub).cast("int")
-    val exploded = withCodes(vecs, bank, vecCol)
-      .select((if (bank.residual) Seq(col("cell")) else Nil) ++ Seq(
-        posexplode(col(vecCol)).as(Seq("__p", "__x")),
-        col("__nc").getField("code").cast("array<int>").as("__codes")): _*)
-    val resid =
-      if (!bank.residual) exploded.withColumn("__r", col("__x"))
-      else {
-        val spark = vecs.sparkSession
-        import spark.implicits._
-        val cents = bank.cellIds.toSeq.zip(bank.cells.toSeq.map(_.toSeq))
-        exploded.join(broadcast(cents.toDF("cell", "__ccv")), "cell")
-          .withColumn("__r", col("__x") - element_at(col("__ccv"), col("__p") + 1))
-      }
-    booksFromResidRows(resid.select(mCol.as("m"),
-      element_at(col("__codes"), mCol + 1).as("k"),
-      (col("__p") % sub + 1).as("dim"), col("__r")), bank)
-  }
-
-  /** One Lloyd iteration over ALL PQ subspaces in a SINGLE narrow
-    * corpus scan (see [[trainStep]]). Zero pre-aggregation shuffle: the
-    * only exchange is the (m, k, dim) re-estimation, pre-reduced
-    * map-side.
+  /** One Lloyd iteration over ALL PQ subspaces: ONE fold job over `vecs`
+    * ([[trainStep]]). Decimal-exact means, so the trained books are
+    * bit-deterministic and the DuckDB oracle replays them.
     */
   def pqTrainStep(
       vecs: DataFrame, codebooks: Seq[Seq[Seq[Double]]],
-      idCol: String = "vec_id", vecCol: String = "v"): Seq[Seq[Seq[Double]]] =
+      vecCol: String = "v"): Seq[Seq[Seq[Double]]] =
     trainStep(vecs, QuantBank.codebooks(codebooks), vecCol)
 
   /** `df`'s id, `keep` columns and `code_0..code_{M-1}` (int). */
@@ -738,21 +710,20 @@ object Similarity {
     encode(vecsWithCell, bank, idCol, vecCol, Seq("cell"))
   }
 
-  /** One Lloyd iteration over RESIDUAL PQ codebooks, all subspaces in a
-    * SINGLE narrow corpus scan ([[trainStep]] on the residual bank):
-    * assignment argmins on the ORIGINAL vectors (the
-    * [[pqEncodeResidual]] kernel), the re-estimation mean over the
-    * per-scalar residual `x − c[cell][p]`. Decimal-exact means as
-    * everywhere (per-dim residuals to decimal(18,6) before summing, one
+  /** One Lloyd iteration over RESIDUAL PQ codebooks, all subspaces in
+    * ONE fold job over `vecsWithCell` ([[trainStep]] on the residual
+    * bank): assignment argmins on the ORIGINAL
+    * vectors (the [[pqEncodeResidual]] kernel), the re-estimation mean
+    * over the per-scalar residual `x − c[cell][p]`. Decimal-exact means
+    * as everywhere (per-dim residuals to decimal(18,6) before summing, one
     * IEEE divide), so the trained books are bit-deterministic and the
     * DuckDB oracle replays every iteration. Codewords that captured no
-    * vectors keep their previous value; rows whose cell is not in the
-    * centroid set do not train.
+    * vectors keep their previous value; rows whose cell is null or not in
+    * the centroid set do not train.
     */
   def pqTrainStepResidual(
       vecsWithCell: DataFrame, centroids: DataFrame,
-      codebooks: Seq[Seq[Seq[Double]]],
-      idCol: String = "vec_id", vecCol: String = "v",
+      codebooks: Seq[Seq[Seq[Double]]], vecCol: String = "v",
       centIdCol: String = "cid", centVecCol: String = "cv"): Seq[Seq[Seq[Double]]] = {
     trainStep(vecsWithCell, residualBank(centroids, codebooks, centIdCol, centVecCol,
       "pqTrainStepResidual"), vecCol)
@@ -837,8 +808,16 @@ object Similarity {
     * (centroids, residual books, encoded corpus) — everything search
     * needs: probes go through [[ivfAssignTopN]] + [[pqAdcTopKResidual]].
     * Every stage is the individually-gated operator; this is only the
-    * composition. Train on a SAMPLE at 100 TB (centroids and books are
-    * driver-small either way); only the final encode scans the corpus.
+    * composition. Training costs one seed collect plus one fold job per
+    * k-means history entry, and one per PQ iteration over the persisted
+    * assignment. Each is one stage while its per-partition partials fit
+    * `LloydSums.DirectBytes` (at nlist 1024 and 128 dims, about 4
+    * partitions); past that its executors merge the partials per
+    * codeword through one shuffle, so the driver receives about one
+    * partial (codewords × dims × 25 bytes) whatever the partition count.
+    * Centroids and books are driver-small either way; only the final
+    * encode scans the whole corpus, so a 100 TB corpus trains on a
+    * sample.
     */
   def ivfPqBuild(
       vecs: DataFrame, seeds: DataFrame, bookSeeds: DataFrame, m: Int,
@@ -848,7 +827,7 @@ object Similarity {
       persistCodes: Boolean = true)
       : (DataFrame, Seq[Seq[Seq[Double]]], DataFrame) = {
     val (cents, _) = kmeansTrain(vecs, seeds, kmeansIters,
-      idCol = idCol, vecCol = vecCol, centIdCol = centIdCol, centVecCol = centVecCol)
+      vecCol = vecCol, centIdCol = centIdCol, centVecCol = centVecCol)
     // the assignment is scanned by EVERY training iteration and the
     // final encode — persisted once here so pqIters iterations cost
     // pqIters aggregations over the cached (id, v, cell) rows, not
@@ -860,8 +839,7 @@ object Similarity {
     var books = seedResidualBooks(bookSeeds, cents, m,
       idCol, vecCol, centIdCol, centVecCol)
     for (_ <- 0 until pqIters)
-      books = pqTrainStepResidual(asg, cents, books,
-        idCol, vecCol, centIdCol, centVecCol)
+      books = pqTrainStepResidual(asg, cents, books, vecCol, centIdCol, centVecCol)
     // Release the assignment cache either way — it is a build-time
     // intermediate, not an output, and repeated builds in one session
     // must not accumulate cached corpora. persistCodes=true (default):

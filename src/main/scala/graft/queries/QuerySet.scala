@@ -141,6 +141,11 @@ object QueryUtil {
     * < 2^53 for our magnitudes) then one IEEE divide by the exact count.
     */
   def avg6(sum: Column, n: Column): Column = round(sum, 6).cast("double") / n
+  /** Driver-side [[avg6]] of a scale-6 decimal sum: Spark casts a decimal
+    * to double by `BigDecimal.doubleValue`, then one IEEE divide. Null
+    * for a null sum. */
+  def avg6(sum: java.math.BigDecimal, n: Long): java.lang.Double =
+    if (sum == null) null else java.lang.Double.valueOf(sum.doubleValue / n.toDouble)
   def avg6Sql(sum: String, n: String): String =
     s"CAST(round($sum, 6) AS DOUBLE) / $n"
 }

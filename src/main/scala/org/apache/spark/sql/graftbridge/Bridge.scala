@@ -23,6 +23,26 @@ object Bridge {
       qe.executedPlan.executeCollect())
   }
 
+  /** `df` planned ONCE and then run as often as a caller asks: each
+    * [[run]] hands `job` the same physical plan's RDD, and the job it
+    * starts is tracked as a new SQL execution (listeners and the UI see
+    * it, with the plan's metrics reset to that run's). Spark MLlib's
+    * iterative trainers aggregate over one input RDD the same way; an
+    * iterative loop that rebuilt a DataFrame per round paid planning, and
+    * AQE's split of each shuffle into two jobs, every round.
+    */
+  final class PlannedScan(df: org.apache.spark.sql.DataFrame) {
+    private val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    private lazy val rdd = qe.executedPlan.execute()
+    def schema: org.apache.spark.sql.types.StructType = qe.executedPlan.schema
+
+    def run[T](job: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] => T): T =
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe) {
+        qe.executedPlan.foreach(_.metrics.valuesIterator.foreach(_.reset()))
+        job(rdd)
+      }
+  }
+
   /** Register a SQL function on an ALREADY-RUNNING session (extensions
     * only apply at session construction; sessionState is private[sql]).
     */

@@ -48,6 +48,24 @@ class LiftoverSpec extends AnyFunSuite with SparkSpec {
       ("2", 150, "lifted", "d4", Some(1050), "G", "A")))
   }
 
+  test("alt_flip and alt_swap ≡ the retired transform(split(alt, \",\")) lambdas") {
+    import graft.expressions.GenomeExprs
+    // RDD-backed, so the kernels run through generated code
+    val alts = spark.sparkContext.parallelize(Seq("A", "G,<DEL>", "acgT,N,ACGN", ".", "",
+      ",", "A,,t", "*,C", "<INS:ME>,TTA", "ac,gt,", null), 2).toDF("alt")
+    def flip(a: org.apache.spark.sql.Column) = when(a.rlike("^[ACGTacgt]+$"),
+      reverse(translate(a, "ACGTacgt", "TGCAtgca"))).otherwise(a)
+    def rows(c: org.apache.spark.sql.Column) =
+      alts.select(col("alt"), c.as("out")).collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(rows(GenomeExprs.altFlip(col("alt"))) ===
+      rows(array_join(transform(split(col("alt"), ","), flip(_)), ",")))
+    for ((from, to) <- Seq("A" -> "G", "" -> "T", "t" -> "CC", "N" -> "")) {
+      val swapped = rows(GenomeExprs.altSwap(col("alt"), lit(from), lit(to)))
+      assert(swapped === rows(array_join(transform(split(col("alt"), ","),
+        a => when(a === lit(from), lit(to)).otherwise(a)), ",")), s"$from -> $to")
+    }
+  }
+
   test("liftover dstGenome: destination-REF validation — match keeps " +
       "status, ALT carried by the target swaps REF⇄ALT and flips GT " +
       "indices, neither flags ref_mismatch, and unmapped/absent-contig " +

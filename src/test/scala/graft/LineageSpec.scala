@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Graphs, RankEval, Similarity}
+import graft.operators.{Graphs, Lineage, RankEval, Similarity}
 
 /** The lineage-cut policy lives in `graft.operators.Lineage` alone, and
   * its lazy cuts stay lazy. The job budgets are what the round loops run
@@ -51,5 +51,26 @@ class LineageSpec extends AnyFunSuite with SparkSpec {
     }.toDF("probe_id", "cand_id", "rel_micro", "cv")
     val jobs = jobsOf(Similarity.mmrRerank(pool, k = 12, 500000L).collect())
     assert(jobs <= 133, s"mmrRerank ran $jobs jobs")
+  }
+
+  test("a live cut keeps the plan it cut, and so that plan's SQL-metric accumulators, " +
+      "through GC") {
+    // built in a method, so nothing but the cut can keep the pre-cut frame
+    def cutOf(): (org.apache.spark.sql.DataFrame, Seq[Long]) = {
+      val pre = spark.range(0, 1000, 1, 4).selectExpr("id * 2 AS x").filter("x % 3 = 0")
+      val cut = Lineage.cut(pre)
+      (cut, pre.queryExecution.executedPlan.collect { case p => p.metrics.values.map(_.id) }
+        .flatten)
+    }
+    val (cut, ids) = cutOf()
+    assert(ids.nonEmpty)
+    // the first job materializes the lazy cut and truncates its lineage;
+    // a task of the pre-cut plan that reports after a GC collected that
+    // plan's accumulators is dropped with "Failed to update accumulator"
+    assert(cut.count() === 334)
+    for (_ <- 1 to 3) { System.gc(); Thread.sleep(20) }
+    val dead = ids.filterNot(org.apache.spark.SparkInternals.accumulatorLive)
+    assert(dead.isEmpty, s"accumulators $dead of the cut plan were collected while the cut lives")
+    assert(cut.count() === 334)
   }
 }

@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.LambdaFunction
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ENSURE_REQUIREMENTS, Exchange, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -57,6 +58,32 @@ object PlanGates extends AdaptiveSparkPlanHelper {
         case _ =>
       }
     }
+  }
+
+  /** Runs `df`, then asserts that every projection in the narrow chain
+    * above an interval-index probe is whole-stage codegen'd and holds no
+    * lambda: an array HOF (CodegenFallback) keeps its projection
+    * interpreted, outside the probe's compiled stage.
+    */
+  def assertCompiledAbove(label: String, df: DataFrame): Unit = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val text = plan.toString
+    val compiled = collect(plan) { case w: WholeStageCodegenExec => codegenNodes(w.child) }.flatten
+    val above = collect(plan) { case p: ProjectExec if below(p).exists(isProbe) => p }
+    assert(above.nonEmpty, s"$label: no projection above an interval-index probe:\n$text")
+    above.foreach { p =>
+      assert(compiled.exists(_ eq p),
+        s"$label: a projection above the probe is not whole-stage codegen'd:\n$text")
+      assert(!p.projectList.exists(_.exists(_.isInstanceOf[LambdaFunction])),
+        s"$label: a projection above the probe holds a lambda:\n$text")
+    }
+  }
+
+  /** The operators one whole-stage codegen stage compiles. */
+  private def codegenNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case _: InputAdapter => Nil
+    case _ => p +: p.children.flatMap(codegenNodes)
   }
 
   private def planned(p: SparkPlan): Boolean = p match {

@@ -17,15 +17,31 @@ trait SparkSpec { self: Suite =>
   }
 
   /** Jobs `body` starts, counted from the listener bus once it is quiet. */
-  protected def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+  protected def jobsOf(body: => Unit): Int = jobsAndStagesOf(body).jobs
+
+  /** Jobs `body` starts, stages it submits (a stage a job skips is not
+    * submitted) and, of those, shuffle-map stages, counted like
+    * [[jobsOf]]. Under AQE every shuffle stage runs as its own job, so
+    * only `shuffles` tells a shuffle from a second action. */
+  protected def jobsAndStagesOf(body: => Unit): SparkSpec.Counts = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    val jobs, stages, shuffles = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet()
+        if (org.apache.spark.SparkInternals.isShuffleMap(s.stageInfo)) shuffles.incrementAndGet()
+      }
     }
     spark.sparkContext.addSparkListener(listener)
-    try { quiesce(jobs); jobs.set(0); body; quiesce(jobs); jobs.get() }
-    finally spark.sparkContext.removeSparkListener(listener)
+    // a job's stages are submitted as it starts, so a quiet job count
+    // also means quiet stage counts
+    try {
+      quiesce(jobs); Seq(jobs, stages, shuffles).foreach(_.set(0))
+      body
+      quiesce(jobs)
+      SparkSpec.Counts(jobs.get(), stages.get(), shuffles.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** Runs `body` with the shared session's checkpoint directory set to a
@@ -59,6 +75,8 @@ trait SparkSpec { self: Suite =>
 }
 
 object SparkSpec {
+  final case class Counts(jobs: Int, stages: Int, shuffles: Int)
+
   lazy val session: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
