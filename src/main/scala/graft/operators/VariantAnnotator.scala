@@ -1,9 +1,12 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.expressions.{AnnotateCallsExpr, FormatFieldExpr, HomRefCountExpr}
 import graft.functions.VariantFunctions._
@@ -38,8 +41,11 @@ object VariantAnnotator {
     * @param dropHomRef   reference `drop_hom_ref`: drop hom-ref rows
     *                     AFTER counting them into hom_ref_counts.
     * @param formatKeys   FORMAT subfield keys to materialize as columns
-    *                     (beyond GT). None = discover with a small
-    *                     distinct scan (schema-inference pass).
+    *                     (beyond GT; an empty key is refused). None =
+    *                     the keys the input's FORMAT strings use, found
+    *                     by [[discoverFormatKeys]] when annotate is
+    *                     called: one job over the FORMAT column, one
+    *                     stage, no exchange.
     */
   final case class Options(
       splitColumns: Map[String, Int] = Map.empty,
@@ -52,9 +58,13 @@ object VariantAnnotator {
     * gt, phase, gt1, gt2, a1, a2, multiallele, zygosity,
     * hom_ref_counts, vartype1, vartype2 (+ FORMAT subfields). A FORMAT
     * subfield the call does not carry (a legally dropped trailing one)
-    * is NULL.
+    * is NULL. A subfield column whose name another output column
+    * already has (a key `AD_0` beside the split of `AD`) fails a
+    * `require` naming both.
     */
   def annotate(df: DataFrame, opts: Options = Options()): DataFrame = {
+    opts.formatKeys.foreach(ks => require(!ks.contains(""),
+      "Options.formatKeys holds the empty key \"\"; a FORMAT subfield column needs a name"))
     val keys = opts.formatKeys.getOrElse(discoverFormatKeys(df))
     val (ref, alt, genotypes) = (col("ref"), col("alt"), col("genotypes"))
     val (refE, altE, genotypesE) =
@@ -81,26 +91,31 @@ object VariantAnnotator {
         col("multiallele"), col("hom_ref_counts"),
         inline(Bridge.column(
           AnnotateCallsExpr(refE, altE, genotypesE, opts.dropHomRef))))
-      .select(col("chrom"), col("pos"), ref, alt, col("sample_id"),
-        col("gt"), col("phase"), col("gt1"), col("gt2"), col("a1"), col("a2"),
-        col("multiallele"), col("zygosity"), col("hom_ref_counts"),
-        vartype(ref, col("a1")).as("vartype1"),
-        vartype(ref, col("a2")).as("vartype2"),
-        col("format"), col("call"))
+    val passed = Seq("chrom", "pos", "ref", "alt", "sample_id", "gt", "phase",
+      "gt1", "gt2", "a1", "a2", "multiallele", "zygosity", "hom_ref_counts")
+    val annotations = passed.map(col) ++ Seq(
+      vartype(ref, col("a1")).as("vartype1"), vartype(ref, col("a2")).as("vartype2"))
 
     // FORMAT subfields as typed columns; split_columns exploded by comma
     def field(k: String, part: Int): Column = Bridge.column(FormatFieldExpr(
       Bridge.expression(col("format")), Bridge.expression(col("call")), k, part))
-    val withFields = keys.filter(_ != "GT").foldLeft(calls) { (d, k) =>
+    val fields = keys.distinct.filter(_ != "GT").flatMap { k =>
       opts.splitColumns.get(k) match {
-        case Some(n) =>
-          (0 until n).foldLeft(d)((dd, i) => dd.withColumn(s"${k}_$i", field(k, i)))
-        case None =>
-          d.withColumn(k, field(k, -1))
+        case Some(n) => (0 until n).map(i => (s"${k}_$i", s"part $i of FORMAT key $k", field(k, i)))
+        case None => Seq((k, s"FORMAT key $k", field(k, -1)))
       }
     }
-
-    withFields.drop("call", "format")
+    // two output columns of one name (as the session resolves names)
+    // fail here, so neither silently hides the other
+    val caseSensitive = df.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean
+    val named = (passed ++ Seq("vartype1", "vartype2")).map(n => (n, s"annotate column $n")) ++
+      fields.map { case (n, what, _) => (n, what) }
+    named.foldLeft(Map.empty[String, String]) { case (seen, (n, what)) =>
+      val key = if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
+      require(!seen.contains(key), s"output column $n ($what) collides with ${seen(key)}")
+      seen.updated(key, s"$n ($what)")
+    }
+    calls.select(annotations ++ fields.map { case (n, _, c) => c.as(n) }: _*)
   }
 
   /** GENOTYPE-LEVEL FORMAT-PREDICATE MASKING — the `bcftools filter -e
@@ -355,18 +370,15 @@ object VariantAnnotator {
           Bridge.expression(call), plKey)), call)))
   }
 
-  /** One cheap pass to learn the FORMAT vocabulary (like csv schema
-    * inference; avoid at scale by passing Options.formatKeys).
-    */
   private val log = org.slf4j.LoggerFactory.getLogger(VariantAnnotator.getClass)
 
   /** The discovery-scan warning text, exposed so the spec can assert
     * the exact message users will grep their driver logs for. */
   private[graft] val DiscoveryScanWarning: String =
     "annotate(): no Options.formatKeys supplied — discovering FORMAT " +
-      "keys with a full distinct scan of the input. At scale, pass " +
-      "Options.formatKeys (or use the typed-header reader) to avoid " +
-      "reading the corpus twice."
+      "keys with one single-stage scan of the input's FORMAT column. " +
+      "At scale, pass Options.formatKeys (or use the typed-header " +
+      "reader) to avoid reading the corpus twice."
 
   /** Count of discovery-scan warnings emitted — the spec asserts the
     * warning fires exactly on the formatKeys=None path (log4j appender
@@ -374,13 +386,35 @@ object VariantAnnotator {
   private[graft] val discoveryScanWarnings =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def discoverFormatKeys(df: DataFrame): Seq[String] = {
-    // a full-corpus distinct scan — convenient in a notebook, a silent
-    // 2× read at 100 TB; say so loudly every time it happens
+  /** The FORMAT keys `df` uses, sorted, like csv schema inference: one
+    * fold job over its `format` column planned once
+    * ([[Bridge.PlannedScan]]), one stage, no exchange. Each task splits
+    * its FORMAT strings as `split(format, ":")` does (trailing empties
+    * kept, a string equal to the row before it skipped) into a set of
+    * distinct keys; the driver unions them. A null FORMAT (a sites-only
+    * row) and an empty key add nothing. Runs before annotate's
+    * missing-ALT filter, so a key only those rows use still becomes a
+    * column.
+    */
+  private[graft] def discoverFormatKeys(df: DataFrame): Seq[String] = {
+    // still a second read of the input — convenient in a notebook, a
+    // silent 2× read at 100 TB; say so loudly every time it happens
     discoveryScanWarnings.incrementAndGet()
     log.warn(DiscoveryScanWarning)
-    df.select(explode(split(col("format"), ":")).as("k"))
-      .distinct().collect().map(_.getString(0)).sorted.toSeq
+    val perTask = new Bridge.PlannedScan(df.select(col("format"))).run(_.mapPartitions { rows =>
+      val colon = UTF8String.fromString(":")
+      val keys = mutable.HashSet.empty[String]
+      var last: UTF8String = null
+      rows.foreach { r =>
+        val f = if (r.isNullAt(0)) null else r.getUTF8String(0)
+        if (f != null && f != last) {
+          f.split(colon, -1).foreach(k => if (k.numBytes > 0) keys += k.toString)
+          last = f.clone()
+        }
+      }
+      Iterator.single(keys.toArray)
+    }.collect())
+    perTask.flatten.distinct.sorted.toSeq
   }
 
   /** Long annotated frame → per-site zygosity profile; the groupBy twin

@@ -29,7 +29,10 @@ object Bridge {
     * it, with the plan's metrics reset to that run's). Spark MLlib's
     * iterative trainers aggregate over one input RDD the same way; an
     * iterative loop that rebuilt a DataFrame per round paid planning, and
-    * AQE's split of each shuffle into two jobs, every round.
+    * AQE's split of each shuffle into two jobs, every round. A single
+    * fold is the same handle run once: a per-partition reduce the driver
+    * merges is one job and one stage, where a `distinct().collect()` is
+    * an exchange and, under AQE, two jobs.
     */
   final class PlannedScan(df: org.apache.spark.sql.DataFrame) {
     private val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -48,6 +49,119 @@ class VariantAnnotatorSpec extends AnyFunSuite with SparkSpec {
     full.count()
     assert(VariantAnnotator.discoveryScanWarnings.get() === before + 1,
       "explicit formatKeys must not warn")
+  }
+
+  /** The FORMAT discovery annotate ran before it became one fold, kept
+    * verbatim as the parity reference: an explode/split/distinct query,
+    * which AQE runs as two jobs around an exchange. */
+  private def legacyFormatKeys(df: DataFrame): Seq[String] =
+    df.select(explode(split(col("format"), ":")).as("k"))
+      .distinct().collect().map(_.getString(0)).sorted.toSeq
+
+  /** A bgzipped, tabix-indexed VCF over two chroms whose rows cycle
+    * through three FORMAT layouts. */
+  private lazy val indexedVcf: String = {
+    val header = Seq("##fileformat=VCFv4.2",
+      "##contig=<ID=1,length=100000>", "##contig=<ID=2,length=100000>",
+      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\tS2\tS3")
+    val layouts = Seq(
+      "GT:DP:AD" -> "0/1:12:3,9\t1|1:8:0,8\t0/0:5:5,0",
+      "GT" -> "0/1\t./.\t1/1",
+      "GT:GQ:DP" -> "1/1:40:7\t0/0:30:9\t0/1:20:11")
+    val records = for (c <- Seq("1", "2"); i <- 0 until 60) yield {
+      val pos = 1000 + 700 * i
+      val (fmt, calls) = layouts(i % layouts.length)
+      (c, pos - 1L, pos.toLong, s"$c\t$pos\t.\tA\tG\t50\tPASS\t.\t$fmt\t$calls")
+    }
+    val out = TempDirs.create("graft-annotate-vcf").resolve("mixed.vcf.gz")
+    val (voffs, endVoff) = BgzfFixture.writeBgzf(header ++ records.map(_._4), out, blockLines = 8)
+    BgzfFixture.writeTbi(records.zip(voffs.drop(header.length)).map {
+      case ((c, b, e, _), v) => (c, b, e, v)
+    }, endVoff, out.resolveSibling("mixed.vcf.gz.tbi"))
+    out.toString
+  }
+
+  test("FORMAT discovery is one job with no shuffle stage, so a default " +
+      "annotate plus its action runs 3 jobs and 1 shuffle stage") {
+    val vcf = spark.read.format("vcf").load(indexedVcf)
+    var keys = Seq.empty[String]
+    assert(jobsAndStagesOf { keys = VariantAnnotator.discoverFormatKeys(vcf) } ===
+      SparkSpec.Counts(1, 1, 0))
+    assert(keys === Seq("AD", "DP", "GQ", "GT"))
+    // discovery, then the site window's shuffle-map job and its result job
+    val annotated = jobsAndStagesOf {
+      VariantAnnotator.annotate(vcf, VariantAnnotator.Options(splitColumns = Map("AD" -> 2)))
+        .write.format("noop").mode("overwrite").save()
+    }
+    assert(annotated === SparkSpec.Counts(3, 3, 1))
+  }
+
+  test("FORMAT discovery fold == the legacy explode/split/distinct query: " +
+      "mixed layouts on 6 partitions, null FORMAT, a key only a missing-ALT " +
+      "row uses, a parquet landing and an empty input") {
+    import spark.implicits._
+    val layouts = Seq(
+      "GT:DP:AD" -> "0/1:12:3,9", "GT" -> "1/1", "GT:AD:DP:GQ" -> "0/1:3,9:12:40",
+      "DP:AD" -> "7:3,4", "GT:PL" -> "0/1:30,0,40", "GT:DP:" -> "0/1:8:",
+      "GT::AD" -> "1|1::0,8")
+    // runs of equal FORMATs, so a task meets repeats and changes
+    val rows = (0 until 42).map { i =>
+      val (fmt, call) = layouts(i / 3 % layouts.length)
+      ("1", 100 + i, "A", "G", fmt, Map("S1" -> call, "S2" -> call))
+    } ++ Seq(
+      ("2", 500, "C", "T", null, Map.empty[String, String]),
+      ("2", 600, "C", ".", "GT:MQX", Map("S1" -> "0/0:7", "S2" -> "./.:.")))
+    val wide = spark.sparkContext.parallelize(rows, 6)
+      .toDF("chrom", "pos", "ref", "alt", "format", "genotypes")
+    assert(wide.rdd.getNumPartitions >= 4)
+    val landing = TempDirs.create("graft-annotate-landing").resolve("wide.parquet").toString
+    wide.write.parquet(landing)
+    val opts = VariantAnnotator.Options(splitColumns = Map("AD" -> 2), dropHomRef = false)
+    val inputs = Seq("in-memory" -> wide, "parquet" -> spark.read.parquet(landing),
+      "empty" -> wide.filter(lit(false)))
+    for ((name, df) <- inputs) {
+      // the legacy query also returned the empty key, which now makes no column
+      val legacy = legacyFormatKeys(df)
+      assert(VariantAnnotator.discoverFormatKeys(df) === legacy.filter(_.nonEmpty), name)
+      val got = VariantAnnotator.annotate(df, opts)
+      val want = VariantAnnotator.annotate(df, opts.copy(formatKeys = Some(legacy.filter(_.nonEmpty))))
+      assert(got.schema === want.schema, name)
+      assert(got.collect().map(_.toString).sorted === want.collect().map(_.toString).sorted, name)
+      if (name != "empty") {
+        assert(legacy === Seq("", "AD", "DP", "GQ", "GT", "MQX", "PL"), name)
+        assert(got.count() === 2 * 42, name)
+      } else assert(legacy.isEmpty && got.isEmpty)
+    }
+  }
+
+  test("an empty FORMAT key makes no column, and an explicit one fails naming it") {
+    import spark.implicits._
+    val df = Seq("GT:DP:" -> "0/1:8:", "GT::AD" -> "1|1::0,8", "GT:DP:AD" -> "0/1:12:3,9")
+      .zipWithIndex.map { case ((f, c), i) => ("1", 100 + i, "A", "G", f, Map("S1" -> c)) }
+      .toDF("chrom", "pos", "ref", "alt", "format", "genotypes")
+    val out = VariantAnnotator.annotate(df, VariantAnnotator.Options(dropHomRef = false))
+    assert(out.columns.takeRight(3).toSeq === Seq("vartype2", "AD", "DP"))
+    assert(out.select("pos", "AD", "DP").as[(Int, String, String)].collect().sortBy(_._1).toSeq ===
+      Seq((100, null, "8"), (101, "0,8", null), (102, "3,9", "12")))
+    val e = intercept[IllegalArgumentException](VariantAnnotator.annotate(df,
+      VariantAnnotator.Options(formatKeys = Some(Seq("GT", "", "DP")))))
+    assert(e.getMessage.contains("empty key \"\""))
+  }
+
+  test("a FORMAT subfield column whose name another output column has " +
+      "fails naming both") {
+    val split = intercept[IllegalArgumentException](VariantAnnotator.annotate(wide,
+      VariantAnnotator.Options(splitColumns = Map("AD" -> 2),
+        formatKeys = Some(Seq("GT", "AD", "AD_0")))))
+    assert(split.getMessage.contains(
+      "output column AD_0 (FORMAT key AD_0) collides with AD_0 (part 0 of FORMAT key AD)"))
+    val base = intercept[IllegalArgumentException](VariantAnnotator.annotate(wide,
+      VariantAnnotator.Options(formatKeys = Some(Seq("GT", "Phase")))))
+    assert(base.getMessage.contains(
+      "output column Phase (FORMAT key Phase) collides with phase (annotate column phase)"))
+    // a key given twice is one column, as before
+    assert(VariantAnnotator.annotate(wide,
+      VariantAnnotator.Options(formatKeys = Some(Seq("DP", "GT", "DP")))).columns.count(_ == "DP") === 1)
   }
 
   test("setGtMissing: bcftools --set-GTs semantics — predicate fields " +
